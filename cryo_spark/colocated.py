@@ -18,8 +18,8 @@ already clusters them.  The only exchange in this plan moves task
 DESCRIPTOR rows (a few file paths each) — bytes proportional to the
 file count, not the data.
 
-When the fast path's preconditions don't hold (different plans, an
-output mid-compaction, pending deletes, uncommitted runs), the join
+When the fast path's preconditions don't hold (different plans, live
+compaction tombstones, pending deletes), the join
 falls back to the relational path — ``decode_frozen`` both sides and a
 normal Spark join — so the answer is always correct; ``require_colocated``
 turns a silent fallback into an error for callers (and tests) that
@@ -42,7 +42,7 @@ import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from . import engine, snapshots
+from . import engine, readview
 from .arrowutil import amap
 from .tablespec import SEQUENCES, TableSpec
 
@@ -52,65 +52,25 @@ ENC_COLUMNS = ["chunk_id", "column", "n_rows", "status", "payload"]
 
 
 def _clean_files(output_dir: str) -> list[str] | None:
-    """Encoded parquet files of a frozen output IF the fast-path
-    preconditions hold, else None:
+    """Encoded parquet files of a frozen output's head read view IF the
+    fast-path preconditions hold, else None:
 
-    - no snapshot state (pending deletes / rollback / branch heads
-      change row visibility in ways only the relational path applies);
-    - every manifest run committed (its ``_SUCCESS`` marker present);
-    - no compaction tombstones (retired chunks need the drop bitmaps);
+    - no pending equality deletes (row-level, only the relational path
+      applies them);
+    - no live compaction tombstones (retired chunks need the drop
+      bitmaps, which the join kernel does not apply);
     - flat encoded layout (no ``partition_by`` nested dirs).
     """
-    if "://" in output_dir or snapshots.current(output_dir) is not None:
+    if "://" in output_dir:
         return None
-    enc_base = engine._encoded_path(output_dir)
-    man_base = engine._manifest_path(output_dir)
-    ts_base = engine._tombstones_path(output_dir)
-    if not os.path.isdir(enc_base):
-        return []
-
-    def run_dirs(base: str) -> set[str]:
-        if not os.path.isdir(base):
-            return set()
-        return {d for d in os.listdir(base) if d.startswith("run=")}
-
-    man_runs = run_dirs(man_base)
-    # manifest consolidation: absorbed runs' dirs are gone but their
-    # rows live in the generation file — committed by definition
-    cons = snapshots.latest_consolidation(output_dir)
-    absorbed = ({f"run={r}" for r in cons["absorbed"]}
-                if cons is not None else set())
-    man_runs |= absorbed
-    root_success = os.path.exists(os.path.join(man_base, "_SUCCESS"))
-    committed = {
-        r for r in man_runs
-        if r in absorbed or root_success
-        or os.path.exists(os.path.join(man_base, r, "_SUCCESS"))
-    }
-    if man_runs - committed:
+    view = readview.read_view(output_dir)
+    if view.deletes or view.drops:
         return None
-    if run_dirs(ts_base) & committed:
-        return None
-    files: list[str] = []
-    for r in sorted(run_dirs(enc_base) & committed):
-        d = os.path.join(enc_base, r)
-        for f in sorted(os.listdir(d)):
-            p = os.path.join(d, f)
-            if f.endswith(".parquet"):
-                files.append(p)
-            elif os.path.isdir(p):
-                return None  # partition_by nested layout
+    files = view.all_files()
+    if any(not os.path.basename(os.path.dirname(f)).startswith("run=")
+           for f in files):
+        return None  # partition_by nested layout
     return files
-
-
-def _single_plan_id(spark: SparkSession, output_dir: str) -> str | None:
-    """The output's one visible plan fingerprint, or None if 0 or many."""
-    man = engine.read_manifest(spark, output_dir)
-    if man is None or "plan_id" not in man.columns:
-        return None
-    ids = [r["plan_id"] for r in man.filter(F.col("status") == "ok")
-           .select("plan_id").distinct().collect()]
-    return ids[0] if len(ids) == 1 else None
 
 
 def _run_of(path: str) -> str:
@@ -122,7 +82,7 @@ def _run_plans(spark: SparkSession, output_dir: str) -> dict[str, str] | None:
     """run -> plan fingerprint for every ok-committed run, or None when
     unavailable / malformed (a run spanning two plans)."""
     man = engine.read_manifest(spark, output_dir)
-    if man is None or "plan_id" not in man.columns:
+    if man is None:
         return None
     rows = man.filter(F.col("status") == "ok") \
         .select("run", "plan_id").distinct().collect()
@@ -132,12 +92,18 @@ def _run_plans(spark: SparkSession, output_dir: str) -> dict[str, str] | None:
     return out
 
 
+def _one_plan(run_plans: dict[str, str] | None) -> str | None:
+    """The one plan fingerprint of ``run_plans``, or None if 0 or many."""
+    ids = set((run_plans or {}).values())
+    return ids.pop() if len(ids) == 1 else None
+
+
 def _plan_key_intervals(spark: SparkSession, output_dir: str,
                         spec: TableSpec) -> dict[str, tuple] | None:
     """Per-plan [min, max] key interval from manifest zone maps
     (metadata-only agg); None when the key has no numeric manifest form."""
     man = engine.read_manifest(spark, output_dir)
-    if man is None or "plan_id" not in man.columns:
+    if man is None:
         return None
     try:
         kmin = engine._manifest_key_num("min_doc_id", spec)
@@ -156,6 +122,7 @@ def _plan_key_intervals(spark: SparkSession, output_dir: str,
 
 def _multi_plan_tasks(
     spark: SparkSession, dir_a: str, dir_b: str,
+    rp_a: dict[str, str] | None, rp_b: dict[str, str] | None,
     files_a: list[str], files_b: list[str], spec: TableSpec,
     how: str, parallelism: int, target_bytes: int,
 ) -> list[tuple[list[str], list[str]]] | None:
@@ -172,8 +139,6 @@ def _multi_plan_tasks(
     Tasks are packed per plan so a task's chunk-id space never mixes
     generations.
     """
-    rp_a = _run_plans(spark, dir_a)
-    rp_b = _run_plans(spark, dir_b)
     if rp_a is None or rp_b is None:
         return None
     pids = set(rp_a.values())
@@ -325,16 +290,8 @@ def _decode_side(paths: list[str], columns: list[str],
         ))
         if tbl.num_rows == 0:
             continue
-        cid = tbl.column("chunk_id").to_numpy(zero_copy_only=False)
-        order = np.argsort(cid, kind="stable")
-        sorted_cid = cid[order]
-        bounds = np.flatnonzero(np.diff(sorted_cid)) + 1
-        starts = np.concatenate(([0], bounds))
-        ends = np.concatenate((bounds, [len(cid)]))
-        tbl = tbl.take(pa.array(order)).combine_chunks()
-        for s, e in zip(starts, ends):
-            out[int(sorted_cid[s])] = engine._decode_chunk(
-                tbl.slice(int(s), int(e - s)), columns, spec)
+        for cid, chunk in engine._groups(tbl, engine._chunk_ids(tbl)):
+            out[int(cid)] = engine._decode_chunk(chunk, columns, spec)
     return out
 
 
@@ -441,7 +398,7 @@ def join_frozen(
         if require_colocated:
             raise ValueError(
                 "co-located fast path unavailable (plans differ, or an "
-                "output has pending deletes/tombstones/uncommitted runs); "
+                "output has pending deletes/live tombstones); "
                 "rerun without require_colocated for the relational join")
         da = engine.decode_frozen(spark, dir_a, [key, *cols_a], spec_a)
         db = engine.decode_frozen(spark, dir_b, [key, *cols_b], spec_b)
@@ -451,8 +408,8 @@ def join_frozen(
     files_b = _clean_files(dir_b)
     if files_a is None or files_b is None:
         return fallback()
-    pid_a = _single_plan_id(spark, dir_a)
-    pid_b = _single_plan_id(spark, dir_b)
+    rp_a, rp_b = _run_plans(spark, dir_a), _run_plans(spark, dir_b)
+    pid_a, pid_b = _one_plan(rp_a), _one_plan(rp_b)
     ddl = ", ".join((
         spec_a.spark_ddl([key, *cols_a]),
         *( [spec_b.spark_ddl(cols_b)] if cols_b else [] ),
@@ -465,8 +422,8 @@ def join_frozen(
     if pid_a is None or pid_a != pid_b:
         # several plan generations (spec/layout evolution): pair files
         # within each generation when the manifests prove it sound
-        tasks = _multi_plan_tasks(spark, dir_a, dir_b, files_a, files_b,
-                                  spec_a, how, par, target_bytes)
+        tasks = _multi_plan_tasks(spark, dir_a, dir_b, rp_a, rp_b, files_a,
+                                  files_b, spec_a, how, par, target_bytes)
         if tasks is None:
             return fallback()
         if not tasks:

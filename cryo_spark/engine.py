@@ -29,44 +29,33 @@ import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from . import hashing, layout, snapshots, tablespec
+from . import hashing, layout, readview, snapshots, tablespec
 from .arrowutil import amap
 from .codecs import choose_float, choose_int, choose_str, decode_any, encode_any
 from .codecs.bits import get_blob, put_blob
 from .tablespec import SEQUENCES, ColumnSpec, TableSpec
 
-ENCODED_DDL = (
-    "partition_id int, chunk_id int, column string, codec_id string, "
-    "n_rows long, n_values long, raw_bytes long, enc_bytes long, "
-    "min_doc_id string, max_doc_id string, min_value string, "
-    "max_value string, key_bloom binary, wall_ms double, status string, "
-    "payload binary"
-)
-MANIFEST_COLUMNS = [
-    "partition_id", "chunk_id", "column", "codec_id", "n_rows", "n_values",
-    "raw_bytes", "enc_bytes", "min_doc_id", "max_doc_id", "min_value",
-    "max_value", "key_bloom", "wall_ms", "status",
-]
 
-
-def _manifest_proj(manifest_blooms: bool) -> list:
-    """Manifest projection; by default the bloom BYTES stay side-located.
+def _manifest_rows(written: DataFrame, plan_fp: str) -> DataFrame:
+    """The one manifest projection every writer commits: the written
+    encoded rows minus their payload, the run's plan fingerprint
+    stamped, and the bloom BYTES left side-located.
 
     The blooms dominated manifest size (~130 KB/chunk — ~6 TB of
     metadata ride-along at a 100 TB corpus, r4 verdict) yet only the
     point-lookup / contains / purge paths ever read them. The encoded
-    files already carry every bloom (per-chunk metadata riding the
-    data, authoritative copy), so the manifest keeps the SLOT (schema
-    unchanged, legacy manifests still read) but writes NULL bytes;
+    files carry every bloom (per-chunk metadata riding the data), so the
+    manifest keeps the SLOT (schema unchanged) but writes NULL bytes;
     pruning paths load blooms via a column-pruned projection of the
     encoded files (:func:`read_bloom_stats`) — fetched only when a
-    point lookup actually runs. ``manifest_blooms=True`` restores the
-    inline copy for manifests that must be self-contained off-cluster.
+    point lookup actually runs.
     """
-    if manifest_blooms:
-        return list(MANIFEST_COLUMNS)
-    return [F.lit(None).cast("binary").alias(c) if c == "key_bloom"
-            else c for c in MANIFEST_COLUMNS]
+    return written.select(
+        *[F.lit(None).cast("binary").alias(c) if c == "key_bloom" else c
+          for c in MANIFEST_COLUMNS],
+        F.lit(plan_fp).alias("plan_id"))
+
+
 SEQUENCES_DDL = SEQUENCES.spark_ddl()  # "doc_id string, tokens array<int>, ..."
 
 
@@ -108,6 +97,11 @@ _ENCODED_PA_SCHEMA = pa.schema(
         ("payload", pa.binary()),
     ]
 )
+_DDL_TYPES = {pa.int32(): "int", pa.int64(): "long", pa.string(): "string",
+              pa.binary(): "binary", pa.float64(): "double"}
+ENCODED_DDL = ", ".join(f"{f.name} {_DDL_TYPES[f.type]}"
+                        for f in _ENCODED_PA_SCHEMA)
+MANIFEST_COLUMNS = _ENCODED_PA_SCHEMA.names[:-1]  # all but the payload
 
 
 def _frame_validity(payload: bytes, arr) -> bytes:
@@ -256,15 +250,7 @@ def _encode_partition(spec: TableSpec = SEQUENCES):
         tbl = pa.Table.from_batches(list(batches), schema=schema)
         if tbl.num_rows == 0:
             return
-        cid = tbl.column("chunk_id").to_numpy(zero_copy_only=False)
-        order = np.argsort(cid, kind="stable")
-        sorted_cid = cid[order]
-        bounds = np.flatnonzero(np.diff(sorted_cid)) + 1
-        starts = np.concatenate(([0], bounds))
-        ends = np.concatenate((bounds, [len(cid)]))
-        tbl = tbl.take(pa.array(order)).combine_chunks()
-        for s, e in zip(starts, ends):
-            chunk = tbl.slice(s, int(e - s))
+        for _, chunk in _groups(tbl, _chunk_ids(tbl)):
             try:
                 yield from _encode_chunk(chunk, spec).to_batches()
             except Exception as e_:  # noqa: BLE001 — chunk-level fault isolation
@@ -277,6 +263,22 @@ def _encode_partition(spec: TableSpec = SEQUENCES):
                 yield from _failed_chunk_row(chunk, e_, spec).to_batches()
 
     return fn
+
+
+def _chunk_ids(tbl: pa.Table) -> np.ndarray:
+    return tbl.column("chunk_id").to_numpy(zero_copy_only=False)
+
+
+def _groups(tbl: pa.Table, key: np.ndarray):
+    """(key, rows) per distinct ``key`` value — a stable in-partition
+    group-by (every chunk's rows sit in one partition or file)."""
+    order = np.argsort(key, kind="stable")
+    key = key[order]
+    starts = np.flatnonzero(np.r_[True, key[1:] != key[:-1]])
+    ends = np.r_[starts[1:], len(key)]
+    tbl = tbl.take(pa.array(order)).combine_chunks()
+    for s, e in zip(starts, ends):
+        yield key[s], tbl.slice(int(s), int(e - s))
 
 
 ENC_BLOCK_BYTES = 8 << 20  # encoded-file row-group target (see _enc_writer)
@@ -560,22 +562,14 @@ def _decode_partition(columns: list[str], spec: TableSpec = SEQUENCES):
         tbl = pa.Table.from_batches(batches)
         if tbl.num_rows == 0:
             return
-        cid = tbl.column("chunk_id").to_numpy(zero_copy_only=False)
+        cid = _chunk_ids(tbl).astype(np.int64)
         run_codes = (
             tbl.column("run").combine_chunks().dictionary_encode()
             .indices.fill_null(-1)
             .to_numpy(zero_copy_only=False).astype(np.int64)
         )
-        order = np.lexsort((cid, run_codes))
-        key = run_codes[order] * (np.int64(cid.max()) + 1) + cid[order]
-        bounds = np.flatnonzero(np.diff(key)) + 1
-        starts = np.concatenate(([0], bounds))
-        ends = np.concatenate((bounds, [len(cid)]))
-        tbl = tbl.take(pa.array(order)).combine_chunks()
-        for s, e in zip(starts, ends):
-            yield from _decode_chunk(
-                tbl.slice(s, int(e - s)), columns, spec
-            ).to_batches()
+        for _, chunk in _groups(tbl, run_codes * (cid.max() + 1) + cid):
+            yield from _decode_chunk(chunk, columns, spec).to_batches()
 
     return fn
 
@@ -703,48 +697,46 @@ def decode(enc_df: DataFrame, columns: list[str] | None = None,
     )
 
 
+# chunk-level columns: constant across a chunk's rows, so a partition_by
+# over them keeps every chunk inside one encoded file (the per-file
+# decode contract) and the file kernel can restore them from the path
+_CHUNK_CONSTANT = ("partition_id", "chunk_id", "n_rows", "status",
+                   "min_doc_id", "max_doc_id")
+
+
 def _decode_files_kernel(columns: list[str], spec: TableSpec,
-                         drop_bits: bytes | None = None):
+                         drops: dict[str, bytes]):
     """Per-FILE decode kernel for the shuffle-free path (arrow_scan_files
     invokes it once per whole encoded file, so every chunk's rows are
     present). Failed chunk rows are dropped here — a failed chunk's only
     trace is its error manifest row, and resume re-encodes it under a
     later run (its own files).
 
-    ``drop_bits`` is a packed bitmap of chunk_ids retired by compaction
-    tombstones for the run these files belong to — O(n_chunks/8) bytes
-    in the task closure regardless of how many chunks were compacted
-    (the same representation as the resume bitmap)."""
-
-    def fn(batches):
+    ``drops`` maps a run to the packed bitmap of its chunk_ids retired
+    by live tombstones (readview.ReadView.drops) — O(n_chunks/8) bytes
+    per compacted run in the task closure; the kernel looks up its
+    file's run. Columns a ``partition_by`` layout moved into the
+    directory path come back from their ``k=v`` segment."""
+    def fn(path, batches):
         tbl = pa.Table.from_batches(list(batches))
         if tbl.num_rows == 0:
             return
+        vals = readview.path_values(path)
+        for k, v in vals.items():
+            if k not in tbl.column_names and k in _ENCODED_PA_SCHEMA.names:
+                typ = _ENCODED_PA_SCHEMA.field(k).type
+                tbl = tbl.append_column(
+                    k, pa.array([v] * tbl.num_rows).cast(typ))
         tbl = tbl.filter(pc.equal(tbl.column("status"), "ok"))
-        if drop_bits is not None and tbl.num_rows:
-            bits = np.frombuffer(drop_bits, dtype=np.uint8)
-            cid_ = tbl.column("chunk_id").to_numpy(zero_copy_only=False)
-            cid_ = cid_.astype(np.int64)
-            in_range = cid_ < (len(bits) << 3)
-            dropped = np.zeros(len(cid_), dtype=bool)
-            ir = cid_[in_range]
-            dropped[in_range] = (
-                bits[ir >> 3] >> (ir & 7).astype(np.uint8)) & 1 == 1
-            if dropped.any():
-                tbl = tbl.filter(pa.array(~dropped))
+        bits = drops.get(vals["run"])
+        if bits is not None and tbl.num_rows:
+            gone = readview.dropped(bits, _chunk_ids(tbl))
+            if gone.any():
+                tbl = tbl.filter(pa.array(~gone))
         if tbl.num_rows == 0:
             return
-        cid = tbl.column("chunk_id").to_numpy(zero_copy_only=False)
-        order = np.argsort(cid, kind="stable")
-        sorted_cid = cid[order]
-        bounds = np.flatnonzero(np.diff(sorted_cid)) + 1
-        starts = np.concatenate(([0], bounds))
-        ends = np.concatenate((bounds, [len(cid)]))
-        tbl = tbl.take(pa.array(order)).combine_chunks()
-        for s, e in zip(starts, ends):
-            yield from _decode_chunk(
-                tbl.slice(s, int(e - s)), columns, spec
-            ).to_batches()
+        for _, chunk in _groups(tbl, _chunk_ids(tbl)):
+            yield from _decode_chunk(chunk, columns, spec).to_batches()
 
     return fn
 
@@ -763,167 +755,61 @@ def decode_frozen(spark: SparkSession, output_dir: str,
     which at the 10^12-sequence scale is the difference between a read
     and a full extra shuffle of the compressed table.
 
-    The orphan-invisibility contract of :func:`read_encoded` is kept at
-    run granularity: only encoded ``run=`` dirs whose manifest run dir
-    carries a commit marker (``_SUCCESS``, written atomically after the
-    run's encoded files) are read; a manifest run dir WITHOUT a marker
-    means mid-commit death, where only the relational semi-join can
-    tell committed chunks apart — that case (and the ``partition_by``
-    nested layout) falls back to ``decode(read_encoded(...))``.
-
-    ``as_of`` time-travels to an earlier snapshot (snapshots.py): only
-    runs committed at seq <= as_of are scanned, and tombstones from
-    later compactions are not applied — the pre-rewrite chunks decode
-    as they stood. Raises if vacuum already deleted those bytes.
+    What is read is exactly the snapshot's :class:`readview.ReadView`:
+    the files of the live runs (a run is live iff the snapshot log
+    replayed to ``as_of`` — default head — names it; without a log, iff
+    its manifest dir carries ``_SUCCESS``), minus the chunks live
+    tombstones retire, minus the live equality deletes. Orphan run dirs
+    are never listed. ``as_of`` raises if vacuum already deleted bytes
+    the snapshot needs. Non-local (``://``) outputs decode through the
+    relational ``decode(read_encoded(...))``.
     """
-    import os
+    return _decode_view(spark, readview.read_view(output_dir, as_of),
+                        columns, spec)
 
+
+def _decode_view(spark: SparkSession, view: readview.ReadView,
+                 columns: list[str] | None, spec: TableSpec) -> DataFrame:
     from . import schema as schema_mod
+    from . import sources
 
     all_cols = [c.name for c in spec.columns]
     cols = all_cols if columns is None else schema_mod.compute_used_columns(
         all_cols, columns=columns
     )
-    enc_base = _encoded_path(output_dir)
-    man_base = _manifest_path(output_dir)
-
-    def run_dirs(base: str) -> set[str]:
-        if not os.path.isdir(base):
-            return set()
-        return {d for d in os.listdir(base) if d.startswith("run=")}
-
-    if not os.path.isdir(enc_base) or "://" in output_dir:
-        if "://" in output_dir:  # non-local store: relational path only
-            return decode(read_encoded(spark, output_dir, as_of=as_of),
-                          cols, spec)
-        if as_of is not None:
-            snapshots.resolve(output_dir, as_of)  # raises if no log
-        return spark.createDataFrame([], spec.spark_ddl(cols))
-    man_runs = run_dirs(man_base)
-    # manifest consolidation: absorbed runs have no run= dir anymore but
-    # their rows live in the generation file — committed by definition
-    cons = snapshots.latest_consolidation(output_dir)
-    absorbed = ({f"run={r}" for r in cons["absorbed"]}
-                if cons is not None else set())
-    man_runs |= absorbed
-    # snapshot visibility: an explicit as_of, or an active
-    # rollback/delete state (both replayed from the log); None = disk truth
-    vis = (snapshots.resolve(output_dir, as_of) if as_of is not None
-           else snapshots.current(output_dir))
     # equality deletes are row-level (merge-on-read): the key column
     # must be decoded to anti-join them, then projected away if the
     # caller didn't ask for it
-    need_del = vis is not None and bool(vis["deletes"])
-    dec_cols = cols if not need_del or spec.key in cols else [spec.key, *cols]
-
-    def finish(df: DataFrame) -> DataFrame:
-        if need_del:
-            df = _apply_deletes(spark, df, output_dir, vis, spec)
-            if dec_cols is not cols:
-                df = df.select(*cols)
-        return df
-
-    if vis is not None:
-        # only runs visible at this snapshot participate; a LATER run's
-        # missing commit marker must not force the fallback
-        man_runs = man_runs & {f"run={r}" for r in vis["runs"]}
-    root_success = os.path.exists(os.path.join(man_base, "_SUCCESS"))
-    committed = {
-        r for r in man_runs
-        if r in absorbed or root_success
-        or os.path.exists(os.path.join(man_base, r, "_SUCCESS"))
-    }
-    if man_runs - committed:
-        return finish(decode(read_encoded(spark, output_dir, as_of=as_of),
-                             dec_cols, spec))
-    if vis is not None:
-        man_vis = read_manifest(spark, output_dir, as_of=as_of)
-        if man_vis is None or {f"run={r}" for r in vis["runs"]} - man_runs:
-            # snapshot log names a run whose manifest dir is absent:
-            # inconsistent state — let the relational path sort it out
-            return finish(decode(read_encoded(spark, output_dir, as_of=as_of),
-                                 dec_cols, spec))
-        _check_reconstructable(spark, output_dir, man_vis, vis)
-    # compaction tombstones (committed writer runs only): per-target-run
-    # packed bitmaps of retired chunk_ids, applied inside the file kernel
-    # so a file holding both live and retired chunks decodes only the
-    # live ones; an uncommitted tombstone run (compaction died before
-    # its manifest commit) is invisible, like any orphan
-    drop_by_run: dict[str, np.ndarray] = {}
-    ts_base = _tombstones_path(output_dir)
-    for r in sorted(run_dirs(ts_base)):
-        if r not in committed:
-            continue
-        import pyarrow.parquet as _pq
-
-        t = _pq.read_table(os.path.join(ts_base, r),
-                           columns=["target_run", "chunk_id"])
-        tr = t.column("target_run").to_pylist()
-        cid = t.column("chunk_id").to_numpy(zero_copy_only=False)
-        for run_val in set(tr):
-            sel = cid[np.asarray(tr) == run_val].astype(np.int64)
-            key = f"run={run_val}"
-            need = (int(sel.max()) >> 3) + 1 if len(sel) else 1
-            bits = drop_by_run.get(key)
-            if bits is None or len(bits) < need:
-                grown = np.zeros(need, dtype=np.uint8)
-                if bits is not None:
-                    grown[: len(bits)] = bits
-                bits = grown
-            np.bitwise_or.at(bits, sel >> 3,
-                             (np.uint8(1) << (sel & 7).astype(np.uint8)))
-            drop_by_run[key] = bits
-    clean_files: list[str] = []
-    dropped_files: dict[str, list[str]] = {}
-    for r in sorted(run_dirs(enc_base) & committed):
-        d = os.path.join(enc_base, r)
-        for f in sorted(os.listdir(d)):
-            p = os.path.join(d, f)
-            if f.endswith(".parquet"):
-                if r in drop_by_run:
-                    dropped_files.setdefault(r, []).append(p)
-                else:
-                    clean_files.append(p)
-            elif os.path.isdir(p):
-                # partition_by nested layout: fall back
-                return finish(decode(read_encoded(spark, output_dir,
-                                                  as_of=as_of),
-                                     dec_cols, spec))
-    if not clean_files and not dropped_files:
-        return spark.createDataFrame([], spec.spark_ddl(cols))
-    from . import sources
-
-    read_cols = ["chunk_id", "column", "n_rows", "status", "payload"]
-    # physical projection: encoded files are clustered by (column,
-    # chunk_id) (engine._enc_writer), so a skinny decode reads only the
-    # row groups whose `column` band intersects the wanted set — the
-    # fat payload columns' bytes never leave disk. Whole-file reads
-    # (all columns wanted) skip the footer pass entirely.
-    rg_sel: dict[str, list[int]] | None = None
-    if len(dec_cols) < len(all_cols):
-        wanted = set(dec_cols)
-        rg_sel = {}
-        for p in (*clean_files, *(f for fl in dropped_files.values()
-                                  for f in fl)):
-            rgs = sources.select_row_groups(p, "column", wanted)
-            if rgs is not None:
-                rg_sel[p] = rgs
-    legs = []
-    if clean_files:
-        legs.append(sources.arrow_scan_files(
-            spark, clean_files, read_cols,
-            _decode_files_kernel(dec_cols, spec), spec.spark_ddl(dec_cols),
-            row_groups=rg_sel))
-    for r, fl in sorted(dropped_files.items()):
-        legs.append(sources.arrow_scan_files(
-            spark, fl, read_cols,
-            _decode_files_kernel(dec_cols, spec,
-                                 drop_bits=drop_by_run[r].tobytes()),
-            spec.spark_ddl(dec_cols), row_groups=rg_sel))
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionByName(leg)
-    return finish(out)
+    dec_cols = (cols if not view.deletes or spec.key in cols
+                else [spec.key, *cols])
+    files = view.all_files()
+    if "://" in view.output_dir:
+        df = decode(_encoded_df(spark, view), dec_cols, spec)
+    elif not files:
+        df = spark.createDataFrame([], spec.spark_ddl(dec_cols))
+    else:
+        # physical projection: encoded files are clustered by (column,
+        # chunk_id) (engine._enc_writer), so a skinny decode reads only
+        # the row groups whose `column` band intersects the wanted set —
+        # the fat payload columns' bytes never leave disk. Whole-file
+        # reads (all columns wanted) skip the footer pass entirely.
+        rg_sel: dict[str, list[int]] | None = None
+        if len(dec_cols) < len(all_cols):
+            rg_sel = {}
+            for p in files:
+                rgs = sources.select_row_groups(p, "column", set(dec_cols))
+                if rgs is not None:
+                    rg_sel[p] = rgs
+        df = sources.arrow_scan_files(
+            spark, files, ["chunk_id", "column", "n_rows", "status",
+                           "payload"],
+            _decode_files_kernel(dec_cols, spec, view.drops),
+            spec.spark_ddl(dec_cols), row_groups=rg_sel)
+    if view.deletes:
+        df = _apply_deletes(spark, df, view, spec)
+        if dec_cols is not cols:
+            df = df.select(*cols)
+    return df
 
 
 # ---------------------------------------------------------------------------
@@ -966,9 +852,9 @@ def consolidate_manifests(spark: SparkSession, output_dir: str) -> dict:
       read, re-collected by the next consolidation); death after the
       commit but before the dir deletes leaves absorbed dirs that every
       reader already excludes.
-    - **Conservative**: only run dirs that are BOTH named by the
-      snapshot log AND carry their ``_SUCCESS`` commit marker are
-      absorbed; an in-flight or mid-commit run's dir is left alone.
+    - **Conservative**: only run dirs the snapshot log names (the log
+      entry is the commit, written after the manifest dir is complete)
+      are absorbed; an in-flight or mid-commit run's dir is left alone.
 
     The reference has no analog (one process, one output dir —
     /root/reference/crates/freeze/src/types/reports.rs keeps one report
@@ -985,36 +871,23 @@ def consolidate_manifests(spark: SparkSession, output_dir: str) -> dict:
     entries = snapshots.log(output_dir)
     if not entries:
         return dict(consolidated=False, reason="no snapshot log")
-    logged_runs = {e["run"] for e in entries if e.get("run")}
-    cons = snapshots.latest_consolidation(output_dir)
-    prev_absorbed = cons["absorbed"] if cons else set()
+    view = readview.read_view(output_dir, strict=False)
     man_base = _manifest_path(output_dir)
-    dirs = set()
-    if os.path.isdir(man_base):
-        dirs = {d[4:] for d in os.listdir(man_base) if d.startswith("run=")}
     # leftovers of a consolidation that died between commit and delete
-    stale = dirs & prev_absorbed
-    root_success = os.path.exists(os.path.join(man_base, "_SUCCESS"))
-    absorb = {
-        d for d in (dirs - stale) & logged_runs
-        if root_success
-        or os.path.exists(os.path.join(man_base, f"run={d}", "_SUCCESS"))
-    }
+    stale = view.manifest_dirs & view.absorbed
+    # a run the log names has a complete manifest dir (the log entry is
+    # its commit); an in-flight run's dir is left alone
+    absorb = (view.manifest_dirs - stale) \
+        & {e["run"] for e in entries if e.get("run")}
     for d in stale:
         shutil.rmtree(os.path.join(man_base, f"run={d}"), ignore_errors=True)
     if not absorb:
         return dict(consolidated=False, reason="nothing to consolidate",
                     n_stale_cleaned=len(stale))
-    legs = []
-    if cons is not None:
-        legs.append(spark.read.parquet(
-            f"{_manifest_gens_path(output_dir)}/gen={cons['gen']}"))
-    dir_leg = _read_run_partitioned(spark, man_base).filter(
+    df = _read_run_partitioned(spark, man_base).filter(
         F.col("run").isin(sorted(absorb)))
-    legs.append(dir_leg)
-    df = legs[0]
-    for leg in legs[1:]:
-        df = df.unionByName(leg, allowMissingColumns=True)
+    if view.manifest_gen is not None:
+        df = spark.read.parquet(view.manifest_gen).unionByName(df)
     n_rows = df.count()
     # bounded file count is the whole point: ~1M manifest rows (a few
     # tens of MB) per output file, global sort by run so visibility
@@ -1027,16 +900,14 @@ def consolidate_manifests(spark: SparkSession, output_dir: str) -> dict:
         .sortWithinPartitions("run", "partition_id", "chunk_id")
         .write.mode("error").parquet(gen_dir)
     )
-    absorbed_all = sorted(prev_absorbed | absorb)
+    absorbed_all = sorted(view.absorbed | absorb)
     seq = snapshots.commit(output_dir, None, "consolidate", gen=new_gen,
                            absorbed_runs=absorbed_all)
     # post-commit cleanup; every reader already excludes these
     for d in absorb:
         shutil.rmtree(os.path.join(man_base, f"run={d}"), ignore_errors=True)
-    if cons is not None:
-        shutil.rmtree(
-            f"{_manifest_gens_path(output_dir)}/gen={cons['gen']}",
-            ignore_errors=True)
+    if view.manifest_gen is not None:
+        shutil.rmtree(view.manifest_gen, ignore_errors=True)
     # unreferenced gens (a prior consolidation died pre-commit)
     gens_base = _manifest_gens_path(output_dir)
     for g in os.listdir(gens_base):
@@ -1063,19 +934,23 @@ def _deletes_path(output_dir: str) -> str:
     return f"{output_dir}/deletes"
 
 
-def _apply_deletes(spark: SparkSession, df: DataFrame, output_dir: str,
-                   vis: dict, spec: TableSpec) -> DataFrame:
-    """Anti-join the snapshot's visible equality-delete keys.
+def _delete_keys(spark: SparkSession, view: readview.ReadView, spec: TableSpec) -> DataFrame:
+    """Distinct keys of the view's live equality-delete runs."""
+    paths = [f"{_deletes_path(view.output_dir)}/run={r}"
+             for r in sorted(view.deletes)]
+    return spark.read.parquet(*paths).select(spec.key).distinct()
+
+
+def _apply_deletes(spark: SparkSession, df: DataFrame,
+                   view: readview.ReadView, spec: TableSpec) -> DataFrame:
+    """Anti-join the view's live equality-delete keys.
 
     Merge-on-read: delete runs are key files (engine.delete_where),
     applied at read time. No broadcast hint — AQE broadcasts small
     delete sets itself, and a billion-key delete set must shuffle."""
-    if not vis.get("deletes"):
+    if not view.deletes:
         return df
-    paths = [f"{_deletes_path(output_dir)}/run={r}"
-             for r in sorted(vis["deletes"])]
-    dk = spark.read.parquet(*paths).select(spec.key).distinct()
-    return df.join(dk, spec.key, "left_anti")
+    return df.join(_delete_keys(spark, view, spec), spec.key, "left_anti")
 
 
 def delete_where(
@@ -1166,15 +1041,20 @@ def read_appends(
         all_cols, columns=columns)
     if not runs:
         return spark.createDataFrame([], spec.spark_ddl(cols))
-    man = read_manifest(spark, output_dir, raw=True).filter(
-        F.col("run").isin(runs))
-    keys = man.filter(F.col("status") == "ok").select(
-        "run", "partition_id", "chunk_id").distinct()
-    enc = _read_run_partitioned(spark, _encoded_path(output_dir)).filter(
+    return decode(_runs_encoded(spark, output_dir, runs), cols, spec)
+
+
+def _runs_encoded(spark: SparkSession, output_dir: str,
+                  runs: list[str]) -> DataFrame:
+    """Encoded rows of the ok chunks of exactly ``runs`` (the runs an
+    incremental read names, live at head or not)."""
+    keys = read_manifest(spark, output_dir, raw=True).filter(
+        (F.col("status") == "ok") & F.col("run").isin(runs)
+    ).select("run", "partition_id", "chunk_id").distinct()
+    return _read_run_partitioned(spark, _encoded_path(output_dir)).filter(
         F.col("run").isin(runs)
     ).join(F.broadcast(keys), ["run", "partition_id", "chunk_id"],
            "left_semi")
-    return decode(enc, columns=cols, spec=spec)
 
 
 def read_changes(
@@ -1251,20 +1131,12 @@ def read_changes(
     meta = [F.lit(None).cast("string").alias("_change_type"),
             F.lit(None).cast("long").alias("_commit_seq")]
     parts: list[DataFrame] = []
-    if ins_entries:
-        man = read_manifest(spark, output_dir, raw=True)
-        enc_all = _read_run_partitioned(spark, _encoded_path(output_dir))
-        for e in ins_entries:
-            keys = man.filter(
-                (F.col("status") == "ok") & (F.col("run") == e["run"])
-            ).select("run", "partition_id", "chunk_id").distinct()
-            enc = enc_all.filter(F.col("run") == e["run"]).join(
-                F.broadcast(keys), ["run", "partition_id", "chunk_id"],
-                "left_semi")
-            parts.append(
-                decode(enc, columns=all_cols, spec=spec)
-                .withColumn("_change_type", F.lit("insert"))
-                .withColumn("_commit_seq", F.lit(int(e["seq"])).cast("long")))
+    for e in ins_entries:
+        parts.append(
+            decode(_runs_encoded(spark, output_dir, [e["run"]]),
+                   columns=all_cols, spec=spec)
+            .withColumn("_change_type", F.lit("insert"))
+            .withColumn("_commit_seq", F.lit(int(e["seq"])).cast("long")))
     for e in del_entries:
         dk = spark.read.parquet(
             f"{_deletes_path(output_dir)}/run={e['run']}").select(spec.key)
@@ -1290,11 +1162,11 @@ def verify_output(spark: SparkSession, output_dir: str) -> dict:
     Cross-checks the four metadata surfaces against each other and the
     encoded files — all metadata-column reads, no payload decode:
 
-    - every committed ok manifest row has its encoded row (missing
-      payload = corruption, ``n_missing_payload``);
+    - every chunk live at the head (readview.read_view) has its encoded
+      rows (missing payload = corruption, ``n_missing_payload``);
     - encoded rows without a manifest row are orphans (invisible by
       design — reported, not an error, ``n_orphan_rows``);
-    - tombstones must target rows that exist in the manifest
+    - live tombstones must target rows that exist in the manifest
       (``n_dangling_tombstones``);
     - every data/delete run named by the snapshot log must have its
       manifest dir / delete files (``missing_runs``/
@@ -1306,10 +1178,9 @@ def verify_output(spark: SparkSession, output_dir: str) -> dict:
     Returns a dict with ``status`` 'ok' (clean), 'warn' (only
     informational findings) or 'corrupt'.
     """
-    import os
-
     report: dict = {}
-    man = read_manifest(spark, output_dir, raw=True)
+    view = readview.read_view(output_dir, strict=False)
+    man = _manifest_df(spark, view, raw=True)
     if man is None:
         report.update(status="ok", empty=True)
         return report
@@ -1320,44 +1191,34 @@ def verify_output(spark: SparkSession, output_dir: str) -> dict:
             spark, _encoded_path(output_dir)).select(*keys4)
     except Exception:
         enc = ok.limit(0)
-    # missing payload is corruption only for LIVE chunks: a chunk every
-    # committed tombstone retires keeps its (append-only) manifest row
-    # while vacuum legitimately reclaims its bytes once the whole run
-    # dir is dead — the streaming-cadence soak (compact + consolidate +
-    # checkpoint + vacuum) hits exactly that state, and raw-ok rows
-    # would report every reclaimed chunk as corrupt
-    live_keys = _visible_ok_keys(spark, output_dir, man)
-    ok_live = ok.join(F.broadcast(live_keys),
+    # missing payload is corruption only for chunks LIVE at the head: a
+    # retired chunk keeps its (append-only) manifest row while vacuum
+    # legitimately reclaims its bytes, and a chunk of a rolled-back run
+    # is no reader's concern — the read view decides, as for every read
+    live = _live_chunks(spark, view, man)
+    ok_live = ok.join(F.broadcast(live),
                       ["run", "partition_id", "chunk_id"], "left_semi")
     report["n_missing_payload"] = ok_live.join(
         enc, keys4, "left_anti").count()
     report["n_orphan_rows"] = enc.join(ok, keys4, "left_anti").count()
     report["n_duplicate_rows"] = (
         ok.groupBy(*keys4).count().filter(F.col("count") > 1).count())
-    ts = _read_tombstones(spark, output_dir)
-    report["n_dangling_tombstones"] = 0
-    if ts is not None:
-        targets = ts.select(F.col("target_run").alias("run"),
-                            "partition_id", "chunk_id")
-        have = man.select("run", "partition_id", "chunk_id").distinct()
-        report["n_dangling_tombstones"] = targets.join(
-            have, ["run", "partition_id", "chunk_id"], "left_anti").count()
+    dropped = view.dropped_keys()
+    report["n_dangling_tombstones"] = 0 if not dropped else (
+        spark.createDataFrame(dropped, "run string, chunk_id int")
+        .join(man.select("run", "chunk_id").distinct(),
+              ["run", "chunk_id"], "left_anti").count())
     report["n_failed_chunks"] = man.filter(
         F.col("status") != "ok").select("run", "chunk_id").distinct().count()
-    entries = snapshots.log(output_dir) if "://" not in output_dir else []
+    entries = snapshots.log(output_dir)
     man_runs = {r["run"] for r in man.select("run").distinct().collect()}
-    removed = {r for e in entries if e["kind"] == "vacuum"
-               for r in e.get("removed_runs", [])}
     # a zero-survivor purge commits an EMPTY manifest (no rows, but the
     # run dir + _SUCCESS exist) — such entries record n_new_chunks=0 in
     # the log, and ONLY those may satisfy the check via a bare run dir.
     # An append/rewrite whose manifest parquet was lost (dir present,
     # rows gone) must still read as corrupt, so the dir-based exemption
     # is gated on the recorded chunk count, not on the entry kind.
-    man_base = _manifest_path(output_dir)
-    man_dirs = ({d[len("run="):] for d in os.listdir(man_base)
-                 if d.startswith("run=")}
-                if os.path.isdir(man_base) else set())
+    man_dirs = view.manifest_dirs | view.absorbed
     report["missing_runs"] = sorted(
         e["run"] for e in entries
         if e["kind"] in ("append", "rewrite", "purge") and e["run"]
@@ -1370,20 +1231,10 @@ def verify_output(spark: SparkSession, output_dir: str) -> dict:
         and not os.path.isdir(
             f"{_deletes_path(output_dir)}/run={e['run']}")
     )
-    # visible runs whose payload bytes are gone without a vacuum record
-    enc_base = _encoded_path(output_dir)
-    present = set()
-    if os.path.isdir(enc_base):
-        present = {d[4:] for d in os.listdir(enc_base)
-                   if d.startswith("run=")}
-    live_runs = {
-        r["run"] for r in
-        _visible_ok_keys(spark, output_dir,
-                         read_manifest(spark, output_dir))
-        .select("run").distinct().collect()
-    }
+    # live runs whose payload bytes are gone without a vacuum record
+    live_runs = {r["run"] for r in live.select("run").distinct().collect()}
     report["unaccounted_missing_dirs"] = sorted(
-        (live_runs - present) - removed)
+        live_runs - view.files.keys() - view.vacuumed)
     errors = (
         report["n_missing_payload"] or report["n_duplicate_rows"]
         or report["missing_runs"] or report["missing_delete_runs"]
@@ -1610,11 +1461,11 @@ def upsert(
         raise ValueError(
             f"upsert batch has duplicate keys ({n_batch} rows, "
             f"{n_batch_keys} distinct {spec.key})")
-    if "://" not in output_dir:
-        vis = snapshots.current(output_dir)
-        if vis is not None and vis["deletes"]:
-            purge_deletes(spark, output_dir, target_tokens, spec)
-    man = read_manifest(spark, output_dir)
+    view = readview.read_view(output_dir)
+    if view.deletes:
+        purge_deletes(spark, output_dir, target_tokens, spec)
+        view = readview.read_view(output_dir)
+    man = _manifest_df(spark, view)
     if man is None:
         # empty table: the merge degenerates to a plain freeze append
         summary = freeze(spark, input_path, output_dir,
@@ -1629,12 +1480,12 @@ def upsert(
     bkeys = batch.select(spec.key).localCheckpoint()
     # consumed three times (count, payload semi-join, tombstone write):
     # pin the chunk set once
-    affected = _affected_chunks(spark, output_dir, man, bkeys, spec) \
+    affected = _affected_chunks(spark, view, man, bkeys, spec) \
         .localCheckpoint()
     n_affected = affected.count()
     old_rows = spark.createDataFrame([], spec.spark_ddl())
     if n_affected:
-        enc_subset = read_encoded(spark, output_dir).join(
+        enc_subset = _encoded_df(spark, view).join(
             F.broadcast(affected), ["run", "partition_id", "chunk_id"],
             "left_semi")
         old_rows = decode(enc_subset, spec=spec)
@@ -1644,21 +1495,9 @@ def upsert(
     n_survive = merged.count() - n_batch
     n_updated = n_old - n_survive
     plan = layout.plan_chunks(merged, target_tokens, spec=spec)
-    run_id = _new_run_id()
-    enc_dir = f"{_encoded_path(output_dir)}/run={run_id}"
-    _enc_writer(_grouped_encode(merged, plan, spec=spec)) \
-        .mode("error").parquet(enc_dir)
-    if n_affected:
-        affected.withColumnRenamed("run", "target_run").coalesce(1) \
-            .write.mode("error") \
-            .parquet(f"{_tombstones_path(output_dir)}/run={run_id}")
-    written = spark.read.parquet(enc_dir)
-    man_dir = f"{_manifest_path(output_dir)}/run={run_id}"
-    written.select(*_manifest_proj(False)).withColumn(
-        "plan_id", F.lit(_plan_fingerprint(plan))
-    ).write.mode("error").parquet(man_dir)
-    snap = snapshots.commit(output_dir, run_id, "rewrite",
-                            n_retired=n_affected, command="upsert")
+    run_id, snap = _commit_rewrite(
+        spark, output_dir, merged, plan, affected if n_affected else None,
+        spec, "rewrite", n_retired=n_affected, command="upsert")
     summary = dict(
         snapshot=snap, run=run_id,
         n_updated=int(n_updated), n_inserted=int(n_batch - n_updated),
@@ -1672,8 +1511,9 @@ def upsert(
     return summary
 
 
-def _affected_chunks(spark: SparkSession, output_dir: str, man: DataFrame,
-                     keys_df: DataFrame, spec: TableSpec) -> DataFrame:
+def _affected_chunks(spark: SparkSession, view: readview.ReadView,
+                     man: DataFrame, keys_df: DataFrame,
+                     spec: TableSpec) -> DataFrame:
     """Live chunks that can contain any of the given key values.
 
     Zone-map range join first (numeric compare when the key has a
@@ -1691,7 +1531,7 @@ def _affected_chunks(spark: SparkSession, output_dir: str, man: DataFrame,
     except ValueError:
         k_num = F.col(spec.key).cast("string")
         kmin_e, kmax_e = F.col("min_doc_id"), F.col("max_doc_id")
-    live = _visible_ok_keys(spark, output_dir, man)
+    live = _live_chunks(spark, view, man)
     ranges_df = man.filter(
         (F.col("status") == "ok") & (F.col("column") == payload_col)
     ).select("run", "partition_id", "chunk_id",
@@ -1706,7 +1546,7 @@ def _affected_chunks(spark: SparkSession, output_dir: str, man: DataFrame,
     )
     probe = keys_df.limit(_BLOOM_PRUNE_MAX_KEYS + 1).collect()
     if len(probe) <= _BLOOM_PRUNE_MAX_KEYS:
-        bk = _bloom_chunk_keys(read_bloom_stats(spark, output_dir, man),
+        bk = _bloom_chunk_keys(read_bloom_stats(spark, view.output_dir),
                                [str(r[0]) for r in probe], spec)
         if bk is not None:
             affected = affected.join(bk, ["run", "partition_id", "chunk_id"],
@@ -1737,27 +1577,25 @@ def purge_deletes(
     t_start = time.perf_counter()
     no_op = dict(snapshot=None, run=None, n_rewritten=0, n_purged_rows=0,
                  wall_s=0.0)
-    vis = snapshots.current(output_dir) if "://" not in output_dir else None
-    if vis is None or not vis["deletes"]:
+    view = readview.read_view(output_dir)
+    if not view.deletes:
         return no_op
-    man = read_manifest(spark, output_dir)  # current-visible rows
+    man = _manifest_df(spark, view)
     if man is None:
         return no_op
-    payload_col = spec.list_column or spec.key
-    dk_paths = [f"{_deletes_path(output_dir)}/run={r}"
-                for r in sorted(vis["deletes"])]
-    dk = spark.read.parquet(*dk_paths).select(spec.key).distinct()
-    affected = _affected_chunks(spark, output_dir, man, dk, spec) \
+    purged = sorted(view.deletes)
+    dk = _delete_keys(spark, view, spec)
+    affected = _affected_chunks(spark, view, man, dk, spec) \
         .localCheckpoint()
     n_affected = affected.count()
     if n_affected == 0:
         # keys match nothing physical (already purged / never existed):
         # still retire the delete runs so reads stop anti-joining
         snap = snapshots.commit(output_dir, None, "purge",
-                                purged_deletes=sorted(vis["deletes"]))
+                                purged_deletes=purged)
         return dict(snapshot=snap, run=None, n_rewritten=0, n_purged_rows=0,
                     wall_s=time.perf_counter() - t_start)
-    enc_subset = read_encoded(spark, output_dir).join(
+    enc_subset = _encoded_df(spark, view).join(
         F.broadcast(affected), ["run", "partition_id", "chunk_id"],
         "left_semi")
     rows = decode(enc_subset, spec=spec)
@@ -1767,11 +1605,9 @@ def purge_deletes(
     if n_keep == 0:
         # nothing survives the rewrite: commit a deletes-only snapshot —
         # tombstones for the affected chunks plus an EMPTY manifest for
-        # the writer run. Manifest rows ARE the commit carrier
-        # (_visible_ok_keys treats a tombstone run as visible iff its
-        # manifest run committed), so the zero-row manifest write is
-        # exactly what makes the tombstones visible: Iceberg's rewrite
-        # that adds zero files and deletes N. The old behavior kept
+        # the writer run (its tombstones are live iff the run is — the
+        # log entry below commits both): Iceberg's rewrite that adds
+        # zero files and deletes N. The old behavior kept
         # merge-on-read forever here, and the suite's 'purged' pin only
         # passed when key-bloom false positives happened to drag
         # surviving rows into the rewrite — caught by the second-seed
@@ -1789,27 +1625,15 @@ def purge_deletes(
         # zero-chunk rewrite may pass the missing_runs check via a bare
         # run dir; a lost append/rewrite manifest must stay corrupt)
         snap = snapshots.commit(output_dir, run_id, "purge",
-                                purged_deletes=sorted(vis["deletes"]),
+                                purged_deletes=purged,
                                 n_retired=n_affected, n_new_chunks=0)
         return dict(snapshot=snap, run=run_id, n_rewritten=n_affected,
                     n_new_chunks=0, n_purged_rows=n_before,
                     wall_s=time.perf_counter() - t_start)
     plan = layout.plan_chunks(keep, target_tokens, spec=spec)
-    run_id = _new_run_id()
-    enc_dir = f"{_encoded_path(output_dir)}/run={run_id}"
-    _enc_writer(_grouped_encode(keep, plan, spec=spec)) \
-        .mode("error").parquet(enc_dir)
-    affected.withColumnRenamed("run", "target_run").coalesce(1) \
-        .write.mode("error") \
-        .parquet(f"{_tombstones_path(output_dir)}/run={run_id}")
-    written = spark.read.parquet(enc_dir)
-    man_dir = f"{_manifest_path(output_dir)}/run={run_id}"
-    written.select(*_manifest_proj(False)).withColumn(
-        "plan_id", F.lit(_plan_fingerprint(plan))
-    ).write.mode("error").parquet(man_dir)
-    snap = snapshots.commit(output_dir, run_id, "purge",
-                            purged_deletes=sorted(vis["deletes"]),
-                            n_retired=n_affected)
+    run_id, snap = _commit_rewrite(
+        spark, output_dir, keep, plan, affected, spec, "purge",
+        purged_deletes=purged, n_retired=n_affected)
     summary = dict(
         snapshot=snap, run=run_id, n_rewritten=n_affected,
         n_new_chunks=plan.n_chunks, n_purged_rows=n_before - n_keep,
@@ -1820,6 +1644,28 @@ def purge_deletes(
         command="purge_deletes", **summary,
     ))
     return summary
+
+
+def _commit_rewrite(spark: SparkSession, output_dir: str, rows: DataFrame,
+                    plan: layout.ChunkPlan, retired: DataFrame | None,
+                    spec: TableSpec, kind: str, **log) -> tuple[str, int]:
+    """Commit one rewrite run: ``rows`` encoded under ``plan``, the
+    ``retired`` (run, partition_id, chunk_id) keys tombstoned. Commit
+    order — encoded files, tombstones, manifest, then the snapshot-log
+    entry that is the commit: death anywhere before it leaves the whole
+    run invisible. Returns (run id, snapshot seq)."""
+    run_id = _new_run_id()
+    enc_dir = f"{_encoded_path(output_dir)}/run={run_id}"
+    _enc_writer(_grouped_encode(rows, plan, spec=spec)) \
+        .mode("error").parquet(enc_dir)
+    if retired is not None:
+        retired.withColumnRenamed("run", "target_run").coalesce(1) \
+            .write.mode("error") \
+            .parquet(f"{_tombstones_path(output_dir)}/run={run_id}")
+    _manifest_rows(spark.read.parquet(enc_dir), _plan_fingerprint(plan)) \
+        .write.mode("error") \
+        .parquet(f"{_manifest_path(output_dir)}/run={run_id}")
+    return run_id, snapshots.commit(output_dir, run_id, kind, **log)
 
 
 def _new_run_id() -> str:
@@ -1837,8 +1683,13 @@ def _new_run_id() -> str:
     return "r" + uuid.uuid4().hex[:11]
 
 
-def _read_run_partitioned(spark: SparkSession, path: str) -> DataFrame:
+def _read_run_partitioned(spark: SparkSession, path: str,
+                          paths: list[str] | None = None) -> DataFrame:
     """Read a run=-partitioned layout with ``run`` guaranteed string.
+
+    ``paths`` restricts the read to those files/dirs under ``path`` (a
+    read view's list: Spark then lists nothing else, and the ``run=``
+    segments still become the ``run`` column).
 
     Belt to _new_run_id's suspenders: partition-value inference mangles
     numeric-looking legacy run ids (value AND type). When inference
@@ -1850,202 +1701,120 @@ def _read_run_partitioned(spark: SparkSession, path: str) -> DataFrame:
     """
     from pyspark.sql.types import StringType, StructField, StructType
 
-    df = spark.read.parquet(path)
+    def read(reader):
+        if paths is None:
+            return reader.parquet(path)
+        return reader.option("basePath", path).parquet(*paths)
+
+    df = read(spark.read)
     if "run" in df.columns and not isinstance(
             df.schema["run"].dataType, StringType):
         fields = [
             StructField("run", StringType(), True) if f.name == "run" else f
             for f in df.schema.fields
         ]
-        df = spark.read.schema(StructType(fields)).parquet(path)
+        df = read(spark.read.schema(StructType(fields)))
     return df
-
-
-def _read_tombstones(spark: SparkSession, output_dir: str) -> DataFrame | None:
-    """Tombstone rows (target_run, partition_id, chunk_id) + writer `run`.
-
-    A tombstone retires one encoded chunk (its payload rows stop being
-    visible); it is written by :func:`compact` under ``tombstones/run=R``
-    where R is the compaction's own run id, and counts only once THAT
-    run's manifest is committed — so new data and retirement become
-    visible in the same atomic step (the manifest write), mirroring how
-    an Iceberg rewrite commits added and deleted files in one snapshot.
-    """
-    try:
-        return _read_run_partitioned(spark, _tombstones_path(output_dir))
-    except Exception:
-        return None
 
 
 def read_manifest(spark: SparkSession, output_dir: str,
                   as_of: int | str | None = None,
                   raw: bool = False) -> DataFrame | None:
-    """Manifest rows; ``as_of`` restricts to runs committed at seq <= as_of.
+    """Manifest rows of the runs live at ``as_of`` (default head).
 
-    With ``as_of`` the append-only manifest is filtered through the
-    snapshot log (snapshots.py) — later appends, later compactions'
-    rewrite runs, and their tombstone writers all drop out, which is
-    what makes every downstream read snapshot-isolated. Without
-    ``as_of``, an active rollback (snapshots.current) filters the same
-    way, so resume/compact/reads all agree on the rolled-back state;
-    ``raw=True`` bypasses both (filesystem truth — vacuum's view).
+    A run is live iff the snapshot log replayed to ``as_of`` names it;
+    an output without a log (non-local store, hand-built dir) counts a
+    run live iff its manifest dir carries ``_SUCCESS`` (readview — the
+    one liveness rule). So later appends, rolled-back runs, other
+    branches' runs and a manifest whose log commit never landed all
+    drop out, which is what makes every downstream read
+    snapshot-isolated. Chunks retired by tombstones keep their rows
+    (the manifest is append-only history; :func:`read_encoded` and
+    :func:`decode_frozen` skip them). ``raw=True`` returns every
+    manifest row on disk instead (filesystem truth — audit's view).
+    None when nothing was ever committed.
     """
-    man_path = _manifest_path(output_dir)
-    cons = snapshots.latest_consolidation(output_dir)
-    if cons is None and "://" not in output_dir and not os.path.isdir(man_path):
-        # probing a not-yet-created output through the JVM reader dumps
-        # an AnalysisException stack trace into the executor log even
-        # though we swallow it — answer the common local case silently
-        return None
+    return _manifest_df(spark, readview.read_view(output_dir, as_of,
+                                                  strict=False), raw)
+
+
+def _manifest_df(spark: SparkSession, view: readview.ReadView,
+                 raw: bool = False) -> DataFrame | None:
+    """The view's manifest rows: the consolidated generation (``run`` is
+    an ordinary column there) plus the per-run dirs it has not absorbed
+    (a dir the consolidate commit absorbed but did not yet delete must
+    not count twice)."""
+    man_path = _manifest_path(view.output_dir)
+    dirs = view.manifest_dirs - view.absorbed
+    if not raw:
+        dirs &= view.runs
     legs = []
-    if cons is not None:
-        # consolidated generation: absorbed runs' rows live here with
-        # `run` as an ordinary (string) column. A gen the log references
-        # but whose bytes are gone is metadata corruption — raise rather
-        # than silently dropping every absorbed run's manifest.
-        gen_dir = f"{_manifest_gens_path(output_dir)}/gen={cons['gen']}"
+    if view.manifest_gen is not None:
+        # a gen the log references but whose bytes are gone is metadata
+        # corruption — raise rather than silently dropping every
+        # absorbed run's manifest
         try:
-            legs.append(spark.read.parquet(gen_dir))
+            legs.append(spark.read.parquet(view.manifest_gen))
         except Exception as e:
             raise ValueError(
-                f"manifest generation {cons['gen']!r} referenced by "
-                f"snapshot {cons['seq']} is unreadable under "
-                f"{gen_dir!r}") from e
-    dir_leg = None
-    if "://" in output_dir or os.path.isdir(man_path):
-        try:
-            dir_leg = _read_run_partitioned(spark, man_path)
-        except Exception:
-            dir_leg = None
-    if dir_leg is not None and cons is not None and cons["absorbed"]:
-        # absorbed dirs are deleted right after the consolidate commit;
-        # this filter is the crash-window safety net (commit landed,
-        # delete didn't) that keeps their rows from counting twice
-        dir_leg = dir_leg.filter(
-            ~F.col("run").isin(sorted(cons["absorbed"])))
-    if dir_leg is not None:
-        legs.append(dir_leg)
+                f"manifest generation {view.manifest_gen!r} referenced by "
+                "the snapshot log is unreadable") from e
+    if dirs:
+        legs.append(_read_run_partitioned(
+            spark, man_path, [f"{man_path}/run={r}" for r in sorted(dirs)]))
     if not legs:
         return None
     man = legs[0]
     for leg in legs[1:]:
-        man = man.unionByName(leg, allowMissingColumns=True)
-    if raw:
-        return man
-    vis = None
-    if as_of is not None:
-        vis = snapshots.resolve(output_dir, as_of)
-    elif "://" not in output_dir:
-        vis = snapshots.current(output_dir)
-    if vis is not None:
-        man = man.filter(F.col("run").isin(sorted(vis["runs"])))
+        man = man.unionByName(leg)
+    if not raw and view.manifest_gen is not None:
+        man = man.filter(F.col("run").isin(sorted(view.runs)))
     return man
-
-
-def _check_reconstructable(spark: SparkSession, output_dir: str,
-                           man_vis: DataFrame, vis: dict) -> None:
-    """Raise if a time-travel read needs payload bytes vacuum deleted.
-
-    A visible run whose ``encoded/run=`` dir is gone is fine as long as
-    every one of its chunks is retired by a tombstone visible at the
-    same snapshot (the vacuum precondition); a LIVE chunk in a deleted
-    dir means the requested snapshot predates the compaction whose
-    vacuum removed the bytes — the Iceberg contract that
-    expire_snapshots forfeits time travel past it.
-    """
-    import os
-
-    base = _encoded_path(output_dir)
-    present = set()
-    if os.path.isdir(base):
-        present = {d[4:] for d in os.listdir(base) if d.startswith("run=")}
-    missing = vis["runs"] - present
-    if not missing:
-        return
-    # pass the SNAPSHOT's run set: without it _visible_ok_keys falls
-    # back to snapshots.current for tombstone-writer visibility, so a
-    # LATER deletes-only purge would retire this snapshot's chunks and
-    # silently suppress the reconstructability error on an as_of read
-    live = _visible_ok_keys(spark, output_dir, man_vis,
-                            vis_runs=vis["runs"]).filter(
-        F.col("run").isin(sorted(missing)))
-    if live.limit(1).count():
-        raise ValueError(
-            f"snapshot not reconstructable: run(s) {sorted(missing)} were "
-            "vacuumed but still hold live chunks at this snapshot "
-            "(expire_snapshots forfeits time travel past it)")
 
 
 def read_encoded(spark: SparkSession, output_dir: str,
                  as_of: int | str | None = None) -> DataFrame:
-    """Committed chunks only: encoded rows whose chunk is in the manifest.
+    """Live chunks only: encoded rows of the snapshot's live runs whose
+    chunk has an ok manifest row and no live tombstone.
 
-    A run that died between writing encoded files and committing its
-    manifest leaves orphan files; the semi-join makes them invisible —
-    the atomicity discipline of the reference's tmp-rename
+    A run that died before its commit leaves orphan files that no read
+    view lists; the manifest semi-join additionally drops encoded rows
+    a manifest does not vouch for — the atomicity discipline of the
+    reference's tmp-rename
     (/root/reference/crates/freeze/src/types/dataframes/export.rs:13-23)
     done relationally. ``as_of`` reads the table at an earlier snapshot
     (snapshots.py), raising if vacuum already deleted those bytes.
     """
-    try:
-        enc = _read_run_partitioned(spark, _encoded_path(output_dir))
-    except Exception:
+    return _encoded_df(spark, readview.read_view(output_dir, as_of))
+
+
+def _encoded_df(spark: SparkSession, view: readview.ReadView) -> DataFrame:
+    man = _manifest_df(spark, view)
+    files = view.all_files()
+    if man is None or not files:
         # an empty-input freeze commits nothing: no encoded dir is a
         # valid (empty) output, not an error
         return spark.createDataFrame([], ENCODED_DDL + ", run string")
-    man = read_manifest(spark, output_dir, as_of=as_of)
-    if man is None:
-        return enc.limit(0)
-    if "://" not in output_dir:
-        vis = (snapshots.resolve(output_dir, as_of) if as_of is not None
-               else snapshots.current(output_dir))
-        if vis is not None:
-            _check_reconstructable(spark, output_dir, man, vis)
-    keys = _visible_ok_keys(
-        spark, output_dir, man,
-        vis_runs=(vis["runs"] if ("://" not in output_dir
-                                  and vis is not None) else None))
-    return enc.join(F.broadcast(keys), ["run", "partition_id", "chunk_id"], "left_semi")
+    enc = _read_run_partitioned(spark, _encoded_path(view.output_dir), files)
+    return enc.join(F.broadcast(_live_chunks(spark, view, man)),
+                    ["run", "partition_id", "chunk_id"], "left_semi")
 
 
-def _visible_ok_keys(spark: SparkSession, output_dir: str,
-                     man: DataFrame,
-                     vis_runs: set[str] | None = None) -> DataFrame:
-    """Distinct (run, partition_id, chunk_id) of live committed chunks.
-
-    Committed = an ok manifest row exists; live = not retired by a
-    visible compaction tombstone. A tombstone run is visible iff its own
-    manifest run committed (manifest rows ARE the commit); visible
-    tombstones retire the chunk they target via an anti-join — the
-    deletion analog of the orphan-invisibility semi-join.
-    """
-    keys = man.filter(F.col("status") == "ok").select(
-        "run", "partition_id", "chunk_id"
-    ).distinct()
-    ts = _read_tombstones(spark, output_dir)
-    if ts is not None:
-        committed_runs = man.select("run").distinct()
-        if vis_runs is None and "://" not in output_dir:
-            cur = snapshots.current(output_dir)
-            vis_runs = cur["runs"] if cur is not None else None
-        if vis_runs:
-            # a deletes-only rewrite (purge with zero survivors) commits
-            # an EMPTY manifest: the run dir + snapshot-log entry exist
-            # but contribute no manifest rows, so the log is the commit
-            # truth for its tombstones — union the SNAPSHOT-VISIBLE run
-            # set (the caller's as_of-resolved set when time traveling,
-            # so a pre-purge read never sees the purge's tombstones)
-            committed_runs = committed_runs.union(
-                spark.createDataFrame(
-                    [(r,) for r in sorted(vis_runs)], "run string")
-            ).distinct()
-        vis = ts.withColumnRenamed("run", "writer_run").join(
-            committed_runs.withColumnRenamed("run", "writer_run"),
-            "writer_run", "left_semi",
-        ).select(F.col("target_run").alias("run"),
-                 "partition_id", "chunk_id")
-        keys = keys.join(F.broadcast(vis),
-                         ["run", "partition_id", "chunk_id"], "left_anti")
+def _live_chunks(spark: SparkSession, view: readview.ReadView,
+                 man: DataFrame) -> DataFrame:
+    """Distinct (run, partition_id, chunk_id) of the view's live chunks
+    in ``man``: an ok row in a live run, not retired by a live tombstone
+    (the view's drop bitmaps, anti-joined as (run, chunk_id) pairs)."""
+    keys = man.filter(
+        (F.col("status") == "ok") & F.col("run").isin(sorted(view.runs))
+    ).select("run", "partition_id", "chunk_id").distinct()
+    dropped = view.dropped_keys()
+    if dropped:
+        keys = keys.join(
+            F.broadcast(spark.createDataFrame(
+                dropped, "run string, chunk_id int")),
+            ["run", "chunk_id"], "left_anti"
+        ).select("run", "partition_id", "chunk_id")
     return keys
 
 
@@ -2110,7 +1879,6 @@ def freeze(
     branch: str | None = None,
     align_with: str | None = None,
     align_plan: str | None = None,
-    manifest_blooms: bool = False,
 ) -> dict:
     """Run the full encode job with skip-existing resume.
 
@@ -2154,6 +1922,10 @@ def freeze(
 
     Returns a summary dict (cryo's FreezeSummary analog,
     /root/reference/crates/freeze/src/types/summaries.rs:21-31).
+    ``partition_by`` nests the encoded files in one directory per value
+    of the given chunk-level columns (e.g. ``["partition_id"]``, one dir
+    per source).
+
     ``dry_run`` plans and reports without executing (cryo's --dry-run,
     /root/reference/crates/freeze/src/freeze.rs:44-46). A JSON report
     is written per run — incomplete first, finalized after, like the
@@ -2163,6 +1935,10 @@ def freeze(
     from . import sources
 
     t_start = time.perf_counter()
+    if partition_by and not set(partition_by) <= set(_CHUNK_CONSTANT):
+        raise ValueError(
+            f"partition_by={partition_by}: only chunk-level columns "
+            f"{_CHUNK_CONSTANT} keep each chunk inside one encoded file")
     input_df = input_path if isinstance(input_path, DataFrame) else None
     input_desc = "<dataframe>" if input_df is not None else input_path
     if branch is not None:
@@ -2232,6 +2008,10 @@ def freeze(
     done_bits: np.ndarray | None = None
     n_done = 0
     retire_keys = None
+    view = readview.read_view(
+        output_dir, None if branch is None else f"branch:{branch}",
+        strict=False)
+    man = _manifest_df(spark, view)
     if overwrite:
         # overwrite REPLACES, it does not pile on: previously visible ok
         # chunks retire via tombstones written with the new run (the
@@ -2241,32 +2021,21 @@ def freeze(
         # visible; a ranged (--keys) overwrite retires only chunks of
         # the SAME plan (the same request re-frozen) so disjoint ranges
         # keep coexisting.
-        man_prev = read_manifest(
-            spark, output_dir,
-            as_of=None if branch is None else f"branch:{branch}")
-        if man_prev is not None:
-            retire_keys = _visible_ok_keys(spark, output_dir, man_prev)
-            if keys is not None:
-                if "plan_id" not in man_prev.columns:
-                    retire_keys = None
-                else:
-                    same_plan = man_prev.filter(
-                        (F.col("status") == "ok")
-                        & (F.col("plan_id") == plan_fp)
-                    ).select("run", "partition_id", "chunk_id").distinct()
-                    retire_keys = retire_keys.join(
-                        same_plan, ["run", "partition_id", "chunk_id"],
-                        "left_semi")
-    else:
-        man = read_manifest(
-            spark, output_dir,
-            as_of=None if branch is None else f"branch:{branch}")
         if man is not None:
-            ok = man.filter(F.col("status") == "ok")
-            if "plan_id" in man.columns:
-                ok = ok.filter(F.col("plan_id") == plan_fp)
-            done_bits = _done_chunk_bitmap(ok, plan.n_chunks)
-            n_done = int(np.unpackbits(done_bits).sum())
+            retire_keys = _live_chunks(spark, view, man)
+            if keys is not None:
+                same_plan = man.filter(
+                    (F.col("status") == "ok")
+                    & (F.col("plan_id") == plan_fp)
+                ).select("run", "partition_id", "chunk_id").distinct()
+                retire_keys = retire_keys.join(
+                    same_plan, ["run", "partition_id", "chunk_id"],
+                    "left_semi")
+    elif man is not None:
+        done_bits = _done_chunk_bitmap(
+            man.filter((F.col("status") == "ok")
+                       & (F.col("plan_id") == plan_fp)), plan.n_chunks)
+        n_done = int(np.unpackbits(done_bits).sum())
     n_missing = plan.n_chunks - n_done
     n_skipped = n_done
     if dry_run:
@@ -2338,9 +2107,7 @@ def freeze(
     # the first list column (flattened element count), else the key
     # column (row count)
     payload_col = spec.list_column or spec.key
-    written.select(*_manifest_proj(manifest_blooms)).withColumn(
-        "plan_id", F.lit(plan_fp)
-    ).observe(
+    _manifest_rows(written, plan_fp).observe(
         obs,
         F.sum(F.when(F.col("column") == payload_col, F.col("enc_bytes"))
               .otherwise(0)).alias("tok_enc_bytes"),
@@ -2355,8 +2122,8 @@ def freeze(
         .alias("n_failed"),
     ).write.mode("error").parquet(man_dir)
     stats = obs.get
-    # the manifest write above IS the commit; the snapshot entry makes
-    # it an ordered point in the output's history (time travel, as_of)
+    # the snapshot entry IS the commit (readview: the log alone decides
+    # what is live) and an ordered point in the history (as_of)
     snap = snapshots.commit(
         output_dir, run_id, "rewrite" if n_retired else "append",
         plan_id=plan_fp,
@@ -2406,11 +2173,11 @@ def compact(
     originals via tombstones.
 
     Commit order makes the swap atomic: encoded files, then tombstone
-    rows (``tombstones/run=<new>``), then the manifest — whose rows are
-    the commit. Death before the manifest write leaves both the new data
-    and the tombstones invisible (orphan discipline, same as freeze);
-    after it, readers see the merged chunks and skip the retired ones in
-    the same snapshot. The originals' manifest rows remain — resume
+    rows (``tombstones/run=<new>``), then the manifest, then the
+    snapshot-log entry — the commit. Death before the log entry leaves
+    both the new data and the tombstones invisible (orphan discipline,
+    same as freeze); after it, readers see the merged chunks and skip
+    the retired ones in the same snapshot. The originals' manifest rows remain — resume
     correctly still counts their plans' chunks as done (the data lives
     on, re-chunked), and the manifest stays an append-only history.
 
@@ -2425,11 +2192,12 @@ def compact(
     min_tokens = target_tokens // 2 if min_tokens is None else min_tokens
     no_op = dict(n_compacted=0, n_new_chunks=0, n_retired=0, run=None,
                  wall_s=0.0)
-    man = read_manifest(spark, output_dir)
+    view = readview.read_view(output_dir)
+    man = _manifest_df(spark, view)
     if man is None:
         return no_op
     payload_col = spec.list_column or spec.key
-    live = _visible_ok_keys(spark, output_dir, man)
+    live = _live_chunks(spark, view, man)
     sizes = man.filter(
         (F.col("status") == "ok") & (F.col("column") == payload_col)
     ).select("run", "partition_id", "chunk_id", "n_values")
@@ -2447,7 +2215,7 @@ def compact(
         [(r["run"], r["partition_id"], r["chunk_id"]) for r in cand],
         "run string, partition_id int, chunk_id int",
     )
-    enc_subset = read_encoded(spark, output_dir).join(
+    enc_subset = _encoded_df(spark, view).join(
         F.broadcast(cand_keys), ["run", "partition_id", "chunk_id"],
         "left_semi",
     )
@@ -2460,20 +2228,9 @@ def compact(
         # chunks in distinct source partitions): guarantee monotone
         # progress / idempotence by writing nothing
         return no_op
-    run_id = _new_run_id()
-    enc_dir = f"{_encoded_path(output_dir)}/run={run_id}"
-    _enc_writer(_grouped_encode(rows, plan, spec=spec)) \
-        .mode("error").parquet(enc_dir)
-    cand_keys.withColumnRenamed("run", "target_run").coalesce(1) \
-        .write.mode("error") \
-        .parquet(f"{_tombstones_path(output_dir)}/run={run_id}")
-    written = spark.read.parquet(enc_dir)
-    man_dir = f"{_manifest_path(output_dir)}/run={run_id}"
-    written.select(*_manifest_proj(False)).withColumn(
-        "plan_id", F.lit(_plan_fingerprint(plan))
-    ).write.mode("error").parquet(man_dir)
-    snap = snapshots.commit(output_dir, run_id, "rewrite",
-                            n_retired=len(cand), command="compact")
+    run_id, snap = _commit_rewrite(
+        spark, output_dir, rows, plan, cand_keys, spec, "rewrite",
+        n_retired=len(cand), command="compact")
     summary = dict(
         snapshot=snap,
         n_compacted=len(cand),
@@ -2496,15 +2253,16 @@ def vacuum(spark: SparkSession, output_dir: str) -> dict:
     bytes stay on disk until every chunk of a run is retired, at which
     point the whole ``encoded/run=`` dir is provably dead and can go —
     the Iceberg ``expire_snapshots`` / orphan-GC analog, scoped to what
-    is safe without a catalog: only runs WITH a committed manifest and
-    ZERO live chunks are deleted (idempotent, crash-safe — a re-run just
-    finds fewer dirs). Encoded dirs with no manifest at all are left
-    alone: they may belong to an in-flight freeze. Manifest and
-    tombstone history stay append-only; readers never consult dead runs'
-    files (the key anti-join already excludes them), so deletion is
-    invisible to every read path.
+    is safe without a catalog: only runs live at the head
+    (readview.read_view) whose every chunk the head's tombstones retire
+    are deleted, never a run committed to a branch (idempotent,
+    crash-safe — a re-run just finds fewer dirs). A run the head does
+    not name is left alone: a rollback may revive it, and a run whose
+    manifest landed but whose log entry has not may belong to an
+    in-flight freeze. Manifest and tombstone history stay append-only;
+    no read view lists a dead run's files, so deletion is invisible to
+    every read path.
     """
-    import os
     import shutil
 
     if "://" in output_dir:
@@ -2512,27 +2270,17 @@ def vacuum(spark: SparkSession, output_dir: str) -> dict:
             "vacuum deletes local files; on a real catalog this maps to "
             "expire_snapshots / remove_orphan_files"
         )
-    # filesystem truth (raw): tombstone-retired runs are dead even while
-    # a rollback hides the compaction — BUT any run the current
-    # (rollback-aware) state can still reach must survive, or the
-    # rolled-back table would lose live bytes
-    man = read_manifest(spark, output_dir, raw=True)
+    view = readview.read_view(output_dir, strict=False)
+    man = _manifest_df(spark, view)
     if man is None:
         return dict(snapshot=None, n_deleted_runs=0, bytes_reclaimed=0,
                     deleted_runs=[])
-    live_runs = {
-        r["run"]
-        for r in _visible_ok_keys(spark, output_dir, man)
-        .select("run").distinct().collect()
-    }
-    cur = snapshots.current(output_dir)
-    if cur is not None:
-        live_runs |= cur["runs"]
     # runs committed to any branch stay reachable from that branch's
     # head even though main's visibility excludes them
-    live_runs |= snapshots.branch_data_runs(output_dir)
-    all_runs = {r["run"] for r in man.select("run").distinct().collect()}
-    dead = sorted(all_runs - live_runs)
+    keep = snapshots.branch_data_runs(output_dir) | {
+        r["run"] for r in
+        _live_chunks(spark, view, man).select("run").distinct().collect()}
+    dead = sorted(view.runs - keep)
     reclaimed = 0
     deleted = []
     for run_val in dead:
@@ -2578,9 +2326,8 @@ def remove_orphans(spark: SparkSession, output_dir: str,
         raise ValueError(
             "remove_orphans deletes local files; on a real catalog this "
             "maps to remove_orphan_files")
-    man = read_manifest(spark, output_dir, raw=True)
-    known = set() if man is None else {
-        r["run"] for r in man.select("run").distinct().collect()}
+    view = readview.read_view(output_dir, strict=False)
+    known = set(view.manifest_dirs | view.absorbed)
     known |= {e["run"] for e in snapshots.log(output_dir) if e.get("run")}
     now = time.time()
     removed, reclaimed = [], 0
@@ -2818,11 +2565,6 @@ def _key_envelope(spec: TableSpec) -> dict:
     return dict(envelope=F.col(spec.key), fmt=KEY_FMT)
 
 
-def _key_num():
-    """Sequences numeric key expression (kept for callers/tests)."""
-    return _key_expr(SEQUENCES)
-
-
 def _parse_keys(spec: str, latest_fn):
     """Parse a key-range spec, resolving 'latest' lazily (one agg job)."""
     from . import ranges
@@ -2901,47 +2643,44 @@ def _key_str_forms(numbers, spec: TableSpec) -> list[str] | None:
     return None
 
 
-def read_bloom_stats(spark: SparkSession, output_dir: str,
-                     man: DataFrame | None = None) -> DataFrame | None:
-    """Bloom rows for pruning — the side-located copy in the encoded files.
+def read_bloom_stats(spark: SparkSession,
+                     output_dir: str) -> DataFrame | None:
+    """Bloom rows for pruning — the copy in the encoded files.
 
-    The manifest no longer duplicates the bloom BYTES (its key_bloom
-    slot is NULL by default, :func:`_manifest_proj`); the authoritative
-    copy rides each chunk's row in the encoded files, and this
-    projection reads ONLY (run, partition_id, chunk_id, column, status,
-    key_bloom) — column-clustered row groups mean the payload bytes are
-    never touched. Loaded exclusively by the point-lookup / contains /
-    purge paths, so at a 100 TB corpus the manifest scan every read
-    pays shrinks by the bloom bytes while lookups keep their pruning.
-    ``man`` is the legacy fallback: outputs whose manifests still carry
-    inline blooms (or whose encoded files predate blooms) prune from it
-    unchanged.
+    The manifest does not duplicate the bloom BYTES (its key_bloom slot
+    is NULL, :func:`_manifest_rows`); the authoritative copy rides each
+    chunk's row in the encoded files, and this projection reads ONLY
+    (run, partition_id, chunk_id, column, status, key_bloom) —
+    column-clustered row groups mean the payload bytes are never
+    touched. Loaded exclusively by the point-lookup / contains / purge
+    paths, so at a 100 TB corpus the manifest scan every read pays
+    shrinks by the bloom bytes while lookups keep their pruning. None
+    when nothing was ever encoded.
     """
     try:
         enc = _read_run_partitioned(spark, _encoded_path(output_dir))
     except Exception:
-        return man
-    if "key_bloom" not in enc.columns:
-        return man
+        return None
     return enc.select("run", "partition_id", "chunk_id", "column",
                       "status", "key_bloom")
 
 
-def _bloom_chunk_keys(man: DataFrame, key_strs: list[str],
-                      spec: TableSpec) -> DataFrame | None:
-    """Chunks whose key bloom possibly contains ANY requested key.
+def _bloom_chunks(stats: DataFrame | None, column: str,
+                  hashes: np.ndarray) -> DataFrame | None:
+    """Chunks whose ``column`` bloom possibly holds ANY of ``hashes``.
 
-    Hash placement makes chunk key RANGES span the whole space, so zone
-    maps cannot prune point lookups; the per-chunk bloom can. Runs as a
-    mapInArrow kernel over the manifest's key-column rows (metadata
-    only — bounded bytes/chunk); the requested hashes ride the closure.
-    A key row with a NULL bloom (legacy output) is conservatively kept.
-    Returns None when the manifest predates blooms entirely.
+    Hash placement makes chunk key RANGES span the whole space, and a
+    dense vocabulary makes nearly every chunk's element range span a
+    token, so zone maps cannot prune point lookups or ``contains``; the
+    per-chunk blooms (the key column's key bloom, an int list's
+    distinct-element bloom) can. Runs as a mapInArrow kernel over the
+    column's metadata rows (bounded bytes/chunk); the requested hashes
+    ride the closure. A NULL bloom (float lists) is conservatively
+    kept. None when there is nothing to prune with.
     """
-    if man is None or "key_bloom" not in man.columns or not key_strs:
+    if stats is None or not len(hashes):
         return None
-    h = hashing.hash_utf8(pa.array(key_strs, pa.string()))
-    hb = h.tobytes()
+    hb = hashes.tobytes()
 
     def kernel(batches):
         import numpy as np
@@ -2964,10 +2703,17 @@ def _bloom_chunk_keys(man: DataFrame, key_strs: list[str],
                 yield t.select(["run", "partition_id", "chunk_id"]) \
                     .filter(pa.array(keep)).to_batches()[0]
 
-    rows = man.filter(
-        (F.col("status") == "ok") & (F.col("column") == spec.key)
+    rows = stats.filter(
+        (F.col("status") == "ok") & (F.col("column") == column)
     ).select("run", "partition_id", "chunk_id", "key_bloom")
     return amap(rows, kernel, "run string, partition_id int, chunk_id int")
+
+
+def _bloom_chunk_keys(stats: DataFrame | None, key_strs: list[str],
+                      spec: TableSpec) -> DataFrame | None:
+    """Chunks whose key bloom possibly contains ANY requested key."""
+    return _bloom_chunks(stats, spec.key,
+                         hashing.hash_utf8(pa.array(key_strs, pa.string())))
 
 
 _FILTER_OPS = ("=", "<", "<=", ">", ">=", "between", "contains")
@@ -3123,9 +2869,9 @@ def _zone_map_prune(enc: DataFrame, filters, spec: TableSpec,
         # them for a dense vocabulary); the bloom keeps only chunks that
         # plausibly contain it. Bloom bytes are side-located in the
         # encoded files (read_bloom_stats) — manifests carry NULL slots
-        bk = _bloom_chunk_values(
-            bloom_src if bloom_src is not None else stats_src,
-            name, [int(val)])
+        bk = _bloom_chunks(
+            bloom_src if bloom_src is not None else stats_src, name,
+            hashing.hash_i64(np.asarray([int(val)], dtype=np.int64)))
         if bk is not None:
             keys = bk if keys is None else keys.join(
                 bk, ["run", "partition_id", "chunk_id"], "left_semi")
@@ -3133,44 +2879,6 @@ def _zone_map_prune(enc: DataFrame, filters, spec: TableSpec,
         return enc
     return enc.join(F.broadcast(keys),
                     ["run", "partition_id", "chunk_id"], "left_semi")
-
-
-def _bloom_chunk_values(stats_src: DataFrame, column: str,
-                        vals: list[int]) -> DataFrame | None:
-    """Chunks whose content bloom possibly contains ANY of ``vals``.
-
-    The value twin of _bloom_chunk_keys: a metadata-only mapInArrow
-    pass over the given column's manifest rows testing splitmix64
-    hashes against each chunk's distinct-element bloom. NULL blooms
-    (legacy output, float lists) are conservatively kept."""
-    if "key_bloom" not in stats_src.columns or not vals:
-        return None
-    hb = hashing.hash_i64(np.asarray(vals, dtype=np.int64)).tobytes()
-
-    def kernel(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        from cryo_spark import hashing as hm
-
-        want = np.frombuffer(hb, dtype=np.uint64)
-        for b in batches:
-            t = pa.Table.from_batches([b])
-            if t.num_rows == 0:
-                continue
-            blooms = t.column("key_bloom")
-            keep = [
-                blooms[i].as_py() is None
-                or bool(hm.bloom_test(blooms[i].as_py(), want).any())
-                for i in range(t.num_rows)
-            ]
-            if any(keep):
-                yield t.select(["run", "partition_id", "chunk_id"]) \
-                    .filter(pa.array(keep)).to_batches()[0]
-
-    rows = stats_src.filter(F.col("column") == column).select(
-        "run", "partition_id", "chunk_id", "key_bloom")
-    return amap(rows, kernel, "run string, partition_id int, chunk_id int")
 
 
 def _filter_predicate(filters, spec: TableSpec):
@@ -3247,9 +2955,12 @@ def collect(
         all_cols, columns=columns, include=include, exclude=exclude
     )
     key_chunks = None
-    if as_of is not None and (
-        isinstance(source, DataFrame) or read_manifest(spark, source) is None
-    ):
+    view = None
+    if not isinstance(source, DataFrame):
+        view = readview.read_view(source, as_of)
+        if not view.has_manifest:
+            view = None  # a raw parquet source
+    if as_of is not None and view is None:
         raise ValueError("as_of requires an encoded output dir (snapshots.py)")
     if filters:
         filters = _normalize_filters(filters, spec)
@@ -3265,25 +2976,21 @@ def collect(
     elif isinstance(source, DataFrame):
         df = source
         df = (df.filter(residual) if residual is not None else df).select(*used)
-    elif read_manifest(spark, source) is not None:
+    elif view is not None:
         if (keys is None and filters is None
                 and (spec.list_column is None or spec.list_column in used)):
             # shuffle-free read: the payload column dominates the bytes,
             # so when it is requested the file-granular decode wins; a
             # payload-pruned projection keeps the relational path where
             # the column filter drops those bytes before the exchange
-            df = decode_frozen(spark, source, columns=used, spec=spec,
-                               as_of=as_of)
+            df = _decode_view(spark, view, used, spec)
         else:
-            enc = read_encoded(spark, source, as_of=as_of)
-            vis = (snapshots.resolve(source, as_of) if as_of is not None
-                   else snapshots.current(source))
-            need_del = vis is not None and bool(vis["deletes"])
+            enc = _encoded_df(spark, view)
+            man = _manifest_df(spark, view)
             if keys is not None:
-                man = read_manifest(spark, source, as_of=as_of)
                 key_chunks = _parse_keys(
                     keys,
-                    lambda: man.agg(
+                    lambda: 0 if man is None else man.agg(
                         F.max(_manifest_key_num("max_doc_id", spec))
                     ).first()[0],
                 )
@@ -3295,20 +3002,19 @@ def collect(
                 strs = None if nums is None else _key_str_forms(nums, spec)
                 bk = (None if strs is None
                       else _bloom_chunk_keys(
-                          read_bloom_stats(spark, source, man), strs, spec))
+                          read_bloom_stats(spark, source), strs, spec))
                 if bk is not None:
                     enc = enc.join(F.broadcast(bk),
                                    ["run", "partition_id", "chunk_id"],
                                    "left_semi")
             if filters:
-                man_f = read_manifest(spark, source, as_of=as_of)
                 enc = _zone_map_prune(
-                    enc, filters, spec, man=man_f,
-                    bloom_src=read_bloom_stats(spark, source, man_f))
+                    enc, filters, spec, man=man,
+                    bloom_src=read_bloom_stats(spark, source))
             extra = [] if key_chunks is None or spec.key in used else [spec.key]
             extra += [n for n, _, _ in (filters or ())
                       if n not in used and n not in extra]
-            if need_del and spec.key not in used and spec.key not in extra:
+            if view.deletes and spec.key not in used + extra:
                 extra.append(spec.key)
             df = decode(enc, columns=[*extra, *used] if extra else used,
                         spec=spec)
@@ -3317,8 +3023,7 @@ def collect(
                     ranges.key_predicate(key_chunks, _key_expr(spec)))
             if residual is not None:
                 df = df.filter(residual)
-            if need_del:
-                df = _apply_deletes(spark, df, source, vis, spec)
+            df = _apply_deletes(spark, df, view, spec)
             if key_chunks is not None or extra:
                 df = df.select(*used)
     else:

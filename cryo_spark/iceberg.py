@@ -805,7 +805,7 @@ def export_frozen(spark, out_dir: str, table_location: str | None = None,
     """
     from pyspark.sql import functions as F
 
-    from . import engine
+    from . import engine, readview
 
     loc = table_location or os.path.join(out_dir, "iceberg")
     # Visible run set + visible encoded-row count from the MANIFEST
@@ -815,10 +815,11 @@ def export_frozen(spark, out_dir: str, table_location: str | None = None,
     # more than the distributed footer pass itself. Manifest rows mirror
     # encoded rows 1:1 (same keys, minus payload), so the visible ok-row
     # count IS the visible encoded-row count.
-    man = engine.read_manifest(spark, out_dir)
+    view = readview.read_view(out_dir, strict=False)
+    man = engine._manifest_df(spark, view)
     if man is None:
         raise ValueError(f"{out_dir}: nothing committed to export")
-    vis_keys = engine._visible_ok_keys(spark, out_dir, man)
+    vis_keys = engine._live_chunks(spark, view, man)
     per_run = (man.filter(F.col("status") == "ok")
                .join(F.broadcast(vis_keys),
                      ["run", "partition_id", "chunk_id"], "left_semi")
@@ -827,9 +828,17 @@ def export_frozen(spark, out_dir: str, table_location: str | None = None,
         raise ValueError(f"{out_dir}: nothing committed to export")
     runs = sorted(r["run"] for r in per_run)
     visible_rows = sum(r["count"] for r in per_run)
+    for run in runs:
+        if not view.files.get(run):
+            why = ("has no encoded dir" if run not in view.files
+                   else "has an encoded dir with no parquet files")
+            raise ValueError(
+                f"{out_dir}: live run {run!r} {why} — vacuumed while "
+                "still live, or the output is corrupt (verify_output "
+                "reports which)")
 
     if partitioned:
-        enc = engine.read_encoded(spark, out_dir)
+        enc = engine._encoded_df(spark, view)
         rows = _partition_value_map(spark, out_dir)
         if not rows:
             raise ValueError(f"{out_dir}: nothing committed to export")
@@ -886,32 +895,35 @@ def export_frozen(spark, out_dir: str, table_location: str | None = None,
                              partition_fields=part_fields,
                              properties=props)
 
-    paths = []
-    for run in runs:
-        run_dir = os.path.join(out_dir, "encoded", f"run={run}")
-        for name in sorted(os.listdir(run_dir)):
-            if name.endswith(".parquet") and not name.startswith("."):
-                paths.append(os.path.join(run_dir, name))
-    # The data files ARE the table: take the registered schema from one
-    # file footer (driver-side, no job) rather than a read_encoded plan
-    # over every file. Every encoded file carries the fixed ENCODED_DDL
-    # shape, so any footer is authoritative.
-    schema = spark.read.parquet(paths[0]).schema
-    schema_json = schema_from_spark(schema)
-    # File-granular export is only sound when the files hold EXACTLY the
-    # visible rows: a purge/compact retires chunks via tombstones while
-    # their run's files (also holding live chunks) stay on disk, and an
-    # exported file cannot carry a row filter. Detect by row count —
-    # the manifest-derived visible_rows IS the live set — and fall back
-    # to materializing it as fresh data files (Iceberg's copy-on-write
-    # rewrite shape).
-    infos = collect_file_infos(spark, paths, schema_json)
-    raw_rows = sum(f["record_count"] for f in infos)
-    if materialize or raw_rows != visible_rows:
+    paths = [f for run in runs for f in view.files[run]]
+    # a partition_by layout keeps columns in its directory names, which
+    # an exported data file cannot carry: materialize it
+    materialize = materialize or any(
+        not os.path.basename(os.path.dirname(p)).startswith("run=")
+        for p in paths)
+    if not materialize:
+        # The data files ARE the table: take the registered schema from
+        # one file footer (driver-side, no job) rather than a
+        # read_encoded plan over every file. Every encoded file carries
+        # the fixed ENCODED_DDL shape, so any footer is authoritative.
+        schema = spark.read.parquet(paths[0]).schema
+        schema_json = schema_from_spark(schema)
+        # File-granular export is only sound when the files hold EXACTLY
+        # the visible rows: a purge/compact retires chunks via tombstones
+        # while their run's files (also holding live chunks) stay on
+        # disk, and an exported file cannot carry a row filter. Detect
+        # by row count — the manifest-derived visible_rows IS the live
+        # set — and fall back to materializing it as fresh data files
+        # (Iceberg's copy-on-write rewrite shape).
+        infos = collect_file_infos(spark, paths, schema_json)
+        materialize = sum(f["record_count"] for f in infos) != visible_rows
+    if materialize:
         mat_dir = os.path.join(loc, "data",
                                f"export-{len(_log_entries(loc)) + 1}")
-        engine.read_encoded(spark, out_dir).drop("run") \
-            .write.mode("error").parquet(mat_dir)
+        live = engine._encoded_df(spark, view).drop("run")
+        schema = live.schema
+        schema_json = schema_from_spark(schema)
+        live.write.mode("error").parquet(mat_dir)
         paths = [os.path.join(mat_dir, n)
                  for n in sorted(os.listdir(mat_dir))
                  if n.endswith(".parquet") and not n.startswith(".")]

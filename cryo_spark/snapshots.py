@@ -52,13 +52,28 @@ def commit(output_dir: str, run: str | None, kind: str, **extra) -> int | None:
     d = _dir(output_dir)
     os.makedirs(d, exist_ok=True)
     entries = log(output_dir)
+    if not entries and os.path.isdir(os.path.join(output_dir, "manifest")):
+        # the log's first entry: runs a log-less output already counts
+        # live by their commit markers (readview's log-less rule) are
+        # logged first, so the log's rule takes over without losing them
+        from . import readview
+
+        for r in sorted(readview.read_view(output_dir, strict=False).runs
+                        - {run}):
+            _claim(d, 1, r, "append", {})
+        entries = log(output_dir)
     if run is not None:
         # idempotent per run: a retried streaming micro-batch re-commits
         # run=stream<N> by overwrite; its snapshot entry must not fork
         for e in entries:
             if e["run"] == run and e["kind"] == kind:
                 return e["seq"]
-    seq = 1 + max((e["seq"] for e in entries), default=0)
+    return _claim(d, 1 + max((e["seq"] for e in entries), default=0),
+                  run, kind, extra)
+
+
+def _claim(d: str, seq: int, run: str | None, kind: str, extra: dict) -> int:
+    """Write one entry at the first free sequence number >= ``seq``."""
     while True:
         entry = dict(seq=seq, run=run, kind=kind, ts=time.time(), **extra)
         tmp = os.path.join(d, f".tmp-{os.getpid()}-{seq:010d}.json")
@@ -211,7 +226,8 @@ def _state_at(entries: list[dict], seq: int,
     return vis, dels
 
 
-def resolve(output_dir: str, as_of: int | str) -> dict:
+def resolve(output_dir: str, as_of: int | str,
+            entries: list[dict] | None = None) -> dict:
     """Visibility state at snapshot ``as_of`` (seq, tag, or 'branch:name').
 
     Returns ``{"runs", "deletes", "removed", "max_seq"}`` where
@@ -221,8 +237,10 @@ def resolve(output_dir: str, as_of: int | str) -> dict:
     snapshot's readability, not just later ones). ``'branch:name'``
     reads the branch's current head. Raises if the output has no
     snapshot log (pre-snapshot outputs have no history to travel to).
+    ``entries`` reuses an already-read :func:`log`.
     """
-    entries = log(output_dir)
+    if entries is None:
+        entries = log(output_dir)
     if not entries:
         raise ValueError(
             f"no snapshot log under {output_dir!r}: output predates "
@@ -234,8 +252,8 @@ def resolve(output_dir: str, as_of: int | str) -> dict:
         _branch_anchor(entries, branch)  # raises on unknown branch
         as_of = entries[-1]["seq"]
     else:
-        as_of = resolve_ref(output_dir, as_of)  # int passes through;
-        # tag / 'ts:<time>' / datetime resolve to a seq
+        as_of = resolve_ref(output_dir, as_of, entries)  # int passes
+        # through; tag / 'ts:<time>' / datetime resolve to a seq
     removed = {
         r
         for e in entries
@@ -248,41 +266,16 @@ def resolve(output_dir: str, as_of: int | str) -> dict:
 
 
 def current(output_dir: str) -> dict | None:
-    """Rollback-aware CURRENT visibility, or None when the filesystem
-    already tells the truth.
+    """The head state of the log (:func:`resolve` at the newest seq), or
+    None when the output has no snapshot log.
 
-    Without rollback/delete/branch entries the manifest/tombstone state
-    on disk IS current visibility (the common case — zero extra work on
-    the read path). After a rollback the log overrides it; with
-    branches, runs committed to a branch exist on disk but are
-    invisible on main; readers must then filter to the replayed set.
+    A log-backed output's live runs are exactly the ones the replayed
+    log names (readview.read_view — the one liveness rule); there is no
+    second, disk-derived notion of "current".
     """
     entries = log(output_dir)
-    if not any(
-        e["kind"] in ("rollback", "delete") or e.get("branch") is not None
-        for e in entries
-    ):
-        return None
-    return resolve(output_dir, entries[-1]["seq"])
-
-
-def latest_consolidation(output_dir: str) -> dict | None:
-    """The newest manifest-consolidation entry, or None.
-
-    Readers use exactly one entry: each consolidate commit's
-    ``absorbed_runs`` list is cumulative (it includes every run absorbed
-    by prior generations), so the latest entry alone says which manifest
-    ``run=`` dirs are superseded and which generation dir replaces them.
-    Consolidation is metadata-only — ``_state_at`` ignores the kind, so
-    visibility, time travel, branches and rollback are all unaffected.
-    """
-    if "://" in output_dir:
-        return None
-    for e in reversed(log(output_dir)):
-        if e["kind"] == "consolidate":
-            return dict(seq=e["seq"], gen=e["gen"],
-                        absorbed=set(e.get("absorbed_runs", [])))
-    return None
+    return resolve(output_dir, entries[-1]["seq"], entries) if entries \
+        else None
 
 
 def tag(output_dir: str, name: str, seq: int | None = None) -> int:
@@ -306,7 +299,8 @@ def tag(output_dir: str, name: str, seq: int | None = None) -> int:
     return commit(output_dir, None, "tag", tag=name, target=seq)
 
 
-def resolve_ref(output_dir: str, ref: int | str) -> int:
+def resolve_ref(output_dir: str, ref: int | str,
+                entries: list[dict] | None = None) -> int:
     """A snapshot reference -> sequence number.
 
     Ints pass through; a ``datetime`` or ``'ts:<iso8601|epoch>'`` string
@@ -328,7 +322,7 @@ def resolve_ref(output_dir: str, ref: int | str) -> int:
         return d.timestamp()
 
     if isinstance(ref, _dt.datetime):
-        return _seq_at_time(output_dir, _epoch(ref))
+        return _seq_at_time(output_dir, _epoch(ref), entries)
     if not isinstance(ref, str):
         return ref
     if ref.startswith("ts:"):
@@ -337,16 +331,18 @@ def resolve_ref(output_dir: str, ref: int | str) -> int:
             t = float(raw)
         except ValueError:
             t = _epoch(_dt.datetime.fromisoformat(raw))
-        return _seq_at_time(output_dir, t)
-    for e in reversed(log(output_dir)):
+        return _seq_at_time(output_dir, t, entries)
+    for e in reversed(log(output_dir) if entries is None else entries):
         if e["kind"] == "tag" and e.get("tag") == ref:
             return e["target"]
     raise ValueError(f"unknown tag {ref!r} under {output_dir!r}")
 
 
-def _seq_at_time(output_dir: str, t: float) -> int:
+def _seq_at_time(output_dir: str, t: float,
+                 entries: list[dict] | None = None) -> int:
     """Newest snapshot seq whose commit ts is <= ``t``."""
-    entries = log(output_dir)
+    if entries is None:
+        entries = log(output_dir)
     at_or_before = [e for e in entries if e["ts"] <= t]
     if not at_or_before:
         first = entries[0]["ts"] if entries else None

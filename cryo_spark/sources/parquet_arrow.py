@@ -227,7 +227,8 @@ def _runs(rgs: list[int]) -> list[tuple[int, int]]:
     return runs
 
 
-def _run_tasks(spark, tasks, columns, kernel, out_ddl) -> DataFrame:
+def _run_tasks(spark, tasks, columns, kernel, out_ddl,
+               with_path: bool = False) -> DataFrame:
     tdf = spark.createDataFrame(
         [(list(p), list(s), list(c)) for p, s, c in tasks],
         "paths array<string>, rg_starts array<int>, rg_counts array<int>",
@@ -251,10 +252,15 @@ def _run_tasks(spark, tasks, columns, kernel, out_ddl) -> DataFrame:
                         rgs.extend(range(starts[i], starts[i] + counts[i]))
                         i += 1
                     pf = pq.ParquetFile(path)
+                    # a partition_by layout keeps some columns only in
+                    # the directory path: read the ones the file holds
+                    names = set(pf.schema_arrow.names)
                     t = pf.read_row_groups(
-                        rgs, columns=columns, use_threads=False,
+                        rgs, columns=[c for c in columns if c in names],
+                        use_threads=False,
                     )
-                    yield from kernel(t.to_batches())
+                    yield from (kernel(path, t.to_batches()) if with_path
+                                else kernel(t.to_batches()))
 
     return amap(tdf, read_tasks, out_ddl)
 
@@ -274,7 +280,9 @@ def arrow_scan_files(
     the kernel is invoked once per whole file — the contract the
     shuffle-free decode relies on (an encoded chunk's rows never span
     files, but do span row groups). Multiple small files still pack
-    into one task; the kernel runs per file within it.
+    into one task; the kernel runs per file within it, as
+    ``kernel(path, batches)`` — the path carries the file's run and any
+    ``k=v`` directory values, which the file itself may not hold.
 
     ``row_groups`` restricts each file to the given row-group subset
     (from :func:`select_row_groups`): one kernel invocation still sees
@@ -317,4 +325,4 @@ def arrow_scan_files(
             cur, acc = ([], [], []), 0
     if cur[0]:
         tasks.append(cur)
-    return _run_tasks(spark, tasks, columns, kernel, out_ddl)
+    return _run_tasks(spark, tasks, columns, kernel, out_ddl, with_path=True)

@@ -66,9 +66,9 @@ def stream_encode(
         enc_dir = f"{output_dir}/encoded/run={run_id}"
         engine._enc_writer(enc).mode("overwrite").parquet(enc_dir)
         written = batch_df.sparkSession.read.parquet(enc_dir)
-        written.select(*engine.MANIFEST_COLUMNS).write.mode("overwrite").parquet(
-            f"{output_dir}/manifest/run={run_id}"
-        )
+        engine._manifest_rows(written, engine._plan_fingerprint(plan)) \
+            .write.mode("overwrite").parquet(
+                f"{output_dir}/manifest/run={run_id}")
         # ordered history entry (idempotent per run: a retried batch
         # re-commits the same run id and keeps its original seq)
         snapshots.commit(output_dir, run_id, "append", batch_id=batch_id,

@@ -956,7 +956,7 @@ def scan_point_lookup(spark, sf_dir):
     # bloom bytes are side-located in the encoded files (manifest slots
     # are NULL); the lookup path loads them via read_bloom_stats
     kept = engine._bloom_chunk_keys(
-        engine.read_bloom_stats(spark, out, man),
+        engine.read_bloom_stats(spark, out),
         [f"doc-{n:012d}" for n in (3, 141, 442)], SEQUENCES).count()
     return engine.collect(
         spark, out, keys="3 141 442", columns=["doc_id", "n_tok", "source"]
@@ -6521,7 +6521,7 @@ def scan_token_contains(spark, sf_dir):
     kept = (
         _zone_map_prune(enc, [("tokens", "contains", _CONTAINS_TOK)],
                         SEQUENCES, man=man,
-                        bloom_src=engine.read_bloom_stats(spark, out, man))
+                        bloom_src=engine.read_bloom_stats(spark, out))
         .select(*ck).distinct().count()
     )
     return engine.collect(

@@ -61,27 +61,11 @@ def test_blooms_side_located_not_in_manifest(spark, frozen):
     assert man.filter(F.col("key_bloom").isNotNull()).count() == 0
 
 
-def test_manifest_blooms_opt_in(spark, sequences_path, tmp_path):
-    # manifest_blooms=True restores the inline copy for manifests that
-    # must be self-contained off-cluster
-    out = str(tmp_path / "inline")
-    freeze(spark, sequences_path, out, target_tokens=200_000,
-           manifest_blooms=True)
-    man = read_manifest(spark, out).filter(
-        (F.col("status") == "ok") & (F.col("column") == "doc_id"))
-    assert man.filter(F.col("key_bloom").isNull()).count() == 0
-    # and the manifest copy prunes directly (legacy-style source)
-    bk = _bloom_chunk_keys(read_manifest(spark, out),
-                           ["doc-000000000123"], SEQUENCES)
-    total = man.count()
-    assert 1 <= bk.count() <= max(2, total // 4) if total > 1 else True
-
-
 def test_bloom_prunes_point_lookup(spark, frozen):
     man = read_manifest(spark, frozen)
     total = man.filter(
         (F.col("status") == "ok") & (F.col("column") == "doc_id")).count()
-    bk = _bloom_chunk_keys(read_bloom_stats(spark, frozen, man),
+    bk = _bloom_chunk_keys(read_bloom_stats(spark, frozen),
                            ["doc-000000000123"], SEQUENCES)
     kept = bk.count()
     # one key lives in exactly one chunk; FP noise stays tiny

@@ -16,7 +16,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from cryo_spark import compact, decode, decode_frozen, freeze
-from cryo_spark.engine import _visible_ok_keys, read_encoded, read_manifest
+from cryo_spark import readview
+from cryo_spark.engine import _live_chunks, read_encoded, read_manifest
 
 
 SMALL = 20_000   # freeze target: many small chunks from the 10k fixture
@@ -41,12 +42,12 @@ def frozen(spark, sequences_path, tmp_path):
 def test_compact_merges_and_roundtrips(spark, frozen):
     out, before = frozen
     man = read_manifest(spark, out)
-    n_before = _visible_ok_keys(spark, out, man).count()
+    n_before = _live_chunks(spark, readview.read_view(out), man).count()
     s = compact(spark, out, target_tokens=BIG)
     assert s["n_compacted"] >= 2 and s["run"] is not None
     assert s["n_new_chunks"] < s["n_compacted"]
     man = read_manifest(spark, out)
-    n_after = _visible_ok_keys(spark, out, man).count()
+    n_after = _live_chunks(spark, readview.read_view(out), man).count()
     assert n_after == n_before - s["n_retired"] + s["n_new_chunks"]
     # bit-identical through BOTH read paths after the rewrite
     assert _rows(decode(read_encoded(spark, out))) == before

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from cryo_spark import (consolidate_manifests, decode_frozen, freeze,
                         read_manifest, verify_output, write_sequences)
 from cryo_spark.engine import _manifest_gens_path, _manifest_path
-from cryo_spark import snapshots
+from cryo_spark import readview, snapshots
 
 
 def _man_rows(spark, out, **kw):
@@ -108,7 +108,7 @@ def test_second_consolidation_is_cumulative(spark, three_runs):
     # old generation replaced by the new one
     assert os.listdir(_manifest_gens_path(out)) == [f"gen={r2['gen']}"]
     # absorbed set is cumulative: the new entry also covers gen-1's runs
-    assert len(snapshots.latest_consolidation(out)["absorbed"]) == 4
+    assert len(readview.read_view(out).absorbed) == 4
     assert r1["gen"] != r2["gen"]
 
 

@@ -1,9 +1,9 @@
 """Shuffle-free decode (engine.decode_frozen) vs the relational path.
 
 The fast path must be a pure optimization: identical rows to
-decode(read_encoded(...)) under every commit/orphan/failure state, with
-conservative fallback whenever run-granular commit markers cannot prove
-the manifest is complete.
+decode(read_encoded(...)) under every commit/orphan/failure state and
+every layout (flat, partition_by, compacted with tombstones) — both
+read exactly the snapshot's read view (readview.py).
 """
 
 from __future__ import annotations
@@ -72,8 +72,9 @@ def test_orphan_run_invisible(spark, frozen_dir, tmp_path):
 
 
 def test_partial_manifest_falls_back(spark, frozen_dir, tmp_path):
-    """A manifest run dir without its commit marker forces the
-    relational semi-join path; rows still match it exactly."""
+    """With a snapshot log the log entry is the commit: a manifest run
+    dir that lost its ``_SUCCESS`` marker changes nothing, and both
+    paths still agree exactly."""
     work = str(tmp_path / "partial")
     shutil.copytree(frozen_dir, work)
     man_base = f"{work}/manifest"
@@ -84,6 +85,47 @@ def test_partial_manifest_falls_back(spark, frozen_dir, tmp_path):
     fast = engine.decode_frozen(spark, work)
     ref = engine.decode(engine.read_encoded(spark, work))
     _assert_same(spark, fast, ref)
+
+
+@pytest.fixture(scope="module", params=["partition_by", "partition_by_chunk",
+                                        "compacted"])
+def layout_dir(request, spark, sequences_path, tmp_path_factory):
+    """Outputs beyond the flat layout: partition_by nested dirs (over a
+    column the file kernel never reads, and over one it does — restored
+    from the path), and a compaction whose tombstones retire some of
+    the chunks in files that keep live ones."""
+    from cryo_spark import compact
+
+    out = str(tmp_path_factory.mktemp("dfz_layout") / request.param)
+    by = {"partition_by": ["partition_id"],
+          "partition_by_chunk": ["chunk_id"]}.get(request.param)
+    engine.freeze(spark, sequences_path, out, target_tokens=TARGET,
+                  partition_by=by)
+    if request.param == "compacted":
+        s = compact(spark, out, target_tokens=4 * TARGET, min_tokens=1 << 30,
+                    max_chunks=8)
+        assert s["n_retired"] == 8
+    return out
+
+
+def test_layout_matches_relational(spark, sequences_path, layout_dir):
+    fast = engine.decode_frozen(spark, layout_dir)
+    _assert_same(spark, fast, engine.decode(
+        engine.read_encoded(spark, layout_dir)))
+    _assert_same(spark, fast, spark.read.parquet(sequences_path))
+
+
+def test_layout_no_payload_exchange_in_plan(spark, layout_dir):
+    plan = engine.decode_frozen(spark, layout_dir)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert "FileScan parquet" not in plan
+
+
+def test_partition_by_rejects_chunk_splitting_columns(spark, sequences_path,
+                                                      tmp_path):
+    with pytest.raises(ValueError, match="chunk-level"):
+        engine.freeze(spark, sequences_path, str(tmp_path / "o"),
+                      target_tokens=TARGET, partition_by=["column"])
 
 
 def test_column_pruned(spark, frozen_dir):

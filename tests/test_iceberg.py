@@ -487,3 +487,27 @@ def test_collect_file_infos_matches_driver_loop(spark, tmp_path):
         assert f["record_count"] == pq.ParquetFile(f["path"]).metadata.num_rows
         assert f["file_size"] == os.path.getsize(f["path"])
         assert f["stats"] == iceberg.file_column_stats(f["path"], schema_json)
+
+
+@pytest.mark.parametrize("damage", ["vacuumed", "emptied"])
+def test_export_names_run_with_lost_files(spark, tmp_path, damage):
+    """A live run whose encoded dir is gone or holds no data files fails
+    the export with an error naming the run and the likely cause."""
+    import glob
+    import shutil
+
+    import cryo_spark
+
+    src = str(tmp_path / "in.parquet")
+    cryo_spark.write_sequences(src, n=500, seed=5)
+    out = str(tmp_path / "out")
+    run = cryo_spark.freeze(spark, src, out, target_tokens=50_000)["run"]
+    run_dir = f"{out}/encoded/run={run}"
+    if damage == "vacuumed":
+        shutil.rmtree(run_dir)
+    else:
+        for p in glob.glob(f"{run_dir}/*.parquet"):
+            os.remove(p)
+    with pytest.raises(ValueError, match=run) as e:
+        iceberg.export_frozen(spark, out, now_ms=1)
+    assert "vacuum" in str(e.value)

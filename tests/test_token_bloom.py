@@ -67,7 +67,7 @@ def test_contains_prunes_chunks_and_matches_full_scan(spark, sequences_path,
     kept = (
         _zone_map_prune(enc, [("tokens", "contains", int(tok))], SEQUENCES,
                         man=man,
-                        bloom_src=read_bloom_stats(spark, frozen, man))
+                        bloom_src=read_bloom_stats(spark, frozen))
         .select("run", "partition_id", "chunk_id").distinct().count()
     )
     assert 0 < kept < total  # the bloom actually pruned

@@ -133,3 +133,23 @@ def test_crashed_rewrite_is_invisible_and_flagged(spark, frozen):
                   .select("doc_id").collect()) == before
     r = verify_output(spark, out)
     assert r["status"] == "warn" and r["n_orphan_rows"] > 0
+
+
+def test_rollback_past_compaction_flags_lost_payload(spark, tmp_path):
+    """A rolled-back compaction's tombstones retire nothing: its
+    originals are live again, so losing one of their encoded files is
+    corruption, not a reclaimed chunk."""
+    from cryo_spark import snapshots
+
+    src = str(tmp_path / "seqs.parquet")
+    write_sequences(src, n=600, seed=7)
+    out = str(tmp_path / "out")
+    freeze(spark, src, out, target_tokens=20_000, keys="0:300")
+    freeze(spark, src, out, target_tokens=20_000, keys="300:600")
+    assert compact(spark, out, target_tokens=400_000)["run"] is not None
+    snapshots.rollback(out, 2)
+    first = snapshots.log(out)[0]["run"]
+    os.remove(sorted(glob.glob(f"{out}/encoded/run={first}/*.parquet"))[0])
+    r = verify_output(spark, out)
+    assert r["status"] == "corrupt", r
+    assert r["n_missing_payload"] > 0, r

@@ -80,6 +80,28 @@ def main() -> None:
             plan_of(dec_rel),
         ))
 
+    # 3a. the same shuffle-free read on nested and compacted layouts
+    with tempfile.TemporaryDirectory() as td:
+        seqs.write.parquet(f"{td}/in")
+        for name, by in (("partition_by", ["partition_id"]),
+                         ("compacted", None)):
+            out = f"{td}/{name}"
+            engine.freeze(spark, f"{td}/in", out, target_tokens=16_384,
+                          partition_by=by)
+            if by is None:
+                # retire a few chunks: their tombstones become per-run
+                # drop bitmaps inside the file kernel, not a join
+                engine.compact(spark, out, target_tokens=65_536,
+                               min_tokens=1 << 30, max_chunks=8)
+            sections.append((
+                f"decode_frozen on a {name} output",
+                "Same shape as the flat read: no FileScan, no payload "
+                "exchange, one task-list scan feeding the per-file "
+                "kernel. partition_by files are listed recursively; "
+                "retired chunks are dropped by the kernel's bitmap test.",
+                plan_of(engine.decode_frozen(spark, out)),
+            ))
+
     # 3b. zone-map pruned filtered read of a frozen sequences dir
     with tempfile.TemporaryDirectory() as td:
         out = f"{td}/frozen_seq"

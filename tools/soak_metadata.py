@@ -73,6 +73,7 @@ def run_soak(commits: int, rows: int, every: int, workdir: str,
     shutil.rmtree(out, ignore_errors=True)
     t_all = time.perf_counter()
     samples = []
+    compacted = False  # since the last sample
     rng = np.random.default_rng(7)
     for i in range(commits):
         base = i * rows
@@ -86,20 +87,20 @@ def run_soak(commits: int, rows: int, every: int, workdir: str,
         df = spark.createDataFrame(pdf, engine.SEQUENCES_DDL)
         s = engine.freeze(spark, df, out, target_tokens=1 << 20)
         assert s.get("n_failed", 0) == 0, s
+        # payload-side maintenance (compact) on its own cadence, every
+        # compact_every commits: consolidation bounds MANIFEST dirs but
+        # each commit still leaves one encoded run= dir, and Spark's file
+        # listing over those grows the read-path planning wall linearly
+        # — the first soak run measured 0.6 -> 1.4 s over 700 commits.
+        # compact() is the rewrite_data_files analog that folds the
+        # micro-runs' chunks into target-sized ones; vacuum (below, every
+        # sample) then drops the emptied run dirs, which is what makes
+        # planning flat.
+        if compact_every and (i + 1) % compact_every == 0:
+            engine.compact(spark, out, target_tokens=1 << 20)
+            compacted = True
         if (i + 1) % every == 0:
-            # manifest-side maintenance every sample; payload-side
-            # (compact) on its own cadence: consolidation bounds
-            # MANIFEST dirs but each commit still leaves one encoded
-            # run= dir, and Spark's file listing over those grows the
-            # read-path planning wall linearly — the first soak run
-            # measured 0.6 -> 1.4 s over 700 commits. compact() is the
-            # rewrite_data_files analog that folds the micro-runs'
-            # chunks into target-sized ones; vacuum then drops the
-            # emptied run dirs, which is what makes planning flat.
-            compacted = False
-            if compact_every and (i + 1) % compact_every == 0:
-                engine.compact(spark, out, target_tokens=1 << 20)
-                compacted = True
+            # manifest-side maintenance every sample
             cons = engine.consolidate_manifests(spark, out)
             ckpt = snapshots.checkpoint(out)
             engine.vacuum(spark, out)
@@ -122,6 +123,7 @@ def run_soak(commits: int, rows: int, every: int, workdir: str,
                        consolidated=bool(cons.get("consolidated")),
                        ckpt_files_removed=ckpt.get("n_files_removed"))
             samples.append(row)
+            compacted = False
             print(json.dumps(row), flush=True)
             # incremental evidence: a long soak killed at session end
             # still leaves every planning/verify sample on record
