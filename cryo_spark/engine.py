@@ -699,13 +699,14 @@ def decode(enc_df: DataFrame, columns: list[str] | None = None,
 
 # chunk-level columns: constant across a chunk's rows, so a partition_by
 # over them keeps every chunk inside one encoded file (the per-file
-# decode contract) and the file kernel can restore them from the path
+# decode contract) and the file kernel can restore them from the path;
+# a partition_by over any other column splits chunks across files
 _CHUNK_CONSTANT = ("partition_id", "chunk_id", "n_rows", "status",
                    "min_doc_id", "max_doc_id")
 
 
 def _decode_files_kernel(columns: list[str], spec: TableSpec,
-                         drops: dict[str, bytes]):
+                         drops: dict[str, tuple[int, bytes]]):
     """Per-FILE decode kernel for the shuffle-free path (arrow_scan_files
     invokes it once per whole encoded file, so every chunk's rows are
     present). Failed chunk rows are dropped here — a failed chunk's only
@@ -713,10 +714,11 @@ def _decode_files_kernel(columns: list[str], spec: TableSpec,
     later run (its own files).
 
     ``drops`` maps a run to the packed bitmap of its chunk_ids retired
-    by live tombstones (readview.ReadView.drops) — O(n_chunks/8) bytes
-    per compacted run in the task closure; the kernel looks up its
-    file's run. Columns a ``partition_by`` layout moved into the
-    directory path come back from their ``k=v`` segment."""
+    by live tombstones (readview.ReadView.drops: runs with files only,
+    each bitmap spanning its run's own chunk-id range) in the task
+    closure; the kernel looks up its file's run. Columns a
+    ``partition_by`` layout moved into the directory path come back from
+    their ``k=v`` segment."""
     def fn(path, batches):
         tbl = pa.Table.from_batches(list(batches))
         if tbl.num_rows == 0:
@@ -761,8 +763,9 @@ def decode_frozen(spark: SparkSession, output_dir: str,
     its manifest dir carries ``_SUCCESS``), minus the chunks live
     tombstones retire, minus the live equality deletes. Orphan run dirs
     are never listed. ``as_of`` raises if vacuum already deleted bytes
-    the snapshot needs. Non-local (``://``) outputs decode through the
-    relational ``decode(read_encoded(...))``.
+    the snapshot needs. Non-local (``://``) outputs, and ``partition_by``
+    layouts over a column that splits chunks across files (say
+    ``column``), decode through the relational ``decode(read_encoded(...))``.
     """
     return _decode_view(spark, readview.read_view(output_dir, as_of),
                         columns, spec)
@@ -783,7 +786,9 @@ def _decode_view(spark: SparkSession, view: readview.ReadView,
     dec_cols = (cols if not view.deletes or spec.key in cols
                 else [spec.key, *cols])
     files = view.all_files()
-    if "://" in view.output_dir:
+    if "://" in view.output_dir or any(
+            set(readview.path_values(f)) - {"run", *_CHUNK_CONSTANT}
+            for f in files):
         df = decode(_encoded_df(spark, view), dec_cols, spec)
     elif not files:
         df = spark.createDataFrame([], spec.spark_ddl(dec_cols))
@@ -1166,8 +1171,8 @@ def verify_output(spark: SparkSession, output_dir: str) -> dict:
       rows (missing payload = corruption, ``n_missing_payload``);
     - encoded rows without a manifest row are orphans (invisible by
       design — reported, not an error, ``n_orphan_rows``);
-    - live tombstones must target rows that exist in the manifest
-      (``n_dangling_tombstones``);
+    - tombstones (any writer's) must target rows that exist in the
+      manifest (``n_dangling_tombstones``);
     - every data/delete run named by the snapshot log must have its
       manifest dir / delete files (``missing_runs``/
       ``missing_delete_runs``) unless vacuum recorded its removal;
@@ -1203,11 +1208,10 @@ def verify_output(spark: SparkSession, output_dir: str) -> dict:
     report["n_orphan_rows"] = enc.join(ok, keys4, "left_anti").count()
     report["n_duplicate_rows"] = (
         ok.groupBy(*keys4).count().filter(F.col("count") > 1).count())
-    dropped = view.dropped_keys()
-    report["n_dangling_tombstones"] = 0 if not dropped else (
-        spark.createDataFrame(dropped, "run string, chunk_id int")
-        .join(man.select("run", "chunk_id").distinct(),
-              ["run", "chunk_id"], "left_anti").count())
+    ts = readview.tombstones(spark, view, every=True)
+    report["n_dangling_tombstones"] = 0 if ts is None else ts.join(
+        man.select("run", "partition_id", "chunk_id").distinct(),
+        ["run", "partition_id", "chunk_id"], "left_anti").count()
     report["n_failed_chunks"] = man.filter(
         F.col("status") != "ok").select("run", "chunk_id").distinct().count()
     entries = snapshots.log(output_dir)
@@ -1803,18 +1807,15 @@ def _encoded_df(spark: SparkSession, view: readview.ReadView) -> DataFrame:
 def _live_chunks(spark: SparkSession, view: readview.ReadView,
                  man: DataFrame) -> DataFrame:
     """Distinct (run, partition_id, chunk_id) of the view's live chunks
-    in ``man``: an ok row in a live run, not retired by a live tombstone
-    (the view's drop bitmaps, anti-joined as (run, chunk_id) pairs)."""
+    in ``man``: an ok row in a live run, not retired by a live writer's
+    tombstone (readview.tombstones, anti-joined)."""
     keys = man.filter(
         (F.col("status") == "ok") & F.col("run").isin(sorted(view.runs))
     ).select("run", "partition_id", "chunk_id").distinct()
-    dropped = view.dropped_keys()
-    if dropped:
-        keys = keys.join(
-            F.broadcast(spark.createDataFrame(
-                dropped, "run string, chunk_id int")),
-            ["run", "chunk_id"], "left_anti"
-        ).select("run", "partition_id", "chunk_id")
+    ts = readview.tombstones(spark, view)
+    if ts is not None:
+        keys = keys.join(F.broadcast(ts),
+                         ["run", "partition_id", "chunk_id"], "left_anti")
     return keys
 
 
@@ -1923,8 +1924,8 @@ def freeze(
     Returns a summary dict (cryo's FreezeSummary analog,
     /root/reference/crates/freeze/src/types/summaries.rs:21-31).
     ``partition_by`` nests the encoded files in one directory per value
-    of the given chunk-level columns (e.g. ``["partition_id"]``, one dir
-    per source).
+    of the given encoded-table key columns (e.g. ``["partition_id"]``,
+    one dir per source).
 
     ``dry_run`` plans and reports without executing (cryo's --dry-run,
     /root/reference/crates/freeze/src/freeze.rs:44-46). A JSON report
@@ -1935,10 +1936,6 @@ def freeze(
     from . import sources
 
     t_start = time.perf_counter()
-    if partition_by and not set(partition_by) <= set(_CHUNK_CONSTANT):
-        raise ValueError(
-            f"partition_by={partition_by}: only chunk-level columns "
-            f"{_CHUNK_CONSTANT} keep each chunk inside one encoded file")
     input_df = input_path if isinstance(input_path, DataFrame) else None
     input_desc = "<dataframe>" if input_df is not None else input_path
     if branch is not None:

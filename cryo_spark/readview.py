@@ -14,8 +14,13 @@ else: :func:`read_view` reads the snapshot log once and returns a
   ``_SUCCESS``. Consolidation needs a log, so nothing is absorbed.
 
 Inside live runs, a chunk is retired iff a tombstone written by a live
-run targets it — one packed chunk-id bitmap per target run, the form
-the per-file decode kernel tests against.
+run targets it: :func:`tombstones` reads them as a DataFrame for the
+relational readers, and ``ReadView.drops`` packs them into one chunk-id
+bitmap per run, the form the per-file decode kernel tests against.
+
+Local outputs are listed with ``os``; ``://`` outputs through Spark's
+Hadoop filesystem (the active session), the same client their data
+reads use.
 """
 
 from __future__ import annotations
@@ -25,6 +30,7 @@ import urllib.parse
 from dataclasses import dataclass
 
 import numpy as np
+import pyarrow.compute as pc
 
 from . import snapshots
 
@@ -36,9 +42,10 @@ class ReadView:
     output_dir: str
     runs: frozenset[str]             # live data runs
     files: dict[str, tuple[str, ...]]  # live run -> its encoded parquet files
-    drops: dict[str, bytes]          # run -> packed bitmap of retired chunk ids
+    drops: dict[str, tuple[int, bytes]]  # run in files -> retired chunk ids
     deletes: frozenset[str]          # live equality-delete runs
     vacuumed: frozenset[str]         # live runs whose bytes vacuum removed
+    tombstone_runs: frozenset[str]   # runs with a tombstones/run= dir
     manifest_dirs: frozenset[str]    # runs with a manifest/run= dir
     manifest_gen: str | None         # consolidated manifest generation dir
     absorbed: frozenset[str]         # runs whose manifest rows live in it
@@ -51,25 +58,28 @@ class ReadView:
     def all_files(self) -> list[str]:
         return [f for r in sorted(self.files) for f in self.files[r]]
 
-    def dropped_keys(self) -> list[tuple[str, int]]:
-        """(run, chunk_id) of every retired chunk."""
-        return [(r, int(c)) for r, bits in sorted(self.drops.items())
-                for c in _ids(bits)]
+
+def _pack(cids: np.ndarray) -> tuple[int, bytes]:
+    """(first id rounded down to a byte, bitmap from there): a stream
+    run numbers chunks from batch_id * 2^20, so the bitmap spans only
+    the run's own id range."""
+    base = int(cids.min()) & ~7
+    c = cids - base
+    b = np.zeros((int(c.max()) >> 3) + 1, dtype=np.uint8)
+    np.bitwise_or.at(b, c >> 3, (1 << (c & 7)).astype(np.uint8))
+    return base, b.tobytes()
 
 
-def _ids(bits: bytes) -> np.ndarray:
-    """Set bit positions, unpacking only the non-zero bytes (stream runs
-    number chunks from batch_id * 2^20: sparse, long bitmaps)."""
+def dropped(drop: tuple[int, bytes], chunk_ids: np.ndarray) -> np.ndarray:
+    """Bool mask: which ``chunk_ids`` the packed ``(base, bitmap)`` retires."""
+    base, bits = drop
     b = np.frombuffer(bits, dtype=np.uint8)
-    nz = np.flatnonzero(b)
-    row, bit = np.nonzero(np.unpackbits(b[nz, None], axis=1,
-                                         bitorder="little"))
-    return nz[row].astype(np.int64) * 8 + bit
-
-
-def dropped(bits: bytes, chunk_ids: np.ndarray) -> np.ndarray:
-    """Bool mask: which ``chunk_ids`` the packed bitmap retires."""
-    return np.isin(chunk_ids, _ids(bits))
+    i = np.asarray(chunk_ids, dtype=np.int64) - base
+    inside = (i >= 0) & (i < 8 * len(b))
+    out = np.zeros(len(i), dtype=bool)
+    j = i[inside]
+    out[inside] = (b[j >> 3] >> (j & 7)) & 1 == 1
+    return out
 
 
 def path_values(path: str) -> dict[str, str]:
@@ -112,21 +122,25 @@ def read_view(output_dir: str, as_of: int | str | None = None,
     cons = next((e for e in reversed(entries) if e["kind"] == "consolidate"),
                 None)
     enc_runs = store.run_dirs("encoded")
+    tomb_runs = store.run_dirs("tombstones")
+    drops = _drop_bitmaps(store, tomb_runs & runs)
+    files = {r: tuple(store.parquet_files(f"encoded/run={r}"))
+             for r in sorted(runs & enc_runs)}
     view = ReadView(
         output_dir=output_dir,
         runs=frozenset(runs),
-        files={r: tuple(store.parquet_files(f"encoded/run={r}"))
-               for r in sorted(runs & enc_runs)},
-        drops=_drop_bitmaps(store, runs),
+        files=files,
+        drops={r: d for r, d in drops.items() if r in files},
         deletes=frozenset(deletes),
         vacuumed=frozenset((runs - enc_runs) & removed),
+        tombstone_runs=frozenset(tomb_runs),
         manifest_dirs=frozenset(store.run_dirs("manifest")),
         manifest_gen=(None if cons is None else
                       f"{store.root}/manifest_gens/gen={cons['gen']}"),
         absorbed=frozenset(() if cons is None else cons["absorbed_runs"]),
     )
     if strict:
-        lost = _runs_with_live_chunks(store, view, runs - enc_runs)
+        lost = _runs_with_live_chunks(store, view, runs - enc_runs, drops)
         if lost:
             raise ValueError(
                 f"snapshot not reconstructable: run(s) {sorted(lost)} have "
@@ -134,6 +148,22 @@ def read_view(output_dir: str, as_of: int | str | None = None,
                 "hold live chunks at this snapshot (expire_snapshots "
                 "forfeits time travel past it)")
     return view
+
+
+def tombstones(spark, view: ReadView, every: bool = False):
+    """(run, partition_id, chunk_id) each tombstone retires, as a Spark
+    DataFrame: those written by the view's live runs, or with ``every``
+    those of every writer on disk (the audit's view). None when there
+    are none."""
+    from pyspark.sql import functions as F
+
+    writers = view.tombstone_runs if every else view.tombstone_runs & view.runs
+    if not writers:
+        return None
+    base = f"{view.output_dir}/tombstones"
+    return spark.read.parquet(
+        *[f"{base}/run={w}" for w in sorted(writers)]
+    ).select(F.col("target_run").alias("run"), "partition_id", "chunk_id")
 
 
 def _committed_runs(store: _Store) -> set[str]:
@@ -144,91 +174,128 @@ def _committed_runs(store: _Store) -> set[str]:
     return {r for r in dirs if store.exists(f"manifest/run={r}/_SUCCESS")}
 
 
-def _drop_bitmaps(store: _Store, writers: set[str]) -> dict[str, bytes]:
+def _drop_bitmaps(store: _Store,
+                  writers: set[str]) -> dict[str, tuple[int, bytes]]:
     """Per-target-run retired chunk bitmaps from the writers' tombstones."""
-    ids: dict[str, list[int]] = {}
-    for w in sorted(store.run_dirs("tombstones") & writers):
-        t = store.read(f"tombstones/run={w}", ["target_run", "chunk_id"])
-        if t is None:
-            continue
-        for run, cid in zip(t.column("target_run").to_pylist(),
-                            t.column("chunk_id").to_pylist()):
-            ids.setdefault(run, []).append(cid)
-    out = {}
-    for run, cids in ids.items():
-        c = np.asarray(cids, dtype=np.int64)
-        b = np.zeros((int(c.max()) >> 3) + 1, dtype=np.uint8)
-        np.bitwise_or.at(b, c >> 3, (1 << (c & 7)).astype(np.uint8))
-        out[run] = b.tobytes()
-    return out
+    t = store.read("tombstones", writers, ["target_run", "chunk_id"])
+    return {} if t is None else {
+        r: _pack(c) for r, c in _ids_by(t, "target_run").items()}
 
 
-def _runs_with_live_chunks(store: _Store, view: ReadView,
-                           runs: set[str]) -> set[str]:
-    """Which of ``runs`` hold an ok manifest chunk the view does not retire."""
-    out = set()
-    for r in sorted(runs):
-        if r in view.absorbed:
-            gen = os.path.basename(view.manifest_gen)
-            t = store.read(f"manifest_gens/{gen}", ["chunk_id", "status"],
-                           [("run", "=", r)])
-        elif r in view.manifest_dirs:
-            t = store.read(f"manifest/run={r}", ["chunk_id", "status"])
-        else:
-            continue
-        if t is None:
-            continue
-        cid = t.column("chunk_id").to_numpy(zero_copy_only=False)[
-            np.asarray(t.column("status").to_pylist()) == "ok"]
-        bits = view.drops.get(r)
-        if len(cid) and (bits is None or not dropped(bits, cid).all()):
-            out.add(r)
-    return out
+def _ids_by(t, key: str) -> dict[str, np.ndarray]:
+    """chunk_id arrays of ``t`` grouped by its ``key`` column."""
+    g = t.group_by(key).aggregate([("chunk_id", "list")])
+    lists = g.column("chunk_id_list").combine_chunks()
+    return {r: lists[i].values.to_numpy().astype(np.int64)
+            for i, r in enumerate(g.column(key).to_pylist())}
+
+
+def _runs_with_live_chunks(store: _Store, view: ReadView, runs: set[str],
+                           drops: dict[str, tuple[int, bytes]]) -> set[str]:
+    """Which of ``runs`` hold an ok manifest chunk no live tombstone
+    retires: one read of the run dirs and one of the generation."""
+    cols = ["run", "chunk_id", "status"]
+    parts = [store.read("manifest", (runs & view.manifest_dirs)
+                        - view.absorbed, cols)]
+    if runs & view.absorbed:
+        parts.append(store.read_gen(view.manifest_gen,
+                                    runs & view.absorbed, cols))
+    return {r for t in parts if t is not None
+            for r, c in _ids_by(t.filter(pc.equal(t.column("status"), "ok")),
+                                "run").items()
+            if r not in drops or not dropped(drops[r], c).all()}
 
 
 class _Store:
-    """Listing and small-file reads under an output dir, local or URI."""
+    """Listing and small-table reads under an output dir: ``os`` and
+    pyarrow locally, Spark's Hadoop filesystem for ``://`` URIs."""
 
     def __init__(self, root: str):
-        import pyarrow.fs as pafs
-
         self.root = root.rstrip("/")
-        self.fs, self.base = (
-            pafs.FileSystem.from_uri(self.root) if "://" in root
-            else (pafs.LocalFileSystem(), os.path.abspath(self.root)))
-        self._pafs = pafs
+        self.spark = None
+        if "://" in root:
+            from pyspark.sql import SparkSession
 
-    def _infos(self, rel: str, recursive: bool = False) -> list:
-        sel = self._pafs.FileSelector(f"{self.base}/{rel}",
-                                      allow_not_found=True,
-                                      recursive=recursive)
-        return self.fs.get_file_info(sel)
+            self.spark = SparkSession.getActiveSession()
+            if self.spark is None:
+                raise ValueError(
+                    f"reading {root!r} needs an active SparkSession")
+            self._path = self.spark._jvm.org.apache.hadoop.fs.Path
+            self._fs = self._path(self.root).getFileSystem(
+                self.spark._jsc.hadoopConfiguration())
+
+    def _ls(self, rel: str) -> list[tuple[str, bool]]:
+        """(name, is_dir) of the entries of ``rel``; [] if missing."""
+        if self.spark is None:
+            p = os.path.join(self.root, rel)
+            return ([(e.name, e.is_dir()) for e in os.scandir(p)]
+                    if os.path.isdir(p) else [])
+        p = self._path(f"{self.root}/{rel}")
+        if not self._fs.exists(p):
+            return []
+        return [(s.getPath().getName(), s.isDirectory())
+                for s in self._fs.listStatus(p)]
 
     def run_dirs(self, rel: str) -> set[str]:
-        return {i.base_name[len("run="):] for i in self._infos(rel)
-                if i.type == self._pafs.FileType.Directory
-                and i.base_name.startswith("run=")}
+        return {n[len("run="):] for n, is_dir in self._ls(rel)
+                if is_dir and n.startswith("run=")}
 
     def exists(self, rel: str) -> bool:
-        info = self.fs.get_file_info(f"{self.base}/{rel}")
-        return info.type != self._pafs.FileType.NotFound
+        if self.spark is None:
+            return os.path.exists(os.path.join(self.root, rel))
+        return bool(self._fs.exists(self._path(f"{self.root}/{rel}")))
 
     def parquet_files(self, rel: str) -> list[str]:
         """Data files under ``rel``, recursively (partition_by dirs)."""
-        cut = len(self.base)
-        return sorted(
-            self.root + i.path[cut:] for i in self._infos(rel, True)
-            if i.type == self._pafs.FileType.File
-            and i.base_name.endswith(".parquet")
-            and not any(s[:1] in ("_", ".")
-                        for s in i.path[cut:].split("/")))
+        out = []
+        for name, is_dir in sorted(self._ls(rel)):
+            if name[:1] in ("_", "."):
+                continue
+            if is_dir:
+                out.extend(self.parquet_files(f"{rel}/{name}"))
+            elif name.endswith(".parquet"):
+                out.append(f"{self.root}/{rel}/{name}")
+        return out
 
-    def read(self, rel: str, columns: list[str], filters=None):
-        """Columns of a small parquet dir; None when it holds no rows."""
-        import pyarrow.parquet as pq
+    def read(self, area: str, runs: set[str], columns: list[str]):
+        """``columns`` of the ``area/run=<r>`` dirs of ``runs`` in one
+        read (``run`` comes from the path); None when there are no rows."""
+        import pyarrow as pa
+        import pyarrow.dataset as ds
 
-        if not self.parquet_files(rel):
+        files = [f for r in sorted(runs)
+                 for f in self.parquet_files(f"{area}/run={r}")]
+        if not files:
             return None  # e.g. a zero-row rewrite's empty manifest
-        t = pq.read_table(f"{self.base}/{rel}", columns=columns,
-                          filters=filters, filesystem=self.fs)
+        base = f"{self.root}/{area}"
+        if self.spark is not None:
+            return self._arrow(self.spark.read.option("basePath", base)
+                               .parquet(*files), columns)
+        t = ds.dataset(
+            files, format="parquet", partition_base_dir=base,
+            partitioning=ds.partitioning(pa.schema([("run", pa.string())]),
+                                         flavor="hive"),
+        ).to_table(columns=columns)
+        return t if t.num_rows else None
+
+    def read_gen(self, gen: str, runs: set[str], columns: list[str]):
+        """``columns`` of a consolidated generation's rows of ``runs``."""
+        if self.spark is not None:
+            from pyspark.sql import functions as F
+
+            df = self.spark.read.parquet(gen).filter(
+                F.col("run").isin(sorted(runs)))
+            return self._arrow(df, columns)
+        import pyarrow.dataset as ds
+
+        t = ds.dataset(gen, format="parquet").to_table(
+            columns=columns, filter=ds.field("run").isin(sorted(runs)))
+        return t if t.num_rows else None
+
+    @staticmethod
+    def _arrow(df, columns):
+        from pyspark.sql import functions as F
+
+        t = df.select(*[F.col(c).cast("string") if c == "run" else c
+                        for c in columns]).toArrow()
         return t if t.num_rows else None

@@ -185,7 +185,8 @@ def arrow_scan(
     n_desired = max(1, -(-total // target_bytes))
     n_tasks = -(-n_desired // par) * par  # round up to full waves
     tasks = pack_tasks(meta, max(1, -(-total // n_tasks)))
-    return _run_tasks(spark, tasks, columns, kernel, out_ddl)
+    return _run_tasks(spark, tasks, columns,
+                      lambda _path, batches: kernel(batches), out_ddl)
 
 
 def select_row_groups(path: str, column: str,
@@ -227,8 +228,8 @@ def _runs(rgs: list[int]) -> list[tuple[int, int]]:
     return runs
 
 
-def _run_tasks(spark, tasks, columns, kernel, out_ddl,
-               with_path: bool = False) -> DataFrame:
+def _run_tasks(spark, tasks, columns, kernel, out_ddl) -> DataFrame:
+    """Run ``kernel(path, batches)`` over each task's file segments."""
     tdf = spark.createDataFrame(
         [(list(p), list(s), list(c)) for p, s, c in tasks],
         "paths array<string>, rg_starts array<int>, rg_counts array<int>",
@@ -259,8 +260,7 @@ def _run_tasks(spark, tasks, columns, kernel, out_ddl,
                         rgs, columns=[c for c in columns if c in names],
                         use_threads=False,
                     )
-                    yield from (kernel(path, t.to_batches()) if with_path
-                                else kernel(t.to_batches()))
+                    yield from kernel(path, t.to_batches())
 
     return amap(tdf, read_tasks, out_ddl)
 
@@ -325,4 +325,4 @@ def arrow_scan_files(
             cur, acc = ([], [], []), 0
     if cur[0]:
         tasks.append(cur)
-    return _run_tasks(spark, tasks, columns, kernel, out_ddl, with_path=True)
+    return _run_tasks(spark, tasks, columns, kernel, out_ddl)

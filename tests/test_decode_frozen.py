@@ -88,17 +88,19 @@ def test_partial_manifest_falls_back(spark, frozen_dir, tmp_path):
 
 
 @pytest.fixture(scope="module", params=["partition_by", "partition_by_chunk",
-                                        "compacted"])
+                                        "partition_by_column", "compacted"])
 def layout_dir(request, spark, sequences_path, tmp_path_factory):
     """Outputs beyond the flat layout: partition_by nested dirs (over a
-    column the file kernel never reads, and over one it does — restored
-    from the path), and a compaction whose tombstones retire some of
+    column the file kernel never reads, over one it does — restored
+    from the path — and over ``column``, which splits every chunk
+    across files), and a compaction whose tombstones retire some of
     the chunks in files that keep live ones."""
     from cryo_spark import compact
 
     out = str(tmp_path_factory.mktemp("dfz_layout") / request.param)
     by = {"partition_by": ["partition_id"],
-          "partition_by_chunk": ["chunk_id"]}.get(request.param)
+          "partition_by_chunk": ["chunk_id"],
+          "partition_by_column": ["column"]}.get(request.param)
     engine.freeze(spark, sequences_path, out, target_tokens=TARGET,
                   partition_by=by)
     if request.param == "compacted":
@@ -116,16 +118,12 @@ def test_layout_matches_relational(spark, sequences_path, layout_dir):
 
 
 def test_layout_no_payload_exchange_in_plan(spark, layout_dir):
+    """Only a layout that splits chunks across files (partition_by over
+    ``column``) needs the relational decode to reassemble them."""
     plan = engine.decode_frozen(spark, layout_dir)._jdf.queryExecution() \
         .executedPlan().toString()
-    assert "FileScan parquet" not in plan
-
-
-def test_partition_by_rejects_chunk_splitting_columns(spark, sequences_path,
-                                                      tmp_path):
-    with pytest.raises(ValueError, match="chunk-level"):
-        engine.freeze(spark, sequences_path, str(tmp_path / "o"),
-                      target_tokens=TARGET, partition_by=["column"])
+    split = layout_dir.endswith("partition_by_column")
+    assert ("FileScan parquet" in plan) == split
 
 
 def test_column_pruned(spark, frozen_dir):

@@ -32,6 +32,19 @@ def src(tmp_path):
     return path
 
 
+def _commit_dies_once(monkeypatch):
+    real_commit = snapshots.commit
+    calls = []
+
+    def commit(*args, **kwargs):
+        if not calls:
+            calls.append(args)
+            raise OSError("injected crash before the snapshot commit")
+        return real_commit(*args, **kwargs)
+
+    monkeypatch.setattr(snapshots, "commit", commit)
+
+
 def test_commit_crash_window_is_invisible_and_resumes(spark, src, tmp_path,
                                                       monkeypatch):
     """Death after the manifest write but before the log commit: every
@@ -39,16 +52,7 @@ def test_commit_crash_window_is_invisible_and_resumes(spark, src, tmp_path,
     converges to exactly the input."""
     out = str(tmp_path / "out")
     freeze(spark, src, out, target_tokens=20_000, keys="0:300")
-    real_commit = snapshots.commit
-    calls = []
-
-    def commit_dies_once(*args, **kwargs):
-        if not calls:
-            calls.append(args)
-            raise OSError("injected crash before the snapshot commit")
-        return real_commit(*args, **kwargs)
-
-    monkeypatch.setattr(snapshots, "commit", commit_dies_once)
+    _commit_dies_once(monkeypatch)
     with pytest.raises(OSError, match="injected crash"):
         freeze(spark, src, out, target_tokens=20_000, keys="300:600")
     monkeypatch.undo()
@@ -110,15 +114,54 @@ def test_logless_output_uses_commit_markers(spark, src, tmp_path):
         readview.read_view(out, as_of=1)
 
 
-def test_first_log_entry_adopts_marker_committed_runs(spark, src, tmp_path):
-    """A log-less output (say, the first freeze died before its log
-    commit) keeps its marker-committed runs once a later commit starts
-    the log."""
+def test_first_freeze_crash_leaves_a_logless_output(spark, src, tmp_path,
+                                                    monkeypatch):
+    """The first freeze dying before its log commit leaves a local output
+    with no log: its marker-committed run is live, a re-run resumes it,
+    and the log's first entry adopts it instead of dropping its rows."""
     out = str(tmp_path / "out")
-    first = freeze(spark, src, out, target_tokens=20_000, keys="0:300")["run"]
-    shutil.rmtree(f"{out}/snapshots")
+    _commit_dies_once(monkeypatch)
+    with pytest.raises(OSError, match="injected crash"):
+        freeze(spark, src, out, target_tokens=20_000, keys="0:300")
+    monkeypatch.undo()
+    assert snapshots.log(out) == []
+    (first,) = readview.read_view(out).runs
+    want = _rows(spark.read.parquet(src).filter(
+        F.col("doc_id") < "doc-000000000300"))
+    assert _rows(decode_frozen(spark, out)) == want
+
+    s = freeze(spark, src, out, target_tokens=20_000, keys="0:300")
+    assert s["n_encoded"] == 0
     second = freeze(spark, src, out, target_tokens=20_000,
                     keys="300:600")["run"]
-    assert [(e["run"], e["kind"]) for e in snapshots.log(out)] == [
-        (first, "append"), (second, "append")]
-    assert _rows(decode_frozen(spark, out)) == _rows(spark.read.parquet(src))
+    runs = [e["run"] for e in snapshots.log(out)]
+    assert runs[0] == first and runs[-1] == second
+    every = _rows(spark.read.parquet(src))
+    assert _rows(decode_frozen(spark, out)) == every
+    assert _rows(decode(read_encoded(spark, out))) == every
+    assert verify_output(spark, out)["status"] in ("ok", "warn")
+
+
+def test_uri_output_lists_through_hadoop_fs(spark, src, tmp_path,
+                                            monkeypatch):
+    """A ``://`` output is listed and read through Spark's Hadoop
+    filesystem (no snapshot log: commit markers decide), tombstones
+    included."""
+    from cryo_spark import compact
+
+    # freeze's best-effort local side files (spec, plan, report) take a
+    # URI as a relative path: keep them inside the test's dir
+    monkeypatch.chdir(tmp_path)
+    out = f"file://{tmp_path}/out"
+    freeze(spark, src, out, target_tokens=20_000, keys="0:300")
+    freeze(spark, src, out, target_tokens=20_000, keys="300:600")
+    assert compact(spark, out, target_tokens=400_000)["n_retired"] > 0
+    view = readview.read_view(out)
+    assert len(view.runs) == 3 and view.drops
+    assert all(f.startswith(out) for f in view.all_files())
+    every = _rows(spark.read.parquet(src))
+    assert _rows(decode_frozen(spark, out)) == every
+    assert _rows(decode(read_encoded(spark, out))) == every
+    assert {r.run for r in read_manifest(spark, out)
+            .select("run").distinct().collect()} == set(view.runs)
+    assert verify_output(spark, out)["status"] == "ok"
