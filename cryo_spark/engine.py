@@ -240,9 +240,10 @@ def _encode_partition(spec: TableSpec = SEQUENCES):
     partition is correct — and skips the JVM per-group sort + row
     conversion machinery of groupBy().applyInArrow() (measured ~1.9s of
     the reduce stage at local[16] with a no-op kernel, vs ~0.5s of
-    actual codec work). A partition holds ~1-4 chunks (target_tokens ×
-    int32 ≈ 8 MiB each), so materializing it is bounded regardless of
-    total data size.
+    actual codec work). Chunks land round-robin on _n_parts partitions,
+    so a partition holds at most 32 chunks (target_tokens × int32 ≈
+    8 MiB each at the default target) and materializing it is bounded
+    regardless of total data size.
     """
     schema = spec.packed_pa_schema()
 
@@ -623,18 +624,21 @@ def _pack_kernel(spark: SparkSession, plan: layout.ChunkPlan,
 
 
 def _n_parts(spark: SparkSession, n_chunks: int) -> int:
-    """Reduce-side partition count.
+    """Task count of a Python reduce stage over ``n_chunks`` chunks.
 
-    Data-driven first (one partition per ~32 chunks, ~256 MB packed —
-    python-task dispatch is serialized per executor at ~12 ms/task, so
-    fewer+fatter reduce tasks win), floored at 2x parallelism for small
-    jobs. On sized workloads the data term dominates, making the count
-    IDENTICAL at every cluster size — N- and 4N-executor runs then pay
-    the same dispatch overhead and split the same partitions, which is
-    exactly what the scaling protocol wants to measure.
+    One task per ~32 chunks (round-robin placement keeps every task at
+    or under 32 chunks, ~256 MB packed at the default target), rounded
+    up to whole waves of ``defaultParallelism`` so no slot idles in the
+    last wave, and never more tasks than chunks. Every Python task pays
+    a fixed JVM<->Python dispatch cost (~0.2 s a slot on a 4-vCPU host
+    at local[2], against 0.3 ms of kernel work on a small chunk), so a
+    stage starts no more tasks than the chunks it has to spread: a
+    6-chunk append runs 2 tasks at local[2], the 66-chunk sf0.1 freeze
+    4, and a 16-chunk job on a 32-slot cluster 16.
     """
-    par = spark.sparkContext.defaultParallelism
-    return max(16, min(n_chunks, max(par * 2, n_chunks // 32)))
+    par = max(1, spark.sparkContext.defaultParallelism)
+    waves = -(-max(1, -(-n_chunks // 32)) // par)
+    return max(1, min(n_chunks, waves * par))
 
 
 def _encode_packed(packed: DataFrame, spark: SparkSession,
@@ -674,25 +678,41 @@ def decode(enc_df: DataFrame, columns: list[str] | None = None,
     filtered BEFORE the shuffle, so their bytes never move — decode-side
     column pruning, the mirror of the reference's lazy acquisition
     (/root/reference/crates/freeze/src/datasets/transactions.rs:123-134).
+
+    The ``(run, partition_id, chunk_id)`` exchange has :func:`_n_parts`
+    tasks for the input's chunk count, which one job counts over the
+    key columns alone (the payload column is pruned from that scan): a
+    task holds ~32 chunks on average, and a small read starts no more
+    tasks than it has chunks.
     """
+    return _decode(enc_df, columns, spec)
+
+
+def _decode(enc_df: DataFrame, columns: list[str] | None = None,
+            spec: TableSpec = SEQUENCES,
+            n_chunks: int | None = None) -> DataFrame:
+    """:func:`decode` for a caller that already knows ``n_chunks``, the
+    chunk count of ``enc_df`` (compact's candidates, upsert's affected
+    chunks); None counts it."""
     from . import schema as schema_mod
 
     all_cols = [c.name for c in spec.columns]
     columns = all_cols if columns is None else schema_mod.compute_used_columns(
         all_cols, columns=columns
     )
-    spark = enc_df.sparkSession
-    n_parts = max(16, spark.sparkContext.defaultParallelism * 2)
     ddl = spec.spark_ddl(columns)
     run_col = (
         F.col("run") if "run" in enc_df.columns
         else F.lit("").alias("run")  # in-memory encode(): single plan
     )
+    keys = ["run", "partition_id", "chunk_id"]
+    rows = (enc_df.select(run_col.alias("run"), "partition_id", "chunk_id",
+                          "column", "n_rows", "payload")
+            .filter(F.col("column").isin(columns)))
+    if n_chunks is None:
+        n_chunks = rows.select(*keys).distinct().count()
     return amap(
-        enc_df.select(run_col.alias("run"), "partition_id", "chunk_id",
-                      "column", "n_rows", "payload")
-        .filter(F.col("column").isin(columns))
-        .repartition(n_parts, "run", "partition_id", "chunk_id"),
+        rows.repartition(_n_parts(enc_df.sparkSession, n_chunks), *keys),
         _decode_partition(columns, spec), ddl,
     )
 
@@ -1492,7 +1512,7 @@ def upsert(
         enc_subset = _encoded_df(spark, view).join(
             F.broadcast(affected), ["run", "partition_id", "chunk_id"],
             "left_semi")
-        old_rows = decode(enc_subset, spec=spec)
+        old_rows = _decode(enc_subset, spec=spec, n_chunks=n_affected)
     survivors = old_rows.join(bkeys, spec.key, "left_anti")
     merged = survivors.select(*all_cols).unionByName(batch).localCheckpoint()
     n_old = old_rows.count()
@@ -1602,7 +1622,7 @@ def purge_deletes(
     enc_subset = _encoded_df(spark, view).join(
         F.broadcast(affected), ["run", "partition_id", "chunk_id"],
         "left_semi")
-    rows = decode(enc_subset, spec=spec)
+    rows = _decode(enc_subset, spec=spec, n_chunks=n_affected)
     keep = rows.join(dk, spec.key, "left_anti").localCheckpoint()
     n_before = rows.count()
     n_keep = keep.count()
@@ -2218,7 +2238,8 @@ def compact(
     )
     # materialize once: planning and encoding would otherwise each re-run
     # the decode of every candidate chunk
-    rows = decode(enc_subset, spec=spec).localCheckpoint()
+    rows = _decode(enc_subset, spec=spec,
+                   n_chunks=len(cand)).localCheckpoint()
     plan = layout.plan_chunks(rows, target_tokens, spec=spec)
     if plan.n_chunks >= len(cand):
         # rewrite would not shrink the layout (e.g. singleton small
@@ -2381,25 +2402,22 @@ def _persist_spec(output_dir: str, spec: TableSpec) -> None:
     out-of-band spec). Written before the first encode task so even an
     interrupted run leaves a readable output; idempotent across runs —
     the spec of an existing output never changes except via the
-    schema-evolution path, which rewrites it."""
-    import os
-
+    schema-evolution path, which rewrites it. Like every side file it
+    goes through :class:`readview._Store`, so a ``://`` output keeps it
+    in its own store."""
     try:
-        os.makedirs(output_dir, exist_ok=True)
-        tmp = f"{output_dir}/spec.json.tmp"
-        with open(tmp, "w") as f:
-            f.write(spec.to_json())
-        os.replace(tmp, f"{output_dir}/spec.json")  # atomic, like reports
+        readview._Store(output_dir).write_bytes(
+            "spec.json", spec.to_json().encode())
     except OSError:
-        pass  # non-local output_dir: best-effort, like _write_report
+        pass  # best-effort, like _write_report
 
 
 def load_output_spec(output_dir: str) -> TableSpec | None:
     """Read back the spec persisted by freeze; None when the output
     predates spec persistence (callers fall back to SEQUENCES)."""
     try:
-        with open(f"{output_dir}/spec.json") as f:
-            return TableSpec.from_json(f.read())
+        data = readview._Store(output_dir).read_bytes("spec.json")
+        return None if data is None else TableSpec.from_json(data.decode())
     except (OSError, ValueError, KeyError):
         return None
 
@@ -2412,17 +2430,15 @@ def _persist_plan(output_dir: str, plan: layout.ChunkPlan,
     co-located join need the exact key→chunk mapping, not just its id.
     Mapping rows go to parquet (up to 2^20 per source — too big for
     JSON), scalars to a sibling JSON; idempotent per plan_id;
-    best-effort on non-local stores like :func:`_persist_spec`."""
+    best-effort like :func:`_persist_spec`."""
+    import io
     import json
-    import os
 
     import pyarrow.parquet as _pq
 
     try:
-        d = os.path.join(output_dir, "plan")
-        os.makedirs(d, exist_ok=True)
-        jpath = os.path.join(d, f"{plan_fp}.json")
-        if os.path.exists(jpath):
+        store = readview._Store(output_dir)
+        if f"{plan_fp}.json" in store.names("plan"):
             return
         t = pa.table({
             "source": pa.array([m[0] for m in plan.mapping], pa.string()),
@@ -2432,9 +2448,9 @@ def _persist_plan(output_dir: str, plan: layout.ChunkPlan,
             "chunk_base": pa.array([m[3] for m in plan.mapping], pa.int32()),
             "n_salts": pa.array([m[4] for m in plan.mapping], pa.int32()),
         })
-        ptmp = os.path.join(d, f"{plan_fp}.parquet.tmp")
-        _pq.write_table(t, ptmp)
-        os.replace(ptmp, os.path.join(d, f"{plan_fp}.parquet"))
+        buf = io.BytesIO()
+        _pq.write_table(t, buf)
+        store.write_bytes(f"plan/{plan_fp}.parquet", buf.getvalue())
         # sources can be None (null partition values) — JSON object keys
         # can't, so dict-valued fields serialize as [key, value] pairs
         meta = dict(
@@ -2449,10 +2465,8 @@ def _persist_plan(output_dir: str, plan: layout.ChunkPlan,
                           [[k, list(v)]
                            for k, v in plan.range_bounds.items()]),
         )
-        jtmp = jpath + ".tmp"
-        with open(jtmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(jtmp, jpath)  # json last: its presence = plan complete
+        # json last: its presence = plan complete
+        store.write_bytes(f"plan/{plan_fp}.json", json.dumps(meta).encode())
     except OSError:
         pass
 
@@ -2463,15 +2477,16 @@ def load_output_plan(output_dir: str,
     when the output holds several (ranged freezes); with one plan it is
     optional. None when absent/ambiguous; raises on fingerprint mismatch
     (a corrupt or hand-edited plan must never silently misplace keys)."""
+    import io
     import json
-    import os
 
     import pyarrow.parquet as _pq
 
-    d = os.path.join(output_dir, "plan")
     try:
-        ids = sorted(f[:-5] for f in os.listdir(d) if f.endswith(".json"))
-    except OSError:
+        store = readview._Store(output_dir)
+        ids = sorted(f[:-5] for f in store.names("plan")
+                     if f.endswith(".json") and not f.startswith("."))
+    except (OSError, ValueError):
         return None
     if plan_id is None:
         if len(ids) != 1:
@@ -2480,10 +2495,10 @@ def load_output_plan(output_dir: str,
     elif plan_id not in ids:
         return None
     try:
-        with open(os.path.join(d, f"{plan_id}.json")) as f:
-            meta = json.load(f)
-        t = _pq.read_table(os.path.join(d, f"{plan_id}.parquet"))
-    except (OSError, ValueError):
+        meta = json.loads(store.read_bytes(f"plan/{plan_id}.json"))
+        t = _pq.read_table(io.BytesIO(
+            store.read_bytes(f"plan/{plan_id}.parquet")))
+    except (OSError, ValueError, TypeError):
         return None
     mapping = list(zip(
         t.column("source").to_pylist(),
@@ -2512,21 +2527,18 @@ def load_output_plan(output_dir: str,
 
 
 def _write_report(output_dir: str, run_id: str, payload: dict) -> None:
-    """Per-run JSON report, incomplete-then-final (reports.rs:51-89 analog).
-
-    Local-path implementation; on a cluster with an object-store
-    output_dir this would go through the Hadoop FS API — the manifest
-    table (not this report) is the machine-read source of truth.
-    """
+    """Per-run JSON report, incomplete-then-final (reports.rs:51-89 analog),
+    written through :class:`readview._Store` (``os`` locally, the
+    Hadoop filesystem for ``://`` outputs). Best-effort: the manifest
+    table (not this report) is the machine-read source of truth."""
     import json
-    import os
 
     try:
-        os.makedirs(f"{output_dir}/report", exist_ok=True)
-        with open(f"{output_dir}/report/run={run_id}.json", "w") as f:
-            json.dump(payload, f, indent=1)
+        readview._Store(output_dir).write_bytes(
+            f"report/run={run_id}.json",
+            json.dumps(payload, indent=1).encode())
     except OSError:
-        pass  # non-local output_dir: reports are best-effort
+        pass
 
 
 # ---------------------------------------------------------------------------

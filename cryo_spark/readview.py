@@ -25,6 +25,7 @@ reads use.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import urllib.parse
 from dataclasses import dataclass
@@ -244,6 +245,59 @@ class _Store:
         if self.spark is None:
             return os.path.exists(os.path.join(self.root, rel))
         return bool(self._fs.exists(self._path(f"{self.root}/{rel}")))
+
+    def names(self, rel: str) -> list[str]:
+        """File names in ``rel`` (none when it is missing)."""
+        return [n for n, is_dir in self._ls(rel) if not is_dir]
+
+    def read_bytes(self, rel: str) -> bytes | None:
+        """Contents of the file ``rel``; None when it is missing."""
+        if self.spark is None:
+            try:
+                with open(os.path.join(self.root, rel), "rb") as f:
+                    return f.read()
+            except FileNotFoundError:
+                return None
+        p = self._path(f"{self.root}/{rel}")
+        with self._hadoop_io():
+            if not self._fs.exists(p):
+                return None
+            stream = self._fs.open(p)
+            try:
+                return bytes(self.spark._jvm.org.apache.commons.io.IOUtils
+                             .toByteArray(stream))
+            finally:
+                stream.close()
+
+    def write_bytes(self, rel: str, data: bytes) -> None:
+        """Replace the file ``rel`` with ``data`` whole: a local file is
+        renamed into place, a Hadoop file appears when its stream
+        closes (object stores publish on close)."""
+        if self.spark is None:
+            p = os.path.join(self.root, rel)
+            os.makedirs(os.path.dirname(p), exist_ok=True)
+            with open(f"{p}.tmp", "wb") as f:
+                f.write(data)
+            os.replace(f"{p}.tmp", p)
+            return
+        with self._hadoop_io():
+            stream = self._fs.create(self._path(f"{self.root}/{rel}"), True)
+            try:
+                stream.write(data)
+            finally:
+                stream.close()
+
+    @staticmethod
+    @contextlib.contextmanager
+    def _hadoop_io():
+        """Hadoop filesystem errors surface as ``OSError``, as local ones
+        do."""
+        from py4j.protocol import Py4JJavaError
+
+        try:
+            yield
+        except Py4JJavaError as e:
+            raise OSError(str(e.java_exception)) from e
 
     def parquet_files(self, rel: str) -> list[str]:
         """Data files under ``rel``, recursively (partition_by dirs)."""

@@ -2,6 +2,7 @@ from .parquet_arrow import (
     arrow_scan,
     arrow_scan_files,
     column_values,
+    pack_files,
     pack_tasks,
     plan_scan_tasks,
     scan_meta,
@@ -13,6 +14,7 @@ __all__ = [
     "arrow_scan",
     "arrow_scan_files",
     "column_values",
+    "pack_files",
     "pack_tasks",
     "plan_scan_tasks",
     "scan_meta",

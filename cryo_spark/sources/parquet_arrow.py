@@ -25,6 +25,7 @@ filesystem layer — the task shape is unchanged.
 
 from __future__ import annotations
 
+import heapq
 import os
 
 import pyarrow.parquet as pq
@@ -265,6 +266,19 @@ def _run_tasks(spark, tasks, columns, kernel, out_ddl) -> DataFrame:
     return amap(tdf, read_tasks, out_ddl)
 
 
+def pack_files(sizes: list[int], n_tasks: int) -> list[list[int]]:
+    """Whole files into ``n_tasks`` bins of near-equal bytes: largest
+    file first, each into the lightest bin so far (ties to the lower
+    bin). Returns each non-empty bin's file indices in input order."""
+    heap = [(0, b) for b in range(max(1, n_tasks))]
+    bins: list[list[int]] = [[] for _ in heap]
+    for i in sorted(range(len(sizes)), key=lambda i: (-sizes[i], i)):
+        load, b = heapq.heappop(heap)
+        bins[b].append(i)
+        heapq.heappush(heap, (load + sizes[i], b))
+    return [sorted(b) for b in bins if b]
+
+
 def arrow_scan_files(
     spark: SparkSession,
     files: list[str],
@@ -279,8 +293,9 @@ def arrow_scan_files(
     Unlike :func:`arrow_scan`, a file is never divided across tasks and
     the kernel is invoked once per whole file — the contract the
     shuffle-free decode relies on (an encoded chunk's rows never span
-    files, but do span row groups). Multiple small files still pack
-    into one task; the kernel runs per file within it, as
+    files, but do span row groups). Files pack into a wave-aligned
+    task count by bytes (:func:`pack_files`), several small ones to a
+    task; the kernel runs per file within it, as
     ``kernel(path, batches)`` — the path carries the file's run and any
     ``k=v`` directory values, which the file itself may not hold.
 
@@ -303,26 +318,20 @@ def arrow_scan_files(
             for c in range(g.num_columns)
             if g.column(c).path_in_schema.split(".")[0] in want
         )
-        metas.append((path, nbytes, rgs))
+        if rgs:  # no surviving row groups: nothing to read
+            metas.append((path, nbytes, rgs))
     par = max(1, spark.sparkContext.defaultParallelism)
     total = sum(m[1] for m in metas)
     n_desired = max(1, -(-total // target_bytes))
-    n_tasks = min(len(files), -(-n_desired // par) * par)  # full waves
-    per_task = max(1, -(-total // max(1, n_tasks)))
+    n_tasks = min(len(metas), -(-n_desired // par) * par)  # full waves
     tasks: list[tuple[list[str], list[int], list[int]]] = []
-    cur: tuple[list[str], list[int], list[int]] = ([], [], [])
-    acc = 0
-    for path, nbytes, rgs in metas:
-        if not rgs:
-            continue  # no surviving row groups: nothing to read
-        for start, count in _runs(rgs):
-            cur[0].append(path)
-            cur[1].append(start)
-            cur[2].append(count)
-        acc += nbytes
-        if acc >= per_task:
-            tasks.append(cur)
-            cur, acc = ([], [], []), 0
-    if cur[0]:
-        tasks.append(cur)
+    for members in pack_files([m[1] for m in metas], n_tasks):
+        task: tuple[list[str], list[int], list[int]] = ([], [], [])
+        for i in members:
+            path, _, rgs = metas[i]
+            for start, count in _runs(rgs):
+                task[0].append(path)
+                task[1].append(start)
+                task[2].append(count)
+        tasks.append(task)
     return _run_tasks(spark, tasks, columns, kernel, out_ddl)

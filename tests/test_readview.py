@@ -142,16 +142,12 @@ def test_first_freeze_crash_leaves_a_logless_output(spark, src, tmp_path,
     assert verify_output(spark, out)["status"] in ("ok", "warn")
 
 
-def test_uri_output_lists_through_hadoop_fs(spark, src, tmp_path,
-                                            monkeypatch):
+def test_uri_output_lists_through_hadoop_fs(spark, src, tmp_path):
     """A ``://`` output is listed and read through Spark's Hadoop
     filesystem (no snapshot log: commit markers decide), tombstones
     included."""
     from cryo_spark import compact
 
-    # freeze's best-effort local side files (spec, plan, report) take a
-    # URI as a relative path: keep them inside the test's dir
-    monkeypatch.chdir(tmp_path)
     out = f"file://{tmp_path}/out"
     freeze(spark, src, out, target_tokens=20_000, keys="0:300")
     freeze(spark, src, out, target_tokens=20_000, keys="300:600")

@@ -1,0 +1,107 @@
+"""Python reduce stages are sized by their chunk count (engine._n_parts).
+
+Every Python task pays a fixed JVM<->Python dispatch cost, so a stage
+must not start more tasks than it has chunks to spread, and the file
+scan packs whole files into balanced tasks.
+"""
+
+from __future__ import annotations
+
+import math
+import os
+from types import SimpleNamespace
+
+import pytest
+
+from cryo_spark import collect, compact, freeze, write_sequences
+from cryo_spark.engine import _n_parts, load_output_plan, load_output_spec
+from cryo_spark.sources import pack_files
+from cryo_spark.tablespec import SEQUENCES
+
+
+def _fake_spark(par: int):
+    return SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=par))
+
+
+@pytest.mark.parametrize("par", [1, 2, 3, 4, 8, 32])
+def test_n_parts_rule(par):
+    spark = _fake_spark(par)
+    for n in range(1, 3000):
+        p = _n_parts(spark, n)
+        assert p <= n
+        assert p >= math.ceil(n / 32)
+        if p < n:
+            assert p % par == 0, (n, par, p)
+
+
+def test_n_parts_examples():
+    assert _n_parts(_fake_spark(2), 6) == 2     # a small append
+    assert _n_parts(_fake_spark(2), 66) == 4    # the sf0.1 freeze
+    assert _n_parts(_fake_spark(32), 16) == 16  # capped at the chunks
+    assert _n_parts(_fake_spark(4), 0) == 1
+
+
+def test_pack_files_balances_bytes():
+    mb = 1 << 20
+    sizes = [int(x * mb) for x in (10.9, 11.0, 11.4, 12.2)]
+    bins = pack_files(sizes, 2)
+    assert sorted(len(b) for b in bins) == [2, 2]
+    assert sorted(i for b in bins for i in b) == [0, 1, 2, 3]
+    loads = [sum(sizes[i] for i in b) for b in bins]
+    assert max(loads) - min(loads) <= max(sizes) - min(sizes)
+
+
+def test_pack_files_never_more_bins_than_files():
+    assert pack_files([5, 1], 4) == [[0], [1]]
+    assert pack_files([], 0) == []
+
+
+def _stage_tasks(spark, group: str) -> list[int]:
+    st = spark.sparkContext.statusTracker()
+    out = []
+    for jid in st.getJobIdsForGroup(group):
+        job = st.getJobInfo(jid)
+        for sid in job.stageIds if job is not None else ():
+            info = st.getStageInfo(sid)
+            if info is not None:
+                out.append(info.numTasks)
+    return out
+
+
+def test_stage_task_counts_follow_chunk_count(spark, tmp_path):
+    """A freeze, a key lookup and a compact on a small table start no
+    stage with more tasks than max(defaultParallelism, n_chunks)."""
+    src = str(tmp_path / "seqs.parquet")
+    write_sequences(src, n=600, seed=7)
+    out = str(tmp_path / "out")
+    sc = spark.sparkContext
+    par = sc.defaultParallelism
+    group = "test_stage_task_counts"
+    sc.setJobGroup(group, "task sizing")
+    try:
+        s = freeze(spark, src, out, target_tokens=20_000)
+        assert collect(spark, out, keys="0:300").count() == 300
+        assert compact(spark, out, target_tokens=400_000)["n_compacted"] > 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tasks = _stage_tasks(spark, group)
+    assert tasks, "no stages recorded for the job group"
+    bound = max(par, s["n_chunks"])
+    assert s["n_chunks"] < 16 and max(tasks) <= bound, (s["n_chunks"], tasks)
+
+
+def test_side_files_stay_in_uri_output(spark, tmp_path, monkeypatch):
+    """A ``file://`` freeze writes its spec, plan and report into the
+    output, not under the driver's cwd."""
+    src = str(tmp_path / "seqs.parquet")
+    write_sequences(src, n=300, seed=7)
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    out = f"file://{tmp_path}/out"
+    s = freeze(spark, src, out, target_tokens=20_000)
+    assert os.listdir(cwd) == []
+    assert load_output_spec(out) == SEQUENCES
+    assert load_output_plan(out).n_chunks == s["n_chunks"]
+    assert os.path.isfile(tmp_path / "out" / "report" / f"run={s['run']}.json")

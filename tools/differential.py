@@ -21,6 +21,14 @@ parquet-level equality of the outputs read back WITHOUT Spark
   (run id and wall_ms are per-run provenance, excluded);
 - the manifest table under the same rule.
 
+The claim is exercised only if the two sides really partition
+differently, so every case prints each side's encode-exchange
+partition count (``engine._n_parts`` of the case's chunk count). It
+follows the core count: whole waves of 3 tasks on A and of 8 on B,
+capped at the chunk count, so most cases encode with 3 vs 8 reduce
+partitions (one 2-chunk case with 2 on both sides). The run fails if
+no case differs.
+
 Usage::
 
     python tools/differential.py [--quick]
@@ -173,8 +181,10 @@ def matrix(paths: dict) -> list[tuple[str, str, dict]]:
     ]
 
 
-def run_side(side: str, cfg: dict, cases, paths) -> dict[str, str]:
-    """Freeze every case under one Spark config; returns case -> out dir."""
+def run_side(side: str, cfg: dict, cases,
+             paths) -> dict[str, tuple[str, int]]:
+    """Freeze every case under one Spark config; returns case ->
+    (out dir, encode-exchange partition count)."""
     spark = get_spark(app=f"differential_{side}", **cfg)
     outs = {}
     try:
@@ -183,7 +193,7 @@ def run_side(side: str, cfg: dict, cases, paths) -> dict[str, str]:
             shutil.rmtree(out, ignore_errors=True)
             s = engine.freeze(spark, inp, out, **kw)
             assert s["n_failed"] == 0, (name, side, s)
-            outs[name] = out
+            outs[name] = (out, engine._n_parts(spark, s["n_chunks"]))
     finally:
         spark.stop()
     return outs
@@ -248,17 +258,21 @@ def main(quick: bool = False) -> int:
     outs_a = run_side("a", CONFIG_A, cases, paths)
     outs_b = run_side("b", CONFIG_B, cases, paths)
     failed = []
+    n_differ = 0
     for name, _, _ in cases:
-        problems = compare_case(outs_a[name], outs_b[name])
+        (out_a, parts_a), (out_b, parts_b) = outs_a[name], outs_b[name]
+        n_differ += parts_a != parts_b
+        problems = compare_case(out_a, out_b)
         status = "OK" if not problems else "DIFF"
-        print(f"{status} {name}")
+        print(f"{status} {name} (encode partitions A={parts_a} B={parts_b})")
         for p in problems:
             print(f"    {p}")
         if problems:
             failed.append(name)
     print(f"\n{len(cases) - len(failed)}/{len(cases)} cases identical "
-          f"across configs")
-    return 1 if failed else 0
+          f"across configs; {n_differ}/{len(cases)} encoded with different "
+          f"partition counts")
+    return 1 if failed or not n_differ else 0
 
 
 if __name__ == "__main__":
