@@ -14,9 +14,9 @@ and hash-joins chunk-by-chunk in process.
 At the 10^12-sequence scale this is the difference between a read and
 TWO full shuffles of the compressed tables: Spark's SortMergeJoin would
 exchange + sort both sides on the key even though the frozen layout
-already clusters them.  The only exchange in this plan moves task
-DESCRIPTOR rows (a few file paths each) — bytes proportional to the
-file count, not the data.
+already clusters them.  The plan has no exchange at all: the file
+groups ride in the task closure, one Spark task each
+(``sources.run_each``).
 
 When the fast path's preconditions don't hold (different plans, live
 compaction tombstones, pending deletes), the join
@@ -43,7 +43,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import engine, readview
-from .arrowutil import amap
+from .sources import run_each
 from .tablespec import SEQUENCES, TableSpec
 
 DEFAULT_TASK_BYTES = 192 << 20  # compressed bytes per join task (both sides)
@@ -306,53 +306,49 @@ def _join_kernel(key: str, cols_a: list[str], cols_b: list[str],
 
     import pandas as pd
 
-    def fn(task_batches):
-        for tb in task_batches:
-            for row in range(tb.num_rows):
-                paths_a = tb.column("paths_a")[row].as_py()
-                paths_b = tb.column("paths_b")[row].as_py()
-                amap_ = _decode_side(paths_a, [key, *cols_a], spec_a)
-                bmap_ = _decode_side(paths_b, [key, *cols_b], spec_b)
-                for cid in sorted(amap_):
-                    ta = amap_[cid]
-                    tbch = bmap_.get(cid)
-                    if tbch is None:
-                        if how == "inner" or ta.num_rows == 0:
-                            continue
-                        nulls = [pa.nulls(ta.num_rows,
-                                          spec_b.col(c).pa_type)
-                                 for c in cols_b]
-                        yield from pa.table(
-                            [ta.column(key),
-                             *[ta.column(c) for c in cols_a], *nulls],
-                            names=[key, *cols_a, *cols_b],
-                        ).to_batches()
-                        continue
-                    la = pd.DataFrame({
-                        "k": ta.column(key).to_pandas(),
-                        "ia": np.arange(ta.num_rows, dtype=np.int64),
-                    })
-                    lb = pd.DataFrame({
-                        "k": tbch.column(key).to_pandas(),
-                        "ib": np.arange(tbch.num_rows, dtype=np.int64),
-                    })
-                    m = la.merge(lb, on="k", how=how, sort=False)
-                    if len(m) == 0:
-                        continue
-                    ia = pa.array(m["ia"].to_numpy())
-                    ib_np = m["ib"].to_numpy()
-                    if how == "left" and m["ib"].isna().any():
-                        ib = pa.array(np.where(np.isnan(ib_np), 0,
-                                               ib_np).astype(np.int64),
-                                      mask=np.isnan(ib_np))
-                    else:
-                        ib = pa.array(ib_np.astype(np.int64))
-                    cols = [ta.column(key).take(ia)]
-                    cols += [ta.column(c).take(ia) for c in cols_a]
-                    cols += [tbch.column(c).take(ib) for c in cols_b]
-                    yield from pa.table(
-                        cols, names=[key, *cols_a, *cols_b]
-                    ).to_batches()
+    def fn(task):
+        paths_a, paths_b = task
+        amap_ = _decode_side(paths_a, [key, *cols_a], spec_a)
+        bmap_ = _decode_side(paths_b, [key, *cols_b], spec_b)
+        for cid in sorted(amap_):
+            ta = amap_[cid]
+            tbch = bmap_.get(cid)
+            if tbch is None:
+                if how == "inner" or ta.num_rows == 0:
+                    continue
+                nulls = [pa.nulls(ta.num_rows, spec_b.col(c).pa_type)
+                         for c in cols_b]
+                yield from pa.table(
+                    [ta.column(key), *[ta.column(c) for c in cols_a],
+                     *nulls],
+                    names=[key, *cols_a, *cols_b],
+                ).to_batches()
+                continue
+            la = pd.DataFrame({
+                "k": ta.column(key).to_pandas(),
+                "ia": np.arange(ta.num_rows, dtype=np.int64),
+            })
+            lb = pd.DataFrame({
+                "k": tbch.column(key).to_pandas(),
+                "ib": np.arange(tbch.num_rows, dtype=np.int64),
+            })
+            m = la.merge(lb, on="k", how=how, sort=False)
+            if len(m) == 0:
+                continue
+            ia = pa.array(m["ia"].to_numpy())
+            ib_np = m["ib"].to_numpy()
+            if how == "left" and m["ib"].isna().any():
+                ib = pa.array(np.where(np.isnan(ib_np), 0,
+                                       ib_np).astype(np.int64),
+                              mask=np.isnan(ib_np))
+            else:
+                ib = pa.array(ib_np.astype(np.int64))
+            cols = [ta.column(key).take(ia)]
+            cols += [ta.column(c).take(ia) for c in cols_a]
+            cols += [tbch.column(c).take(ib) for c in cols_b]
+            yield from pa.table(
+                cols, names=[key, *cols_a, *cols_b]
+            ).to_batches()
 
     return fn
 
@@ -447,9 +443,6 @@ def join_frozen(
         if not groups:
             return spark.createDataFrame([], ddl)
         tasks = _pack_groups(groups, par, target_bytes)
-    tdf = spark.createDataFrame(
-        [(a, b) for a, b in tasks],
-        "paths_a array<string>, paths_b array<string>",
-    ).repartition(max(1, len(tasks)))  # round-robin of DESCRIPTOR rows
-    return amap(tdf, _join_kernel(key, cols_a, cols_b, spec_a, spec_b, how),
-                ddl)
+    return run_each(spark, tasks,
+                    _join_kernel(key, cols_a, cols_b, spec_a, spec_b, how),
+                    ddl)

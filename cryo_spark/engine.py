@@ -19,6 +19,7 @@ chunk_id, column).
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import time
 import uuid
@@ -684,16 +685,15 @@ def decode(enc_df: DataFrame, columns: list[str] | None = None,
     key columns alone (the payload column is pruned from that scan): a
     task holds ~32 chunks on average, and a small read starts no more
     tasks than it has chunks.
+
+    This relational decode serves the inputs the file scan cannot: an
+    in-memory ``decode(encode(df))``, the incremental reads
+    (:func:`read_appends`, :func:`read_changes`), and the fallback of
+    :func:`decode_frozen` for ``://`` outputs and chunk-splitting
+    ``partition_by`` layouts. Reads of committed local outputs —
+    ``decode_frozen``, ``collect``, ``compact``, ``upsert``,
+    ``purge_deletes`` — scan files instead (:func:`_decode_view`).
     """
-    return _decode(enc_df, columns, spec)
-
-
-def _decode(enc_df: DataFrame, columns: list[str] | None = None,
-            spec: TableSpec = SEQUENCES,
-            n_chunks: int | None = None) -> DataFrame:
-    """:func:`decode` for a caller that already knows ``n_chunks``, the
-    chunk count of ``enc_df`` (compact's candidates, upsert's affected
-    chunks); None counts it."""
     from . import schema as schema_mod
 
     all_cols = [c.name for c in spec.columns]
@@ -709,8 +709,7 @@ def _decode(enc_df: DataFrame, columns: list[str] | None = None,
     rows = (enc_df.select(run_col.alias("run"), "partition_id", "chunk_id",
                           "column", "n_rows", "payload")
             .filter(F.col("column").isin(columns)))
-    if n_chunks is None:
-        n_chunks = rows.select(*keys).distinct().count()
+    n_chunks = rows.select(*keys).distinct().count()
     return amap(
         rows.repartition(_n_parts(enc_df.sparkSession, n_chunks), *keys),
         _decode_partition(columns, spec), ddl,
@@ -726,7 +725,8 @@ _CHUNK_CONSTANT = ("partition_id", "chunk_id", "n_rows", "status",
 
 
 def _decode_files_kernel(columns: list[str], spec: TableSpec,
-                         drops: dict[str, tuple[int, bytes]]):
+                         drops: dict[str, tuple[int, bytes]],
+                         keep: dict[str, tuple[int, bytes]] | None):
     """Per-FILE decode kernel for the shuffle-free path (arrow_scan_files
     invokes it once per whole encoded file, so every chunk's rows are
     present). Failed chunk rows are dropped here — a failed chunk's only
@@ -735,8 +735,10 @@ def _decode_files_kernel(columns: list[str], spec: TableSpec,
 
     ``drops`` maps a run to the packed bitmap of its chunk_ids retired
     by live tombstones (readview.ReadView.drops: runs with files only,
-    each bitmap spanning its run's own chunk-id range) in the task
-    closure; the kernel looks up its file's run. Columns a
+    each bitmap spanning its run's own chunk-id range), and ``keep``
+    (None: all) to the bitmap of the chunk_ids the caller selected; both
+    ride in the task closure, and the kernel looks up its file's run. A
+    chunk is decoded iff it is ok, not dropped and kept. Columns a
     ``partition_by`` layout moved into the directory path come back from
     their ``k=v`` segment."""
     def fn(path, batches):
@@ -749,12 +751,16 @@ def _decode_files_kernel(columns: list[str], spec: TableSpec,
                 typ = _ENCODED_PA_SCHEMA.field(k).type
                 tbl = tbl.append_column(
                     k, pa.array([v] * tbl.num_rows).cast(typ))
-        tbl = tbl.filter(pc.equal(tbl.column("status"), "ok"))
-        bits = drops.get(vals["run"])
-        if bits is not None and tbl.num_rows:
-            gone = readview.dropped(bits, _chunk_ids(tbl))
-            if gone.any():
-                tbl = tbl.filter(pa.array(~gone))
+        mask = pc.fill_null(pc.equal(tbl.column("status"), "ok"),
+                            False).to_numpy(zero_copy_only=False)
+        cids = _chunk_ids(tbl)
+        run = vals["run"]
+        if run in drops:
+            mask &= ~readview.in_bitmap(drops[run], cids)
+        if keep is not None:
+            mask &= readview.in_bitmap(keep[run], cids)
+        if not mask.all():
+            tbl = tbl.filter(pa.array(mask))
         if tbl.num_rows == 0:
             return
         for _, chunk in _groups(tbl, _chunk_ids(tbl)):
@@ -792,7 +798,23 @@ def decode_frozen(spark: SparkSession, output_dir: str,
 
 
 def _decode_view(spark: SparkSession, view: readview.ReadView,
-                 columns: list[str] | None, spec: TableSpec) -> DataFrame:
+                 columns: list[str] | None, spec: TableSpec,
+                 keep: dict[str, tuple[int, bytes]] | None = None
+                 ) -> DataFrame:
+    """The rows of ``view``'s live chunks, or of the ``keep`` subset of
+    them, projected to ``columns`` — the one read path of committed
+    outputs (:func:`decode_frozen`, :func:`collect`, :func:`compact`,
+    :func:`upsert`, :func:`purge_deletes`).
+
+    ``keep`` selects chunks: one packed chunk-id bitmap per run
+    (``readview.bitmaps``, the form of ``view.drops``); None keeps every
+    live chunk. Only the kept runs' files are listed, and the per-file
+    kernel decodes a chunk iff it is live (after ``drops``) and kept.
+    Local outputs read in ONE stage of :func:`sources.arrow_scan_files`;
+    ``://`` outputs and chunk-splitting ``partition_by`` layouts take
+    the relational :func:`decode`, with ``keep`` as a broadcast
+    semi-join of the kept keys. The view's live equality deletes are
+    anti-joined last."""
     from . import schema as schema_mod
     from . import sources
 
@@ -805,13 +827,20 @@ def _decode_view(spark: SparkSession, view: readview.ReadView,
     # caller didn't ask for it
     dec_cols = (cols if not view.deletes or spec.key in cols
                 else [spec.key, *cols])
+    if keep is not None:
+        view = dataclasses.replace(view, files={
+            r: fs for r, fs in view.files.items() if r in keep})
     files = view.all_files()
-    if "://" in view.output_dir or any(
+    if not files:
+        df = spark.createDataFrame([], spec.spark_ddl(dec_cols))
+    elif "://" in view.output_dir or any(
             set(readview.path_values(f)) - {"run", *_CHUNK_CONSTANT}
             for f in files):
-        df = decode(_encoded_df(spark, view), dec_cols, spec)
-    elif not files:
-        df = spark.createDataFrame([], spec.spark_ddl(dec_cols))
+        enc = _encoded_df(spark, view)
+        if keep is not None:
+            enc = enc.join(F.broadcast(_keep_keys(spark, keep)),
+                           ["run", "chunk_id"], "left_semi")
+        df = decode(enc, dec_cols, spec)
     else:
         # physical projection: encoded files are clustered by (column,
         # chunk_id) (engine._enc_writer), so a skinny decode reads only
@@ -828,13 +857,34 @@ def _decode_view(spark: SparkSession, view: readview.ReadView,
         df = sources.arrow_scan_files(
             spark, files, ["chunk_id", "column", "n_rows", "status",
                            "payload"],
-            _decode_files_kernel(dec_cols, spec, view.drops),
+            _decode_files_kernel(dec_cols, spec, view.drops, keep),
             spec.spark_ddl(dec_cols), row_groups=rg_sel)
     if view.deletes:
         df = _apply_deletes(spark, df, view, spec)
         if dec_cols is not cols:
             df = df.select(*cols)
     return df
+
+
+def _keep_keys(spark: SparkSession,
+               keep: dict[str, tuple[int, bytes]]) -> DataFrame:
+    """(run, chunk_id) rows of a ``keep`` selection. Built from an arrow
+    table: with Arrow enabled the JVM reads it directly, where a list of
+    tuples would start a Python stage."""
+    ids = {r: readview.bitmap_ids(b) for r, b in sorted(keep.items())}
+    return spark.createDataFrame(pa.table({
+        "run": pa.array([r for r, c in ids.items() for _ in c], pa.string()),
+        "chunk_id": pa.array(np.concatenate([np.zeros(0, np.int64),
+                                             *ids.values()]), pa.int32()),
+    }))
+
+
+def _selection(keys: DataFrame
+               ) -> tuple[pa.Table, dict[str, tuple[int, bytes]]]:
+    """Collect a (run, partition_id, chunk_id) key set to the driver once:
+    the arrow table (for a tombstone write) and its ``keep`` bitmaps."""
+    t = keys.select("run", "partition_id", "chunk_id").toArrow()
+    return t, readview.bitmaps(t)
 
 
 # ---------------------------------------------------------------------------
@@ -1502,17 +1552,12 @@ def upsert(
         raise ValueError("upsert into an empty output needs a parquet "
                          "input path (or freeze the DataFrame first)")
     bkeys = batch.select(spec.key).localCheckpoint()
-    # consumed three times (count, payload semi-join, tombstone write):
-    # pin the chunk set once
-    affected = _affected_chunks(spark, view, man, bkeys, spec) \
-        .localCheckpoint()
-    n_affected = affected.count()
-    old_rows = spark.createDataFrame([], spec.spark_ddl())
-    if n_affected:
-        enc_subset = _encoded_df(spark, view).join(
-            F.broadcast(affected), ["run", "partition_id", "chunk_id"],
-            "left_semi")
-        old_rows = _decode(enc_subset, spec=spec, n_chunks=n_affected)
+    # the chunk set, pinned on the driver once, selects the decode and
+    # is the tombstone write
+    affected, sel = _selection(
+        _affected_chunks(spark, view, man, bkeys, spec))
+    n_affected = affected.num_rows
+    old_rows = _decode_view(spark, view, None, spec, sel)
     survivors = old_rows.join(bkeys, spec.key, "left_anti")
     merged = survivors.select(*all_cols).unionByName(batch).localCheckpoint()
     n_old = old_rows.count()
@@ -1520,7 +1565,8 @@ def upsert(
     n_updated = n_old - n_survive
     plan = layout.plan_chunks(merged, target_tokens, spec=spec)
     run_id, snap = _commit_rewrite(
-        spark, output_dir, merged, plan, affected if n_affected else None,
+        spark, output_dir, merged, plan,
+        spark.createDataFrame(affected) if n_affected else None,
         spec, "rewrite", n_retired=n_affected, command="upsert")
     summary = dict(
         snapshot=snap, run=run_id,
@@ -1609,9 +1655,8 @@ def purge_deletes(
         return no_op
     purged = sorted(view.deletes)
     dk = _delete_keys(spark, view, spec)
-    affected = _affected_chunks(spark, view, man, dk, spec) \
-        .localCheckpoint()
-    n_affected = affected.count()
+    affected, sel = _selection(_affected_chunks(spark, view, man, dk, spec))
+    n_affected = affected.num_rows
     if n_affected == 0:
         # keys match nothing physical (already purged / never existed):
         # still retire the delete runs so reads stop anti-joining
@@ -1619,10 +1664,10 @@ def purge_deletes(
                                 purged_deletes=purged)
         return dict(snapshot=snap, run=None, n_rewritten=0, n_purged_rows=0,
                     wall_s=time.perf_counter() - t_start)
-    enc_subset = _encoded_df(spark, view).join(
-        F.broadcast(affected), ["run", "partition_id", "chunk_id"],
-        "left_semi")
-    rows = _decode(enc_subset, spec=spec, n_chunks=n_affected)
+    # the rows as stored: the purged deletes are anti-joined below
+    rows = _decode_view(spark, dataclasses.replace(view, deletes=frozenset()),
+                        None, spec, sel)
+    retired = spark.createDataFrame(affected)
     keep = rows.join(dk, spec.key, "left_anti").localCheckpoint()
     n_before = rows.count()
     n_keep = keep.count()
@@ -1638,7 +1683,7 @@ def purge_deletes(
         # differential sweep (a whole per-source chunk deleted by a
         # source-equality delete).
         run_id = _new_run_id()
-        affected.withColumnRenamed("run", "target_run").coalesce(1) \
+        retired.withColumnRenamed("run", "target_run").coalesce(1) \
             .write.mode("error") \
             .parquet(f"{_tombstones_path(output_dir)}/run={run_id}")
         man.select(*MANIFEST_COLUMNS, "plan_id").limit(0) \
@@ -1656,7 +1701,7 @@ def purge_deletes(
                     wall_s=time.perf_counter() - t_start)
     plan = layout.plan_chunks(keep, target_tokens, spec=spec)
     run_id, snap = _commit_rewrite(
-        spark, output_dir, keep, plan, affected, spec, "purge",
+        spark, output_dir, keep, plan, retired, spec, "purge",
         purged_deletes=purged, n_retired=n_affected)
     summary = dict(
         snapshot=snap, run=run_id, n_rewritten=n_affected,
@@ -1713,7 +1758,10 @@ def _read_run_partitioned(spark: SparkSession, path: str,
 
     ``paths`` restricts the read to those files/dirs under ``path`` (a
     read view's list: Spark then lists nothing else, and the ``run=``
-    segments still become the ``run`` column).
+    segments still become the ``run`` column). Paths of different
+    ``k=v`` nestings (a ``partition_by`` freeze next to the flat run of
+    a later compaction) are read one nesting at a time and unioned by
+    name: Spark's partition discovery takes one nesting per read.
 
     Belt to _new_run_id's suspenders: partition-value inference mangles
     numeric-looking legacy run ids (value AND type). When inference
@@ -1725,19 +1773,33 @@ def _read_run_partitioned(spark: SparkSession, path: str,
     """
     from pyspark.sql.types import StringType, StructField, StructType
 
-    def read(reader):
-        if paths is None:
-            return reader.parquet(path)
-        return reader.option("basePath", path).parquet(*paths)
+    def read_one(ps: list[str] | None) -> DataFrame:
+        def read(reader):
+            if ps is None:
+                return reader.parquet(path)
+            return reader.option("basePath", path).parquet(*ps)
 
-    df = read(spark.read)
-    if "run" in df.columns and not isinstance(
-            df.schema["run"].dataType, StringType):
-        fields = [
-            StructField("run", StringType(), True) if f.name == "run" else f
-            for f in df.schema.fields
-        ]
-        df = read(spark.read.schema(StructType(fields)))
+        df = read(spark.read)
+        if "run" in df.columns and not isinstance(
+                df.schema["run"].dataType, StringType):
+            fields = [
+                StructField("run", StringType(), True) if f.name == "run"
+                else f for f in df.schema.fields
+            ]
+            df = read(spark.read.schema(StructType(fields)))
+        return df
+
+    if paths is None:
+        return read_one(None)
+    nestings: dict[tuple[str, ...], list[str]] = {}
+    for p in paths:
+        keys = tuple(seg.partition("=")[0]
+                     for seg in p[len(path):].split("/") if "=" in seg)
+        nestings.setdefault(keys, []).append(p)
+    dfs = [read_one(ps) for ps in nestings.values()]
+    df = dfs[0]
+    for other in dfs[1:]:
+        df = df.unionByName(other, allowMissingColumns=True)
     return df
 
 
@@ -2184,10 +2246,10 @@ def compact(
     chunks; over time the encoded table accumulates chunks far below
     ``target_tokens``, and every reader pays per-chunk overhead for
     them. ``compact`` is the Iceberg ``rewrite_data_files`` analog over
-    this layout: decode the small chunks (and ONLY those — the candidate
-    keys prune the read relationally), re-encode them through the normal
-    plan/pack/encode path as one new run, and atomically retire the
-    originals via tombstones.
+    this layout: decode the small chunks (and ONLY those — their chunk-id
+    bitmaps select the files and chunks the file scan decodes),
+    re-encode them through the normal plan/pack/encode path as one new
+    run, and atomically retire the originals via tombstones.
 
     Commit order makes the swap atomic: encoded files, then tombstone
     rows (``tombstones/run=<new>``), then the manifest, then the
@@ -2218,42 +2280,35 @@ def compact(
     sizes = man.filter(
         (F.col("status") == "ok") & (F.col("column") == payload_col)
     ).select("run", "partition_id", "chunk_id", "n_values")
-    cand = (
+    cand, sel = _selection(
         sizes.join(F.broadcast(live), ["run", "partition_id", "chunk_id"],
                    "left_semi")
         .filter(F.col("n_values") < min_tokens)
         .orderBy("n_values", "run", "chunk_id")
         .limit(max_chunks)
-        .collect()
     )
-    if len(cand) < 2:
+    n_cand = cand.num_rows
+    if n_cand < 2:
         return no_op
-    cand_keys = spark.createDataFrame(
-        [(r["run"], r["partition_id"], r["chunk_id"]) for r in cand],
-        "run string, partition_id int, chunk_id int",
-    )
-    enc_subset = _encoded_df(spark, view).join(
-        F.broadcast(cand_keys), ["run", "partition_id", "chunk_id"],
-        "left_semi",
-    )
     # materialize once: planning and encoding would otherwise each re-run
-    # the decode of every candidate chunk
-    rows = _decode(enc_subset, spec=spec,
-                   n_chunks=len(cand)).localCheckpoint()
+    # the decode of every candidate chunk. Rows move as stored: pending
+    # equality deletes stay merge-on-read until purge_deletes
+    rows = _decode_view(spark, dataclasses.replace(view, deletes=frozenset()),
+                        None, spec, sel).localCheckpoint()
     plan = layout.plan_chunks(rows, target_tokens, spec=spec)
-    if plan.n_chunks >= len(cand):
+    if plan.n_chunks >= n_cand:
         # rewrite would not shrink the layout (e.g. singleton small
         # chunks in distinct source partitions): guarantee monotone
         # progress / idempotence by writing nothing
         return no_op
     run_id, snap = _commit_rewrite(
-        spark, output_dir, rows, plan, cand_keys, spec, "rewrite",
-        n_retired=len(cand), command="compact")
+        spark, output_dir, rows, plan, spark.createDataFrame(cand), spec,
+        "rewrite", n_retired=n_cand, command="compact")
     summary = dict(
         snapshot=snap,
-        n_compacted=len(cand),
+        n_compacted=n_cand,
         n_new_chunks=plan.n_chunks,
-        n_retired=len(cand),
+        n_retired=n_cand,
         run=run_id,
         wall_s=time.perf_counter() - t_start,
     )
@@ -2594,7 +2649,8 @@ def _manifest_key_num(col: str, spec: TableSpec):
 
 def _chunk_stat_prune(enc: DataFrame, chunks,
                       spec: TableSpec = SEQUENCES) -> DataFrame:
-    """Prune encoded chunks by manifest min/max key before decode.
+    """Prune chunk rows (manifest or encoded: both carry min_doc_id /
+    max_doc_id) by min/max key before decode.
 
     The reference prunes at the file level via its chunk->filename key
     ranges (crates/freeze/src/types/chunks/chunk_ops.rs); here the same
@@ -2918,6 +2974,36 @@ def _filter_predicate(filters, spec: TableSpec):
     return pred
 
 
+def _prune_chunks(spark: SparkSession, view: readview.ReadView,
+                  man: DataFrame, key_chunks, filters, spec: TableSpec
+                  ) -> dict[str, tuple[int, bytes]]:
+    """The chunks a keyed or filtered read must decode, as ``keep``
+    bitmaps for :func:`_decode_view`: the view's ok manifest rows pruned
+    by key range (:func:`_chunk_stat_prune`), by the per-chunk key blooms
+    for point lookups, and by zone maps (:func:`_zone_map_prune`), then
+    collected once. Metadata only: no payload byte is read."""
+    chunks = man.filter((F.col("status") == "ok")
+                        & (F.col("column") == spec.key))
+    if key_chunks is not None:
+        chunks = _chunk_stat_prune(chunks, key_chunks, spec)
+        # point lookups: the hash layout defeats range pruning (every
+        # chunk's key range spans the space), so refine with the
+        # per-chunk key blooms
+        nums = _point_numbers(key_chunks)
+        strs = None if nums is None else _key_str_forms(nums, spec)
+        bk = (None if strs is None else _bloom_chunk_keys(
+            read_bloom_stats(spark, view.output_dir), strs, spec))
+        if bk is not None:
+            chunks = chunks.join(F.broadcast(bk),
+                                 ["run", "partition_id", "chunk_id"],
+                                 "left_semi")
+    if filters:
+        chunks = _zone_map_prune(
+            chunks, filters, spec, man=man,
+            bloom_src=read_bloom_stats(spark, view.output_dir))
+    return _selection(chunks)[1]
+
+
 def collect(
     spark: SparkSession,
     source: str | DataFrame,
@@ -2937,16 +3023,19 @@ def collect(
     _collect.py:53-143 — collect validates 1 datatype x 1 partition and
     returns the DataFrame without writing). ``source`` is either a
     sequences parquet path or an encoded output dir (detected by its
-    manifest), in which case the projection is pushed into the decode so
-    unwanted columns' payloads are never shuffled. Projection follows
-    the reference's include/exclude/columns algebra (schema.py).
+    manifest). An encoded dir decodes through the file scan of its read
+    view (:func:`_decode_view`): payloads are not shuffled at all, and
+    the projection reaches the scan, so unwanted columns' payloads are
+    never read off disk. Projection follows the reference's
+    include/exclude/columns algebra (schema.py).
 
     ``keys`` accepts the reference's block-range grammar over the
     numeric part of doc_id (ranges.py — ``a:b``, ``a:+n``, ``a:b:stride``,
     ``a:b/n``, K/M/B suffixes, 'latest'): on a parquet source the range
     envelope is emitted against the raw string column so it reaches the
     scan as a pushed filter; on an encoded source whole chunks are
-    pruned via manifest min/max before any payload is decoded.
+    pruned via manifest min/max (and the key blooms, for point lookups)
+    before any payload is read (:func:`_prune_chunks`).
 
     ``filters`` is a list of ``(column, op, value)`` triples (ops: =,
     <, <=, >, >=, between) over scalar columns, AND-combined. On a raw
@@ -2986,15 +3075,8 @@ def collect(
         df = source
         df = (df.filter(residual) if residual is not None else df).select(*used)
     elif view is not None:
-        if (keys is None and filters is None
-                and (spec.list_column is None or spec.list_column in used)):
-            # shuffle-free read: the payload column dominates the bytes,
-            # so when it is requested the file-granular decode wins; a
-            # payload-pruned projection keeps the relational path where
-            # the column filter drops those bytes before the exchange
-            df = _decode_view(spark, view, used, spec)
-        else:
-            enc = _encoded_df(spark, view)
+        keep = None
+        if keys is not None or filters:
             man = _manifest_df(spark, view)
             if keys is not None:
                 key_chunks = _parse_keys(
@@ -3003,38 +3085,17 @@ def collect(
                         F.max(_manifest_key_num("max_doc_id", spec))
                     ).first()[0],
                 )
-                enc = _chunk_stat_prune(enc, key_chunks, spec)
-                # point lookups: the hash layout defeats range pruning
-                # (every chunk's key range spans the space), so refine
-                # with the per-chunk key blooms — metadata only
-                nums = _point_numbers(key_chunks)
-                strs = None if nums is None else _key_str_forms(nums, spec)
-                bk = (None if strs is None
-                      else _bloom_chunk_keys(
-                          read_bloom_stats(spark, source), strs, spec))
-                if bk is not None:
-                    enc = enc.join(F.broadcast(bk),
-                                   ["run", "partition_id", "chunk_id"],
-                                   "left_semi")
-            if filters:
-                enc = _zone_map_prune(
-                    enc, filters, spec, man=man,
-                    bloom_src=read_bloom_stats(spark, source))
-            extra = [] if key_chunks is None or spec.key in used else [spec.key]
-            extra += [n for n, _, _ in (filters or ())
-                      if n not in used and n not in extra]
-            if view.deletes and spec.key not in used + extra:
-                extra.append(spec.key)
-            df = decode(enc, columns=[*extra, *used] if extra else used,
-                        spec=spec)
-            if key_chunks is not None:
-                df = df.filter(
-                    ranges.key_predicate(key_chunks, _key_expr(spec)))
-            if residual is not None:
-                df = df.filter(residual)
-            df = _apply_deletes(spark, df, view, spec)
-            if key_chunks is not None or extra:
-                df = df.select(*used)
+            keep = ({} if man is None else
+                    _prune_chunks(spark, view, man, key_chunks, filters, spec))
+        extra = [] if key_chunks is None or spec.key in used else [spec.key]
+        extra += [n for n, _, _ in (filters or ())
+                  if n not in used and n not in extra]
+        df = _decode_view(spark, view, [*extra, *used], spec, keep)
+        if key_chunks is not None:
+            df = df.filter(ranges.key_predicate(key_chunks, _key_expr(spec)))
+        if residual is not None:
+            df = df.filter(residual)
+        df = df.select(*used)
     else:
         raw = spark.read.parquet(source)
         if keys is not None:
@@ -3220,11 +3281,11 @@ def pack(
         b.groupBy("pid").agg(F.sum("w").alias("tot")).collect(),
         key=lambda r: r["pid"],
     )
-    prefix, run = [], 0
-    for r in totals:
-        prefix.append((int(r["pid"]), run))
-        run += int(r["tot"])
-    pre_df = spark.createDataFrame(prefix, "pid int, offset long")
+    tot = np.array([int(r["tot"]) for r in totals], dtype=np.int64)
+    pre_df = spark.createDataFrame(pa.table({  # arrow: no Python stage
+        "pid": pa.array([int(r["pid"]) for r in totals], pa.int32()),
+        "offset": pa.array(np.cumsum(tot) - tot, pa.int64()),
+    }))
     g = (
         loc.join(F.broadcast(pre_df), "pid")
         .withColumn("start", F.col("offset") + F.col("local_start"))

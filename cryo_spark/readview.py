@@ -71,9 +71,17 @@ def _pack(cids: np.ndarray) -> tuple[int, bytes]:
     return base, b.tobytes()
 
 
-def dropped(drop: tuple[int, bytes], chunk_ids: np.ndarray) -> np.ndarray:
-    """Bool mask: which ``chunk_ids`` the packed ``(base, bitmap)`` retires."""
-    base, bits = drop
+def bitmaps(t, key: str = "run") -> dict[str, tuple[int, bytes]]:
+    """One packed chunk-id bitmap per ``key`` value of the arrow table
+    ``t`` (columns ``key`` and ``chunk_id``): the form of
+    ``ReadView.drops`` and of a decode's chunk selection."""
+    return {r: _pack(c) for r, c in _ids_by(t, key).items()}
+
+
+def in_bitmap(bitmap: tuple[int, bytes],
+              chunk_ids: np.ndarray) -> np.ndarray:
+    """Bool mask: which ``chunk_ids`` the packed ``(base, bitmap)`` holds."""
+    base, bits = bitmap
     b = np.frombuffer(bits, dtype=np.uint8)
     i = np.asarray(chunk_ids, dtype=np.int64) - base
     inside = (i >= 0) & (i < 8 * len(b))
@@ -81,6 +89,13 @@ def dropped(drop: tuple[int, bytes], chunk_ids: np.ndarray) -> np.ndarray:
     j = i[inside]
     out[inside] = (b[j >> 3] >> (j & 7)) & 1 == 1
     return out
+
+
+def bitmap_ids(bitmap: tuple[int, bytes]) -> np.ndarray:
+    """The chunk ids a packed ``(base, bitmap)`` holds, ascending."""
+    base, bits = bitmap
+    return base + np.flatnonzero(np.unpackbits(
+        np.frombuffer(bits, dtype=np.uint8), bitorder="little"))
 
 
 def path_values(path: str) -> dict[str, str]:
@@ -179,8 +194,7 @@ def _drop_bitmaps(store: _Store,
                   writers: set[str]) -> dict[str, tuple[int, bytes]]:
     """Per-target-run retired chunk bitmaps from the writers' tombstones."""
     t = store.read("tombstones", writers, ["target_run", "chunk_id"])
-    return {} if t is None else {
-        r: _pack(c) for r, c in _ids_by(t, "target_run").items()}
+    return {} if t is None else bitmaps(t, "target_run")
 
 
 def _ids_by(t, key: str) -> dict[str, np.ndarray]:
@@ -204,7 +218,7 @@ def _runs_with_live_chunks(store: _Store, view: ReadView, runs: set[str],
     return {r for t in parts if t is not None
             for r, c in _ids_by(t.filter(pc.equal(t.column("status"), "ok")),
                                 "run").items()
-            if r not in drops or not dropped(drops[r], c).all()}
+            if r not in drops or not in_bitmap(drops[r], c).all()}
 
 
 class _Store:

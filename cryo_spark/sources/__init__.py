@@ -5,6 +5,7 @@ from .parquet_arrow import (
     pack_files,
     pack_tasks,
     plan_scan_tasks,
+    run_each,
     scan_meta,
     select_row_groups,
     supports,
@@ -17,6 +18,7 @@ __all__ = [
     "pack_files",
     "pack_tasks",
     "plan_scan_tasks",
+    "run_each",
     "scan_meta",
     "select_row_groups",
     "supports",

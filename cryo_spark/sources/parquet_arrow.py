@@ -10,11 +10,11 @@ whole map stage).
 
 Shape: the driver plans (file, row-group range) tasks from parquet
 footers — the same planning shape as an Iceberg/Delta scan (file +
-split metadata from a manifest) — and a round-robin repartition spreads
-them; each task reads its row groups with pyarrow (column pruning
-pushed into the reader) and streams batches into the caller's kernel.
-Spark still owns distribution, scheduling, retries and everything
-downstream of the scan. The reference's analog is its keyed fetch layer
+split metadata from a manifest), and :func:`run_each` runs each planned
+task as one Spark task; it reads its row groups with pyarrow (column
+pruning pushed into the reader) and streams batches into the caller's
+kernel. Spark still owns distribution, scheduling, retries and
+everything downstream of the scan. The reference's analog is its keyed fetch layer
 (/root/reference/crates/freeze/src/types/sources.rs:394-1124) where the
 engine, not a generic scan node, owns data acquisition.
 
@@ -229,41 +229,56 @@ def _runs(rgs: list[int]) -> list[tuple[int, int]]:
     return runs
 
 
+def run_each(spark: SparkSession, tasks: list, fn, out_ddl: str
+             ) -> DataFrame:
+    """``fn(task)`` (an iterator of arrow batches) once per task, one
+    Spark task apiece, in ONE stage: partition ``i`` of
+    ``spark.range(0, n, 1, n)`` runs ``fn(tasks[i])``.
+
+    The task list rides in the kernel closure (PySpark broadcasts a
+    pickled command over 1 MB), so dispatch needs no Python-built
+    DataFrame and no exchange, and no two tasks share a partition — a
+    round-robin ``repartition`` of a task-list DataFrame would cost a
+    Python stage plus a shuffle, and its placement stacks tasks on one
+    slot."""
+    tasks = list(tasks)
+
+    def kernel(batches):
+        for b in batches:
+            for i in b.column(0).to_pylist():
+                yield from fn(tasks[i])
+
+    return amap(spark.range(0, len(tasks), 1, max(1, len(tasks))), kernel,
+                out_ddl)
+
+
 def _run_tasks(spark, tasks, columns, kernel, out_ddl) -> DataFrame:
     """Run ``kernel(path, batches)`` over each task's file segments."""
-    tdf = spark.createDataFrame(
-        [(list(p), list(s), list(c)) for p, s, c in tasks],
-        "paths array<string>, rg_starts array<int>, rg_counts array<int>",
-    ).repartition(max(1, len(tasks)))  # no-column repartition = round-robin
 
-    def read_tasks(task_batches):
-        for tb in task_batches:
-            for row in range(tb.num_rows):
-                paths = tb.column("paths")[row].as_py()
-                starts = tb.column("rg_starts")[row].as_py()
-                counts = tb.column("rg_counts")[row].as_py()
-                # consecutive segments of the same path read as ONE
-                # kernel invocation: a row-group SELECTION (possibly
-                # non-contiguous) must not split a file's chunks across
-                # invocations — the file-granular decode contract
-                i = 0
-                while i < len(paths):
-                    path = paths[i]
-                    rgs: list[int] = []
-                    while i < len(paths) and paths[i] == path:
-                        rgs.extend(range(starts[i], starts[i] + counts[i]))
-                        i += 1
-                    pf = pq.ParquetFile(path)
-                    # a partition_by layout keeps some columns only in
-                    # the directory path: read the ones the file holds
-                    names = set(pf.schema_arrow.names)
-                    t = pf.read_row_groups(
-                        rgs, columns=[c for c in columns if c in names],
-                        use_threads=False,
-                    )
-                    yield from kernel(path, t.to_batches())
+    def read_task(task):
+        paths, starts, counts = task
+        # consecutive segments of the same path read as ONE kernel
+        # invocation: a row-group SELECTION (possibly non-contiguous)
+        # must not split a file's chunks across invocations — the
+        # file-granular decode contract
+        i = 0
+        while i < len(paths):
+            path = paths[i]
+            rgs: list[int] = []
+            while i < len(paths) and paths[i] == path:
+                rgs.extend(range(starts[i], starts[i] + counts[i]))
+                i += 1
+            pf = pq.ParquetFile(path)
+            # a partition_by layout keeps some columns only in the
+            # directory path: read the ones the file holds
+            names = set(pf.schema_arrow.names)
+            t = pf.read_row_groups(
+                rgs, columns=[c for c in columns if c in names],
+                use_threads=False,
+            )
+            yield from kernel(path, t.to_batches())
 
-    return amap(tdf, read_tasks, out_ddl)
+    return run_each(spark, tasks, read_task, out_ddl)
 
 
 def pack_files(sizes: list[int], n_tasks: int) -> list[list[int]]:

@@ -114,12 +114,14 @@ def test_no_payload_exchange_in_plan(spark, frozen_pair):
     j = colocated.join_frozen(spark, out_a, out_b, columns_a=["n_tok"],
                               columns_b=["score"], require_colocated=True)
     plan_str = j._jdf.queryExecution().toString()
-    # the single allowed exchange is the round-robin of task-descriptor
-    # rows (paths_a/paths_b); no SortMergeJoin / hash join of payloads
+    # the file groups ride in the task closure: no exchange at all, and
+    # no SortMergeJoin / hash join of payloads
     assert "SortMergeJoin" not in plan_str
     assert "BroadcastHashJoin" not in plan_str
-    assert plan_str.count("Exchange") <= 1
-    assert "paths_a" in plan_str
+    assert "Exchange" not in plan_str
+    # one kernel over both sides (the fallback decodes each side apart)
+    physical = j._jdf.queryExecution().executedPlan().toString()
+    assert physical.count("MapInArrow") == 1
 
 
 def test_duplicate_keys_multiply_like_sql(spark, frozen_pair, tmp_path):

@@ -14,7 +14,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from cryo_spark import engine
+from cryo_spark import engine, snapshots
 
 TARGET = 200_000
 
@@ -47,13 +47,14 @@ def test_matches_relational(spark, frozen_dir):
 
 
 def test_no_payload_exchange_in_plan(spark, frozen_dir):
-    """The only exchange in the fast plan is the tiny task-list
-    round-robin; the relational plan repartitions the payload rows."""
+    """The fast plan has no exchange at all; the relational plan
+    repartitions the payload rows."""
     fast_plan = engine.decode_frozen(spark, frozen_dir)._jdf.queryExecution() \
         .executedPlan().toString()
     # the payload-bearing relational plan scans parquet then exchanges;
-    # the fast plan's scan is a local task-list relation
+    # the fast plan's tasks come from a range of task ids
     assert "FileScan parquet" not in fast_plan
+    assert "Exchange" not in fast_plan
     rel_plan = engine.decode(engine.read_encoded(spark, frozen_dir)) \
         ._jdf.queryExecution().executedPlan().toString()
     assert "FileScan parquet" in rel_plan
@@ -163,3 +164,102 @@ def test_empty_output_dir(spark, tmp_path):
     dec = engine.decode_frozen(spark, out)
     assert dec.count() == 0
     assert dec.columns == ["doc_id", "tokens", "n_tok", "source"]
+
+
+# Keyed reads and compaction select chunks on the manifest and decode
+# them through the same file scan (engine._decode_view with ``keep``);
+# every result must equal the relational decode under the same predicate.
+
+def _key():
+    return F.substring("doc_id", len("doc-") + 1, 12).cast("long")
+
+
+def _assert_keyed_reads(spark, out, ref, **kw):
+    """collect(keys=) over a range and over points (the key-bloom path)
+    and collect(filters=) against the same predicates over ``ref``."""
+    for got, want in (
+        (engine.collect(spark, out, keys="1000:+2500", **kw),
+         ref.filter(_key().between(1000, 3499))),
+        (engine.collect(spark, out, keys="17 4242 9001", **kw),
+         ref.filter(_key().isin(17, 4242, 9001))),
+        (engine.collect(spark, out, filters=[("n_tok", ">", 400)], **kw),
+         ref.filter(F.col("n_tok") > 400)),
+    ):
+        assert got.columns == ref.columns and want.count() > 0
+        _assert_same(spark, got, want)
+
+
+def _compact(spark, out):
+    from cryo_spark import compact
+
+    assert compact(spark, out, target_tokens=4 * TARGET, min_tokens=1 << 30,
+                   max_chunks=8)["n_retired"] == 8
+
+
+def test_layout_keyed_reads_match_relational(spark, layout_dir):
+    _assert_keyed_reads(spark, layout_dir, engine.decode(
+        engine.read_encoded(spark, layout_dir)))
+
+
+def test_layout_compact_matches_relational(spark, layout_dir, tmp_path):
+    """compact decodes its candidates through the file scan (the
+    relational fallback, with the kept keys semi-joined, for a
+    chunk-splitting layout) and keeps every row."""
+    work = str(tmp_path / "work")
+    shutil.copytree(layout_dir, work)
+    _compact(spark, work)
+    before = engine.decode(engine.read_encoded(spark, layout_dir))
+    _assert_same(spark, engine.decode_frozen(spark, work), before)
+    _assert_same(spark, engine.decode(engine.read_encoded(spark, work)),
+                 before)
+
+
+def test_keyed_reads_apply_deletes(spark, frozen_dir, tmp_path):
+    """Equality deletes hide their rows from keyed reads, and a compaction
+    moves the stored rows as they are: the deletes stay merge-on-read."""
+    work = str(tmp_path / "del")
+    shutil.copytree(frozen_dir, work)
+    assert engine.delete_where(spark, work, keys="1500:+200")["n_deleted"] \
+        == 200
+    stored = engine.decode(engine.read_encoded(spark, work))
+    ref = stored.filter(~_key().between(1500, 1699))
+    _assert_keyed_reads(spark, work, ref)
+    _compact(spark, work)
+    _assert_keyed_reads(spark, work, ref)
+    _assert_same(spark, engine.decode(engine.read_encoded(spark, work)),
+                 stored)
+
+
+def test_keyed_reads_as_of(spark, frozen_dir, tmp_path):
+    """A keyed read at an older snapshot sees that snapshot's chunks:
+    before the compaction and before the delete."""
+    work = str(tmp_path / "asof")
+    shutil.copytree(frozen_dir, work)
+    head = snapshots.log(work)[-1]["seq"]
+    _compact(spark, work)
+    engine.delete_where(spark, work, keys="1500:+200")
+    _assert_keyed_reads(spark, work, engine.decode(
+        engine.read_encoded(spark, work, as_of=head)), as_of=head)
+
+
+def test_keyed_reads_uri_output(spark, sequences_path, tmp_path):
+    """A ``file://`` output decodes relationally, with the kept keys
+    semi-joined, before and after a compaction."""
+    out = f"file://{tmp_path}/uri"
+    engine.freeze(spark, sequences_path, out, target_tokens=TARGET)
+    ref = engine.decode(engine.read_encoded(spark, out))
+    _assert_keyed_reads(spark, out, ref)
+    _compact(spark, out)
+    _assert_keyed_reads(spark, out, ref)
+
+
+@pytest.mark.parametrize("read", [dict(keys="1000:+2500"),
+                                  dict(keys="17 4242 9001"),
+                                  dict(filters=[("n_tok", ">", 400)])])
+def test_keyed_read_no_payload_exchange_in_plan(spark, frozen_dir, read):
+    """A keyed or filtered read of a local output scans files in the
+    Python workers: no parquet scan and no exchange carries payload."""
+    plan = engine.collect(spark, frozen_dir, **read)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert "payload" not in plan
+    assert "FileScan parquet" not in plan

@@ -15,7 +15,7 @@ import pytest
 
 from cryo_spark import collect, compact, freeze, write_sequences
 from cryo_spark.engine import _n_parts, load_output_plan, load_output_spec
-from cryo_spark.sources import pack_files
+from cryo_spark.sources import arrow_scan_files, pack_files
 from cryo_spark.tablespec import SEQUENCES
 
 
@@ -89,6 +89,56 @@ def test_stage_task_counts_follow_chunk_count(spark, tmp_path):
     assert tasks, "no stages recorded for the job group"
     bound = max(par, s["n_chunks"])
     assert s["n_chunks"] < 16 and max(tasks) <= bound, (s["n_chunks"], tasks)
+
+
+class _Pinned:
+    """The session with ``defaultParallelism`` pinned: file packing
+    follows it, everything else is the real session."""
+
+    def __init__(self, spark, par: int):
+        self._spark = spark
+        self.sparkContext = SimpleNamespace(defaultParallelism=par)
+
+    def __getattr__(self, name):
+        return getattr(self._spark, name)
+
+
+@pytest.mark.parametrize("n_files", [2, 4])
+def test_arrow_scan_files_one_task_per_partition(spark, tmp_path, n_files):
+    """At defaultParallelism 2 the file scan runs as ONE stage of one
+    task per partition: no task-list stage, no exchange, no two tasks
+    sharing a partition."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    files = []
+    for i in range(n_files):
+        files.append(str(tmp_path / f"f{i}.parquet"))
+        pq.write_table(pa.table({"x": list(range(100))}), files[-1])
+
+    def kernel(path, batches):
+        from pyspark import TaskContext
+
+        assert sum(b.num_rows for b in batches) == 100
+        yield pa.RecordBatch.from_pydict(
+            {"path": [path], "part": [TaskContext.get().partitionId()]})
+
+    sc = spark.sparkContext
+    group = f"test_one_task_per_partition_{n_files}"
+    sc.setJobGroup(group, "file scan dispatch")
+    try:
+        rows = arrow_scan_files(_Pinned(spark, 2), files, ["x"], kernel,
+                                "path string, part int").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sorted(r.path for r in rows) == files
+    by_part: dict[int, list[str]] = {}
+    for r in rows:
+        by_part.setdefault(r.part, []).append(r.path)
+    assert sorted(by_part) == [0, 1]  # 2 tasks: 2 files 1:1, 4 files 2:2
+    assert sorted(len(v) for v in by_part.values()) == [n_files // 2] * 2
+    assert _stage_tasks(spark, group) == [2]
 
 
 def test_side_files_stay_in_uri_output(spark, tmp_path, monkeypatch):

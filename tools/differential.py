@@ -19,7 +19,11 @@ parquet-level equality of the outputs read back WITHOUT Spark
 - every logical row of the encoded table: chunk ids, codec ids, sizes,
   zone-map stats, and sha256 of the payload and bloom blobs
   (run id and wall_ms are per-run provenance, excluded);
-- the manifest table under the same rule.
+- the manifest table under the same rule;
+- two reads of the output: a ``collect(keys=...)`` and a
+  ``collect(filters=...)``, each sorted by key. The file scan packs
+  files into tasks by the core count, so the reads exercise the same
+  claim: what a read returns depends only on the data.
 
 The claim is exercised only if the two sides really partition
 differently, so every case prints each side's encode-exchange
@@ -67,6 +71,15 @@ CONFIG_B = dict(master="local[8]", shuffle_partitions=16,
 
 # columns that legitimately differ between two runs of the same command
 _PROVENANCE = {"run", "wall_ms"}
+
+# the read comparison: one key range, and one filter per table family
+_READ_KEYS = "100:+900"
+_READ_FILTERS = {
+    SEQUENCES.name: ("n_tok", ">", 200),
+    DOCUMENTS.name: ("n_chars", ">", 60),
+    EVENTS.name: ("value", "<", 25.0),
+    EMBEDDINGS.name: ("label", "<", 5),
+}
 
 
 def _write_documents(path: str, n: int = 2_000) -> None:
@@ -181,10 +194,18 @@ def matrix(paths: dict) -> list[tuple[str, str, dict]]:
     ]
 
 
+def _reads(spark, out: str, spec) -> dict[str, pa.Table]:
+    """A keyed and a filtered ``collect`` of ``out``, sorted by key."""
+    reads = {"keys": dict(keys=_READ_KEYS),
+             "filters": dict(filters=[_READ_FILTERS[spec.name]])}
+    return {name: engine.collect(spark, out, spec=spec, **kw).toArrow()
+            .sort_by(spec.key) for name, kw in reads.items()}
+
+
 def run_side(side: str, cfg: dict, cases,
-             paths) -> dict[str, tuple[str, int]]:
+             paths) -> dict[str, tuple[str, int, dict[str, pa.Table]]]:
     """Freeze every case under one Spark config; returns case ->
-    (out dir, encode-exchange partition count)."""
+    (out dir, encode-exchange partition count, reads)."""
     spark = get_spark(app=f"differential_{side}", **cfg)
     outs = {}
     try:
@@ -193,7 +214,8 @@ def run_side(side: str, cfg: dict, cases,
             shutil.rmtree(out, ignore_errors=True)
             s = engine.freeze(spark, inp, out, **kw)
             assert s["n_failed"] == 0, (name, side, s)
-            outs[name] = (out, engine._n_parts(spark, s["n_chunks"]))
+            outs[name] = (out, engine._n_parts(spark, s["n_chunks"]),
+                          _reads(spark, out, kw["spec"]))
     finally:
         spark.stop()
     return outs
@@ -225,6 +247,20 @@ def _table_fingerprint(root: str, sub: str):
             f"SELECT {', '.join(cols)} FROM rel").fetchall())
     )
     return schema, rows
+
+
+def compare_reads(reads_a: dict[str, pa.Table],
+                  reads_b: dict[str, pa.Table]) -> list[str]:
+    """Differences between two sides' reads ([] when identical)."""
+    problems = []
+    for name, ta in reads_a.items():
+        tb = reads_b[name]
+        if ta.num_rows == 0:
+            problems.append(f"read {name}: no rows on side A")
+        elif not ta.equals(tb):
+            problems.append(f"read {name}: rows differ "
+                            f"({ta.num_rows} vs {tb.num_rows} rows)")
+    return problems
 
 
 def compare_case(out_a: str, out_b: str) -> list[str]:
@@ -260,9 +296,11 @@ def main(quick: bool = False) -> int:
     failed = []
     n_differ = 0
     for name, _, _ in cases:
-        (out_a, parts_a), (out_b, parts_b) = outs_a[name], outs_b[name]
+        (out_a, parts_a, reads_a) = outs_a[name]
+        (out_b, parts_b, reads_b) = outs_b[name]
         n_differ += parts_a != parts_b
-        problems = compare_case(out_a, out_b)
+        problems = (compare_case(out_a, out_b)
+                    + compare_reads(reads_a, reads_b))
         status = "OK" if not problems else "DIFF"
         print(f"{status} {name} (encode partitions A={parts_a} B={parts_b})")
         for p in problems:
