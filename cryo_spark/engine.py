@@ -103,6 +103,14 @@ _DDL_TYPES = {pa.int32(): "int", pa.int64(): "long", pa.string(): "string",
 ENCODED_DDL = ", ".join(f"{f.name} {_DDL_TYPES[f.type]}"
                         for f in _ENCODED_PA_SCHEMA)
 MANIFEST_COLUMNS = _ENCODED_PA_SCHEMA.names[:-1]  # all but the payload
+# Declared read schemas: a read given one starts no schema-inference job,
+# and ``run`` parses verbatim from its ``run=`` dir name (inference would
+# type a numeric-looking legacy run id as a number).
+ENCODED_RUN_DDL = ENCODED_DDL + ", run string"
+MANIFEST_DDL = ", ".join(f"{f.name} {_DDL_TYPES[f.type]}"
+                         for f in _ENCODED_PA_SCHEMA
+                         if f.name in MANIFEST_COLUMNS) \
+    + ", plan_id string, run string"
 
 
 def _frame_validity(payload: bytes, arr) -> bytes:
@@ -959,10 +967,11 @@ def consolidate_manifests(spark: SparkSession, output_dir: str) -> dict:
     if not absorb:
         return dict(consolidated=False, reason="nothing to consolidate",
                     n_stale_cleaned=len(stale))
-    df = _read_run_partitioned(spark, man_base).filter(
+    df = _read_run_partitioned(spark, man_base, MANIFEST_DDL).filter(
         F.col("run").isin(sorted(absorb)))
     if view.manifest_gen is not None:
-        df = spark.read.parquet(view.manifest_gen).unionByName(df)
+        df = spark.read.schema(MANIFEST_DDL).parquet(view.manifest_gen) \
+            .unionByName(df)
     n_rows = df.count()
     # bounded file count is the whole point: ~1M manifest rows (a few
     # tens of MB) per output file, global sort by run so visibility
@@ -1126,8 +1135,9 @@ def _runs_encoded(spark: SparkSession, output_dir: str,
     keys = read_manifest(spark, output_dir, raw=True).filter(
         (F.col("status") == "ok") & F.col("run").isin(runs)
     ).select("run", "partition_id", "chunk_id").distinct()
-    return _read_run_partitioned(spark, _encoded_path(output_dir)).filter(
-        F.col("run").isin(runs)
+    return _read_run_partitioned(
+        spark, _encoded_path(output_dir), ENCODED_RUN_DDL
+    ).filter(F.col("run").isin(runs)
     ).join(F.broadcast(keys), ["run", "partition_id", "chunk_id"],
            "left_semi")
 
@@ -1179,7 +1189,10 @@ def read_changes(
         elif k == "delete":
             del_entries.append(e)
         elif k == "rewrite":
-            if e.get("command") == "upsert" or e.get("plan_id"):
+            # every rewrite entry carries a plan_id; a compaction's also
+            # names its command
+            if e.get("command") != "compact" and (
+                    e.get("command") == "upsert" or e.get("plan_id")):
                 what = "upsert" if e.get("command") == "upsert" else "overwrite"
                 raise ValueError(
                     f"changelog ({from_seq}, {to_seq}] crosses a "
@@ -1263,7 +1276,7 @@ def verify_output(spark: SparkSession, output_dir: str) -> dict:
     ok = man.filter(F.col("status") == "ok").select(*keys4)
     try:
         enc = _read_run_partitioned(
-            spark, _encoded_path(output_dir)).select(*keys4)
+            spark, _encoded_path(output_dir), ENCODED_RUN_DDL).select(*keys4)
     except Exception:
         enc = ok.limit(0)
     # missing payload is corruption only for chunks LIVE at the head: a
@@ -1565,8 +1578,7 @@ def upsert(
     n_updated = n_old - n_survive
     plan = layout.plan_chunks(merged, target_tokens, spec=spec)
     run_id, snap = _commit_rewrite(
-        spark, output_dir, merged, plan,
-        spark.createDataFrame(affected) if n_affected else None,
+        spark, output_dir, merged, plan, affected if n_affected else None,
         spec, "rewrite", n_retired=n_affected, command="upsert")
     summary = dict(
         snapshot=snap, run=run_id,
@@ -1667,7 +1679,6 @@ def purge_deletes(
     # the rows as stored: the purged deletes are anti-joined below
     rows = _decode_view(spark, dataclasses.replace(view, deletes=frozenset()),
                         None, spec, sel)
-    retired = spark.createDataFrame(affected)
     keep = rows.join(dk, spec.key, "left_anti").localCheckpoint()
     n_before = rows.count()
     n_keep = keep.count()
@@ -1683,25 +1694,25 @@ def purge_deletes(
         # differential sweep (a whole per-source chunk deleted by a
         # source-equality delete).
         run_id = _new_run_id()
-        retired.withColumnRenamed("run", "target_run").coalesce(1) \
-            .write.mode("error") \
-            .parquet(f"{_tombstones_path(output_dir)}/run={run_id}")
+        _write_tombstones(output_dir, run_id, affected)
         man.select(*MANIFEST_COLUMNS, "plan_id").limit(0) \
             .write.mode("error") \
             .parquet(f"{_manifest_path(output_dir)}/run={run_id}")
         # n_new_chunks=0 goes in the LOG entry too: verify_output's
         # empty-manifest exemption is gated on it (only a recorded
         # zero-chunk rewrite may pass the missing_runs check via a bare
-        # run dir; a lost append/rewrite manifest must stay corrupt)
+        # run dir; a lost append/rewrite manifest must stay corrupt).
+        # The empty plan_id says its manifest holds no plan's rows
+        # (freeze's resume gate, readview.ReadView.plan_ids)
         snap = snapshots.commit(output_dir, run_id, "purge",
-                                purged_deletes=purged,
+                                purged_deletes=purged, plan_id="",
                                 n_retired=n_affected, n_new_chunks=0)
         return dict(snapshot=snap, run=run_id, n_rewritten=n_affected,
                     n_new_chunks=0, n_purged_rows=n_before,
                     wall_s=time.perf_counter() - t_start)
     plan = layout.plan_chunks(keep, target_tokens, spec=spec)
     run_id, snap = _commit_rewrite(
-        spark, output_dir, keep, plan, retired, spec, "purge",
+        spark, output_dir, keep, plan, affected, spec, "purge",
         purged_deletes=purged, n_retired=n_affected)
     summary = dict(
         snapshot=snap, run=run_id, n_rewritten=n_affected,
@@ -1716,25 +1727,44 @@ def purge_deletes(
 
 
 def _commit_rewrite(spark: SparkSession, output_dir: str, rows: DataFrame,
-                    plan: layout.ChunkPlan, retired: DataFrame | None,
+                    plan: layout.ChunkPlan, retired: pa.Table | None,
                     spec: TableSpec, kind: str, **log) -> tuple[str, int]:
     """Commit one rewrite run: ``rows`` encoded under ``plan``, the
     ``retired`` (run, partition_id, chunk_id) keys tombstoned. Commit
     order — encoded files, tombstones, manifest, then the snapshot-log
     entry that is the commit: death anywhere before it leaves the whole
-    run invisible. Returns (run id, snapshot seq)."""
+    run invisible. The entry carries the plan's ``plan_id``, as the
+    manifest rows do (freeze's resume gate reads it from the log).
+    Returns (run id, snapshot seq)."""
     run_id = _new_run_id()
+    plan_fp = _plan_fingerprint(plan)
     enc_dir = f"{_encoded_path(output_dir)}/run={run_id}"
     _enc_writer(_grouped_encode(rows, plan, spec=spec)) \
         .mode("error").parquet(enc_dir)
     if retired is not None:
-        retired.withColumnRenamed("run", "target_run").coalesce(1) \
-            .write.mode("error") \
-            .parquet(f"{_tombstones_path(output_dir)}/run={run_id}")
-    _manifest_rows(spark.read.parquet(enc_dir), _plan_fingerprint(plan)) \
+        _write_tombstones(output_dir, run_id, retired)
+    _manifest_rows(spark.read.schema(ENCODED_DDL).parquet(enc_dir), plan_fp) \
         .write.mode("error") \
         .parquet(f"{_manifest_path(output_dir)}/run={run_id}")
-    return run_id, snapshots.commit(output_dir, run_id, kind, **log)
+    return run_id, snapshots.commit(output_dir, run_id, kind,
+                                    plan_id=plan_fp, **log)
+
+
+def _write_tombstones(output_dir: str, run_id: str, keys: pa.Table) -> None:
+    """Write the (run, partition_id, chunk_id) ``keys`` run ``run_id``
+    retires as its one tombstone file, from the driver: no Spark job,
+    and the file lands whole (readview._Store.write_bytes renames a tmp
+    file into place), so a reader never sees a partial one."""
+    import io
+
+    import pyarrow.parquet as _pq
+
+    buf = io.BytesIO()
+    _pq.write_table(keys.select(["run", "partition_id", "chunk_id"])
+                    .rename_columns(["target_run", "partition_id",
+                                     "chunk_id"]), buf)
+    readview._Store(output_dir).write_bytes(
+        f"tombstones/run={run_id}/part-00000.parquet", buf.getvalue())
 
 
 def _new_run_id() -> str:
@@ -1752,9 +1782,14 @@ def _new_run_id() -> str:
     return "r" + uuid.uuid4().hex[:11]
 
 
-def _read_run_partitioned(spark: SparkSession, path: str,
+def _read_run_partitioned(spark: SparkSession, path: str, ddl: str,
                           paths: list[str] | None = None) -> DataFrame:
-    """Read a run=-partitioned layout with ``run`` guaranteed string.
+    """Read a run=-partitioned layout under its declared schema ``ddl``
+    (``ENCODED_RUN_DDL``, ``MANIFEST_DDL``): no schema-inference job,
+    and ``run`` is the dir-name string verbatim, a true partition column
+    whose filters prune directories. Inference would type numeric-looking
+    legacy run ids as numbers (value AND type), which the declared
+    ``run string`` rules out.
 
     ``paths`` restricts the read to those files/dirs under ``path`` (a
     read view's list: Spark then lists nothing else, and the ``run=``
@@ -1762,44 +1797,20 @@ def _read_run_partitioned(spark: SparkSession, path: str,
     ``k=v`` nestings (a ``partition_by`` freeze next to the flat run of
     a later compaction) are read one nesting at a time and unioned by
     name: Spark's partition discovery takes one nesting per read.
-
-    Belt to _new_run_id's suspenders: partition-value inference mangles
-    numeric-looking legacy run ids (value AND type). When inference
-    typed ``run`` as anything but string, re-read with an explicit
-    schema — the dir-name string then parses verbatim, and ``run``
-    stays a true partition column so filters on it still prune
-    directories (unlike recovering it from input_file_name, which
-    would forfeit partition pruning on every visibility filter).
     """
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    def read_one(ps: list[str] | None) -> DataFrame:
-        def read(reader):
-            if ps is None:
-                return reader.parquet(path)
-            return reader.option("basePath", path).parquet(*ps)
-
-        df = read(spark.read)
-        if "run" in df.columns and not isinstance(
-                df.schema["run"].dataType, StringType):
-            fields = [
-                StructField("run", StringType(), True) if f.name == "run"
-                else f for f in df.schema.fields
-            ]
-            df = read(spark.read.schema(StructType(fields)))
-        return df
-
+    reader = spark.read.schema(ddl)
     if paths is None:
-        return read_one(None)
+        return reader.parquet(path)
     nestings: dict[tuple[str, ...], list[str]] = {}
     for p in paths:
         keys = tuple(seg.partition("=")[0]
                      for seg in p[len(path):].split("/") if "=" in seg)
         nestings.setdefault(keys, []).append(p)
-    dfs = [read_one(ps) for ps in nestings.values()]
+    dfs = [reader.option("basePath", path).parquet(*ps)
+           for ps in nestings.values()]
     df = dfs[0]
     for other in dfs[1:]:
-        df = df.unionByName(other, allowMissingColumns=True)
+        df = df.unionByName(other)
     return df
 
 
@@ -1829,7 +1840,8 @@ def _manifest_df(spark: SparkSession, view: readview.ReadView,
     """The view's manifest rows: the consolidated generation (``run`` is
     an ordinary column there) plus the per-run dirs it has not absorbed
     (a dir the consolidate commit absorbed but did not yet delete must
-    not count twice)."""
+    not count twice), both read under ``MANIFEST_DDL``: building the
+    frame starts no job."""
     man_path = _manifest_path(view.output_dir)
     dirs = view.manifest_dirs - view.absorbed
     if not raw:
@@ -1840,14 +1852,16 @@ def _manifest_df(spark: SparkSession, view: readview.ReadView,
         # corruption — raise rather than silently dropping every
         # absorbed run's manifest
         try:
-            legs.append(spark.read.parquet(view.manifest_gen))
+            legs.append(spark.read.schema(MANIFEST_DDL)
+                        .parquet(view.manifest_gen))
         except Exception as e:
             raise ValueError(
                 f"manifest generation {view.manifest_gen!r} referenced by "
                 "the snapshot log is unreadable") from e
     if dirs:
         legs.append(_read_run_partitioned(
-            spark, man_path, [f"{man_path}/run={r}" for r in sorted(dirs)]))
+            spark, man_path, MANIFEST_DDL,
+            [f"{man_path}/run={r}" for r in sorted(dirs)]))
     if not legs:
         return None
     man = legs[0]
@@ -1880,8 +1894,9 @@ def _encoded_df(spark: SparkSession, view: readview.ReadView) -> DataFrame:
     if man is None or not files:
         # an empty-input freeze commits nothing: no encoded dir is a
         # valid (empty) output, not an error
-        return spark.createDataFrame([], ENCODED_DDL + ", run string")
-    enc = _read_run_partitioned(spark, _encoded_path(view.output_dir), files)
+        return spark.createDataFrame([], ENCODED_RUN_DDL)
+    enc = _read_run_partitioned(spark, _encoded_path(view.output_dir),
+                                ENCODED_RUN_DDL, files)
     return enc.join(F.broadcast(_live_chunks(spark, view, man)),
                     ["run", "partition_id", "chunk_id"], "left_semi")
 
@@ -1904,11 +1919,14 @@ def _live_chunks(spark: SparkSession, view: readview.ReadView,
 def _done_chunk_bitmap(man: DataFrame, n_chunks: int) -> np.ndarray:
     """Fold the manifest's committed chunk ids into a packed bitset.
 
-    The fold runs executor-side (mapInArrow, one blob per partition) and
-    the driver ORs blobs streamed via toLocalIterator — driver memory is
-    O(n_chunks/8) bytes regardless of manifest row count. At the
-    10^12-sequence target (~10^8 chunks) that is a 12 MB bitmap where a
-    Python set of (partition_id, chunk_id) tuples would be ~10 GB.
+    The fold runs executor-side (mapInArrow, one blob per partition, the
+    scan coalesced to one wave of tasks: :func:`_one_wave`) and
+    the driver collects the blobs in ONE job (toLocalIterator would
+    start a job per partition) and ORs them. Driver memory is the
+    O(n_chunks/8)-byte result plus the sum of the compressed blobs
+    (bounded below), never the manifest rows. At the 10^12-sequence
+    target (~10^8 chunks) that is a 12 MB bitmap where a Python set of
+    (partition_id, chunk_id) tuples would be ~10 GB.
 
     Blobs travel zlib-compressed: a partition's bitmap is mostly zeros
     (each chunk id is committed by exactly one partition), so total
@@ -1942,7 +1960,8 @@ def _done_chunk_bitmap(man: DataFrame, n_chunks: int) -> np.ndarray:
                 names=["bits"])
 
     out = np.zeros(nbytes, dtype=np.uint8)
-    for row in amap(man.select("chunk_id"), fold, "bits binary").toLocalIterator():
+    for row in amap(_one_wave(man.select("chunk_id")), fold,
+                    "bits binary").collect():
         out |= np.frombuffer(zlib.decompress(row["bits"]), dtype=np.uint8)
     return out
 
@@ -2008,6 +2027,21 @@ def freeze(
     ``partition_by`` nests the encoded files in one directory per value
     of the given encoded-table key columns (e.g. ``["partition_id"]``,
     one dir per source).
+
+    Resume (skip-existing) folds the done chunks of this plan from the
+    live manifest rows into a bitmap (:func:`_done_chunk_bitmap`). The
+    snapshot log gates that job: every writer stamps its plan_id into
+    its log entry, so unless a live run's entry names this plan (or
+    carries none: a run adopted from marker commits, a log-less output)
+    the bitmap is all zeros by construction and no job runs. A freeze
+    run with no failed chunk also stamps ``plan_done_chunks``, the count
+    of its plan's chunks holding manifest rows once it committed: while
+    the bitmap still counts that many, the plan is complete and a
+    re-freeze encodes nothing. Planned chunks that received no rows (a
+    salted span's) never get a manifest row, so without it every
+    re-freeze would count them missing and commit an empty run.
+    Metadata reads use declared schemas (``MANIFEST_DDL``,
+    ``ENCODED_DDL``), so none starts a schema-inference job.
 
     ``dry_run`` plans and reports without executing (cryo's --dry-run,
     /root/reference/crates/freeze/src/freeze.rs:44-46). A JSON report
@@ -2082,7 +2116,11 @@ def freeze(
     # the second run silently skip chunks the first one encoded (measured:
     # 18 of 19 chunks of a disjoint key range dropped). plan_id is a
     # fingerprint of the full chunk mapping, so it also changes when the
-    # input itself changed enough to move chunk boundaries.
+    # input itself changed enough to move chunk boundaries. Every writer
+    # stamps its plan_id into its log entry too, so the bitmap job runs
+    # only when a live run can hold this plan's rows (or a run's entry
+    # predates the stamp: None); otherwise it is all zeros by
+    # construction.
     plan_fp = _plan_fingerprint(plan)
     done_bits: np.ndarray | None = None
     n_done = 0
@@ -2090,7 +2128,11 @@ def freeze(
     view = readview.read_view(
         output_dir, None if branch is None else f"branch:{branch}",
         strict=False)
-    man = _manifest_df(spark, view)
+    # the manifest frame is built only when its rows decide something:
+    # an overwrite's retirements, or a resume the log lets through. An
+    # append of a new plan lists no manifest dir at all.
+    resume = not overwrite and bool({plan_fp, None} & view.plan_ids)
+    man = _manifest_df(spark, view) if overwrite or resume else None
     if overwrite:
         # overwrite REPLACES, it does not pile on: previously visible ok
         # chunks retire via tombstones written with the new run (the
@@ -2115,6 +2157,11 @@ def freeze(
             man.filter((F.col("status") == "ok")
                        & (F.col("plan_id") == plan_fp)), plan.n_chunks)
         n_done = int(np.unpackbits(done_bits).sum())
+        if n_done >= view.done_chunks.get(plan_fp, plan.n_chunks + 1):
+            # the manifest still holds every chunk a complete freeze of
+            # this plan left: the rest are planned chunks that received
+            # no rows (a salted span's), which no run can ever write
+            n_done = plan.n_chunks
     n_missing = plan.n_chunks - n_done
     n_skipped = n_done
     if dry_run:
@@ -2179,21 +2226,24 @@ def freeze(
     # the written output (VERDICT r1 'What's wrong' #5).
     from pyspark.sql import Observation
 
-    written = spark.read.parquet(enc_dir)
+    written = spark.read.schema(ENCODED_DDL).parquet(enc_dir)
     man_dir = f"{_manifest_path(output_dir)}/run={run_id}"
     obs = Observation("freeze_summary")
     # the payload column whose n_values is the FreezeSummary token count:
     # the first list column (flattened element count), else the key
-    # column (row count)
+    # column (row count); an ok chunk has exactly one row of it
     payload_col = spec.list_column or spec.key
+    is_payload = F.col("column") == payload_col
     _manifest_rows(written, plan_fp).observe(
         obs,
-        F.sum(F.when(F.col("column") == payload_col, F.col("enc_bytes"))
+        F.sum(F.when(is_payload, F.col("enc_bytes"))
               .otherwise(0)).alias("tok_enc_bytes"),
         F.sum("enc_bytes").alias("enc_bytes"),
         F.sum("raw_bytes").alias("raw_bytes"),
-        F.sum(F.when(F.col("column") == payload_col, F.col("n_values"))
+        F.sum(F.when(is_payload, F.col("n_values"))
               .otherwise(0)).alias("tokens"),
+        F.sum(F.when(is_payload & (F.col("status") == "ok"), 1)
+              .otherwise(0)).alias("n_ok"),
         # a failed chunk emits exactly one manifest row (_failed_chunk_row),
         # so a conditional sum counts failed chunks (observe() does not
         # allow DISTINCT aggregates)
@@ -2201,14 +2251,19 @@ def freeze(
         .alias("n_failed"),
     ).write.mode("error").parquet(man_dir)
     stats = obs.get
-    # the snapshot entry IS the commit (readview: the log alone decides
-    # what is live) and an ordered point in the history (as_of)
-    snap = snapshots.commit(
-        output_dir, run_id, "rewrite" if n_retired else "append",
-        plan_id=plan_fp,
-        **({} if branch is None else {"branch": branch}))
     tokens = int(stats["tokens"] or 0)
     n_failed = int(stats["n_failed"] or 0)
+    # the snapshot entry IS the commit (readview: the log alone decides
+    # what is live) and an ordered point in the history (as_of). This
+    # run encoded every chunk its plan was missing; with none failed,
+    # plan_done_chunks counts the plan's chunks that hold rows now
+    # (ReadView.done_chunks)
+    done = ({} if n_failed else
+            {"plan_done_chunks": n_done + int(stats["n_ok"] or 0)})
+    snap = snapshots.commit(
+        output_dir, run_id, "rewrite" if n_retired else "append",
+        plan_id=plan_fp, **done,
+        **({} if branch is None else {"branch": branch}))
     summary = dict(
         snapshot=snap,
         n_chunks=plan.n_chunks,
@@ -2266,6 +2321,14 @@ def compact(
     at 10^12-sequence scale compaction proceeds in bounded batches, not
     one giant rewrite. No-op (nothing written) unless the rewrite
     strictly reduces the chunk count.
+
+    One metadata pass: a single query over the live ok payload rows
+    (minus the live tombstones) selects the candidates and collects them
+    with their ``n_values`` — at most ``max_chunks`` rows on the driver.
+    That arrow table is then the decode selection, the plan's weight
+    total (when the spec's footer statistic is the payload column, so
+    planning runs no total job) and the tombstone file, which the
+    driver writes itself (:func:`_write_tombstones`).
     """
     t_start = time.perf_counter()
     min_tokens = target_tokens // 2 if min_tokens is None else min_tokens
@@ -2276,17 +2339,19 @@ def compact(
     if man is None:
         return no_op
     payload_col = spec.list_column or spec.key
-    live = _live_chunks(spark, view, man)
+    # one query selects the candidates: the ok payload rows are one row
+    # per chunk of a live run (_manifest_df keeps only those), so only
+    # the live writers' tombstones need removing
     sizes = man.filter(
         (F.col("status") == "ok") & (F.col("column") == payload_col)
     ).select("run", "partition_id", "chunk_id", "n_values")
-    cand, sel = _selection(
-        sizes.join(F.broadcast(live), ["run", "partition_id", "chunk_id"],
-                   "left_semi")
-        .filter(F.col("n_values") < min_tokens)
-        .orderBy("n_values", "run", "chunk_id")
-        .limit(max_chunks)
-    )
+    ts = readview.tombstones(spark, view)
+    if ts is not None:
+        sizes = sizes.join(F.broadcast(ts),
+                           ["run", "partition_id", "chunk_id"], "left_anti")
+    cand = (sizes.filter(F.col("n_values") < min_tokens)
+            .orderBy("n_values", "run", "chunk_id")
+            .limit(max_chunks).toArrow())
     n_cand = cand.num_rows
     if n_cand < 2:
         return no_op
@@ -2294,15 +2359,20 @@ def compact(
     # the decode of every candidate chunk. Rows move as stored: pending
     # equality deletes stay merge-on-read until purge_deletes
     rows = _decode_view(spark, dataclasses.replace(view, deletes=frozenset()),
-                        None, spec, sel).localCheckpoint()
-    plan = layout.plan_chunks(rows, target_tokens, spec=spec)
+                        None, spec, readview.bitmaps(cand)).localCheckpoint()
+    # the payload column's n_values sum is the plan weight exactly when
+    # the weight's footer statistic is that column: no total job then
+    total = (int(pc.sum(cand.column("n_values")).as_py())
+             if spec.footer_stat_col == payload_col else None)
+    plan = layout.plan_chunks(rows, target_tokens, spec=spec,
+                              total_tokens=total)
     if plan.n_chunks >= n_cand:
         # rewrite would not shrink the layout (e.g. singleton small
         # chunks in distinct source partitions): guarantee monotone
         # progress / idempotence by writing nothing
         return no_op
     run_id, snap = _commit_rewrite(
-        spark, output_dir, rows, plan, spark.createDataFrame(cand), spec,
+        spark, output_dir, rows, plan, cand, spec,
         "rewrite", n_retired=n_cand, command="compact")
     summary = dict(
         snapshot=snap,
@@ -2335,6 +2405,13 @@ def vacuum(spark: SparkSession, output_dir: str) -> dict:
     in-flight freeze. Manifest and tombstone history stay append-only;
     no read view lists a dead run's files, so deletion is invisible to
     every read path.
+
+    Only a run some live tombstone targets (a run in ``view.drops``) can
+    be dead, so one executor-side pass over those runs' ok manifest rows
+    tests each chunk id against the run's drop bitmap
+    (:func:`_runs_holding_live`, in one wave of tasks however many runs
+    it tests); no job runs when nothing is retired. A run with no ok
+    manifest row and no tombstones (every chunk failed) keeps its files.
     """
     import shutil
 
@@ -2344,16 +2421,17 @@ def vacuum(spark: SparkSession, output_dir: str) -> dict:
             "expire_snapshots / remove_orphan_files"
         )
     view = readview.read_view(output_dir, strict=False)
-    man = _manifest_df(spark, view)
+    # only a run some live tombstone targets can have lost every chunk,
+    # so only those runs' manifest rows are read
+    man = None if not view.drops else _manifest_df(
+        spark, dataclasses.replace(view, runs=frozenset(view.drops)))
     if man is None:
         return dict(snapshot=None, n_deleted_runs=0, bytes_reclaimed=0,
                     deleted_runs=[])
     # runs committed to any branch stay reachable from that branch's
     # head even though main's visibility excludes them
-    keep = snapshots.branch_data_runs(output_dir) | {
-        r["run"] for r in
-        _live_chunks(spark, view, man).select("run").distinct().collect()}
-    dead = sorted(view.runs - keep)
+    dead = sorted(set(view.drops) - snapshots.branch_data_runs(output_dir)
+                  - _runs_holding_live(man, view.drops))
     reclaimed = 0
     deleted = []
     for run_val in dead:
@@ -2374,6 +2452,38 @@ def vacuum(spark: SparkSession, output_dir: str) -> dict:
                                 removed_runs=deleted)
     return dict(snapshot=snap, n_deleted_runs=len(deleted),
                 bytes_reclaimed=reclaimed, deleted_runs=deleted)
+
+
+def _runs_holding_live(man: DataFrame,
+                       drops: dict[str, tuple[int, bytes]]) -> set[str]:
+    """Which runs of ``man`` (manifest rows of runs in ``drops``) hold an
+    ok chunk their drop bitmap does not retire: one executor-side pass
+    over the ok rows, testing each chunk id as the decode kernel does
+    (readview.in_bitmap). Only run names reach the driver."""
+    def kernel(batches):
+        found: set[str] = set()
+        for b in batches:
+            if b.num_rows:
+                found |= readview.holding_live(pa.Table.from_batches([b]),
+                                               drops)
+        if found:
+            yield pa.RecordBatch.from_pydict({"run": sorted(found)})
+
+    rows = man.filter(F.col("status") == "ok").select("run", "chunk_id")
+    return {r["run"] for r in
+            amap(_one_wave(rows), kernel, "run string").collect()}
+
+
+def _one_wave(man: DataFrame) -> DataFrame:
+    """``man`` in at most one wave of tasks (``defaultParallelism``).
+
+    Spark plans a file scan of small files one partition per file, so a
+    Python kernel over the manifest would otherwise start one task per
+    run dir's file: its per-task cost then grows with the run count, not
+    with the rows. A coalesce merges the scan partitions without a
+    shuffle."""
+    par = max(1, man.sparkSession.sparkContext.defaultParallelism)
+    return man.coalesce(par)
 
 
 def remove_orphans(spark: SparkSession, output_dir: str,
@@ -2723,7 +2833,8 @@ def read_bloom_stats(spark: SparkSession,
     when nothing was ever encoded.
     """
     try:
-        enc = _read_run_partitioned(spark, _encoded_path(output_dir))
+        enc = _read_run_partitioned(spark, _encoded_path(output_dir),
+                                    ENCODED_RUN_DDL)
     except Exception:
         return None
     return enc.select("run", "partition_id", "chunk_id", "column",

@@ -392,8 +392,13 @@ def _zorder_bounds_of(df: DataFrame, spec: TableSpec) -> dict:
 def plan_chunks(df: DataFrame, target_tokens: int = DEFAULT_TARGET_TOKENS,
                 n_chunks: int | None = None,
                 spec: TableSpec = SEQUENCES,
-                layout: str = "hash") -> ChunkPlan:
+                layout: str = "hash",
+                total_tokens: int | None = None) -> ChunkPlan:
     """Compute deterministic chunk boundaries; two driver jobs, small collects.
+
+    ``total_tokens`` is the frame's weight total when the caller already
+    knows it exactly (compact sums its candidates' manifest n_values):
+    the job that would compute it is skipped.
 
     ``n_chunks`` is the subchunk_by_count analog (reference
     crates/freeze/src/types/chunks/subchunks.rs:28-33): the target size
@@ -409,9 +414,10 @@ def plan_chunks(df: DataFrame, target_tokens: int = DEFAULT_TARGET_TOKENS,
     bounds = (None if layout == "hash"
               else _range_bounds_of(df, spec) if layout == "range"
               else _zorder_bounds_of(df, spec))
-    total_tokens = int(
-        df.agg(F.sum(_weight_expr(spec)).alias("t")).first()["t"] or 0
-    )
+    if total_tokens is None:
+        total_tokens = int(
+            df.agg(F.sum(_weight_expr(spec)).alias("t")).first()["t"] or 0
+        )
     if n_chunks is not None:
         target_tokens = max(1, math.ceil(total_tokens / n_chunks))
     n_buckets = _n_buckets_for(total_tokens, target_tokens)

@@ -35,6 +35,11 @@ import pyarrow.compute as pc
 
 from . import snapshots
 
+# log entry kinds that commit a data run (with its manifest dir)
+_RUN_KINDS = ("append", "rewrite", "purge")
+# tombstone files' declared read schema (engine._write_tombstones)
+_TOMBSTONE_DDL = "target_run string, partition_id int, chunk_id int"
+
 
 @dataclass(frozen=True)
 class ReadView:
@@ -50,6 +55,8 @@ class ReadView:
     manifest_dirs: frozenset[str]    # runs with a manifest/run= dir
     manifest_gen: str | None         # consolidated manifest generation dir
     absorbed: frozenset[str]         # runs whose manifest rows live in it
+    plan_ids: frozenset[str | None]  # plan_id of each live run's log entry
+    done_chunks: dict[str, int]      # plan_id -> its chunks with rows
 
     @property
     def has_manifest(self) -> bool:
@@ -118,6 +125,17 @@ def read_view(output_dir: str, as_of: int | str | None = None,
     the bytes (expire_snapshots forfeits time travel past it); metadata
     readers pass ``strict=False`` and see the gap in ``vacuumed`` /
     ``files`` instead.
+
+    ``plan_ids`` holds the ``plan_id`` of each live run's log entry:
+    every writer stamps the plan its manifest rows carry ('' for a
+    rewrite that wrote no rows). A run whose entry carries none (a run
+    the log's first entry adopted from marker commits, an entry older
+    than the stamp) counts as None, and so does every run of a log-less
+    output. freeze reads it to skip its resume bitmap when no live run
+    can hold rows of its plan. ``done_chunks`` maps a plan_id to the
+    ``plan_done_chunks`` of its live freeze entries: how many of the
+    plan's chunks held manifest rows once a run that left none of them
+    missing (none failed) committed.
     """
     store = _Store(output_dir)
     entries = snapshots.log(output_dir)
@@ -137,6 +155,9 @@ def read_view(output_dir: str, as_of: int | str | None = None,
     # one alone names the live generation and every run folded into it
     cons = next((e for e in reversed(entries) if e["kind"] == "consolidate"),
                 None)
+    by_run = {e["run"]: e for e in entries
+              if e["kind"] in _RUN_KINDS and e["run"]}
+    live = [by_run.get(r, {}) for r in runs]
     enc_runs = store.run_dirs("encoded")
     tomb_runs = store.run_dirs("tombstones")
     drops = _drop_bitmaps(store, tomb_runs & runs)
@@ -154,6 +175,8 @@ def read_view(output_dir: str, as_of: int | str | None = None,
         manifest_gen=(None if cons is None else
                       f"{store.root}/manifest_gens/gen={cons['gen']}"),
         absorbed=frozenset(() if cons is None else cons["absorbed_runs"]),
+        plan_ids=frozenset(e.get("plan_id") for e in live),
+        done_chunks=_max_by_plan(live, "plan_done_chunks"),
     )
     if strict:
         lost = _runs_with_live_chunks(store, view, runs - enc_runs, drops)
@@ -166,18 +189,27 @@ def read_view(output_dir: str, as_of: int | str | None = None,
     return view
 
 
+def _max_by_plan(entries: list[dict], field: str) -> dict[str, int]:
+    """plan_id -> the largest ``field`` among the entries stamping it."""
+    out: dict[str, int] = {}
+    for e in entries:
+        if field in e:
+            out[e["plan_id"]] = max(e[field], out.get(e["plan_id"], 0))
+    return out
+
+
 def tombstones(spark, view: ReadView, every: bool = False):
     """(run, partition_id, chunk_id) each tombstone retires, as a Spark
     DataFrame: those written by the view's live runs, or with ``every``
     those of every writer on disk (the audit's view). None when there
-    are none."""
+    are none. Read under a declared schema: no schema-inference job."""
     from pyspark.sql import functions as F
 
     writers = view.tombstone_runs if every else view.tombstone_runs & view.runs
     if not writers:
         return None
     base = f"{view.output_dir}/tombstones"
-    return spark.read.parquet(
+    return spark.read.schema(_TOMBSTONE_DDL).parquet(
         *[f"{base}/run={w}" for w in sorted(writers)]
     ).select(F.col("target_run").alias("run"), "partition_id", "chunk_id")
 
@@ -216,8 +248,15 @@ def _runs_with_live_chunks(store: _Store, view: ReadView, runs: set[str],
         parts.append(store.read_gen(view.manifest_gen,
                                     runs & view.absorbed, cols))
     return {r for t in parts if t is not None
-            for r, c in _ids_by(t.filter(pc.equal(t.column("status"), "ok")),
-                                "run").items()
+            for r in holding_live(
+                t.filter(pc.equal(t.column("status"), "ok")), drops)}
+
+
+def holding_live(t, drops: dict[str, tuple[int, bytes]]) -> set[str]:
+    """Runs of the arrow table ``t`` (ok manifest rows: ``run``,
+    ``chunk_id``) holding a chunk id their ``drops`` bitmap does not
+    retire."""
+    return {r for r, c in _ids_by(t, "run").items()
             if r not in drops or not in_bitmap(drops[r], c).all()}
 
 
@@ -285,14 +324,17 @@ class _Store:
 
     def write_bytes(self, rel: str, data: bytes) -> None:
         """Replace the file ``rel`` with ``data`` whole: a local file is
-        renamed into place, a Hadoop file appears when its stream
-        closes (object stores publish on close)."""
+        written under a hidden tmp name (which no listing or Spark read
+        picks up) and renamed into place, a Hadoop file appears when its
+        stream closes (object stores publish on close)."""
         if self.spark is None:
             p = os.path.join(self.root, rel)
-            os.makedirs(os.path.dirname(p), exist_ok=True)
-            with open(f"{p}.tmp", "wb") as f:
+            d, name = os.path.split(p)
+            os.makedirs(d, exist_ok=True)
+            tmp = os.path.join(d, f".{name}.tmp")
+            with open(tmp, "wb") as f:
                 f.write(data)
-            os.replace(f"{p}.tmp", p)
+            os.replace(tmp, p)
             return
         with self._hadoop_io():
             stream = self._fs.create(self._path(f"{self.root}/{rel}"), True)

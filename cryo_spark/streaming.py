@@ -65,13 +65,17 @@ def stream_encode(
         run_id = f"stream{batch_id:08d}"
         enc_dir = f"{output_dir}/encoded/run={run_id}"
         engine._enc_writer(enc).mode("overwrite").parquet(enc_dir)
-        written = batch_df.sparkSession.read.parquet(enc_dir)
-        engine._manifest_rows(written, engine._plan_fingerprint(plan)) \
-            .write.mode("overwrite").parquet(
-                f"{output_dir}/manifest/run={run_id}")
+        written = batch_df.sparkSession.read.schema(engine.ENCODED_DDL) \
+            .parquet(enc_dir)
+        plan_fp = engine._plan_fingerprint(plan)
+        engine._manifest_rows(written, plan_fp).write.mode("overwrite") \
+            .parquet(f"{output_dir}/manifest/run={run_id}")
         # ordered history entry (idempotent per run: a retried batch
-        # re-commits the same run id and keeps its original seq)
+        # re-commits the same run id and keeps its original seq); its
+        # plan_id is the one the manifest rows carry (freeze's resume
+        # gate reads it from the log)
         snapshots.commit(output_dir, run_id, "append", batch_id=batch_id,
+                         plan_id=plan_fp,
                          **({} if branch is None else {"branch": branch}))
 
     reader = (

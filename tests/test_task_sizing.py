@@ -155,3 +155,77 @@ def test_side_files_stay_in_uri_output(spark, tmp_path, monkeypatch):
     assert load_output_spec(out) == SEQUENCES
     assert load_output_plan(out).n_chunks == s["n_chunks"]
     assert os.path.isfile(tmp_path / "out" / "report" / f"run={s['run']}.json")
+
+
+def _jobs(spark, group: str, fn):
+    """(fn's result, number of Spark jobs it ran) under its own group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_metadata_jobs_per_call(spark, tmp_path):
+    """One metadata pass per call: an append of a new plan into an
+    existing table, a keyed lookup, a compact and a vacuum each start at
+    most 4, 2, 8 and 1 Spark jobs (declared metadata schemas, the
+    log-gated resume bitmap, compaction sets held on the driver)."""
+    import pyarrow.parquet as pq
+
+    from cryo_spark import vacuum
+    from cryo_spark.fixtures import generate_sequences
+
+    out = str(tmp_path / "out")
+    inputs = []
+    for i in range(3):
+        inputs.append(str(tmp_path / f"b{i}.parquet"))
+        pq.write_table(generate_sequences(400, seed=70 + i, id_offset=i * 400),
+                       inputs[-1])
+    freeze(spark, inputs[0], out, target_tokens=20_000)
+    for i in (1, 2):
+        s, n = _jobs(spark, f"meta_append_{i}", lambda: freeze(
+            spark, inputs[i], out, target_tokens=20_000))
+        assert s["n_encoded"] == s["n_chunks"] > 1
+        assert n <= 4, f"append ran {n} jobs"
+    t, n = _jobs(spark, "meta_lookup",
+                 lambda: collect(spark, out, keys="400:800").toArrow())
+    assert t.num_rows == 400
+    assert n <= 2, f"lookup ran {n} jobs"
+    m, n = _jobs(spark, "meta_compact",
+                 lambda: compact(spark, out, target_tokens=400_000))
+    assert m["n_compacted"] > 1
+    assert n <= 8, f"compact ran {n} jobs"
+    v, n = _jobs(spark, "meta_vacuum", lambda: vacuum(spark, out))
+    assert v["n_deleted_runs"] == 3
+    assert n <= 1, f"vacuum ran {n} jobs"
+    assert collect(spark, out).count() == 1200
+
+
+def test_vacuum_tasks_do_not_grow_with_runs(spark, tmp_path):
+    """vacuum's manifest kernel runs in one wave of tasks however many
+    retired runs it tests: a file scan plans one partition per small
+    manifest file, which would start one Python task per run."""
+    import pyarrow.parquet as pq
+
+    from cryo_spark import vacuum
+    from cryo_spark.fixtures import generate_sequences
+
+    out = str(tmp_path / "out")
+    n_runs = 8
+    for i in range(n_runs):
+        p = str(tmp_path / f"b{i}.parquet")
+        pq.write_table(generate_sequences(60, seed=90 + i, id_offset=i * 60), p)
+        freeze(spark, p, out, target_tokens=20_000)
+    assert compact(spark, out, target_tokens=400_000)["n_compacted"] >= n_runs
+    sc = spark.sparkContext
+    v, _ = _jobs(spark, "vacuum_wave", lambda: vacuum(spark, out))
+    assert v["n_deleted_runs"] == n_runs
+    st = sc.statusTracker()
+    tasks = sum(st.getStageInfo(s).numTasks
+                for j in st.getJobIdsForGroup("vacuum_wave")
+                for s in st.getJobInfo(j).stageIds)
+    assert 0 < tasks <= sc.defaultParallelism < n_runs, tasks

@@ -23,7 +23,11 @@ parquet-level equality of the outputs read back WITHOUT Spark
 - two reads of the output: a ``collect(keys=...)`` and a
   ``collect(filters=...)``, each sorted by key. The file scan packs
   files into tasks by the core count, so the reads exercise the same
-  claim: what a read returns depends only on the data.
+  claim: what a read returns depends only on the data;
+- resume: after each case's freeze, the same input is re-frozen into
+  the same output on both sides. Each side must encode nothing
+  (``n_encoded == 0``) and ``decode_frozen`` must return as many rows
+  as before the re-freeze.
 
 The claim is exercised only if the two sides really partition
 differently, so every case prints each side's encode-exchange
@@ -202,10 +206,30 @@ def _reads(spark, out: str, spec) -> dict[str, pa.Table]:
             .sort_by(spec.key) for name, kw in reads.items()}
 
 
-def run_side(side: str, cfg: dict, cases,
-             paths) -> dict[str, tuple[str, int, dict[str, pa.Table]]]:
-    """Freeze every case under one Spark config; returns case ->
-    (out dir, encode-exchange partition count, reads)."""
+def _refreeze(spark, inp: str, out: str, kw: dict) -> list[str]:
+    """Re-freeze ``inp`` into ``out``: problems ([] when the re-run
+    encodes nothing and the decoded row count is unchanged)."""
+    def n_rows() -> int:
+        return engine.decode_frozen(spark, out, spec=kw["spec"]).count()
+
+    before = n_rows()
+    s = engine.freeze(spark, inp, out, **kw)
+    after = n_rows()
+    problems = []
+    if s["n_encoded"]:
+        problems.append(f"re-freeze encoded {s['n_encoded']} chunks "
+                        f"(skipped {s['n_skipped']} of {s['n_chunks']})")
+    if after != before:
+        problems.append(f"re-freeze changed decode_frozen rows "
+                        f"{before} -> {after}")
+    return problems
+
+
+def run_side(side: str, cfg: dict, cases, paths
+             ) -> dict[str, tuple[str, int, dict[str, pa.Table], list[str]]]:
+    """Freeze and re-freeze every case under one Spark config; returns
+    case -> (out dir, encode-exchange partition count, reads, resume
+    problems)."""
     spark = get_spark(app=f"differential_{side}", **cfg)
     outs = {}
     try:
@@ -215,7 +239,8 @@ def run_side(side: str, cfg: dict, cases,
             s = engine.freeze(spark, inp, out, **kw)
             assert s["n_failed"] == 0, (name, side, s)
             outs[name] = (out, engine._n_parts(spark, s["n_chunks"]),
-                          _reads(spark, out, kw["spec"]))
+                          _reads(spark, out, kw["spec"]),
+                          _refreeze(spark, inp, out, kw))
     finally:
         spark.stop()
     return outs
@@ -296,11 +321,13 @@ def main(quick: bool = False) -> int:
     failed = []
     n_differ = 0
     for name, _, _ in cases:
-        (out_a, parts_a, reads_a) = outs_a[name]
-        (out_b, parts_b, reads_b) = outs_b[name]
+        (out_a, parts_a, reads_a, resume_a) = outs_a[name]
+        (out_b, parts_b, reads_b, resume_b) = outs_b[name]
         n_differ += parts_a != parts_b
         problems = (compare_case(out_a, out_b)
-                    + compare_reads(reads_a, reads_b))
+                    + compare_reads(reads_a, reads_b)
+                    + [f"side A: {p}" for p in resume_a]
+                    + [f"side B: {p}" for p in resume_b])
         status = "OK" if not problems else "DIFF"
         print(f"{status} {name} (encode partitions A={parts_a} B={parts_b})")
         for p in problems:
