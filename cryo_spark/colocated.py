@@ -274,7 +274,7 @@ def _decode_side(paths: list[str], columns: list[str],
     out: dict[int, pa.Table] = {}
     want = pa.array(columns, pa.string())
     for path in paths:
-        # physical projection (engine._enc_writer clusters by column):
+        # physical projection (engine._write_task_files clusters by column):
         # read only the row groups whose column band intersects
         rgs = select_row_groups(path, "column", set(columns))
         if rgs is None:

@@ -44,6 +44,7 @@ from dataclasses import dataclass
 import numpy as np
 import pyarrow as pa
 
+from pyspark import AccumulatorParam
 from pyspark.sql import DataFrame, functions as F
 
 from . import tablespec
@@ -317,6 +318,11 @@ def _finish_plan(hist_df: DataFrame, n_buckets: int, target_tokens: int,
         .collect()
     )
     hist = [(r["source"], int(r["bucket"]), int(r["tokens"])) for r in hist_rows]
+    return _plan_of_hist(hist, n_buckets, target_tokens, bounds)
+
+
+def _plan_of_hist(hist: list[tuple[str, int, int]], n_buckets: int,
+                  target_tokens: int, bounds: dict | None = None) -> ChunkPlan:
     mapping, n_chunks, n_salted, partition_of_source = sweep(hist, target_tokens)
     return ChunkPlan(
         n_buckets=n_buckets,
@@ -415,15 +421,82 @@ def plan_chunks(df: DataFrame, target_tokens: int = DEFAULT_TARGET_TOKENS,
               else _range_bounds_of(df, spec) if layout == "range"
               else _zorder_bounds_of(df, spec))
     if total_tokens is None:
-        total_tokens = int(
-            df.agg(F.sum(_weight_expr(spec)).alias("t")).first()["t"] or 0
-        )
+        total_tokens = weight_total(df, spec)
     if n_chunks is not None:
         target_tokens = max(1, math.ceil(total_tokens / n_chunks))
     n_buckets = _n_buckets_for(total_tokens, target_tokens)
     hist_df = amap(df.select(*spec.plan_columns()),
                    _hist_kernel(n_buckets, spec, bounds), _HIST_DDL)
     return _finish_plan(hist_df, n_buckets, target_tokens, bounds)
+
+
+class _HistSum(AccumulatorParam):
+    """Accumulator of :func:`_hist_kernel` outputs: each task adds its
+    (source, bucket, tokens) table, and every merge sums the rows of
+    equal (source, bucket), so the running value holds one row per
+    bucket — what ``_finish_plan``'s groupBy collects."""
+
+    def zero(self, value):
+        return None
+
+    def addInPlace(self, a, b):
+        if a is None or b is None:
+            return b if a is None else a
+        return (pa.concat_tables([a, b]).group_by(["source", "bucket"])
+                .aggregate([("tokens", "sum")])
+                .select(["source", "bucket", "tokens_sum"])
+                .rename_columns(["source", "bucket", "tokens"]))
+
+
+class PlanTap:
+    """:func:`plan_chunks` (hash layout) summed while another job
+    streams the rows: ``kernel`` is an arrow kernel that yields its
+    batches unchanged and adds their :func:`_hist_kernel` histogram to
+    an accumulator, and :meth:`plan` sweeps the total once that job has
+    run. Fused into the decode that compaction checkpoints anyway,
+    planning starts no job of its own. The plan is ``plan_chunks``'s
+    over the same rows and ``total_tokens``. (A kernel call here may
+    cover one file of a task where ``plan_chunks`` histograms the whole
+    task, so a source whose file holds only zero-weight rows can add a
+    weightless bucket-0 entry; its rows land in the same first chunk of
+    the source either way.)
+
+    Each task's histogram reaches the driver with its result, once per
+    successful task; a recomputation of a lost checkpoint block adds to
+    the accumulator after :meth:`plan` ran, so it cannot skew the plan.
+    """
+
+    def __init__(self, spark, total_tokens: int, target_tokens: int,
+                 spec: TableSpec = SEQUENCES):
+        self.n_buckets = _n_buckets_for(total_tokens, target_tokens)
+        self.target_tokens = target_tokens
+        self._acc = spark.sparkContext.accumulator(None, _HistSum())
+        acc, hist, cols = (self._acc, _hist_kernel(self.n_buckets, spec),
+                           spec.plan_columns())
+
+        def kernel(batches):
+            seen = []  # only the plan columns wait for the last batch
+            for b in batches:
+                seen.append(pa.RecordBatch.from_arrays(
+                    [b.column(c) for c in cols], names=cols))
+                yield b
+            for h in hist(iter(seen)):
+                acc.add(pa.Table.from_batches([h]))
+
+        self.kernel = kernel
+
+    def plan(self) -> ChunkPlan:
+        t = self._acc.value
+        hist = [] if t is None else [
+            (s, int(b), int(w)) for s, b, w in zip(
+                *(t.column(c).to_pylist()
+                  for c in ("source", "bucket", "tokens")))]
+        return _plan_of_hist(hist, self.n_buckets, self.target_tokens)
+
+
+def weight_total(df: DataFrame, spec: TableSpec = SEQUENCES) -> int:
+    """Total plan weight of ``df``'s rows (one tiny agg job)."""
+    return int(df.agg(F.sum(_weight_expr(spec)).alias("t")).first()["t"] or 0)
 
 
 def plan_chunks_arrow(

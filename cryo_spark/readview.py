@@ -57,6 +57,7 @@ class ReadView:
     absorbed: frozenset[str]         # runs whose manifest rows live in it
     plan_ids: frozenset[str | None]  # plan_id of each live run's log entry
     done_chunks: dict[str, int]      # plan_id -> its chunks with rows
+    ok_chunks: dict[str, int]        # live run -> its entry's n_ok_chunks
 
     @property
     def has_manifest(self) -> bool:
@@ -135,7 +136,10 @@ def read_view(output_dir: str, as_of: int | str | None = None,
     can hold rows of its plan. ``done_chunks`` maps a plan_id to the
     ``plan_done_chunks`` of its live freeze entries: how many of the
     plan's chunks held manifest rows once a run that left none of them
-    missing (none failed) committed.
+    missing (none failed) committed. ``ok_chunks`` maps a live run to
+    the ``n_ok_chunks`` its writer stamped (engine._write_run): how many
+    ok chunks it committed, so vacuum tests a run only once its drop
+    bitmap holds that many ids.
     """
     store = _Store(output_dir)
     entries = snapshots.log(output_dir)
@@ -177,6 +181,8 @@ def read_view(output_dir: str, as_of: int | str | None = None,
         absorbed=frozenset(() if cons is None else cons["absorbed_runs"]),
         plan_ids=frozenset(e.get("plan_id") for e in live),
         done_chunks=_max_by_plan(live, "plan_done_chunks"),
+        ok_chunks={r: by_run[r]["n_ok_chunks"] for r in runs
+                   if "n_ok_chunks" in by_run.get(r, {})},
     )
     if strict:
         lost = _runs_with_live_chunks(store, view, runs - enc_runs, drops)
@@ -342,6 +348,37 @@ class _Store:
                 stream.write(data)
             finally:
                 stream.close()
+
+    def rename(self, src: str, dst: str) -> None:
+        """Move the file ``src`` to ``dst``, replacing it, creating its
+        dir: ``os.replace`` locally, a Hadoop rename for ``://``."""
+        if self.spark is None:
+            p = os.path.join(self.root, dst)
+            os.makedirs(os.path.dirname(p), exist_ok=True)
+            os.replace(os.path.join(self.root, src), p)
+            return
+        with self._hadoop_io():
+            s, d = (self._path(f"{self.root}/{x}") for x in (src, dst))
+            self._fs.mkdirs(d.getParent())
+            if self._fs.exists(d):
+                self._fs.delete(d, False)
+            if not self._fs.rename(s, d):
+                raise OSError(f"rename {s} -> {d} failed")
+
+    def clear(self, rel: str) -> None:
+        """Delete the visible files under ``rel``, recursively; hidden
+        (``.``/``_``-prefixed) names stay."""
+        for name, is_dir in self._ls(rel):
+            if name[:1] in ("_", "."):
+                continue
+            if is_dir:
+                self.clear(f"{rel}/{name}")
+            elif self.spark is None:
+                os.remove(os.path.join(self.root, rel, name))
+            else:
+                with self._hadoop_io():
+                    self._fs.delete(self._path(f"{self.root}/{rel}/{name}"),
+                                    False)
 
     @staticmethod
     @contextlib.contextmanager

@@ -196,7 +196,7 @@ def select_row_groups(path: str, column: str,
     value; None when any group lacks stats (caller reads everything).
 
     The physical-projection half of the encoded layout: files written
-    by engine._enc_writer cluster rows by (column, chunk_id), so a
+    by engine._write_task_files cluster rows by (column, chunk_id), so a
     skinny projection's wanted values fall into a contiguous band of
     row groups and everything outside the band — the fat payload
     columns — is never read off disk.

@@ -40,6 +40,13 @@ def stream_encode(
     ``schema`` defaults to the spec's DDL (override only to widen the
     reader, e.g. extra ignored columns).
 
+    Each micro-batch is one encode+write job whose tasks write their own
+    files, then the driver's commit — the write path of ``freeze``
+    (``engine._write_run``). A replayed batch (a restart before the
+    checkpoint recorded it) re-writes its run ``stream<batch_id>``:
+    the commit replaces that run's files, and the log keeps the run's
+    first entry.
+
     ``branch`` commits every micro-batch to that snapshot branch — the
     streaming write-audit-publish flow: the stream lands on the branch
     invisibly to main readers, an auditor reads ``as_of='branch:name'``,
@@ -47,6 +54,8 @@ def stream_encode(
     """
     if schema is None:
         schema = spec.spark_ddl()
+    if "://" in output_dir:
+        engine._task_fs(output_dir)  # fail before the stream starts
     if branch is not None:
         snapshots.resolve(output_dir, f"branch:{branch}")  # fail fast
 
@@ -59,24 +68,16 @@ def stream_encode(
                 f"micro-batch needs {plan.n_chunks} chunks >= stride {BATCH_STRIDE}; "
                 "raise BATCH_STRIDE or target_tokens"
             )
-        base = batch_id * BATCH_STRIDE
-        enc = engine._grouped_encode(batch_df, plan, chunk_id_offset=base,
-                                     spec=spec)
-        run_id = f"stream{batch_id:08d}"
-        enc_dir = f"{output_dir}/encoded/run={run_id}"
-        engine._enc_writer(enc).mode("overwrite").parquet(enc_dir)
-        written = batch_df.sparkSession.read.schema(engine.ENCODED_DDL) \
-            .parquet(enc_dir)
-        plan_fp = engine._plan_fingerprint(plan)
-        engine._manifest_rows(written, plan_fp).write.mode("overwrite") \
-            .parquet(f"{output_dir}/manifest/run={run_id}")
-        # ordered history entry (idempotent per run: a retried batch
-        # re-commits the same run id and keeps its original seq); its
-        # plan_id is the one the manifest rows carry (freeze's resume
-        # gate reads it from the log)
-        snapshots.commit(output_dir, run_id, "append", batch_id=batch_id,
-                         plan_id=plan_fp,
-                         **({} if branch is None else {"branch": branch}))
+        # one encode+write job, then the driver's commit (engine._write_run);
+        # a replayed batch re-writes the same run id, replacing its files,
+        # and re-commits idempotently (snapshots.commit keeps the run's
+        # original entry and seq)
+        engine._write_run(
+            batch_df.sparkSession, output_dir, f"stream{batch_id:08d}",
+            engine._packed(batch_df, plan,
+                           chunk_id_offset=batch_id * BATCH_STRIDE, spec=spec),
+            plan, spec, "append", replace=True, batch_id=batch_id,
+            **({} if branch is None else {"branch": branch}))
 
     reader = (
         spark.readStream.schema(schema)

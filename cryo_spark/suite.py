@@ -7070,6 +7070,17 @@ _BLJ_M = 1 << 16            # bloom bits (power of two)
 _BLJ_SALTS = (0x9E3779B97F4A7C15, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9)
 
 
+def _blj_bits(keys):
+    """(byte index, bit mask) of each salt's probe of uint64 ``keys``."""
+    import numpy as np
+
+    for salt in _BLJ_SALTS:
+        h = (keys * np.uint64(salt)) & np.uint64(0xFFFFFFFFFFFFFFFF)
+        idx = ((h >> np.uint64(40)) ^ h) & np.uint64(_BLJ_M - 1)
+        yield ((idx >> np.uint64(3)).astype(np.int64),
+               (1 << (idx & np.uint64(7))).astype(np.uint8))
+
+
 @q(
     "bloom_join_prune",
     f"""
@@ -7088,16 +7099,21 @@ def bloom_join_prune(spark, sf_dir):
     """Runtime Bloom-filter pruning before a semi join — exact result.
 
     The at-scale idiom behind Spark's runtime row-group filters: build a
-    Bloom filter over the dim keys on the driver (dim is small after its
-    selective predicate), broadcast it, and drop fact rows whose key
-    cannot be in the dim BEFORE the shuffle — the exchange then carries
-    only plausible rows. False positives are removed by the exact semi
-    join that follows, so the result equals the plain semi join (the
-    oracle IS the plain semi join). Bloom bits are set with three
-    integer multiply-xor probes over a 2^16-bit table — deterministic,
-    no library dependence; the filter itself is applied in a vectorized
-    mapInArrow kernel (numpy bit tests, no per-row Python).
+    Bloom filter over the dim keys, broadcast it, and drop fact rows
+    whose key cannot be in the dim BEFORE the shuffle — the exchange
+    then carries only plausible rows. False positives are removed by the
+    exact semi join that follows, so the result equals the plain semi
+    join (the oracle IS the plain semi join). Bloom bits are set with
+    three integer multiply-xor probes over a 2^16-bit table —
+    deterministic, no library dependence. The filter is built where the
+    keys are: each dim partition folds its keys into a partial bloom in
+    a mapInArrow kernel, and the driver ORs the zlib-compressed partials
+    (one 8 KiB table per partition, never the keys). It is applied in a
+    vectorized mapInArrow kernel too (numpy bit tests, no per-row
+    Python).
     """
+    import zlib
+
     import numpy as np
     import pyarrow as pa
 
@@ -7105,15 +7121,23 @@ def bloom_join_prune(spark, sf_dir):
         _t(spark, sf_dir, "orders")
         .filter(F.col("o_orderpriority") == "1-URGENT")
         .select(F.col("o_custkey").alias("k"))
-        .distinct()
     )
-    keys = np.array([r.k for r in dim.collect()], dtype=np.uint64)
+
+    def partial_bloom(batches):
+        bits = np.zeros(_BLJ_M // 8, dtype=np.uint8)
+        for t in batches:
+            keys = t.column("k").to_numpy(
+                zero_copy_only=False).astype(np.uint64)
+            for byte, mask in _blj_bits(keys):
+                np.bitwise_or.at(bits, byte, mask)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([zlib.compress(bits.tobytes(), 1)], pa.binary())],
+            names=["bits"])
+
     bits = np.zeros(_BLJ_M // 8, dtype=np.uint8)
-    for salt in _BLJ_SALTS:
-        h = (keys * np.uint64(salt)) & np.uint64(0xFFFFFFFFFFFFFFFF)
-        idx = ((h >> np.uint64(40)) ^ h) & np.uint64(_BLJ_M - 1)
-        np.bitwise_or.at(bits, (idx >> np.uint64(3)).astype(np.int64),
-                         (1 << (idx & np.uint64(7))).astype(np.uint8))
+    for row in amap(dim, partial_bloom, "bits binary").collect():
+        bits |= np.frombuffer(zlib.decompress(row["bits"]), dtype=np.uint8)
+    dim = dim.distinct()
     spark_bits = spark.sparkContext.broadcast(bits.tobytes())
 
     fact = _t(spark, sf_dir, "events").select(
@@ -7126,11 +7150,8 @@ def bloom_join_prune(spark, sf_dir):
         for t in batches:
             k = t.column("k").to_numpy(zero_copy_only=False).astype(np.uint64)
             ok = np.ones(len(k), dtype=bool)
-            for salt in _BLJ_SALTS:
-                h = (k * np.uint64(salt)) & np.uint64(0xFFFFFFFFFFFFFFFF)
-                idx = ((h >> np.uint64(40)) ^ h) & np.uint64(_BLJ_M - 1)
-                ok &= (b[(idx >> np.uint64(3)).astype(np.int64)]
-                       >> (idx & np.uint64(7)).astype(np.uint8)) & 1 > 0
+            for byte, mask in _blj_bits(k):
+                ok &= (b[byte] & mask) > 0
             if ok.any():
                 yield from pa.Table.from_batches([t]).filter(
                     pa.array(ok)).combine_chunks().to_batches()

@@ -1,6 +1,6 @@
 """Column-clustered encoded layout + row-group-pruned skinny decodes.
 
-engine._enc_writer sorts each write task's rows by (column, chunk_id),
+engine._write_task_files sorts each encode task's rows by (column, chunk_id),
 so parquet row groups become column-pure bands; select_row_groups then
 keeps only the bands a projection needs. Pinned here: the selection is
 a strict subset for a skinny projection on a multi-row-group file, the

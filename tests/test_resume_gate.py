@@ -180,7 +180,7 @@ def test_compact_dying_after_its_tombstones(spark, tmp_path, monkeypatch):
     def die(*a, **k):
         raise RuntimeError("killed before the manifest")
 
-    monkeypatch.setattr(engine, "_manifest_rows", die)
+    monkeypatch.setattr(engine, "_publish_manifest", die)
     with pytest.raises(RuntimeError, match="before the manifest"):
         compact(spark, out, target_tokens=BIG)
     monkeypatch.undo()

@@ -157,6 +157,18 @@ def test_side_files_stay_in_uri_output(spark, tmp_path, monkeypatch):
     assert os.path.isfile(tmp_path / "out" / "report" / f"run={s['run']}.json")
 
 
+def test_unwritable_uri_scheme_fails_before_any_job(spark, tmp_path):
+    """Encode tasks write through pyarrow's filesystems: a scheme pyarrow
+    cannot open fails up front, naming the scheme, and runs no job."""
+    src = str(tmp_path / "seqs.parquet")
+    write_sequences(src, n=100, seed=7)
+    with pytest.raises(ValueError, match="s3a://"):
+        _jobs(spark, "unwritable_scheme", lambda: freeze(
+            spark, src, "s3a://bucket/out", target_tokens=20_000))
+    assert not spark.sparkContext.statusTracker().getJobIdsForGroup(
+        "unwritable_scheme")
+
+
 def _jobs(spark, group: str, fn):
     """(fn's result, number of Spark jobs it ran) under its own group."""
     sc = spark.sparkContext
@@ -169,11 +181,30 @@ def _jobs(spark, group: str, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _assert_committed_layout(out: str) -> None:
+    """Encode tasks write their own files and the driver renames them
+    into place: no Hadoop ``_temporary`` dir and no ``.crc`` side file
+    is left, only ``part-*`` files and ``_SUCCESS`` markers."""
+    seen = 0
+    for area in ("encoded", "manifest"):
+        for root, dirs, files in os.walk(os.path.join(out, area)):
+            assert "_temporary" not in dirs, root
+            for f in files:
+                assert f == "_SUCCESS" or (f.startswith("part-")
+                                           and f.endswith(".parquet")), \
+                    os.path.join(root, f)
+                seen += 1
+    assert seen
+
+
 def test_metadata_jobs_per_call(spark, tmp_path):
     """One metadata pass per call: an append of a new plan into an
     existing table, a keyed lookup, a compact and a vacuum each start at
-    most 4, 2, 8 and 1 Spark jobs (declared metadata schemas, the
-    log-gated resume bitmap, compaction sets held on the driver)."""
+    most 3, 2, 4 and 1 Spark jobs (declared metadata schemas, the
+    log-gated resume bitmap, compaction sets held on the driver, a
+    compaction plan summed by the job that checkpoints its rows, and one
+    encode+write job per run: the tasks write their files and manifest
+    parts, so no job reads them back)."""
     import pyarrow.parquet as pq
 
     from cryo_spark import vacuum
@@ -186,11 +217,12 @@ def test_metadata_jobs_per_call(spark, tmp_path):
         pq.write_table(generate_sequences(400, seed=70 + i, id_offset=i * 400),
                        inputs[-1])
     freeze(spark, inputs[0], out, target_tokens=20_000)
+    _assert_committed_layout(out)
     for i in (1, 2):
         s, n = _jobs(spark, f"meta_append_{i}", lambda: freeze(
             spark, inputs[i], out, target_tokens=20_000))
         assert s["n_encoded"] == s["n_chunks"] > 1
-        assert n <= 4, f"append ran {n} jobs"
+        assert n <= 3, f"append ran {n} jobs"
     t, n = _jobs(spark, "meta_lookup",
                  lambda: collect(spark, out, keys="400:800").toArrow())
     assert t.num_rows == 400
@@ -198,11 +230,40 @@ def test_metadata_jobs_per_call(spark, tmp_path):
     m, n = _jobs(spark, "meta_compact",
                  lambda: compact(spark, out, target_tokens=400_000))
     assert m["n_compacted"] > 1
-    assert n <= 8, f"compact ran {n} jobs"
+    assert n <= 4, f"compact ran {n} jobs"
+    _assert_committed_layout(out)
     v, n = _jobs(spark, "meta_vacuum", lambda: vacuum(spark, out))
     assert v["n_deleted_runs"] == 3
     assert n <= 1, f"vacuum ran {n} jobs"
     assert collect(spark, out).count() == 1200
+
+
+def test_vacuum_skips_its_job_when_no_run_can_be_dead(spark, tmp_path):
+    """A compaction that retires only some chunks of each run leaves no
+    run whose drop bitmap reaches the ok-chunk count its log entry
+    carries (``n_ok_chunks``), so vacuum starts no job and deletes
+    nothing."""
+    import pyarrow.parquet as pq
+
+    from cryo_spark import readview, vacuum
+    from cryo_spark.fixtures import generate_sequences
+
+    out = str(tmp_path / "out")
+    for i in range(2):
+        p = str(tmp_path / f"b{i}.parquet")
+        pq.write_table(generate_sequences(400, seed=80 + i, id_offset=i * 400),
+                       p)
+        assert freeze(spark, p, out, target_tokens=20_000)["n_chunks"] > 3
+    m = compact(spark, out, target_tokens=400_000, max_chunks=3)
+    assert m["n_compacted"] == 3
+    view = readview.read_view(out)
+    assert view.drops and all(
+        len(readview.bitmap_ids(view.drops[r])) < view.ok_chunks[r]
+        for r in view.drops)
+    v, n = _jobs(spark, "vacuum_no_dead_run", lambda: vacuum(spark, out))
+    assert v["n_deleted_runs"] == 0
+    assert n == 0, f"vacuum ran {n} jobs"
+    assert collect(spark, out).count() == 800
 
 
 def test_vacuum_tasks_do_not_grow_with_runs(spark, tmp_path):
@@ -229,3 +290,41 @@ def test_vacuum_tasks_do_not_grow_with_runs(spark, tmp_path):
                 for j in st.getJobIdsForGroup("vacuum_wave")
                 for s in st.getJobInfo(j).stageIds)
     assert 0 < tasks <= sc.defaultParallelism < n_runs, tasks
+
+
+def test_zip_importers_reread_only_changed_archives(tmp_path, monkeypatch):
+    """Spark's Python worker invalidates the import caches before every
+    task; once ``arrowutil.zip_caches_by_stat`` ran, a zipimporter
+    re-reads its archive's directory only when the archive changed."""
+    import zipfile
+    import zipimport
+
+    from cryo_spark import arrowutil
+
+    inv = zipimport.zipimporter.invalidate_caches
+    if not (getattr(inv, "_by_stat", False)
+            or "_read_directory" in inv.__code__.co_names):
+        pytest.skip("this Python's zipimporter defers its re-read")
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", inv)
+    reads = []
+    read_directory = zipimport._read_directory
+    monkeypatch.setattr(zipimport, "_read_directory",
+                        lambda p: reads.append(p) or read_directory(p))
+
+    path = str(tmp_path / "pkg.zip")
+    with zipfile.ZipFile(path, "w") as zf:
+        zf.writestr("mod_a.py", "x = 1\n")
+    imp = zipimport.zipimporter(path)
+    reads.clear()  # the constructor's own read
+    arrowutil.zip_caches_by_stat()
+    imp.invalidate_caches()  # first call on an importer: reads once
+    imp.invalidate_caches()
+    imp.invalidate_caches()
+    assert reads == [path]
+    assert imp.find_spec("mod_b") is None
+
+    with zipfile.ZipFile(path, "a") as zf:
+        zf.writestr("mod_b.py", "y = 2\n")
+    imp.invalidate_caches()
+    assert reads == [path, path]
+    assert imp.find_spec("mod_b") is not None
