@@ -266,13 +266,13 @@ def _pack_groups(
 
 def _decode_side(paths: list[str], columns: list[str],
                  spec: TableSpec) -> dict[int, pa.Table]:
-    """Decode whole encoded files into per-chunk arrow tables (only the
-    requested columns' payloads are decoded; the rest are pruned by the
-    row filter on ``column``)."""
+    """Decode whole encoded files into per-chunk arrow tables
+    (engine._decoded_chunks, the file scan's decode): only the row
+    groups whose ``column`` band holds a requested column are read, and
+    only the requested columns' payloads are decoded."""
     from .sources import select_row_groups
 
     out: dict[int, pa.Table] = {}
-    want = pa.array(columns, pa.string())
     for path in paths:
         # physical projection (engine._write_task_files clusters by column):
         # read only the row groups whose column band intersects
@@ -284,14 +284,7 @@ def _decode_side(paths: list[str], columns: list[str],
         else:
             tbl = pq.ParquetFile(path).read_row_groups(
                 rgs, columns=ENC_COLUMNS, use_threads=False)
-        tbl = tbl.filter(pc.and_(
-            pc.equal(tbl.column("status"), "ok"),
-            pc.is_in(tbl.column("column"), value_set=want),
-        ))
-        if tbl.num_rows == 0:
-            continue
-        for cid, chunk in engine._groups(tbl, engine._chunk_ids(tbl)):
-            out[int(cid)] = engine._decode_chunk(chunk, columns, spec)
+        out.update(engine._decoded_chunks(tbl, _run_of(path), columns, spec))
     return out
 
 

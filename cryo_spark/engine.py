@@ -38,6 +38,7 @@ from . import hashing, layout, readview, snapshots, tablespec
 from .arrowutil import amap
 from .codecs import choose_float, choose_int, choose_str, decode_any, encode_any
 from .codecs.bits import get_blob, put_blob
+from .sources.parquet_arrow import HIVE_NULL
 from .tablespec import SEQUENCES, ColumnSpec, TableSpec
 
 
@@ -314,7 +315,6 @@ _COMMIT_DDL = ("files array<string>, manifest string, tokens long, "
                "enc_bytes long, raw_bytes long, n_ok long, n_failed long")
 # a task attempt's file, hidden until the driver commits it
 _STAGED = re.compile(r"\.(?:part|manifest)-(\d+)-a\d+\.parquet")
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 
 def _write_encoded(fs, path: str, t: pa.Table, block_bytes: int) -> None:
@@ -366,7 +366,7 @@ def _path_groups(enc: pa.Table,
     for i, vals in enumerate(zip(*(enc.column(k).to_pylist()
                                    for k in partition_by))):
         key = tuple(
-            f"{k}={_HIVE_NULL if v is None else urllib.parse.quote(str(v), safe='')}"
+            f"{k}={HIVE_NULL if v is None else urllib.parse.quote(str(v), safe='')}"
             for k, v in zip(partition_by, vals))
         out.setdefault(key, []).append(i)
     return out
@@ -422,30 +422,13 @@ def _write_task_files(enc: pa.Table, fs, stage: str, tag: str, plan_fp: str,
     })
 
 
-def _task_fs(output_dir: str):
-    """(pyarrow filesystem, root path) through which encode tasks write
-    ``output_dir``: local paths as given (absolute), ``://`` URIs
-    through ``pyarrow.fs.FileSystem.from_uri``. Raises ValueError
-    naming the scheme when pyarrow cannot open it."""
-    import pyarrow.fs as pafs
-
-    if "://" not in output_dir:
-        return pafs.LocalFileSystem(), output_dir
-    try:
-        return pafs.FileSystem.from_uri(output_dir)
-    except (pa.ArrowException, OSError, ValueError) as e:
-        scheme = output_dir.split("://", 1)[0]
-        raise ValueError(
-            f"encode tasks write their files through pyarrow.fs, which "
-            f"cannot open {scheme}:// outputs ({output_dir!r}): {e}") from e
-
-
-def _write_kernel(output_dir: str, run_id: str, plan_fp: str,
+def _write_kernel(store: readview._Store, run_id: str, plan_fp: str,
                   spec: TableSpec, partition_by: list[str] | None):
     """mapInArrow kernel of the encode+write stage: encode the
-    partition's chunks (:func:`_encoded_chunks`), write them
-    (:func:`_write_task_files`) and yield the one commit row. The
-    row-group target is read here, on the driver."""
+    partition's chunks (:func:`_encoded_chunks`), write them through the
+    output's ``store`` filesystem (:func:`_write_task_files`) and yield
+    the one commit row. The row-group target is read here, on the
+    driver."""
     schema = spec.packed_pa_schema()
     block_bytes = ENC_BLOCK_BYTES
     payload_col = spec.list_column or spec.key
@@ -458,10 +441,10 @@ def _write_kernel(output_dir: str, run_id: str, plan_fp: str,
         del tbl  # the packed rows are done with before the writes
         if not chunks:
             return
-        fs, root = _task_fs(output_dir)
         ctx = TaskContext.get()
         yield _write_task_files(
-            pa.concat_tables(chunks), fs, f"{root}/encoded/run={run_id}",
+            pa.concat_tables(chunks), store.fs,
+            f"{store.base}/encoded/run={run_id}",
             f"{ctx.partitionId():05d}-a{ctx.taskAttemptId()}", plan_fp,
             partition_by, block_bytes, payload_col)
 
@@ -637,8 +620,9 @@ def _decode_chunk(t: pa.Table, columns: list[str],
     positionally aligned.
     """
     payloads = {
-        t.column("column")[i].as_py(): t.column("payload")[i].as_py()
-        for i in range(t.num_rows)
+        name: t.column("payload")[i].as_py()
+        for i, name in enumerate(t.column("column").to_pylist())
+        if name in columns
     }
     n_rows = int(t.column("n_rows")[0].as_py())
     out: dict = {}
@@ -821,13 +805,12 @@ def decode(enc_df: DataFrame, columns: list[str] | None = None,
     task holds ~32 chunks on average, and a small read starts no more
     tasks than it has chunks.
 
-    This relational decode serves the inputs the file scan cannot: an
-    in-memory ``decode(encode(df))``, the incremental reads
-    (:func:`read_appends`, :func:`read_changes`), and the fallback of
-    :func:`decode_frozen` for ``://`` outputs and chunk-splitting
-    ``partition_by`` layouts. Reads of committed local outputs —
-    ``decode_frozen``, ``collect``, ``compact``, ``upsert``,
-    ``purge_deletes`` — scan files instead (:func:`_decode_view`).
+    Committed outputs never decode here: every read of one —
+    ``decode_frozen``, ``collect``, ``read_appends``, ``read_changes``,
+    ``compact``, ``upsert``, ``purge_deletes`` — scans its files
+    (:func:`_decode_view`). This relational decode is the in-memory
+    inverse, ``decode(encode(df))``, and the reference those reads are
+    tested against, ``decode(read_encoded(...))``.
     """
     from . import schema as schema_mod
 
@@ -851,55 +834,55 @@ def decode(enc_df: DataFrame, columns: list[str] | None = None,
     )
 
 
-# chunk-level columns: constant across a chunk's rows, so a partition_by
-# over them keeps every chunk inside one encoded file (the per-file
-# decode contract) and the file kernel can restore them from the path;
-# a partition_by over any other column splits chunks across files
-_CHUNK_CONSTANT = ("partition_id", "chunk_id", "n_rows", "status",
-                   "min_doc_id", "max_doc_id")
+def _decoded_chunks(tbl: pa.Table, run: str, columns: list[str],
+                    spec: TableSpec,
+                    drops: dict[str, tuple[int, bytes]] | None = None,
+                    keep: dict[str, tuple[int, bytes]] | None = None):
+    """(chunk_id, decoded rows) of each chunk in ``tbl``, the encoded
+    rows of whole chunks of run ``run`` (the files one encode task
+    wrote): the per-file decode of :func:`_decode_view` and of the
+    co-located join. A chunk is decoded iff it is ok — a failed chunk's
+    only trace is its error manifest row, and resume re-encodes it under
+    a later run (its own files) — its run's ``drops`` bitmap does not
+    retire it, and ``keep`` (None: all) holds it."""
+    mask = pc.fill_null(pc.equal(tbl.column("status"), "ok"),
+                        False).to_numpy(zero_copy_only=False)
+    cids = _chunk_ids(tbl)
+    if drops and run in drops:
+        mask &= ~readview.in_bitmap(drops[run], cids)
+    if keep is not None:
+        mask &= readview.in_bitmap(keep[run], cids)
+    if not mask.all():
+        tbl = tbl.filter(pa.array(mask))
+    if tbl.num_rows == 0:
+        return
+    for cid, chunk in _groups(tbl, _chunk_ids(tbl)):
+        yield int(cid), _decode_chunk(chunk, columns, spec)
 
 
 def _decode_files_kernel(columns: list[str], spec: TableSpec,
                          drops: dict[str, tuple[int, bytes]],
                          keep: dict[str, tuple[int, bytes]] | None):
-    """Per-FILE decode kernel for the shuffle-free path (arrow_scan_files
-    invokes it once per whole encoded file, so every chunk's rows are
-    present). Failed chunk rows are dropped here — a failed chunk's only
-    trace is its error manifest row, and resume re-encodes it under a
-    later run (its own files).
+    """Kernel of :func:`_decode_view`'s file scan, invoked once per scan
+    unit (``ReadView.file_groups``: whole chunks) as ``fn(path,
+    batches)``, ``path`` naming the unit's run.
 
     ``drops`` maps a run to the packed bitmap of its chunk_ids retired
     by live tombstones (readview.ReadView.drops: runs with files only,
     each bitmap spanning its run's own chunk-id range), and ``keep``
     (None: all) to the bitmap of the chunk_ids the caller selected; both
-    ride in the task closure, and the kernel looks up its file's run. A
-    chunk is decoded iff it is ok, not dropped and kept. Columns a
-    ``partition_by`` layout moved into the directory path come back from
-    their ``k=v`` segment."""
+    ride in the task closure (:func:`_decoded_chunks`). Columns a
+    ``partition_by`` layout moved into the directory path arrive as
+    strings from their ``k=v`` segment and are cast back here."""
     def fn(path, batches):
         tbl = pa.Table.from_batches(list(batches))
         if tbl.num_rows == 0:
             return
-        vals = readview.path_values(path)
-        for k, v in vals.items():
-            if k not in tbl.column_names and k in _ENCODED_PA_SCHEMA.names:
-                typ = _ENCODED_PA_SCHEMA.field(k).type
-                tbl = tbl.append_column(
-                    k, pa.array([v] * tbl.num_rows).cast(typ))
-        mask = pc.fill_null(pc.equal(tbl.column("status"), "ok"),
-                            False).to_numpy(zero_copy_only=False)
-        cids = _chunk_ids(tbl)
-        run = vals["run"]
-        if run in drops:
-            mask &= ~readview.in_bitmap(drops[run], cids)
-        if keep is not None:
-            mask &= readview.in_bitmap(keep[run], cids)
-        if not mask.all():
-            tbl = tbl.filter(pa.array(mask))
-        if tbl.num_rows == 0:
-            return
-        for _, chunk in _groups(tbl, _chunk_ids(tbl)):
-            yield from _decode_chunk(chunk, columns, spec).to_batches()
+        tbl = tbl.cast(pa.schema([_ENCODED_PA_SCHEMA.field(c)
+                                  for c in tbl.column_names]))
+        for _, rows in _decoded_chunks(tbl, readview.path_values(path)["run"],
+                                       columns, spec, drops, keep):
+            yield from rows.to_batches()
 
     return fn
 
@@ -910,13 +893,13 @@ def decode_frozen(spark: SparkSession, output_dir: str,
                   as_of: int | str | None = None) -> DataFrame:
     """Shuffle-free decode of a frozen output dir.
 
-    The encode stage co-locates every chunk's rows inside one encoded
-    file (one reduce task writes whole chunks), so the relational
-    decode's repartition moves every payload byte through an exchange
-    for nothing. Here the scan tasks read whole encoded files with
-    pyarrow and decode chunk groups in place — zero payload exchanges,
-    which at the 10^12-sequence scale is the difference between a read
-    and a full extra shuffle of the compressed table.
+    The encode stage co-locates every chunk's rows inside the files of
+    one encode task, so the scan tasks read those files whole with
+    pyarrow and decode chunk groups in place (:func:`_decode_view`):
+    zero payload exchanges, which at the 10^12-sequence scale is the
+    difference between a read and a full extra shuffle of the compressed
+    table. Local and ``://`` outputs, flat and ``partition_by`` layouts
+    all read this way.
 
     What is read is exactly the snapshot's :class:`readview.ReadView`:
     the files of the live runs (a run is live iff the snapshot log
@@ -924,9 +907,7 @@ def decode_frozen(spark: SparkSession, output_dir: str,
     its manifest dir carries ``_SUCCESS``), minus the chunks live
     tombstones retire, minus the live equality deletes. Orphan run dirs
     are never listed. ``as_of`` raises if vacuum already deleted bytes
-    the snapshot needs. Non-local (``://``) outputs, and ``partition_by``
-    layouts over a column that splits chunks across files (say
-    ``column``), decode through the relational ``decode(read_encoded(...))``.
+    the snapshot needs.
     """
     return _decode_view(spark, readview.read_view(output_dir, as_of),
                         columns, spec)
@@ -937,21 +918,22 @@ def _decode_view(spark: SparkSession, view: readview.ReadView,
                  keep: dict[str, tuple[int, bytes]] | None = None,
                  tap=None) -> DataFrame:
     """The rows of ``view``'s live chunks, or of the ``keep`` subset of
-    them, projected to ``columns`` — the one read path of committed
-    outputs (:func:`decode_frozen`, :func:`collect`, :func:`compact`,
-    :func:`upsert`, :func:`purge_deletes`).
+    them, projected to ``columns`` — the one decode of committed
+    outputs, local and ``://`` alike (:func:`decode_frozen`,
+    :func:`collect`, :func:`read_appends`, :func:`read_changes`,
+    :func:`compact`, :func:`upsert`, :func:`purge_deletes`).
 
     ``keep`` selects chunks: one packed chunk-id bitmap per run
     (``readview.bitmaps``, the form of ``view.drops``); None keeps every
-    live chunk. Only the kept runs' files are listed, and the per-file
-    kernel decodes a chunk iff it is live (after ``drops``) and kept.
-    Local outputs read in ONE stage of :func:`sources.arrow_scan_files`;
-    ``://`` outputs and chunk-splitting ``partition_by`` layouts take
-    the relational :func:`decode`, with ``keep`` as a broadcast
-    semi-join of the kept keys. ``tap`` (an arrow kernel that yields its
-    batches unchanged, ``layout.PlanTap.kernel``) sees the decoded rows
-    inside the decode's own Python stage. The view's live equality
-    deletes are anti-joined last."""
+    live chunk. Only the kept runs' files are read, in ONE stage of
+    :func:`sources.arrow_scan_files` whose scan unit is the file group of
+    one encode task in one run (``ReadView.file_groups``): whole chunks,
+    also where a ``partition_by`` over a column such as ``column`` splits
+    a chunk across ``k=v`` dirs. The kernel decodes a chunk iff it is
+    live (after ``drops``) and kept. ``tap`` (an arrow kernel that
+    yields its batches unchanged, ``layout.PlanTap.kernel``) sees the
+    decoded rows inside the scan's own Python stage. The view's live
+    equality deletes are anti-joined last."""
     from . import schema as schema_mod
     from . import sources
 
@@ -967,30 +949,26 @@ def _decode_view(spark: SparkSession, view: readview.ReadView,
     if keep is not None:
         view = dataclasses.replace(view, files={
             r: fs for r, fs in view.files.items() if r in keep})
-    files = view.all_files()
-    if not files:
+    groups = view.file_groups()
+    if not groups:
         df = spark.createDataFrame([], spec.spark_ddl(dec_cols))
-    elif "://" in view.output_dir or any(
-            set(readview.path_values(f)) - {"run", *_CHUNK_CONSTANT}
-            for f in files):
-        enc = _encoded_df(spark, view)
-        if keep is not None:
-            enc = enc.join(F.broadcast(_keep_keys(spark, keep)),
-                           ["run", "chunk_id"], "left_semi")
-        df = decode(enc, dec_cols, spec)
-        if tap is not None:
-            df = amap(df, tap, spec.spark_ddl(dec_cols))
     else:
         # physical projection: encoded files are clustered by (column,
         # chunk_id) (_write_task_files), so a skinny decode reads only
-        # the row groups whose `column` band intersects the wanted set —
-        # the fat payload columns' bytes never leave disk. Whole-file
-        # reads (all columns wanted) skip the footer pass entirely.
+        # the row groups whose `column` band intersects the wanted set,
+        # and only the `column=` dirs it wants — the fat payload
+        # columns' bytes never leave disk. Whole-file reads (all columns
+        # wanted) skip the footer pass entirely.
         rg_sel: dict[str, list[int]] | None = None
         if len(dec_cols) < len(all_cols):
             rg_sel = {}
-            for p in files:
-                rgs = sources.select_row_groups(p, "column", set(dec_cols))
+            for p in (f for g in groups for f in g):
+                band = readview.path_values(p).get("column")
+                if band is None:
+                    rgs = sources.select_row_groups(p, "column",
+                                                    set(dec_cols))
+                else:  # partition_by over `column`: the dir is the band
+                    rgs = None if band in dec_cols else []
                 if rgs is not None:
                     rg_sel[p] = rgs
         kernel = _decode_files_kernel(dec_cols, spec, view.drops, keep)
@@ -998,27 +976,14 @@ def _decode_view(spark: SparkSession, view: readview.ReadView,
             kernel = (lambda path, batches, k=kernel:
                       tap(k(path, batches)))
         df = sources.arrow_scan_files(
-            spark, files, ["chunk_id", "column", "n_rows", "status",
-                           "payload"],
+            spark, groups, ["chunk_id", "column", "n_rows", "status",
+                            "payload"],
             kernel, spec.spark_ddl(dec_cols), row_groups=rg_sel)
     if view.deletes:
         df = _apply_deletes(spark, df, view, spec)
         if dec_cols is not cols:
             df = df.select(*cols)
     return df
-
-
-def _keep_keys(spark: SparkSession,
-               keep: dict[str, tuple[int, bytes]]) -> DataFrame:
-    """(run, chunk_id) rows of a ``keep`` selection. Built from an arrow
-    table: with Arrow enabled the JVM reads it directly, where a list of
-    tuples would start a Python stage."""
-    ids = {r: readview.bitmap_ids(b) for r, b in sorted(keep.items())}
-    return spark.createDataFrame(pa.table({
-        "run": pa.array([r for r, c in ids.items() for _ in c], pa.string()),
-        "chunk_id": pa.array(np.concatenate([np.zeros(0, np.int64),
-                                             *ids.values()]), pa.int32()),
-    }))
 
 
 def _selection(keys: DataFrame
@@ -1156,7 +1121,8 @@ def _delete_keys(spark: SparkSession, view: readview.ReadView, spec: TableSpec) 
     """Distinct keys of the view's live equality-delete runs."""
     paths = [f"{_deletes_path(view.output_dir)}/run={r}"
              for r in sorted(view.deletes)]
-    return spark.read.parquet(*paths).select(spec.key).distinct()
+    return spark.read.schema(spec.spark_ddl([spec.key])).parquet(
+        *paths).distinct()
 
 
 def _apply_deletes(spark: SparkSession, df: DataFrame,
@@ -1234,6 +1200,11 @@ def read_appends(
     vacuums are metadata/physical-only and pass through. Feeds
     downstream incremental pipelines (tokenizer re-runs, index updates)
     without rescanning the 10^12-sequence table.
+
+    The appended runs decode through the file scan of every read
+    (:func:`_decode_view`) over a view of exactly those runs
+    (``readview.runs_view``: live at head or not, no drops, no
+    deletes); an appended run a later vacuum removed raises.
     """
     entries = snapshots.log(output_dir)
     if not entries:
@@ -1252,28 +1223,8 @@ def read_appends(
             f"history ({', '.join(kinds)}); read the full table at "
             f"as_of={to_seq} instead")
     runs = [e["run"] for e in in_range if e["kind"] == "append"]
-    from . import schema as schema_mod
-
-    all_cols = [c.name for c in spec.columns]
-    cols = all_cols if columns is None else schema_mod.compute_used_columns(
-        all_cols, columns=columns)
-    if not runs:
-        return spark.createDataFrame([], spec.spark_ddl(cols))
-    return decode(_runs_encoded(spark, output_dir, runs), cols, spec)
-
-
-def _runs_encoded(spark: SparkSession, output_dir: str,
-                  runs: list[str]) -> DataFrame:
-    """Encoded rows of the ok chunks of exactly ``runs`` (the runs an
-    incremental read names, live at head or not)."""
-    keys = read_manifest(spark, output_dir, raw=True).filter(
-        (F.col("status") == "ok") & F.col("run").isin(runs)
-    ).select("run", "partition_id", "chunk_id").distinct()
-    return _read_run_partitioned(
-        spark, _encoded_path(output_dir), ENCODED_RUN_DDL
-    ).filter(F.col("run").isin(runs)
-    ).join(F.broadcast(keys), ["run", "partition_id", "chunk_id"],
-           "left_semi")
+    return _decode_view(spark, readview.runs_view(output_dir, runs, entries),
+                        columns, spec)
 
 
 def read_changes(
@@ -1303,9 +1254,10 @@ def read_changes(
       publish raise for the same reason.
 
     Strictly more capable than ``read_appends`` (which refuses ALL
-    non-append history); the cost is one bounded decode job per append
-    commit in the range — at 10^12 scale each is manifest-pruned to
-    exactly that run's chunks.
+    non-append history). Each append commit is one file scan of its run
+    (:func:`_decode_view` over ``readview.runs_view``), and the scans
+    are unioned: building the frame starts no job, and its action runs
+    them all in one. An append run a later vacuum removed raises.
     """
     entries = snapshots.log(output_dir)
     if not entries:
@@ -1341,27 +1293,19 @@ def read_changes(
             raise ValueError(
                 f"changelog cannot attribute row changes through "
                 f"kind={k!r} (seq {e['seq']})")
-    removed = {r for e in entries if e["kind"] == "vacuum"
-               for r in e.get("removed_runs", [])}
-    gone = [e for e in ins_entries if e["run"] in removed]
-    if gone:
-        raise ValueError(
-            f"changelog needs append run(s) "
-            f"{sorted(e['run'] for e in gone)} whose payload was vacuumed; "
-            f"history before the vacuum is no longer row-readable")
     all_cols = [c.name for c in spec.columns]
     meta = [F.lit(None).cast("string").alias("_change_type"),
             F.lit(None).cast("long").alias("_commit_seq")]
     parts: list[DataFrame] = []
     for e in ins_entries:
         parts.append(
-            decode(_runs_encoded(spark, output_dir, [e["run"]]),
-                   columns=all_cols, spec=spec)
+            _decode_view(spark, readview.runs_view(output_dir, [e["run"]],
+                                                   entries), all_cols, spec)
             .withColumn("_change_type", F.lit("insert"))
             .withColumn("_commit_seq", F.lit(int(e["seq"])).cast("long")))
     for e in del_entries:
-        dk = spark.read.parquet(
-            f"{_deletes_path(output_dir)}/run={e['run']}").select(spec.key)
+        dk = spark.read.schema(spec.spark_ddl([spec.key])).parquet(
+            f"{_deletes_path(output_dir)}/run={e['run']}")
         cols = [F.col(spec.key).alias(c.name) if c.name == spec.key
                 else F.lit(None).cast(c.spark_type).alias(c.name)
                 for c in spec.columns]
@@ -1907,20 +1851,16 @@ def _write_run(spark: SparkSession, output_dir: str, run_id: str,
     ``plan_done_chunks``. Returns the snapshot seq, the run's summary
     sums and the job's wall ``write_s``.
     """
-    # local outputs go to tasks as absolute paths (an executor's cwd is
-    # not the driver's); an unsupported scheme fails before any job runs
-    target = output_dir if "://" in output_dir else os.path.abspath(output_dir)
-    _task_fs(target)
+    store = readview._Store(output_dir)  # a bad scheme fails before the job
     plan_fp = _plan_fingerprint(plan)
     t0 = time.perf_counter()
     commits = amap(
         packed.repartition(_n_parts(spark, plan.n_chunks), "shuffle_key"),
-        _write_kernel(target, run_id, plan_fp, spec, partition_by),
+        _write_kernel(store, run_id, plan_fp, spec, partition_by),
         _COMMIT_DDL).collect()
     write_s = time.perf_counter() - t0
     sums = {k: sum(int(r[k]) for r in commits)
             for k in ("tokens", "enc_bytes", "raw_bytes", "n_ok", "n_failed")}
-    store = readview._Store(output_dir)
     stage = f"encoded/run={run_id}"
     if replace:
         store.clear(stage)
@@ -2257,7 +2197,7 @@ def freeze(
 
     t_start = time.perf_counter()
     if "://" in output_dir:
-        _task_fs(output_dir)  # a scheme the tasks cannot write fails first
+        readview._Store(output_dir)  # a scheme pyarrow cannot open fails first
     input_df = input_path if isinstance(input_path, DataFrame) else None
     input_desc = "<dataframe>" if input_df is not None else input_path
     if branch is not None:
@@ -2930,8 +2870,8 @@ def load_output_plan(output_dir: str,
 
 def _write_report(output_dir: str, run_id: str, payload: dict) -> None:
     """Per-run JSON report, incomplete-then-final (reports.rs:51-89 analog),
-    written through :class:`readview._Store` (``os`` locally, the
-    Hadoop filesystem for ``://`` outputs). Best-effort: the manifest
+    written through :class:`readview._Store` (``pyarrow.fs``, local and
+    ``://`` alike). Best-effort: the manifest
     table (not this report) is the machine-read source of truth."""
     import json
 

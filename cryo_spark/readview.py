@@ -18,20 +18,21 @@ run targets it: :func:`tombstones` reads them as a DataFrame for the
 relational readers, and ``ReadView.drops`` packs them into one chunk-id
 bitmap per run, the form the per-file decode kernel tests against.
 
-Local outputs are listed with ``os``; ``://`` outputs through Spark's
-Hadoop filesystem (the active session), the same client their data
-reads use.
+Every output, local or ``://``, is listed and read through
+``pyarrow.fs`` (:class:`_Store`), the client the encode tasks write it
+with and the per-file decode reads it with.
 """
 
 from __future__ import annotations
 
-import contextlib
 import os
 import urllib.parse
 from dataclasses import dataclass
 
 import numpy as np
+import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.fs as pafs
 
 from . import snapshots
 
@@ -66,6 +67,17 @@ class ReadView:
 
     def all_files(self) -> list[str]:
         return [f for r in sorted(self.files) for f in self.files[r]]
+
+    def file_groups(self) -> list[list[str]]:
+        """The files in scan units: those one encode task wrote in one
+        run, its ``part-<task>`` name in every ``k=v`` dir of a
+        ``partition_by`` layout. A unit holds whole chunks; in a flat
+        run it is one file."""
+        groups: dict[tuple[str, str], list[str]] = {}
+        for r in sorted(self.files):
+            for f in self.files[r]:
+                groups.setdefault((r, f.rpartition("/")[2]), []).append(f)
+        return list(groups.values())
 
 
 def _pack(cids: np.ndarray) -> tuple[int, bytes]:
@@ -165,8 +177,7 @@ def read_view(output_dir: str, as_of: int | str | None = None,
     enc_runs = store.run_dirs("encoded")
     tomb_runs = store.run_dirs("tombstones")
     drops = _drop_bitmaps(store, tomb_runs & runs)
-    files = {r: tuple(store.parquet_files(f"encoded/run={r}"))
-             for r in sorted(runs & enc_runs)}
+    files = {r: store.encoded_files(r) for r in sorted(runs & enc_runs)}
     view = ReadView(
         output_dir=output_dir,
         runs=frozenset(runs),
@@ -193,6 +204,30 @@ def read_view(output_dir: str, as_of: int | str | None = None,
                 "hold live chunks at this snapshot (expire_snapshots "
                 "forfeits time travel past it)")
     return view
+
+
+def runs_view(output_dir: str, runs: list[str],
+              entries: list[dict]) -> ReadView:
+    """A view of exactly ``runs``, the append runs an incremental read
+    names (live at head or not): every encoded file of each, no drops,
+    no deletes. Raises when a vacuum in ``entries`` (the snapshot log)
+    removed one of them: its rows are no longer readable."""
+    removed = {r for e in entries if e["kind"] == "vacuum"
+               for r in e.get("removed_runs", [])}
+    gone = sorted(set(runs) & removed)
+    if gone:
+        raise ValueError(
+            f"incremental read needs append run(s) {gone} whose payload "
+            "was vacuumed; history before the vacuum is no longer "
+            "row-readable")
+    store = _Store(output_dir)
+    files = {r: store.encoded_files(r) for r in sorted(set(runs))}
+    none = frozenset()
+    return ReadView(output_dir=output_dir, runs=frozenset(runs), files=files,
+                    drops={}, deletes=none, vacuumed=none,
+                    tombstone_runs=none, manifest_dirs=none,
+                    manifest_gen=None, absorbed=none, plan_ids=none,
+                    done_chunks={}, ok_chunks={})
 
 
 def _max_by_plan(entries: list[dict], field: str) -> dict[str, int]:
@@ -267,43 +302,46 @@ def holding_live(t, drops: dict[str, tuple[int, bytes]]) -> set[str]:
 
 
 class _Store:
-    """Listing and small-table reads under an output dir: ``os`` and
-    pyarrow locally, Spark's Hadoop filesystem for ``://`` URIs."""
+    """Listing, small-file IO and renames under an output dir, through
+    ``pyarrow.fs`` for local and ``://`` outputs alike: the one client of
+    the driver and of the encode tasks (a store rides in the write
+    kernel's closure).
+
+    ``root`` is the dir as the caller spelled it, the prefix of every
+    path a read view lists (a ``file://`` root stays ``file://``);
+    ``base`` is its path inside ``fs``, absolute for a local dir (an
+    executor's cwd is not the driver's). A scheme pyarrow cannot open
+    raises ValueError naming it, before any job runs."""
 
     def __init__(self, root: str):
         self.root = root.rstrip("/")
-        self.spark = None
-        if "://" in root:
-            from pyspark.sql import SparkSession
+        if "://" not in root:
+            self.fs, self.base = pafs.LocalFileSystem(), os.path.abspath(root)
+            return
+        try:
+            self.fs, self.base = pafs.FileSystem.from_uri(self.root)
+        except (pa.ArrowException, OSError, ValueError) as e:
+            scheme = root.split("://", 1)[0]
+            raise ValueError(
+                f"outputs are read and written through pyarrow.fs, which "
+                f"cannot open {scheme}:// outputs ({root!r}): {e}") from e
 
-            self.spark = SparkSession.getActiveSession()
-            if self.spark is None:
-                raise ValueError(
-                    f"reading {root!r} needs an active SparkSession")
-            self._path = self.spark._jvm.org.apache.hadoop.fs.Path
-            self._fs = self._path(self.root).getFileSystem(
-                self.spark._jsc.hadoopConfiguration())
+    def _path(self, rel: str) -> str:
+        return f"{self.base}/{rel}"
 
     def _ls(self, rel: str) -> list[tuple[str, bool]]:
         """(name, is_dir) of the entries of ``rel``; [] if missing."""
-        if self.spark is None:
-            p = os.path.join(self.root, rel)
-            return ([(e.name, e.is_dir()) for e in os.scandir(p)]
-                    if os.path.isdir(p) else [])
-        p = self._path(f"{self.root}/{rel}")
-        if not self._fs.exists(p):
-            return []
-        return [(s.getPath().getName(), s.isDirectory())
-                for s in self._fs.listStatus(p)]
+        sel = pafs.FileSelector(self._path(rel), allow_not_found=True)
+        return [(i.base_name, i.type == pafs.FileType.Directory)
+                for i in self.fs.get_file_info(sel)]
 
     def run_dirs(self, rel: str) -> set[str]:
         return {n[len("run="):] for n, is_dir in self._ls(rel)
                 if is_dir and n.startswith("run=")}
 
     def exists(self, rel: str) -> bool:
-        if self.spark is None:
-            return os.path.exists(os.path.join(self.root, rel))
-        return bool(self._fs.exists(self._path(f"{self.root}/{rel}")))
+        return (self.fs.get_file_info(self._path(rel)).type
+                != pafs.FileType.NotFound)
 
     def names(self, rel: str) -> list[str]:
         """File names in ``rel`` (none when it is missing)."""
@@ -311,59 +349,30 @@ class _Store:
 
     def read_bytes(self, rel: str) -> bytes | None:
         """Contents of the file ``rel``; None when it is missing."""
-        if self.spark is None:
-            try:
-                with open(os.path.join(self.root, rel), "rb") as f:
-                    return f.read()
-            except FileNotFoundError:
-                return None
-        p = self._path(f"{self.root}/{rel}")
-        with self._hadoop_io():
-            if not self._fs.exists(p):
-                return None
-            stream = self._fs.open(p)
-            try:
-                return bytes(self.spark._jvm.org.apache.commons.io.IOUtils
-                             .toByteArray(stream))
-            finally:
-                stream.close()
+        try:
+            with self.fs.open_input_stream(self._path(rel),
+                                           compression=None) as f:
+                return f.read()
+        except FileNotFoundError:
+            return None
 
     def write_bytes(self, rel: str, data: bytes) -> None:
-        """Replace the file ``rel`` with ``data`` whole: a local file is
-        written under a hidden tmp name (which no listing or Spark read
-        picks up) and renamed into place, a Hadoop file appears when its
-        stream closes (object stores publish on close)."""
-        if self.spark is None:
-            p = os.path.join(self.root, rel)
-            d, name = os.path.split(p)
-            os.makedirs(d, exist_ok=True)
-            tmp = os.path.join(d, f".{name}.tmp")
-            with open(tmp, "wb") as f:
-                f.write(data)
-            os.replace(tmp, p)
-            return
-        with self._hadoop_io():
-            stream = self._fs.create(self._path(f"{self.root}/{rel}"), True)
-            try:
-                stream.write(data)
-            finally:
-                stream.close()
+        """Replace the file ``rel`` with ``data`` whole: written under a
+        hidden tmp name (which no listing or Spark read picks up) and
+        moved into place."""
+        d, _, name = self._path(rel).rpartition("/")
+        self.fs.create_dir(d, recursive=True)
+        with self.fs.open_output_stream(f"{d}/.{name}.tmp",
+                                        compression=None) as f:
+            f.write(data)
+        self.fs.move(f"{d}/.{name}.tmp", f"{d}/{name}")
 
     def rename(self, src: str, dst: str) -> None:
         """Move the file ``src`` to ``dst``, replacing it, creating its
-        dir: ``os.replace`` locally, a Hadoop rename for ``://``."""
-        if self.spark is None:
-            p = os.path.join(self.root, dst)
-            os.makedirs(os.path.dirname(p), exist_ok=True)
-            os.replace(os.path.join(self.root, src), p)
-            return
-        with self._hadoop_io():
-            s, d = (self._path(f"{self.root}/{x}") for x in (src, dst))
-            self._fs.mkdirs(d.getParent())
-            if self._fs.exists(d):
-                self._fs.delete(d, False)
-            if not self._fs.rename(s, d):
-                raise OSError(f"rename {s} -> {d} failed")
+        dir."""
+        d = self._path(dst)
+        self.fs.create_dir(d.rpartition("/")[0], recursive=True)
+        self.fs.move(self._path(src), d)
 
     def clear(self, rel: str) -> None:
         """Delete the visible files under ``rel``, recursively; hidden
@@ -373,27 +382,12 @@ class _Store:
                 continue
             if is_dir:
                 self.clear(f"{rel}/{name}")
-            elif self.spark is None:
-                os.remove(os.path.join(self.root, rel, name))
             else:
-                with self._hadoop_io():
-                    self._fs.delete(self._path(f"{self.root}/{rel}/{name}"),
-                                    False)
-
-    @staticmethod
-    @contextlib.contextmanager
-    def _hadoop_io():
-        """Hadoop filesystem errors surface as ``OSError``, as local ones
-        do."""
-        from py4j.protocol import Py4JJavaError
-
-        try:
-            yield
-        except Py4JJavaError as e:
-            raise OSError(str(e.java_exception)) from e
+                self.fs.delete_file(self._path(f"{rel}/{name}"))
 
     def parquet_files(self, rel: str) -> list[str]:
-        """Data files under ``rel``, recursively (partition_by dirs)."""
+        """Data files under ``rel``, recursively (partition_by dirs), as
+        paths relative to the root."""
         out = []
         for name, is_dir in sorted(self._ls(rel)):
             if name[:1] in ("_", "."):
@@ -401,48 +395,37 @@ class _Store:
             if is_dir:
                 out.extend(self.parquet_files(f"{rel}/{name}"))
             elif name.endswith(".parquet"):
-                out.append(f"{self.root}/{rel}/{name}")
+                out.append(f"{rel}/{name}")
         return out
+
+    def encoded_files(self, run: str) -> tuple[str, ...]:
+        """Encoded files of ``run``, as paths under the root."""
+        return tuple(f"{self.root}/{f}"
+                     for f in self.parquet_files(f"encoded/run={run}"))
 
     def read(self, area: str, runs: set[str], columns: list[str]):
         """``columns`` of the ``area/run=<r>`` dirs of ``runs`` in one
         read (``run`` comes from the path); None when there are no rows."""
-        import pyarrow as pa
         import pyarrow.dataset as ds
 
-        files = [f for r in sorted(runs)
+        files = [self._path(f) for r in sorted(runs)
                  for f in self.parquet_files(f"{area}/run={r}")]
         if not files:
             return None  # e.g. a zero-row rewrite's empty manifest
-        base = f"{self.root}/{area}"
-        if self.spark is not None:
-            return self._arrow(self.spark.read.option("basePath", base)
-                               .parquet(*files), columns)
         t = ds.dataset(
-            files, format="parquet", partition_base_dir=base,
+            files, filesystem=self.fs, format="parquet",
+            partition_base_dir=self._path(area),
             partitioning=ds.partitioning(pa.schema([("run", pa.string())]),
                                          flavor="hive"),
         ).to_table(columns=columns)
         return t if t.num_rows else None
 
     def read_gen(self, gen: str, runs: set[str], columns: list[str]):
-        """``columns`` of a consolidated generation's rows of ``runs``."""
-        if self.spark is not None:
-            from pyspark.sql import functions as F
-
-            df = self.spark.read.parquet(gen).filter(
-                F.col("run").isin(sorted(runs)))
-            return self._arrow(df, columns)
+        """``columns`` of a consolidated generation's rows of ``runs``
+        (``gen`` under the root, as ``ReadView.manifest_gen`` names it)."""
         import pyarrow.dataset as ds
 
-        t = ds.dataset(gen, format="parquet").to_table(
+        t = ds.dataset(self._path(gen[len(self.root) + 1:]),
+                       filesystem=self.fs, format="parquet").to_table(
             columns=columns, filter=ds.field("run").isin(sorted(runs)))
-        return t if t.num_rows else None
-
-    @staticmethod
-    def _arrow(df, columns):
-        from pyspark.sql import functions as F
-
-        t = df.select(*[F.col(c).cast("string") if c == "run" else c
-                        for c in columns]).toArrow()
         return t if t.num_rows else None

@@ -18,16 +18,20 @@ everything downstream of the scan. The reference's analog is its keyed fetch lay
 (/root/reference/crates/freeze/src/types/sources.rs:394-1124) where the
 engine, not a generic scan node, owns data acquisition.
 
-Local filesystem paths only (sandbox); an object-store deployment would
-swap the listing for the table format's manifest and pyarrow's
-filesystem layer — the task shape is unchanged.
+Every read goes through pyarrow, so a path is a local path or any URI
+``pyarrow.fs`` opens (``file://``, ``s3://``, ``gs://``, ...). Input
+discovery (:func:`supports`, :func:`_files`) lists local dirs only; a
+frozen output's files come from its read view (``readview._Store``,
+pyarrow.fs), which :func:`arrow_scan_files` takes as given.
 """
 
 from __future__ import annotations
 
 import heapq
 import os
+import urllib.parse
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..arrowutil import amap
 
 DEFAULT_TASK_BYTES = 192 << 20  # compressed bytes per scan task
+HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"  # a null k=v dir value
 
 
 def supports(input_path: str) -> bool:
@@ -185,7 +190,8 @@ def arrow_scan(
     par = max(1, spark.sparkContext.defaultParallelism)
     n_desired = max(1, -(-total // target_bytes))
     n_tasks = -(-n_desired // par) * par  # round up to full waves
-    tasks = pack_tasks(meta, max(1, -(-total // n_tasks)))
+    tasks = [[[(p, list(range(s, s + c)))] for p, s, c in zip(*t)]
+             for t in pack_tasks(meta, max(1, -(-total // n_tasks)))]
     return _run_tasks(spark, tasks, columns,
                       lambda _path, batches: kernel(batches), out_ddl)
 
@@ -218,17 +224,6 @@ def select_row_groups(path: str, column: str,
     return out
 
 
-def _runs(rgs: list[int]) -> list[tuple[int, int]]:
-    """Collapse a sorted row-group list into (start, count) runs."""
-    runs: list[tuple[int, int]] = []
-    for rg in rgs:
-        if runs and runs[-1][0] + runs[-1][1] == rg:
-            runs[-1] = (runs[-1][0], runs[-1][1] + 1)
-        else:
-            runs.append((rg, 1))
-    return runs
-
-
 def run_each(spark: SparkSession, tasks: list, fn, out_ddl: str
              ) -> DataFrame:
     """``fn(task)`` (an iterator of arrow batches) once per task, one
@@ -252,31 +247,39 @@ def run_each(spark: SparkSession, tasks: list, fn, out_ddl: str
                 out_ddl)
 
 
+def _read_unit(unit: list[tuple[str, list[int]]],
+               columns: list[str]) -> pa.Table:
+    """``columns`` of one scan unit, its files' (path, row groups), as
+    one table. A ``partition_by`` layout keeps some columns only in the
+    directory path: a column a file lacks is filled from its path's
+    ``k=v`` segment as a string (Hive layout, as Spark reads it:
+    percent-escaped, ``__HIVE_DEFAULT_PARTITION__`` for null)."""
+    tables = []
+    for path, rgs in unit:
+        pf = pq.ParquetFile(path)
+        names = set(pf.schema_arrow.names)
+        t = pf.read_row_groups(rgs, columns=[c for c in columns if c in names],
+                               use_threads=False)
+        dirs = dict(seg.split("=", 1) for seg in path.split("/")[:-1]
+                    if "=" in seg)
+        for c in columns:
+            if c not in names and c in dirs:
+                v = urllib.parse.unquote(dirs[c])
+                t = t.append_column(c, pa.array(
+                    [None if v == HIVE_NULL else v] * t.num_rows, pa.string()))
+        tables.append(t.select([c for c in columns if c in t.column_names]))
+    return pa.concat_tables(tables)
+
+
 def _run_tasks(spark, tasks, columns, kernel, out_ddl) -> DataFrame:
-    """Run ``kernel(path, batches)`` over each task's file segments."""
+    """Run ``kernel(path, batches)`` once per scan unit of each task: a
+    task is a list of units, a unit a list of (path, row groups) read
+    as one table (:func:`_read_unit`), and ``path`` its first file."""
 
     def read_task(task):
-        paths, starts, counts = task
-        # consecutive segments of the same path read as ONE kernel
-        # invocation: a row-group SELECTION (possibly non-contiguous)
-        # must not split a file's chunks across invocations — the
-        # file-granular decode contract
-        i = 0
-        while i < len(paths):
-            path = paths[i]
-            rgs: list[int] = []
-            while i < len(paths) and paths[i] == path:
-                rgs.extend(range(starts[i], starts[i] + counts[i]))
-                i += 1
-            pf = pq.ParquetFile(path)
-            # a partition_by layout keeps some columns only in the
-            # directory path: read the ones the file holds
-            names = set(pf.schema_arrow.names)
-            t = pf.read_row_groups(
-                rgs, columns=[c for c in columns if c in names],
-                use_threads=False,
-            )
-            yield from kernel(path, t.to_batches())
+        for unit in task:
+            t = _read_unit(unit, columns)
+            yield from kernel(unit[0][0], t.to_batches())
 
     return run_each(spark, tasks, read_task, out_ddl)
 
@@ -296,57 +299,58 @@ def pack_files(sizes: list[int], n_tasks: int) -> list[list[int]]:
 
 def arrow_scan_files(
     spark: SparkSession,
-    files: list[str],
+    files: list,
     columns: list[str],
     kernel,
     out_ddl: str,
     target_bytes: int = DEFAULT_TASK_BYTES,
     row_groups: dict[str, list[int]] | None = None,
 ) -> DataFrame:
-    """Arrow scan over an explicit file list with FILE-granular splits.
+    """Arrow scan over explicit scan units with UNIT-granular splits.
 
-    Unlike :func:`arrow_scan`, a file is never divided across tasks and
-    the kernel is invoked once per whole file — the contract the
-    shuffle-free decode relies on (an encoded chunk's rows never span
-    files, but do span row groups). Files pack into a wave-aligned
-    task count by bytes (:func:`pack_files`), several small ones to a
-    task; the kernel runs per file within it, as
-    ``kernel(path, batches)`` — the path carries the file's run and any
-    ``k=v`` directory values, which the file itself may not hold.
+    ``files`` lists the units: each a path, or a list of paths read
+    together. Unlike :func:`arrow_scan`, a unit is never divided across
+    tasks and the kernel is invoked once per whole unit — the contract
+    the shuffle-free decode relies on (an encoded chunk's rows never
+    span the files of one encode task, but do span row groups, and the
+    ``k=v`` dirs of a ``partition_by`` over a column such as
+    ``column``). Units pack into a wave-aligned task count by bytes
+    (:func:`pack_files`), several small ones to a task; the kernel runs
+    per unit within it, as ``kernel(path, batches)`` with ``path`` the
+    unit's first file, which carries its run and any ``k=v`` directory
+    values; columns the files keep only in their ``k=v`` dirs arrive as
+    strings (:func:`_read_unit`).
 
-    ``row_groups`` restricts each file to the given row-group subset
-    (from :func:`select_row_groups`): one kernel invocation still sees
-    all of a file's SELECTED groups together, so per-chunk decode stays
-    whole for every surviving column.
+    ``row_groups`` restricts a file to the given row-group subset (from
+    :func:`select_row_groups`), or skips it when the subset is empty:
+    one kernel invocation still sees all of a unit's SELECTED groups
+    together, so per-chunk decode stays whole for every surviving
+    column.
     """
     want = set(columns)
-    metas = []
-    for path in files:
-        md = pq.ParquetFile(path).metadata
-        rgs = (row_groups.get(path) if row_groups is not None else None)
-        if rgs is None:
-            rgs = list(range(md.num_row_groups))
-        nbytes = sum(
-            g.column(c).total_uncompressed_size
-            for rg in rgs
-            for g in [md.row_group(rg)]
-            for c in range(g.num_columns)
-            if g.column(c).path_in_schema.split(".")[0] in want
-        )
-        if rgs:  # no surviving row groups: nothing to read
-            metas.append((path, nbytes, rgs))
+    units, sizes = [], []
+    for unit in files:
+        parts, nbytes = [], 0
+        for path in [unit] if isinstance(unit, str) else unit:
+            md = pq.ParquetFile(path).metadata
+            rgs = (row_groups.get(path) if row_groups is not None else None)
+            if rgs is None:
+                rgs = list(range(md.num_row_groups))
+            nbytes += sum(
+                g.column(c).total_uncompressed_size
+                for rg in rgs
+                for g in [md.row_group(rg)]
+                for c in range(g.num_columns)
+                if g.column(c).path_in_schema.split(".")[0] in want
+            )
+            if rgs:  # no surviving row groups: nothing to read
+                parts.append((path, rgs))
+        if parts:
+            units.append(parts)
+            sizes.append(nbytes)
     par = max(1, spark.sparkContext.defaultParallelism)
-    total = sum(m[1] for m in metas)
-    n_desired = max(1, -(-total // target_bytes))
-    n_tasks = min(len(metas), -(-n_desired // par) * par)  # full waves
-    tasks: list[tuple[list[str], list[int], list[int]]] = []
-    for members in pack_files([m[1] for m in metas], n_tasks):
-        task: tuple[list[str], list[int], list[int]] = ([], [], [])
-        for i in members:
-            path, _, rgs = metas[i]
-            for start, count in _runs(rgs):
-                task[0].append(path)
-                task[1].append(start)
-                task[2].append(count)
-        tasks.append(task)
+    n_desired = max(1, -(-sum(sizes) // target_bytes))
+    n_tasks = min(len(units), -(-n_desired // par) * par)  # full waves
+    tasks = [[units[i] for i in members]
+             for members in pack_files(sizes, n_tasks)]
     return _run_tasks(spark, tasks, columns, kernel, out_ddl)

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from . import engine, layout, snapshots
+from . import engine, layout, readview, snapshots
 from .tablespec import SEQUENCES, TableSpec
 
 BATCH_STRIDE = 1 << 20  # max chunks per micro-batch before ids would collide
@@ -55,7 +55,7 @@ def stream_encode(
     if schema is None:
         schema = spec.spark_ddl()
     if "://" in output_dir:
-        engine._task_fs(output_dir)  # fail before the stream starts
+        readview._Store(output_dir)  # fail before the stream starts
     if branch is not None:
         snapshots.resolve(output_dir, f"branch:{branch}")  # fail fast
 

@@ -101,3 +101,30 @@ def test_upsert_in_range_raises_but_range_before_it_works(spark, story):
         read_changes(spark, out, 0, u["snapshot"])
     # ranges that stop before the upsert stay readable
     assert len(_changes(read_changes(spark, out, 0, 3))) == 700
+
+
+def test_three_appends_read_in_one_job(spark, tmp_path):
+    """read_changes over three appends starts no Spark job while it
+    builds its frame (no count per commit), and its action runs every
+    append's file scan in one job."""
+    src = str(tmp_path / "seqs.parquet")
+    write_sequences(src, n=900, seed=7)
+    out = str(tmp_path / "out")
+    for lo in (0, 300, 600):
+        freeze(spark, src, out, target_tokens=20_000, keys=f"{lo}:{lo + 300}")
+    sc = spark.sparkContext
+
+    def jobs(group: str, fn):
+        sc.setJobGroup(group, "read_changes job count")
+        try:
+            res = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return res, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    df, n_build = jobs("changes_build", lambda: read_changes(spark, out, 0))
+    rows, n_action = jobs("changes_action", df.collect)
+    assert (n_build, n_action) == (0, 1)
+    assert sorted((r["_commit_seq"], r["_change_type"]) for r in rows) == \
+        sorted((seq, "insert") for seq in (1, 2, 3) for _ in range(300))

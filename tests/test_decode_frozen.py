@@ -119,12 +119,13 @@ def test_layout_matches_relational(spark, sequences_path, layout_dir):
 
 
 def test_layout_no_payload_exchange_in_plan(spark, layout_dir):
-    """Only a layout that splits chunks across files (partition_by over
-    ``column``) needs the relational decode to reassemble them."""
+    """Every layout decodes through the file scan, a layout that splits
+    chunks across files (partition_by over ``column``) included: its
+    scan unit is the file group of one encode task."""
     plan = engine.decode_frozen(spark, layout_dir)._jdf.queryExecution() \
         .executedPlan().toString()
-    split = layout_dir.endswith("partition_by_column")
-    assert ("FileScan parquet" in plan) == split
+    assert "FileScan parquet" not in plan
+    assert "Exchange" not in plan
 
 
 def test_column_pruned(spark, frozen_dir):
@@ -202,9 +203,8 @@ def test_layout_keyed_reads_match_relational(spark, layout_dir):
 
 
 def test_layout_compact_matches_relational(spark, layout_dir, tmp_path):
-    """compact decodes its candidates through the file scan (the
-    relational fallback, with the kept keys semi-joined, for a
-    chunk-splitting layout) and keeps every row."""
+    """compact decodes its candidates through the file scan (by encode
+    task file group in a chunk-splitting layout) and keeps every row."""
     work = str(tmp_path / "work")
     shutil.copytree(layout_dir, work)
     _compact(spark, work)
@@ -243,14 +243,28 @@ def test_keyed_reads_as_of(spark, frozen_dir, tmp_path):
 
 
 def test_keyed_reads_uri_output(spark, sequences_path, tmp_path):
-    """A ``file://`` output decodes relationally, with the kept keys
-    semi-joined, before and after a compaction."""
+    """A ``file://`` output decodes through the same file scan, opened
+    with pyarrow, before and after a compaction."""
     out = f"file://{tmp_path}/uri"
     engine.freeze(spark, sequences_path, out, target_tokens=TARGET)
     ref = engine.decode(engine.read_encoded(spark, out))
     _assert_keyed_reads(spark, out, ref)
     _compact(spark, out)
     _assert_keyed_reads(spark, out, ref)
+
+
+def test_uri_output_no_payload_exchange_in_plan(spark, sequences_path,
+                                                tmp_path):
+    """A ``file://`` output's full and keyed reads plan no parquet scan
+    and no exchange: its files are read with pyarrow in the Python
+    workers, as a local output's are."""
+    out = f"file://{tmp_path}/uri_plan"
+    engine.freeze(spark, sequences_path, out, target_tokens=TARGET)
+    for df in (engine.decode_frozen(spark, out),
+               engine.collect(spark, out, keys="1000:+2500")):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "FileScan parquet" not in plan
+        assert "Exchange" not in plan
 
 
 @pytest.mark.parametrize("read", [dict(keys="1000:+2500"),

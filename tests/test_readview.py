@@ -142,10 +142,10 @@ def test_first_freeze_crash_leaves_a_logless_output(spark, src, tmp_path,
     assert verify_output(spark, out)["status"] in ("ok", "warn")
 
 
-def test_uri_output_lists_through_hadoop_fs(spark, src, tmp_path):
-    """A ``://`` output is listed and read through Spark's Hadoop
-    filesystem (no snapshot log: commit markers decide), tombstones
-    included."""
+def test_uri_output_lists_through_pyarrow_fs(spark, src, tmp_path):
+    """A ``://`` output is listed and read through ``pyarrow.fs`` (no
+    snapshot log: commit markers decide), tombstones included, and its
+    view keeps the caller's ``file://`` root."""
     from cryo_spark import compact
 
     out = f"file://{tmp_path}/out"

@@ -249,6 +249,22 @@ def test_read_appends_incremental_scan(spark, two_appends, tmp_path):
     assert _ids(read_appends(spark, out, 1, 2)) == second
 
 
+def test_read_appends_of_vacuumed_run_raises(spark, two_appends):
+    """An append whose run a compaction retired and vacuum deleted is no
+    longer row-readable: read_appends raises, as read_changes does,
+    instead of returning no rows."""
+    from cryo_spark import read_appends
+    from cryo_spark.engine import read_changes
+
+    _, out = two_appends
+    assert read_appends(spark, out, 1, 2).count() == 300
+    compact(spark, out, target_tokens=400_000)
+    assert vacuum(spark, out)["n_deleted_runs"] == 2
+    for read in (read_appends, read_changes):
+        with pytest.raises(ValueError, match="vacuumed"):
+            read(spark, out, 1, 2)
+
+
 def test_checkpoint_folds_log_and_replays_exactly(tmp_path):
     """checkpoint(): one file replaces N per-commit files; log(),
     rollback targets and tags replay verbatim; later commits append

@@ -328,3 +328,59 @@ def test_zip_importers_reread_only_changed_archives(tmp_path, monkeypatch):
     imp.invalidate_caches()
     assert reads == [path, path]
     assert imp.find_spec("mod_b") is not None
+
+
+def test_flat_output_scans_one_file_per_unit(spark, tmp_path, monkeypatch):
+    """On a flat local output the encode-task file groups of the scan are
+    single files: the scan plans the per-file tasks (whole files packed
+    by the bytes of the columns it reads, ``pack_files``) and runs the
+    kernel once per file."""
+    import pyarrow.parquet as pq
+
+    from cryo_spark import readview
+    from cryo_spark.engine import _decode_view
+    from cryo_spark.sources import parquet_arrow
+
+    src = str(tmp_path / "seqs.parquet")
+    write_sequences(src, n=900, seed=7)
+    out = str(tmp_path / "out")
+    for lo in (0, 300, 600):
+        freeze(spark, src, out, target_tokens=20_000, keys=f"{lo}:{lo + 300}")
+    view = readview.read_view(out)
+    files = view.all_files()
+    assert len(files) >= 3
+    assert view.file_groups() == [[f] for f in files]
+
+    read = ["chunk_id", "column", "n_rows", "status", "payload"]
+    n_rgs, sizes = [], []
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        n_rgs.append(md.num_row_groups)
+        sizes.append(sum(
+            g.column(c).total_uncompressed_size
+            for g in (md.row_group(i) for i in range(md.num_row_groups))
+            for c in range(g.num_columns)
+            if g.column(c).path_in_schema in read))
+    par = spark.sparkContext.defaultParallelism
+    n_tasks = min(len(files), par)  # a few MB: one wave
+    want = [[[(files[i], list(range(n_rgs[i])))] for i in members]
+            for members in pack_files(sizes, n_tasks)]
+
+    seen = {}
+    run_each = parquet_arrow.run_each
+
+    def spy(spark_, tasks, fn, ddl):
+        seen.update(tasks=tasks, fn=fn)
+        return run_each(spark_, tasks, fn, ddl)
+
+    monkeypatch.setattr(parquet_arrow, "run_each", spy)
+    calls = []
+
+    def tap(batches):
+        calls.append(1)
+        yield from batches
+
+    _decode_view(spark, view, None, SEQUENCES, tap=tap)
+    assert seen["tasks"] == want
+    rows = sum(b.num_rows for t in seen["tasks"] for b in seen["fn"](t))
+    assert rows == 900 and len(calls) == len(files)

@@ -20,8 +20,9 @@ parquet-level equality of the outputs read back WITHOUT Spark
   zone-map stats, and sha256 of the payload and bloom blobs
   (run id and wall_ms are per-run provenance, excluded);
 - the manifest table under the same rule;
-- two reads of the output: a ``collect(keys=...)`` and a
-  ``collect(filters=...)``, each sorted by key. The file scan packs
+- four reads of the output: a ``collect(keys=...)``, a
+  ``collect(filters=...)``, ``read_changes(out, 0)`` and
+  ``read_appends(out, 0)``, each sorted by key. The file scan packs
   files into tasks by the core count, so the reads exercise the same
   claim: what a read returns depends only on the data;
 - resume: after each case's freeze, the same input is re-frozen into
@@ -199,11 +200,17 @@ def matrix(paths: dict) -> list[tuple[str, str, dict]]:
 
 
 def _reads(spark, out: str, spec) -> dict[str, pa.Table]:
-    """A keyed and a filtered ``collect`` of ``out``, sorted by key."""
-    reads = {"keys": dict(keys=_READ_KEYS),
-             "filters": dict(filters=[_READ_FILTERS[spec.name]])}
-    return {name: engine.collect(spark, out, spec=spec, **kw).toArrow()
-            .sort_by(spec.key) for name, kw in reads.items()}
+    """A keyed and a filtered ``collect`` of ``out`` and its changelog
+    and appends since snapshot 0, each sorted by key."""
+    reads = {
+        "keys": engine.collect(spark, out, spec=spec, keys=_READ_KEYS),
+        "filters": engine.collect(spark, out, spec=spec,
+                                  filters=[_READ_FILTERS[spec.name]]),
+        "changes": engine.read_changes(spark, out, 0, spec=spec),
+        "appends": engine.read_appends(spark, out, 0, spec=spec),
+    }
+    return {name: df.toArrow().sort_by(spec.key)
+            for name, df in reads.items()}
 
 
 def _refreeze(spark, inp: str, out: str, kw: dict) -> list[str]:

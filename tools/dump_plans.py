@@ -68,11 +68,11 @@ def main() -> None:
             plan_of(dec),
         ))
 
-        # 3. relational decode (the fallback) for contrast
+        # 3. relational decode (the test reference) for contrast
         dec_rel = engine.decode(engine.read_encoded(spark, out),
                                 spec=EMBEDDINGS)
         sections.append((
-            "decode via read_encoded (relational fallback)",
+            "decode via read_encoded (the tests' reference)",
             "For contrast: FileScan parquet of the encoded table with "
             "the manifest semi-join (BroadcastHashJoin LeftSemi) and a "
             "hash repartition of payload rows — the exchange "
