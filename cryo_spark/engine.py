@@ -52,9 +52,9 @@ def _manifest_rows(enc: pa.Table, plan_fp: str) -> pa.Table:
     point-lookup / contains / purge paths ever read them. The encoded
     files carry every bloom (per-chunk metadata riding the data), so the
     manifest keeps the SLOT (schema unchanged) but writes NULL bytes;
-    pruning paths load blooms via a column-pruned projection of the
-    encoded files (:func:`read_bloom_stats`) — fetched only when a
-    point lookup actually runs.
+    pruning paths read the blooms from the read view's encoded files,
+    key-metadata columns only (:func:`read_bloom_stats`) — fetched only
+    when a point lookup actually runs.
     """
     n = enc.num_rows
     return pa.table(
@@ -109,9 +109,10 @@ _DDL_TYPES = {pa.int32(): "int", pa.int64(): "long", pa.string(): "string",
 ENCODED_DDL = ", ".join(f"{f.name} {_DDL_TYPES[f.type]}"
                         for f in _ENCODED_PA_SCHEMA)
 MANIFEST_COLUMNS = _ENCODED_PA_SCHEMA.names[:-1]  # all but the payload
-# Declared read schemas: a read given one starts no schema-inference job,
-# and ``run`` parses verbatim from its ``run=`` dir name (inference would
-# type a numeric-looking legacy run id as a number).
+# read_encoded's rows, and the manifest's declared read schema: no
+# schema-inference job, and ``run`` is the ``run=`` dir name verbatim, a
+# partition column whose filters prune dirs (inference would type a
+# numeric-looking legacy run id as a number, value and type)
 ENCODED_RUN_DDL = ENCODED_DDL + ", run string"
 MANIFEST_DDL = ", ".join(f"{f.name} {_DDL_TYPES[f.type]}"
                          for f in _ENCODED_PA_SCHEMA
@@ -860,31 +861,35 @@ def _decoded_chunks(tbl: pa.Table, run: str, columns: list[str],
         yield int(cid), _decode_chunk(chunk, columns, spec)
 
 
-def _decode_files_kernel(columns: list[str], spec: TableSpec,
-                         drops: dict[str, tuple[int, bytes]],
-                         keep: dict[str, tuple[int, bytes]] | None):
-    """Kernel of :func:`_decode_view`'s file scan, invoked once per scan
-    unit (``ReadView.file_groups``: whole chunks) as ``fn(path,
-    batches)``, ``path`` naming the unit's run.
-
-    ``drops`` maps a run to the packed bitmap of its chunk_ids retired
-    by live tombstones (readview.ReadView.drops: runs with files only,
-    each bitmap spanning its run's own chunk-id range), and ``keep``
-    (None: all) to the bitmap of the chunk_ids the caller selected; both
-    ride in the task closure (:func:`_decoded_chunks`). Columns a
-    ``partition_by`` layout moved into the directory path arrive as
-    strings from their ``k=v`` segment and are cast back here."""
-    def fn(path, batches):
+def _unit_kernel(fn):
+    """File-scan kernel calling ``fn(table, run)`` once per scan unit
+    with rows: the unit's encoded rows under their declared types (the
+    columns a ``partition_by`` layout keeps only in its ``k=v`` dirs
+    arrive as strings from the path and are cast back here) and the run
+    its path names."""
+    def kernel(path, batches):
         tbl = pa.Table.from_batches(list(batches))
-        if tbl.num_rows == 0:
-            return
-        tbl = tbl.cast(pa.schema([_ENCODED_PA_SCHEMA.field(c)
-                                  for c in tbl.column_names]))
-        for _, rows in _decoded_chunks(tbl, readview.path_values(path)["run"],
-                                       columns, spec, drops, keep):
-            yield from rows.to_batches()
+        if tbl.num_rows:
+            yield from fn(tbl.cast(pa.schema([_ENCODED_PA_SCHEMA.field(c)
+                                              for c in tbl.column_names])),
+                          readview.path_values(path)["run"])
 
-    return fn
+    return kernel
+
+
+def _scan_encoded(spark: SparkSession, units: list, columns: list[str]
+                  ) -> DataFrame:
+    """``columns`` of the encoded rows of ``units`` (paths or file
+    groups), undecoded, plus ``run``: :func:`_decode_view`'s file scan
+    without the decode."""
+    from . import sources
+
+    ddl = ", ".join(f"{c} {_DDL_TYPES[_ENCODED_PA_SCHEMA.field(c).type]}"
+                    for c in columns) + ", run string"
+    return sources.arrow_scan_files(spark, units, columns, _unit_kernel(
+        lambda tbl, run: tbl.append_column(
+            "run", pa.array([run] * tbl.num_rows, pa.string())).to_batches()),
+        ddl)
 
 
 def decode_frozen(spark: SparkSession, output_dir: str,
@@ -930,10 +935,11 @@ def _decode_view(spark: SparkSession, view: readview.ReadView,
     one encode task in one run (``ReadView.file_groups``): whole chunks,
     also where a ``partition_by`` over a column such as ``column`` splits
     a chunk across ``k=v`` dirs. The kernel decodes a chunk iff it is
-    live (after ``drops``) and kept. ``tap`` (an arrow kernel that
-    yields its batches unchanged, ``layout.PlanTap.kernel``) sees the
-    decoded rows inside the scan's own Python stage. The view's live
-    equality deletes are anti-joined last."""
+    live (after ``drops``, which also cut ``keep`` before any file is
+    chosen) and kept. ``tap`` (an arrow kernel that yields its batches
+    unchanged, ``layout.PlanTap.kernel``) sees the decoded rows inside
+    the scan's own Python stage. The view's live equality deletes are
+    anti-joined last."""
     from . import schema as schema_mod
     from . import sources
 
@@ -947,6 +953,7 @@ def _decode_view(spark: SparkSession, view: readview.ReadView,
     dec_cols = (cols if not view.deletes or spec.key in cols
                 else [spec.key, *cols])
     if keep is not None:
+        keep = readview.minus(keep, view.drops)
         view = dataclasses.replace(view, files={
             r: fs for r, fs in view.files.items() if r in keep})
     groups = view.file_groups()
@@ -971,7 +978,12 @@ def _decode_view(spark: SparkSession, view: readview.ReadView,
                     rgs = None if band in dec_cols else []
                 if rgs is not None:
                     rg_sel[p] = rgs
-        kernel = _decode_files_kernel(dec_cols, spec, view.drops, keep)
+        # drops and keep ride in the task closure (_decoded_chunks)
+        drops = view.drops
+        kernel = _unit_kernel(lambda tbl, run: (
+            b for _, rows in _decoded_chunks(tbl, run, dec_cols, spec, drops,
+                                             keep)
+            for b in rows.to_batches()))
         if tap is not None:
             kernel = (lambda path, batches, k=kernel:
                       tap(k(path, batches)))
@@ -1066,7 +1078,7 @@ def consolidate_manifests(spark: SparkSession, output_dir: str) -> dict:
     if not absorb:
         return dict(consolidated=False, reason="nothing to consolidate",
                     n_stale_cleaned=len(stale))
-    df = _read_run_partitioned(spark, man_base, MANIFEST_DDL).filter(
+    df = spark.read.schema(MANIFEST_DDL).parquet(man_base).filter(
         F.col("run").isin(sorted(absorb)))
     if view.manifest_gen is not None:
         df = spark.read.schema(MANIFEST_DDL).parquet(view.manifest_gen) \
@@ -1326,7 +1338,8 @@ def verify_output(spark: SparkSession, output_dir: str) -> dict:
     """Structural audit of a frozen output (fsck / Iceberg verify analog).
 
     Cross-checks the four metadata surfaces against each other and the
-    encoded files — all metadata-column reads, no payload decode:
+    encoded files (every committed-name file on disk, orphans included,
+    key columns only) — metadata-column reads, no payload decode:
 
     - every chunk live at the head (readview.read_view) has its encoded
       rows (missing payload = corruption, ``n_missing_payload``);
@@ -1352,11 +1365,9 @@ def verify_output(spark: SparkSession, output_dir: str) -> dict:
         return report
     keys4 = ["run", "partition_id", "chunk_id", "column"]
     ok = man.filter(F.col("status") == "ok").select(*keys4)
-    try:
-        enc = _read_run_partitioned(
-            spark, _encoded_path(output_dir), ENCODED_RUN_DDL).select(*keys4)
-    except Exception:
-        enc = ok.limit(0)
+    store = readview._Store(output_dir)
+    enc = _scan_encoded(spark, [f for r in sorted(store.run_dirs("encoded"))
+                                for f in store.encoded_files(r)], keys4[1:])
     # missing payload is corruption only for chunks LIVE at the head: a
     # retired chunk keeps its (append-only) manifest row while vacuum
     # legitimately reclaims its bytes, and a chunk of a rolled-back run
@@ -1706,7 +1717,7 @@ def _affected_chunks(spark: SparkSession, view: readview.ReadView,
     )
     probe = keys_df.limit(_BLOOM_PRUNE_MAX_KEYS + 1).collect()
     if len(probe) <= _BLOOM_PRUNE_MAX_KEYS:
-        bk = _bloom_chunk_keys(read_bloom_stats(spark, view.output_dir),
+        bk = _bloom_chunk_keys(read_bloom_stats(spark, view),
                                [str(r[0]) for r in probe], spec)
         if bk is not None:
             affected = affected.join(bk, ["run", "partition_id", "chunk_id"],
@@ -1921,38 +1932,6 @@ def _new_run_id() -> str:
     return "r" + uuid.uuid4().hex[:11]
 
 
-def _read_run_partitioned(spark: SparkSession, path: str, ddl: str,
-                          paths: list[str] | None = None) -> DataFrame:
-    """Read a run=-partitioned layout under its declared schema ``ddl``
-    (``ENCODED_RUN_DDL``, ``MANIFEST_DDL``): no schema-inference job,
-    and ``run`` is the dir-name string verbatim, a true partition column
-    whose filters prune directories. Inference would type numeric-looking
-    legacy run ids as numbers (value AND type), which the declared
-    ``run string`` rules out.
-
-    ``paths`` restricts the read to those files/dirs under ``path`` (a
-    read view's list: Spark then lists nothing else, and the ``run=``
-    segments still become the ``run`` column). Paths of different
-    ``k=v`` nestings (a ``partition_by`` freeze next to the flat run of
-    a later compaction) are read one nesting at a time and unioned by
-    name: Spark's partition discovery takes one nesting per read.
-    """
-    reader = spark.read.schema(ddl)
-    if paths is None:
-        return reader.parquet(path)
-    nestings: dict[tuple[str, ...], list[str]] = {}
-    for p in paths:
-        keys = tuple(seg.partition("=")[0]
-                     for seg in p[len(path):].split("/") if "=" in seg)
-        nestings.setdefault(keys, []).append(p)
-    dfs = [reader.option("basePath", path).parquet(*ps)
-           for ps in nestings.values()]
-    df = dfs[0]
-    for other in dfs[1:]:
-        df = df.unionByName(other)
-    return df
-
-
 def read_manifest(spark: SparkSession, output_dir: str,
                   as_of: int | str | None = None,
                   raw: bool = False) -> DataFrame | None:
@@ -1980,7 +1959,8 @@ def _manifest_df(spark: SparkSession, view: readview.ReadView,
     an ordinary column there) plus the per-run dirs it has not absorbed
     (a dir the consolidate commit absorbed but did not yet delete must
     not count twice), both read under ``MANIFEST_DDL``: building the
-    frame starts no job."""
+    frame starts no job. The run dirs are named, so Spark lists nothing
+    else, and their ``run=`` segments still become the ``run`` column."""
     man_path = _manifest_path(view.output_dir)
     dirs = view.manifest_dirs - view.absorbed
     if not raw:
@@ -1998,9 +1978,9 @@ def _manifest_df(spark: SparkSession, view: readview.ReadView,
                 f"manifest generation {view.manifest_gen!r} referenced by "
                 "the snapshot log is unreadable") from e
     if dirs:
-        legs.append(_read_run_partitioned(
-            spark, man_path, MANIFEST_DDL,
-            [f"{man_path}/run={r}" for r in sorted(dirs)]))
+        legs.append(spark.read.schema(MANIFEST_DDL)
+                    .option("basePath", man_path)
+                    .parquet(*[f"{man_path}/run={r}" for r in sorted(dirs)]))
     if not legs:
         return None
     man = legs[0]
@@ -2011,31 +1991,36 @@ def _manifest_df(spark: SparkSession, view: readview.ReadView,
     return man
 
 
-def read_encoded(spark: SparkSession, output_dir: str,
+def _as_view(source: str | readview.ReadView,
+             as_of: int | str | None = None) -> readview.ReadView:
+    return (source if isinstance(source, readview.ReadView)
+            else readview.read_view(source, as_of))
+
+
+def read_encoded(spark: SparkSession, source: str | readview.ReadView,
                  as_of: int | str | None = None) -> DataFrame:
-    """Live chunks only: encoded rows of the snapshot's live runs whose
-    chunk has an ok manifest row and no live tombstone.
+    """Live chunks only: undecoded encoded rows of the snapshot's live
+    runs whose chunk has an ok manifest row and no live tombstone, read
+    by the file scan of the view's file groups (:func:`_scan_encoded`).
+    ``source`` is a read view, or an output dir read at ``as_of``.
 
     A run that died before its commit leaves orphan files that no read
-    view lists; the manifest semi-join additionally drops encoded rows
-    a manifest does not vouch for — the atomicity discipline of the
-    reference's tmp-rename
+    view lists; the manifest semi-join (:func:`_live_chunks`, not the
+    decode kernel's drop bitmaps, so ``decode(read_encoded(...))`` stays
+    an independent reference) drops encoded rows a manifest does not
+    vouch for — the atomicity discipline of the reference's tmp-rename
     (/root/reference/crates/freeze/src/types/dataframes/export.rs:13-23)
-    done relationally. ``as_of`` reads the table at an earlier snapshot
-    (snapshots.py), raising if vacuum already deleted those bytes.
+    done relationally. ``as_of`` raises if vacuum already deleted the
+    snapshot's bytes.
     """
-    return _encoded_df(spark, readview.read_view(output_dir, as_of))
-
-
-def _encoded_df(spark: SparkSession, view: readview.ReadView) -> DataFrame:
+    view = _as_view(source, as_of)
     man = _manifest_df(spark, view)
-    files = view.all_files()
-    if man is None or not files:
+    groups = view.file_groups()
+    if man is None or not groups:
         # an empty-input freeze commits nothing: no encoded dir is a
         # valid (empty) output, not an error
         return spark.createDataFrame([], ENCODED_RUN_DDL)
-    enc = _read_run_partitioned(spark, _encoded_path(view.output_dir),
-                                ENCODED_RUN_DDL, files)
+    enc = _scan_encoded(spark, groups, _ENCODED_PA_SCHEMA.names)
     return enc.join(F.broadcast(_live_chunks(spark, view, man)),
                     ["run", "partition_id", "chunk_id"], "left_semi")
 
@@ -2179,8 +2164,8 @@ def freeze(
     re-freeze encodes nothing. Planned chunks that received no rows (a
     salted span's) never get a manifest row, so without it every
     re-freeze would count them missing and commit an empty run.
-    Metadata reads use declared schemas (``MANIFEST_DDL``,
-    ``ENCODED_RUN_DDL``), so none starts a schema-inference job.
+    Manifest reads use the declared ``MANIFEST_DDL``, so none starts a
+    schema-inference job.
 
     The write is one Spark job whose encode tasks write their own files
     with pyarrow, plus the driver's commit (:func:`_write_run`). A
@@ -2995,27 +2980,27 @@ def _key_str_forms(numbers, spec: TableSpec) -> list[str] | None:
     return None
 
 
-def read_bloom_stats(spark: SparkSession,
-                     output_dir: str) -> DataFrame | None:
-    """Bloom rows for pruning — the copy in the encoded files.
+def read_bloom_stats(spark: SparkSession, view: readview.ReadView | str
+                     ) -> DataFrame | None:
+    """Bloom rows for pruning — the copy in the encoded files of
+    ``view`` (a read view, or an output dir at its head).
 
     The manifest does not duplicate the bloom BYTES (its key_bloom slot
     is NULL, :func:`_manifest_rows`); the authoritative copy rides each
-    chunk's row in the encoded files, and this projection reads ONLY
-    (run, partition_id, chunk_id, column, status, key_bloom) —
-    column-clustered row groups mean the payload bytes are never
+    chunk's row in the encoded files, and this file scan
+    (:func:`_scan_encoded`) reads ONLY (partition_id, chunk_id, column,
+    status, key_bloom) plus ``run`` — the payload bytes are never
     touched. Loaded exclusively by the point-lookup / contains / purge
     paths, so at a 100 TB corpus the manifest scan every read pays
     shrinks by the bloom bytes while lookups keep their pruning. None
-    when nothing was ever encoded.
+    when the view has no encoded file.
     """
-    try:
-        enc = _read_run_partitioned(spark, _encoded_path(output_dir),
-                                    ENCODED_RUN_DDL)
-    except Exception:
+    view = _as_view(view)
+    if not view.files:
         return None
-    return enc.select("run", "partition_id", "chunk_id", "column",
-                      "status", "key_bloom")
+    return _scan_encoded(spark, view.all_files(),
+                         ["partition_id", "chunk_id", "column", "status",
+                          "key_bloom"])
 
 
 def _bloom_chunks(stats: DataFrame | None, column: str,
@@ -3280,15 +3265,16 @@ def _prune_chunks(spark: SparkSession, view: readview.ReadView,
         nums = _point_numbers(key_chunks)
         strs = None if nums is None else _key_str_forms(nums, spec)
         bk = (None if strs is None else _bloom_chunk_keys(
-            read_bloom_stats(spark, view.output_dir), strs, spec))
+            read_bloom_stats(spark, view), strs, spec))
         if bk is not None:
             chunks = chunks.join(F.broadcast(bk),
                                  ["run", "partition_id", "chunk_id"],
                                  "left_semi")
     if filters:
+        contains = any(op == "contains" for _, op, _ in filters)
         chunks = _zone_map_prune(
             chunks, filters, spec, man=man,
-            bloom_src=read_bloom_stats(spark, view.output_dir))
+            bloom_src=read_bloom_stats(spark, view) if contains else None)
     return _selection(chunks)[1]
 
 

@@ -803,6 +803,7 @@ def export_frozen(spark, out_dir: str, table_location: str | None = None,
     recorded in table properties (``cryo.partition-transform``).
     """
     from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
 
     from . import engine, readview
 
@@ -837,7 +838,7 @@ def export_frozen(spark, out_dir: str, table_location: str | None = None,
                 "reports which)")
 
     if partitioned:
-        enc = engine._encoded_df(spark, view)
+        enc = engine.read_encoded(spark, view)
         rows = _partition_value_map(spark, out_dir)
         if not rows:
             raise ValueError(f"{out_dir}: nothing committed to export")
@@ -900,13 +901,13 @@ def export_frozen(spark, out_dir: str, table_location: str | None = None,
     materialize = materialize or any(
         not os.path.basename(os.path.dirname(p)).startswith("run=")
         for p in paths)
+    # the registered schema, whether the data files are the engine's
+    # flat encoded files or materialised rows: the declared ENCODED_DDL
+    # (read_encoded's rows minus `run`) — no file is opened and no
+    # schema-inference job runs
+    schema = StructType.fromDDL(engine.ENCODED_DDL)
+    schema_json = schema_from_spark(schema)
     if not materialize:
-        # The data files ARE the table: take the registered schema from
-        # one file footer (driver-side, no job) rather than a
-        # read_encoded plan over every file. Every encoded file carries
-        # the fixed ENCODED_DDL shape, so any footer is authoritative.
-        schema = spark.read.parquet(paths[0]).schema
-        schema_json = schema_from_spark(schema)
         # File-granular export is only sound when the files hold EXACTLY
         # the visible rows: a purge/compact retires chunks via tombstones
         # while their run's files (also holding live chunks) stay on
@@ -919,10 +920,8 @@ def export_frozen(spark, out_dir: str, table_location: str | None = None,
     if materialize:
         mat_dir = os.path.join(loc, "data",
                                f"export-{len(_log_entries(loc)) + 1}")
-        live = engine._encoded_df(spark, view).drop("run")
-        schema = live.schema
-        schema_json = schema_from_spark(schema)
-        live.write.mode("error").parquet(mat_dir)
+        engine.read_encoded(spark, view).drop("run") \
+            .write.mode("error").parquet(mat_dir)
         paths = [os.path.join(mat_dir, n)
                  for n in sorted(os.listdir(mat_dir))
                  if n.endswith(".parquet") and not n.startswith(".")]

@@ -118,6 +118,17 @@ def bitmap_ids(bitmap: tuple[int, bytes]) -> np.ndarray:
         np.frombuffer(bits, dtype=np.uint8), bitorder="little"))
 
 
+def minus(keep: dict[str, tuple[int, bytes]],
+          drops: dict[str, tuple[int, bytes]]
+          ) -> dict[str, tuple[int, bytes]]:
+    """Per run, the ids of ``keep`` that ``drops`` does not hold; a run
+    left with none is dropped."""
+    ids = {r: bitmap_ids(b) for r, b in keep.items()}
+    ids = {r: c[~in_bitmap(drops[r], c)] if r in drops else c
+           for r, c in ids.items()}
+    return {r: _pack(c) for r, c in ids.items() if len(c)}
+
+
 def path_values(path: str) -> dict[str, str]:
     """``k=v`` directory segments of an encoded file path from its
     ``run=`` dir down: the run plus any ``partition_by`` values."""

@@ -36,12 +36,12 @@ def ship_package(spark: SparkSession) -> str:
 def warm_read_path(spark: SparkSession) -> None:
     """Run Spark's parquet read path once, on a one-row file.
 
-    The engine writes every file it owns through pyarrow in its Python
-    tasks, so nothing it writes starts Spark's parquet file source. Its
-    metadata reads (manifest, tombstones, blooms) do, and the first one
-    in a session pays the source's JVM start-up: ~1.5 s on a 4-vCPU host,
-    against ~0.1 s for later reads. Paid here, it is part of session
-    start instead of the session's first lookup or compaction."""
+    The engine writes every file it owns, and reads its encoded files,
+    through pyarrow in Python tasks, outside Spark's parquet source. Its
+    metadata reads (manifest, tombstones, delete keys) use it, and the
+    first one in a session pays its JVM start-up: ~1.5 s on a 4-vCPU
+    host, against ~0.1 s for later reads. Paid here, it is part of
+    session start instead of the session's first lookup or compaction."""
     import shutil
 
     import pyarrow as pa

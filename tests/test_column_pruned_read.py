@@ -91,8 +91,10 @@ def test_full_roundtrip_unchanged_by_clustering(spark, small_rg_frozen):
 
 
 def test_relational_projection_also_prunes(spark, small_rg_frozen):
-    """decode(read_encoded(...)) pushes `column IN (...)` to the scan;
-    with the clustered layout its answer must stay identical too."""
+    """decode(read_encoded(...)) prunes the unwanted columns' rows with
+    `column IN (...)` after read_encoded's pyarrow file scan, which
+    reads every row group; with the clustered layout its answer must
+    stay identical too."""
     seq_in, out = small_rg_frozen
     dec = engine.decode(engine.read_encoded(spark, out), ["doc_id", "n_tok"])
     want = spark.read.parquet(seq_in).select("doc_id", "n_tok")

@@ -9,12 +9,15 @@ read exactly the snapshot's read view (readview.py).
 from __future__ import annotations
 
 import os
+import re
 import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
-from cryo_spark import engine, snapshots
+from cryo_spark import engine, readview, snapshots
+from cryo_spark.engine import KEY_FMT
+from cryo_spark.tablespec import SEQUENCES
 
 TARGET = 200_000
 
@@ -48,16 +51,23 @@ def test_matches_relational(spark, frozen_dir):
 
 def test_no_payload_exchange_in_plan(spark, frozen_dir):
     """The fast plan has no exchange at all; the relational plan
-    repartitions the payload rows."""
+    repartitions the payload rows. Neither reads ``encoded/`` through
+    Spark's file source: read_encoded scans the encoded files with
+    pyarrow, and its only Spark file scans are of metadata (the
+    manifest it semi-joins)."""
     fast_plan = engine.decode_frozen(spark, frozen_dir)._jdf.queryExecution() \
         .executedPlan().toString()
-    # the payload-bearing relational plan scans parquet then exchanges;
     # the fast plan's tasks come from a range of task ids
     assert "FileScan parquet" not in fast_plan
     assert "Exchange" not in fast_plan
+    enc_plan = engine.read_encoded(spark, frozen_dir)._jdf.queryExecution() \
+        .executedPlan().toString()
+    locations = re.findall(r"Location: [^\[]*\[([^\]]*)\]", enc_plan)
+    assert locations  # the manifest scan
+    assert not [loc for loc in locations if "/encoded" in loc]
     rel_plan = engine.decode(engine.read_encoded(spark, frozen_dir)) \
         ._jdf.queryExecution().executedPlan().toString()
-    assert "FileScan parquet" in rel_plan
+    assert "Exchange" in rel_plan
 
 
 def test_orphan_run_invisible(spark, frozen_dir, tmp_path):
@@ -89,25 +99,24 @@ def test_partial_manifest_falls_back(spark, frozen_dir, tmp_path):
 
 
 @pytest.fixture(scope="module", params=["partition_by", "partition_by_chunk",
-                                        "partition_by_column", "compacted"])
+                                        "partition_by_column", "compacted",
+                                        "partition_by_compacted"])
 def layout_dir(request, spark, sequences_path, tmp_path_factory):
     """Outputs beyond the flat layout: partition_by nested dirs (over a
     column the file kernel never reads, over one it does — restored
     from the path — and over ``column``, which splits every chunk
-    across files), and a compaction whose tombstones retire some of
-    the chunks in files that keep live ones."""
-    from cryo_spark import compact
-
+    across files), a compaction whose tombstones retire some of the
+    chunks in files that keep live ones, and a compaction of a
+    partition_by output, whose flat run sits next to the ``k=v`` runs."""
     out = str(tmp_path_factory.mktemp("dfz_layout") / request.param)
     by = {"partition_by": ["partition_id"],
           "partition_by_chunk": ["chunk_id"],
-          "partition_by_column": ["column"]}.get(request.param)
+          "partition_by_column": ["column"],
+          "partition_by_compacted": ["partition_id"]}.get(request.param)
     engine.freeze(spark, sequences_path, out, target_tokens=TARGET,
                   partition_by=by)
-    if request.param == "compacted":
-        s = compact(spark, out, target_tokens=4 * TARGET, min_tokens=1 << 30,
-                    max_chunks=8)
-        assert s["n_retired"] == 8
+    if request.param.endswith("compacted"):
+        _compact(spark, out)
     return out
 
 
@@ -126,6 +135,30 @@ def test_layout_no_payload_exchange_in_plan(spark, layout_dir):
         .executedPlan().toString()
     assert "FileScan parquet" not in plan
     assert "Exchange" not in plan
+
+
+def test_layout_verifies_ok(spark, layout_dir):
+    """The audit reads every layout's encoded files, a flat compaction
+    run next to ``k=v`` runs included: no missing payload, no orphan."""
+    r = engine.verify_output(spark, layout_dir)
+    assert r["status"] == "ok", r
+
+
+def test_layout_bloom_stats(spark, layout_dir):
+    """Every layout's blooms are read: one row per ok key-column row of
+    the live runs' manifests, bloom bytes set, and a 3-key lookup's
+    bloom pruning keeps fewer chunks than the layout has."""
+    key_rows = ["run", "partition_id", "chunk_id"]
+    bs = engine.read_bloom_stats(spark, layout_dir).filter(
+        (F.col("status") == "ok") & (F.col("column") == SEQUENCES.key))
+    man = engine.read_manifest(spark, layout_dir).filter(
+        (F.col("status") == "ok") & (F.col("column") == SEQUENCES.key))
+    want = sorted(tuple(r) for r in man.select(*key_rows).collect())
+    assert sorted(tuple(r) for r in bs.select(*key_rows).collect()) == want
+    assert bs.filter(F.col("key_bloom").isNull()).count() == 0
+    bk = engine._bloom_chunk_keys(
+        bs, [KEY_FMT % n for n in (17, 4242, 9001)], SEQUENCES)
+    assert 1 <= bk.count() < len(want)
 
 
 def test_column_pruned(spark, frozen_dir):
@@ -195,6 +228,47 @@ def _compact(spark, out):
 
     assert compact(spark, out, target_tokens=4 * TARGET, min_tokens=1 << 30,
                    max_chunks=8)["n_retired"] == 8
+
+
+def test_keyed_read_opens_no_file_of_a_retired_run(spark, tmp_path,
+                                                   monkeypatch):
+    """A keyed read subtracts the retired chunks from its selection
+    before it picks files: once a compaction retires every chunk of the
+    first append, a lookup of that append's keys scans none of its
+    files."""
+    import pyarrow.parquet as pq
+
+    from cryo_spark import compact, sources
+    from cryo_spark.fixtures import generate_sequences
+
+    out = str(tmp_path / "out")
+    runs = []
+    for i in range(2):
+        src = str(tmp_path / f"in{i}.parquet")
+        pq.write_table(generate_sequences(400, seed=60 + i,
+                                          id_offset=400 * i), src)
+        runs.append(engine.freeze(spark, src, out,
+                                  target_tokens=20_000)["run"])
+    compact(spark, out, target_tokens=4 * TARGET, min_tokens=1 << 30)
+    view = readview.read_view(out)
+    first = runs[0]
+    assert view.files[first]  # retired, not yet vacuumed
+    assert len(readview.bitmap_ids(view.drops[first])) == \
+        view.ok_chunks[first]
+    scanned: list = []
+    scan = sources.arrow_scan_files
+
+    def spy(spark_, files, *a, **kw):
+        scanned.extend(f for unit in files
+                       for f in ([unit] if isinstance(unit, str) else unit))
+        return scan(spark_, files, *a, **kw)
+
+    monkeypatch.setattr(sources, "arrow_scan_files", spy)
+    got = engine.collect(spark, out, keys="0:+300").toArrow()
+    assert sorted(got.column("doc_id").to_pylist()) == \
+        [KEY_FMT % n for n in range(300)]
+    assert scanned
+    assert not [f for f in scanned if f"/run={first}/" in f]
 
 
 def test_layout_keyed_reads_match_relational(spark, layout_dir):

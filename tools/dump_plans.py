@@ -73,10 +73,13 @@ def main() -> None:
                                 spec=EMBEDDINGS)
         sections.append((
             "decode via read_encoded (the tests' reference)",
-            "For contrast: FileScan parquet of the encoded table with "
-            "the manifest semi-join (BroadcastHashJoin LeftSemi) and a "
-            "hash repartition of payload rows — the exchange "
-            "decode_frozen removes.",
+            "For contrast: the encoded rows come from the same "
+            "task-list relation and pyarrow file scan as decode_frozen's "
+            "(MapInArrow, undecoded, `run` from the path), semi-joined "
+            "with the manifest's live chunks (BroadcastHashJoin LeftSemi "
+            "over a parquet scan of the manifest — the plan's only file "
+            "scan), then hash-repartitioned by chunk with their payloads "
+            "— the exchange decode_frozen removes.",
             plan_of(dec_rel),
         ))
 
