@@ -1612,6 +1612,9 @@ def upsert(
     new run whose manifest commit atomically retires the originals —
     readers flip from old rows to the merged state in one step, and
     time travel to the pre-upsert snapshot still shows the old values.
+    The rewrite is :func:`_rewrite`'s; the batch weight its plan bound
+    adds is summed in the validation aggregate, and ``n_updated`` is
+    the affected chunks' manifest ``n_rows`` less the surviving rows.
 
     Pending merge-on-read deletes are purged first: an equality-delete
     key would otherwise mask a re-inserted row (our delete runs carry
@@ -1627,9 +1630,9 @@ def upsert(
              else spark.read.parquet(input_path))
     all_cols = [c.name for c in spec.columns]
     batch = batch.select(*all_cols)
-    n_batch, n_batch_keys = (
-        batch.agg(F.count(F.lit(1)), F.countDistinct(spec.key)).first()
-    )
+    n_batch, n_batch_keys, w_batch = batch.agg(
+        F.count(F.lit(1)), F.countDistinct(spec.key),
+        F.sum(layout.weight_expr(spec))).first()
     if n_batch == 0:
         return dict(snapshot=None, run=None, n_updated=0, n_inserted=0,
                     n_rewritten=0, wall_s=time.perf_counter() - t_start)
@@ -1654,45 +1657,34 @@ def upsert(
         raise ValueError("upsert into an empty output needs a parquet "
                          "input path (or freeze the DataFrame first)")
     bkeys = batch.select(spec.key).localCheckpoint()
-    # the chunk set, pinned on the driver once, selects the decode and
-    # is the tombstone write
-    affected, sel = _selection(
-        _affected_chunks(spark, view, man, bkeys, spec))
-    n_affected = affected.num_rows
-    old_rows = _decode_view(spark, view, None, spec, sel)
-    survivors = old_rows.join(bkeys, spec.key, "left_anti")
-    merged = survivors.select(*all_cols).unionByName(batch).localCheckpoint()
-    n_old = old_rows.count()
-    n_survive = merged.count() - n_batch
-    n_updated = n_old - n_survive
-    plan = layout.plan_chunks(merged, target_tokens, spec=spec)
-    run_id, snap = _commit_rewrite(
-        spark, output_dir, merged, plan, affected if n_affected else None,
-        spec, "rewrite", n_retired=n_affected, command="upsert")
-    summary = dict(
-        snapshot=snap, run=run_id,
-        n_updated=int(n_updated), n_inserted=int(n_batch - n_updated),
-        n_rewritten=int(n_affected), n_new_chunks=plan.n_chunks,
-        wall_s=time.perf_counter() - t_start,
-    )
-    _write_report(output_dir, run_id, dict(
-        version="cryo_spark 0.1.0", status="completed", command="upsert",
-        **summary,
-    ))
-    return summary
+    affected = _affected_chunks(spark, view, man, bkeys, spec)
+    # the surviving rows union the batch
+    return _rewrite(
+        spark, view, affected, target_tokens, spec, "rewrite", "upsert",
+        t_start, lambda n_dropped: dict(
+            n_updated=n_dropped, n_inserted=n_batch - n_dropped,
+            n_rewritten=affected.num_rows),
+        transform=lambda rows: (rows.join(bkeys, spec.key, "left_anti")
+                                .unionByName(batch)),
+        added=(n_batch, int(w_batch or 0)))
 
 
 def _affected_chunks(spark: SparkSession, view: readview.ReadView,
                      man: DataFrame, keys_df: DataFrame,
-                     spec: TableSpec) -> DataFrame:
-    """Live chunks that can contain any of the given key values.
+                     spec: TableSpec) -> pa.Table:
+    """Live chunks that can contain any of the given key values, as a
+    driver-held arrow table: (run, partition_id, chunk_id) with each
+    chunk's payload manifest ``n_rows`` and ``n_values``.
 
     Zone-map range join first (numeric compare when the key has a
     numeric form; the manifest stores str(key), so generic string keys
     compare lexicographically — exact for membership-in-range checks);
     for bounded key sets the per-chunk key blooms then cut the hash
     layout's everything-matches ranges down to the true containers
-    (+~1% FP). The keys side is the small one throughout.
+    (+~1% FP). The keys side is the small one throughout. The selected
+    ok payload rows (one per chunk of a live run) are collected once,
+    and the driver drops the retired ones with the view's drop bitmaps
+    (``readview.live_rows``), as :func:`_decode_view` cuts ``keep``.
     """
     payload_col = spec.list_column or spec.key
     try:
@@ -1702,18 +1694,15 @@ def _affected_chunks(spark: SparkSession, view: readview.ReadView,
     except ValueError:
         k_num = F.col(spec.key).cast("string")
         kmin_e, kmax_e = F.col("min_doc_id"), F.col("max_doc_id")
-    live = _live_chunks(spark, view, man)
-    ranges_df = man.filter(
-        (F.col("status") == "ok") & (F.col("column") == payload_col)
-    ).select("run", "partition_id", "chunk_id",
-             kmin_e.alias("kmin"), kmax_e.alias("kmax"))
+    chosen = ["run", "partition_id", "chunk_id", "n_rows", "n_values"]
     affected = (
-        ranges_df.join(live, ["run", "partition_id", "chunk_id"], "left_semi")
+        man.filter((F.col("status") == "ok")
+                   & (F.col("column") == payload_col))
+        .select(*chosen, kmin_e.alias("kmin"), kmax_e.alias("kmax"))
         .join(F.broadcast(keys_df.select(k_num.alias("kq"))),
               (F.col("kq") >= F.col("kmin"))
               & (F.col("kq") <= F.col("kmax")), "left_semi")
-        .select("run", "partition_id", "chunk_id")
-        .distinct()
+        .select(*chosen)
     )
     probe = keys_df.limit(_BLOOM_PRUNE_MAX_KEYS + 1).collect()
     if len(probe) <= _BLOOM_PRUNE_MAX_KEYS:
@@ -1722,7 +1711,7 @@ def _affected_chunks(spark: SparkSession, view: readview.ReadView,
         if bk is not None:
             affected = affected.join(bk, ["run", "partition_id", "chunk_id"],
                                      "left_semi")
-    return affected
+    return readview.live_rows(view, affected.toArrow())
 
 
 def purge_deletes(
@@ -1743,7 +1732,10 @@ def purge_deletes(
     clean-new-chunks — Iceberg's rewrite_data_files +
     rewrite_position_delete_files pair in one commit. Untouched chunks
     (key range disjoint from every deleted key) are not rewritten or
-    even read.
+    even read. The rewrite is :func:`_rewrite`'s: ``n_purged_rows`` is
+    the affected chunks' manifest ``n_rows`` less the surviving rows,
+    and a rewrite where none survives commits its empty run (Iceberg's
+    rewrite that adds zero files and deletes N).
     """
     t_start = time.perf_counter()
     no_op = dict(snapshot=None, run=None, n_rewritten=0, n_purged_rows=0,
@@ -1756,77 +1748,91 @@ def purge_deletes(
         return no_op
     purged = sorted(view.deletes)
     dk = _delete_keys(spark, view, spec)
-    affected, sel = _selection(_affected_chunks(spark, view, man, dk, spec))
-    n_affected = affected.num_rows
-    if n_affected == 0:
+    affected = _affected_chunks(spark, view, man, dk, spec)
+    if affected.num_rows == 0:
         # keys match nothing physical (already purged / never existed):
         # still retire the delete runs so reads stop anti-joining
         snap = snapshots.commit(output_dir, None, "purge",
                                 purged_deletes=purged)
         return dict(snapshot=snap, run=None, n_rewritten=0, n_purged_rows=0,
                     wall_s=time.perf_counter() - t_start)
-    # the rows as stored: the purged deletes are anti-joined below
-    rows = _decode_view(spark, dataclasses.replace(view, deletes=frozenset()),
-                        None, spec, sel)
-    keep = rows.join(dk, spec.key, "left_anti").localCheckpoint()
-    n_before = rows.count()
-    n_keep = keep.count()
-    if n_keep == 0:
-        # nothing survives the rewrite: commit a deletes-only snapshot —
-        # tombstones for the affected chunks plus an EMPTY manifest dir
-        # (its _SUCCESS marker alone) for the writer run (its tombstones are live iff the run is — the
-        # log entry below commits both): Iceberg's rewrite that adds
-        # zero files and deletes N. The old behavior kept
-        # merge-on-read forever here, and the suite's 'purged' pin only
-        # passed when key-bloom false positives happened to drag
-        # surviving rows into the rewrite — caught by the second-seed
-        # differential sweep (a whole per-source chunk deleted by a
-        # source-equality delete).
-        run_id = _new_run_id()
-        _write_tombstones(output_dir, run_id, affected)
-        _publish_manifest(readview._Store(output_dir), run_id, [])
-        # n_new_chunks=0 goes in the LOG entry too: verify_output's
-        # empty-manifest exemption is gated on it (only a recorded
-        # zero-chunk rewrite may pass the missing_runs check via a bare
-        # run dir; a lost append/rewrite manifest must stay corrupt).
-        # The empty plan_id says its manifest holds no plan's rows
-        # (freeze's resume gate, readview.ReadView.plan_ids)
-        snap = snapshots.commit(output_dir, run_id, "purge",
-                                purged_deletes=purged, plan_id="",
-                                n_retired=n_affected, n_new_chunks=0)
-        return dict(snapshot=snap, run=run_id, n_rewritten=n_affected,
-                    n_new_chunks=0, n_purged_rows=n_before,
-                    wall_s=time.perf_counter() - t_start)
-    plan = layout.plan_chunks(keep, target_tokens, spec=spec)
-    run_id, snap = _commit_rewrite(
-        spark, output_dir, keep, plan, affected, spec, "purge",
-        purged_deletes=purged, n_retired=n_affected)
-    summary = dict(
-        snapshot=snap, run=run_id, n_rewritten=n_affected,
-        n_new_chunks=plan.n_chunks, n_purged_rows=n_before - n_keep,
-        wall_s=time.perf_counter() - t_start,
-    )
-    _write_report(output_dir, run_id, dict(
-        version="cryo_spark 0.1.0", status="completed",
-        command="purge_deletes", **summary,
-    ))
-    return summary
+    # the rows as stored, the purged deletes anti-joined
+    return _rewrite(
+        spark, view, affected, target_tokens, spec, "purge", "purge_deletes",
+        t_start, lambda n_dropped: dict(n_rewritten=affected.num_rows,
+                                        n_purged_rows=n_dropped),
+        transform=lambda rows: rows.join(dk, spec.key, "left_anti"),
+        purged_deletes=purged)
 
 
-def _commit_rewrite(spark: SparkSession, output_dir: str, rows: DataFrame,
-                    plan: layout.ChunkPlan, retired: pa.Table | None,
-                    spec: TableSpec, kind: str, **log) -> tuple[str, int]:
-    """Commit one rewrite run (compact, upsert, purge_deletes): ``rows``
-    encoded under ``plan`` as a new run, the ``retired`` (run,
-    partition_id, chunk_id) keys tombstoned, all through
-    :func:`_write_run` — one encode+write job, then the driver's commit
-    in order: encoded files, tombstones, manifest, and the snapshot-log
-    entry that is the commit. Death anywhere before it leaves the whole
-    run invisible. Returns (run id, snapshot seq)."""
+def _rewrite(spark: SparkSession, view: readview.ReadView, chosen: pa.Table,
+             target_tokens: int, spec: TableSpec, kind: str, command: str,
+             t_start: float, fields, transform=None,
+             added: tuple[int, int] = (0, 0), shrink: bool = False,
+             report: dict | None = None, **log) -> dict | None:
+    """Rewrite the ``chosen`` live chunks as one new run that retires
+    them: the one rewrite path of :func:`compact`, :func:`upsert` and
+    :func:`purge_deletes`. ``chosen`` is held on the driver: (run,
+    partition_id, chunk_id) with each chunk's payload manifest
+    ``n_rows`` and ``n_values``. ``transform`` (DataFrame -> DataFrame)
+    turns the chunks' rows into the run's rows, adding ``added`` =
+    (rows, plan weight). In order:
+
+    1. decode the chunks from the stored view (no deletes applied);
+    2. checkpoint the rows in the job that also sums their plan
+       (``layout.PlanTap``: in the decode kernel, or as a pass-through
+       kernel over the transformed rows);
+    3. plan; with ``shrink``, return None unless the plan has fewer
+       chunks than ``chosen``;
+    4. commit through :func:`_write_run`, ``chosen`` as the tombstones,
+       logging ``n_retired``, ``n_new_chunks``, ``command`` and ``log``;
+    5. write the report: ``report`` plus the summary, the command's
+       ``fields(n_dropped)`` (the rows of ``chosen`` and ``added`` the
+       checkpoint lacks) with snapshot, run, n_new_chunks and wall_s.
+
+    The tap's bucket count comes from a bound on the weight: the chosen
+    payload ``n_values`` plus the added weight when the spec's footer
+    statistic is the payload column (exact without a transform), else
+    ``layout.weight_total`` over the rows (one job). Up to 16 target
+    chunks of it that is 256 buckets, as for the exact total; a larger
+    transformed rewrite may plan coarser buckets than ``plan_chunks``
+    would. A rewrite that keeps no row commits its empty run: no
+    encoded file, the empty plan's ``plan_id``.
+    """
+    payload_col = spec.list_column or spec.key
+    stored = dataclasses.replace(view, deletes=frozenset())
+    keep = readview.bitmaps(chosen)
+
+    def decoded(tap=None) -> DataFrame:
+        return _decode_view(spark, stored, None, spec, keep, tap=tap)
+
+    rows = None if transform is None else transform(decoded()).select(
+        *[c.name for c in spec.columns])
+    total = (int(pc.sum(chosen.column("n_values")).as_py() or 0) + added[1]
+             if spec.footer_stat_col == payload_col else
+             layout.weight_total(decoded() if rows is None else rows, spec))
+    tap = layout.PlanTap(spark, total, target_tokens, spec)
+    rows = (decoded(tap.kernel) if rows is None else
+            amap(rows, tap.kernel, spec.spark_ddl())).localCheckpoint()
+    # read before the write job, which may recompute a lost checkpoint
+    # block and so re-run the tap
+    plan, n_kept = tap.plan(), tap.n_rows
+    if shrink and plan.n_chunks >= chosen.num_rows:
+        return None
     run_id = _new_run_id()
-    res = _write_run(spark, output_dir, run_id, _packed(rows, plan, spec=spec),
-                     plan, spec, kind, retired=retired, **log)
-    return run_id, res["snapshot"]
+    res = _write_run(spark, view.output_dir, run_id,
+                     _packed(rows, plan, spec=spec), plan, spec, kind,
+                     retired=chosen, n_retired=chosen.num_rows,
+                     n_new_chunks=plan.n_chunks, command=command, **log)
+    n_chosen = int(pc.sum(chosen.column("n_rows")).as_py() or 0)
+    summary = dict(snapshot=res["snapshot"], run=run_id,
+                   **fields(n_chosen + added[0] - n_kept),
+                   n_new_chunks=plan.n_chunks,
+                   wall_s=time.perf_counter() - t_start)
+    _write_report(view.output_dir, run_id, dict(
+        version="cryo_spark 0.1.0", status="completed", command=command,
+        **(report or {}), **summary))
+    return summary
 
 
 def _write_run(spark: SparkSession, output_dir: str, run_id: str,
@@ -1836,7 +1842,8 @@ def _write_run(spark: SparkSession, output_dir: str, run_id: str,
                done_base: int | None = None, **log) -> dict:
     """Encode ``packed`` (:func:`_packed` rows of ``plan``) as run
     ``run_id`` and commit it: the one write path of :func:`freeze`,
-    :func:`_commit_rewrite` and ``streaming.stream_encode``.
+    :func:`_rewrite` (compact, upsert, purge_deletes) and
+    ``streaming.stream_encode``.
 
     One Spark job. Each task of the encode stage encodes its chunks and
     writes its own encoded file(s) and manifest part under hidden
@@ -1852,14 +1859,16 @@ def _write_run(spark: SparkSession, output_dir: str, run_id: str,
        its ``_SUCCESS`` (:func:`_publish_manifest`);
     4. appends the snapshot-log entry — the commit.
 
-    Death before step 4 leaves the run invisible. Files of other task
-    attempts keep their hidden names, which no reader or Spark listing
-    picks up; :func:`remove_orphans` deletes them. ``replace`` first
-    clears the run's committed files: a replayed stream batch re-writes
-    its run. The entry carries the ``plan_id``, the run's ok-chunk count
-    ``n_ok_chunks`` (vacuum's bound) and, given ``done_base`` (the
-    plan's chunks done before this run) and no failed chunk,
-    ``plan_done_chunks``. Returns the snapshot seq, the run's summary
+    A task with no rows writes nothing, so a zero-chunk plan commits a
+    run with no encoded file and a manifest dir holding only its
+    ``_SUCCESS``. Death before step 4 leaves the run invisible. Files
+    of other task attempts keep their hidden names, which no reader or
+    Spark listing picks up; :func:`remove_orphans` deletes them.
+    ``replace`` first clears the run's committed files: a replayed
+    stream batch re-writes its run. The entry carries the ``plan_id``,
+    the run's ok-chunk count ``n_ok_chunks`` (vacuum's bound) and,
+    given ``done_base`` (the plan's chunks done before this run) and no
+    failed chunk, ``plan_done_chunks``. Returns the snapshot seq, the run's summary
     sums and the job's wall ``write_s``.
     """
     store = readview._Store(output_dir)  # a bad scheme fails before the job
@@ -2391,7 +2400,8 @@ def compact(
     re-encode them through the normal plan/pack/encode path as one new
     run, and atomically retire the originals via tombstones.
 
-    The rewrite is one encode+write job whose tasks write the new run's
+    The rewrite is :func:`_rewrite`'s, shared with upsert and
+    purge_deletes: one encode+write job whose tasks write the new run's
     files themselves (:func:`_write_run`, shared with freeze). Commit
     order makes the swap atomic: the driver renames the encoded files
     into place, then writes the tombstone file (``tombstones/run=<new>``),
@@ -2420,13 +2430,13 @@ def compact(
     One metadata pass: a single query over the live ok payload rows
     (minus the live tombstones) collects, smallest first, the chunks
     under ``min_tokens`` or at most ``target_tokens`` with their
-    ``n_values`` — at most ``max_chunks`` rows on the driver — and
-    :func:`_compaction_set` picks the candidates from them there.
-    That arrow table is then the decode selection, the plan's weight
-    total (when the spec's footer statistic is the payload column, so
-    planning runs no total job) and the tombstone file, which the
-    driver writes itself (:func:`_write_tombstones`). The plan
-    histogram is summed by the decode job that checkpoints the
+    ``n_rows`` and ``n_values`` — at most ``max_chunks`` rows on the
+    driver — and :func:`_compaction_set` picks the candidates from
+    them there. That arrow table is then the decode selection, the
+    plan's weight total (when the spec's footer statistic is the
+    payload column, so planning runs no total job) and the tombstone
+    file, which the driver writes itself (:func:`_write_tombstones`).
+    The plan histogram is summed by the decode job that checkpoints the
     candidates' rows (``layout.PlanTap``), so compaction runs the
     candidate query, that decode and the encode+write job: 4 jobs, 5
     with live tombstones to broadcast.
@@ -2445,7 +2455,7 @@ def compact(
     # the live writers' tombstones need removing
     sizes = man.filter(
         (F.col("status") == "ok") & (F.col("column") == payload_col)
-    ).select("run", "partition_id", "chunk_id", "n_values")
+    ).select("run", "partition_id", "chunk_id", "n_rows", "n_values")
     ts = readview.tombstones(spark, view)
     if ts is not None:
         sizes = sizes.join(F.broadcast(ts),
@@ -2459,44 +2469,15 @@ def compact(
     n_cand = cand.num_rows
     if n_cand < 2:
         return no_op
-    # Rows move as stored: pending equality deletes stay merge-on-read
-    # until purge_deletes
-    stored = dataclasses.replace(view, deletes=frozenset())
-    keep = readview.bitmaps(cand)
-    # the payload column's n_values sum is the plan weight exactly when
-    # the weight's footer statistic is that column: no total job then
-    total = (int(pc.sum(cand.column("n_values")).as_py())
-             if spec.footer_stat_col == payload_col else
-             layout.weight_total(_decode_view(spark, stored, None, spec, keep),
-                                 spec))
-    # materialize once, the plan histogram summed by the same job:
-    # planning and encoding would otherwise each re-run the decode of
-    # every candidate chunk
-    tap = layout.PlanTap(spark, total, target_tokens, spec)
-    rows = _decode_view(spark, stored, None, spec, keep,
-                        tap=tap.kernel).localCheckpoint()
-    plan = tap.plan()
-    if plan.n_chunks >= n_cand:
-        # rewrite would not shrink the layout (e.g. singleton small
-        # chunks in distinct source partitions): guarantee monotone
-        # progress / idempotence by writing nothing
-        return no_op
-    run_id, snap = _commit_rewrite(
-        spark, output_dir, rows, plan, cand, spec,
-        "rewrite", n_retired=n_cand, command="compact")
-    summary = dict(
-        snapshot=snap,
-        n_compacted=n_cand,
-        n_new_chunks=plan.n_chunks,
-        n_retired=n_cand,
-        run=run_id,
-        wall_s=time.perf_counter() - t_start,
-    )
-    _write_report(output_dir, run_id, dict(
-        version="cryo_spark 0.1.0", status="completed", command="compact",
-        target_tokens=target_tokens, min_tokens=min_tokens, **summary,
-    ))
-    return summary
+    # a rewrite that would not shrink the layout (e.g. singleton small
+    # chunks in distinct source partitions) writes nothing: monotone
+    # progress / idempotence
+    summary = _rewrite(
+        spark, view, cand, target_tokens, spec, "rewrite", "compact",
+        t_start, lambda _: dict(n_compacted=n_cand, n_retired=n_cand),
+        shrink=True, report=dict(target_tokens=target_tokens,
+                                 min_tokens=min_tokens))
+    return no_op if summary is None else summary
 
 
 def _compaction_set(rows: pa.Table, view: readview.ReadView,
@@ -2515,10 +2496,8 @@ def _compaction_set(rows: pa.Table, view: readview.ReadView,
     n = rows.column("n_values").to_numpy(zero_copy_only=False)
     small = n < min_tokens
     names, inv = np.unique(runs, return_inverse=True)
-    live = np.array([
-        view.ok_chunks.get(r, -1) - (len(readview.bitmap_ids(view.drops[r]))
-                                     if r in view.drops else 0)
-        for r in names], dtype=np.int64)
+    live = np.array([readview.n_live(view, r) for r in names],
+                    dtype=np.int64)
     whole = ((np.bincount(inv, weights=small) > 0)
              & (np.bincount(inv) == live)
              & (np.bincount(inv, weights=np.where(small, 0, n))
@@ -2567,8 +2546,7 @@ def vacuum(spark: SparkSession, output_dir: str) -> dict:
     # is always tested). Runs committed to any branch stay reachable
     # from that branch's head even though main's visibility excludes
     # them
-    cand = {r for r, d in view.drops.items()
-            if len(readview.bitmap_ids(d)) >= view.ok_chunks.get(r, 0)}
+    cand = {r for r in view.drops if readview.n_live(view, r) <= 0}
     cand -= snapshots.branch_data_runs(output_dir)
     man = None if not cand else _manifest_df(
         spark, dataclasses.replace(view, runs=frozenset(cand)))
@@ -2990,15 +2968,19 @@ def read_bloom_stats(spark: SparkSession, view: readview.ReadView | str
     chunk's row in the encoded files, and this file scan
     (:func:`_scan_encoded`) reads ONLY (partition_id, chunk_id, column,
     status, key_bloom) plus ``run`` — the payload bytes are never
-    touched. Loaded exclusively by the point-lookup / contains / purge
-    paths, so at a 100 TB corpus the manifest scan every read pays
-    shrinks by the bloom bytes while lookups keep their pruning. None
-    when the view has no encoded file.
+    touched. Loaded exclusively by the point-lookup / contains /
+    upsert / purge paths, so at a 100 TB corpus the manifest scan every
+    read pays shrinks by the bloom bytes while lookups keep their
+    pruning. A run whose drop bitmap retires every ok chunk its writer
+    stamped (``readview.n_live`` 0, vacuum's test) is not scanned. None
+    when no file is left to scan.
     """
     view = _as_view(view)
-    if not view.files:
+    files = [f for r in sorted(view.files) if readview.n_live(view, r) != 0
+             for f in view.files[r]]
+    if not files:
         return None
-    return _scan_encoded(spark, view.all_files(),
+    return _scan_encoded(spark, files,
                          ["partition_id", "chunk_id", "column", "status",
                           "key_bloom"])
 

@@ -342,7 +342,8 @@ def _n_buckets_for(total_tokens: int, target_tokens: int) -> int:
     return min(MAX_BUCKETS, max(256, needed * BUCKETS_PER_CHUNK))
 
 
-def _weight_expr(spec: TableSpec):
+def weight_expr(spec: TableSpec):
+    """Per-row plan weight, the column :func:`weight_total` sums."""
     w = spec.weight_col
     if w is None:
         return F.lit(1)
@@ -385,7 +386,7 @@ def _zorder_bounds_of(df: DataFrame, spec: TableSpec) -> dict:
             f"zorder layout needs a scalar int weight column; table "
             f"{spec.name!r} has {spec.weight!r}")
     knum = _key_num_expr(spec)
-    w = _weight_expr(spec)
+    w = weight_expr(spec)
     gcol = tablespec.partition_expr(spec).alias("s")
     rows = df.groupBy(gcol).agg(
         F.min(knum).alias("klo"), F.max(knum).alias("khi"),
@@ -464,6 +465,7 @@ class PlanTap:
     Each task's histogram reaches the driver with its result, once per
     successful task; a recomputation of a lost checkpoint block adds to
     the accumulator after :meth:`plan` ran, so it cannot skew the plan.
+    The rows the kernel saw are counted the same way (``n_rows``).
     """
 
     def __init__(self, spark, total_tokens: int, target_tokens: int,
@@ -471,8 +473,10 @@ class PlanTap:
         self.n_buckets = _n_buckets_for(total_tokens, target_tokens)
         self.target_tokens = target_tokens
         self._acc = spark.sparkContext.accumulator(None, _HistSum())
-        acc, hist, cols = (self._acc, _hist_kernel(self.n_buckets, spec),
-                           spec.plan_columns())
+        self._rows = spark.sparkContext.accumulator(0)
+        acc, rows, hist, cols = (self._acc, self._rows,
+                                 _hist_kernel(self.n_buckets, spec),
+                                 spec.plan_columns())
 
         def kernel(batches):
             seen = []  # only the plan columns wait for the last batch
@@ -480,10 +484,16 @@ class PlanTap:
                 seen.append(pa.RecordBatch.from_arrays(
                     [b.column(c) for c in cols], names=cols))
                 yield b
+            rows.add(sum(b.num_rows for b in seen))
             for h in hist(iter(seen)):
                 acc.add(pa.Table.from_batches([h]))
 
         self.kernel = kernel
+
+    @property
+    def n_rows(self) -> int:
+        """Rows the kernel passed through, once its job has run."""
+        return self._rows.value
 
     def plan(self) -> ChunkPlan:
         t = self._acc.value
@@ -496,7 +506,7 @@ class PlanTap:
 
 def weight_total(df: DataFrame, spec: TableSpec = SEQUENCES) -> int:
     """Total plan weight of ``df``'s rows (one tiny agg job)."""
-    return int(df.agg(F.sum(_weight_expr(spec)).alias("t")).first()["t"] or 0)
+    return int(df.agg(F.sum(weight_expr(spec)).alias("t")).first()["t"] or 0)
 
 
 def plan_chunks_arrow(

@@ -129,6 +129,31 @@ def minus(keep: dict[str, tuple[int, bytes]],
     return {r: _pack(c) for r, c in ids.items() if len(c)}
 
 
+def n_live(view: ReadView, run: str) -> int:
+    """Live ok chunks of ``run``: the ``n_ok_chunks`` its writer stamped
+    less the ids its drop bitmap holds; -1 without the stamp (unknown).
+    0 means every chunk is retired: vacuum tests such a run, and the
+    bloom scan skips its files."""
+    if run not in view.ok_chunks:
+        return -1
+    return view.ok_chunks[run] - (len(bitmap_ids(view.drops[run]))
+                                  if run in view.drops else 0)
+
+
+def live_rows(view: ReadView, t: pa.Table) -> pa.Table:
+    """The rows of the arrow table ``t`` (``run``, ``chunk_id``: ok
+    manifest rows of live runs) whose chunk is live in ``view``: its run
+    has files and its drop bitmap does not hold it. The driver's form of
+    the decode kernel's test."""
+    runs = t.column("run").to_numpy(zero_copy_only=False)
+    cids = t.column("chunk_id").to_numpy(zero_copy_only=False)
+    live = np.isin(runs, list(view.files))
+    for r, d in view.drops.items():
+        m = runs == r
+        live[m] &= ~in_bitmap(d, cids[m])
+    return t.filter(pa.array(live))
+
+
 def path_values(path: str) -> dict[str, str]:
     """``k=v`` directory segments of an encoded file path from its
     ``run=`` dir down: the run plus any ``partition_by`` values."""
@@ -151,18 +176,19 @@ def read_view(output_dir: str, as_of: int | str | None = None,
     ``files`` instead.
 
     ``plan_ids`` holds the ``plan_id`` of each live run's log entry:
-    every writer stamps the plan its manifest rows carry ('' for a
-    rewrite that wrote no rows). A run whose entry carries none (a run
-    the log's first entry adopted from marker commits, an entry older
-    than the stamp) counts as None, and so does every run of a log-less
-    output. freeze reads it to skip its resume bitmap when no live run
-    can hold rows of its plan. ``done_chunks`` maps a plan_id to the
-    ``plan_done_chunks`` of its live freeze entries: how many of the
-    plan's chunks held manifest rows once a run that left none of them
-    missing (none failed) committed. ``ok_chunks`` maps a live run to
-    the ``n_ok_chunks`` its writer stamped (engine._write_run): how many
-    ok chunks it committed, so vacuum tests a run only once its drop
-    bitmap holds that many ids.
+    every writer stamps the plan its manifest rows carry (a rewrite
+    that wrote no rows stamps the empty plan's). A run whose entry
+    carries none (a run the log's first entry adopted from marker
+    commits, an entry older than the stamp) counts as None, and so
+    does every run of a log-less output. freeze reads it to skip its
+    resume bitmap when no live run can hold rows of its plan.
+    ``done_chunks`` maps a plan_id to the ``plan_done_chunks`` of its
+    live freeze entries: how many of the plan's chunks held manifest
+    rows once a run that left none of them missing (none failed)
+    committed. ``ok_chunks`` maps a live run to the ``n_ok_chunks`` its
+    writer stamped (engine._write_run): how many ok chunks it
+    committed, so vacuum tests a run only once its drop bitmap holds
+    that many ids.
     """
     store = _Store(output_dir)
     entries = snapshots.log(output_dir)

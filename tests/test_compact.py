@@ -166,11 +166,16 @@ def test_compacted_payload_not_read_twice(spark, frozen):
     assert len(runs) == 2
 
 
-def test_plan_tap_equals_plan_chunks(spark, sequences_path):
+def test_plan_tap_equals_plan_chunks(spark, sequences_path, tmp_path,
+                                    monkeypatch):
     """Compaction plans in the job that checkpoints its rows: the
     histogram rides in an accumulator (``layout.PlanTap``), and the plan
-    is the one ``plan_chunks`` computes with its own histogram job."""
-    from cryo_spark import layout
+    is the one ``plan_chunks`` computes with its own histogram job.
+    upsert and purge_deletes plan the same way over their transformed
+    rows: the plan they encode is ``plan_chunks``' over the same
+    checkpointed rows, given the bound the tap took its bucket count
+    from (the retired chunks' payload n_values, plus the batch weight)."""
+    from cryo_spark import delete_where, engine, layout, purge_deletes, upsert
     from cryo_spark.arrowutil import amap
     from cryo_spark.tablespec import SEQUENCES
 
@@ -182,6 +187,48 @@ def test_plan_tap_equals_plan_chunks(spark, sequences_path):
         rows = amap(df, tap.kernel, SEQUENCES.spark_ddl()).localCheckpoint()
         assert rows.count() == df.count()
         assert tap.plan() == layout.plan_chunks(df, target)
+        assert tap.n_rows == df.count()
+
+    encoded, totals = [], []
+    packed, plan_tap = engine._packed, layout.PlanTap
+
+    def spy_packed(rows, plan, *a, **kw):
+        encoded.append((rows, plan))
+        return packed(rows, plan, *a, **kw)
+
+    class Tap(plan_tap):
+        def __init__(self, spark_, total_tokens, *a, **kw):
+            totals.append(total_tokens)
+            super().__init__(spark_, total_tokens, *a, **kw)
+
+    out = str(tmp_path / "out")
+    freeze(spark, sequences_path, out, target_tokens=SMALL)
+    monkeypatch.setattr(engine, "_packed", spy_packed)
+    monkeypatch.setattr(layout, "PlanTap", Tap)
+
+    def bound(run: str) -> int:
+        """Payload n_values of the chunks ``run`` retired."""
+        ts = spark.read.parquet(f"{out}/tombstones/run={run}") \
+            .withColumnRenamed("target_run", "run")
+        return read_manifest(spark, out).filter(F.col("column") == "tokens") \
+            .join(ts, ["run", "partition_id", "chunk_id"], "left_semi") \
+            .agg(F.sum("n_values")).first()[0]
+
+    batch = df.filter(F.col("doc_id") < "doc-000000000300") \
+        .withColumn("tokens", F.reverse("tokens"))
+    u = upsert(spark, out, batch, target_tokens=SMALL)
+    assert u["n_updated"] == 300 and u["n_inserted"] == 0
+    assert totals[-1] == bound(u["run"]) + layout.weight_total(batch)
+    delete_where(spark, out, keys="1000:+400")
+    p = purge_deletes(spark, out, target_tokens=SMALL)
+    assert p["n_purged_rows"] == 400
+    assert totals[-1] == bound(p["run"])
+    assert len(encoded) == 2
+    for (rows, plan), n_new, bound_tokens in zip(
+            encoded, (u["n_new_chunks"], p["n_new_chunks"]), totals[-2:]):
+        assert plan.n_chunks == n_new > 0
+        assert plan == layout.plan_chunks(rows, SMALL,
+                                          total_tokens=bound_tokens)
 
 
 def test_compaction_set_takes_a_rest_only_when_every_live_chunk_is_seen():

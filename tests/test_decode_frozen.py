@@ -230,15 +230,12 @@ def _compact(spark, out):
                    max_chunks=8)["n_retired"] == 8
 
 
-def test_keyed_read_opens_no_file_of_a_retired_run(spark, tmp_path,
-                                                   monkeypatch):
-    """A keyed read subtracts the retired chunks from its selection
-    before it picks files: once a compaction retires every chunk of the
-    first append, a lookup of that append's keys scans none of its
-    files."""
+def _retire_first_append(spark, tmp_path) -> tuple[str, str]:
+    """Two 400-doc appends, then a compaction that retires every chunk
+    of the first (not yet vacuumed): (output dir, first run)."""
     import pyarrow.parquet as pq
 
-    from cryo_spark import compact, sources
+    from cryo_spark import compact
     from cryo_spark.fixtures import generate_sequences
 
     out = str(tmp_path / "out")
@@ -255,6 +252,13 @@ def test_keyed_read_opens_no_file_of_a_retired_run(spark, tmp_path,
     assert view.files[first]  # retired, not yet vacuumed
     assert len(readview.bitmap_ids(view.drops[first])) == \
         view.ok_chunks[first]
+    return out, first
+
+
+def _spy_scanned(monkeypatch) -> list:
+    """Every file path ``sources.arrow_scan_files`` is handed from now on."""
+    from cryo_spark import sources
+
     scanned: list = []
     scan = sources.arrow_scan_files
 
@@ -264,9 +268,39 @@ def test_keyed_read_opens_no_file_of_a_retired_run(spark, tmp_path,
         return scan(spark_, files, *a, **kw)
 
     monkeypatch.setattr(sources, "arrow_scan_files", spy)
+    return scanned
+
+
+def test_keyed_read_opens_no_file_of_a_retired_run(spark, tmp_path,
+                                                   monkeypatch):
+    """A keyed read subtracts the retired chunks from its selection
+    before it picks files: once a compaction retires every chunk of the
+    first append, a lookup of that append's keys scans none of its
+    files."""
+    out, first = _retire_first_append(spark, tmp_path)
+    scanned = _spy_scanned(monkeypatch)
     got = engine.collect(spark, out, keys="0:+300").toArrow()
     assert sorted(got.column("doc_id").to_pylist()) == \
         [KEY_FMT % n for n in range(300)]
+    assert scanned
+    assert not [f for f in scanned if f"/run={first}/" in f]
+
+
+def test_point_lookup_blooms_skip_a_retired_run(spark, tmp_path,
+                                                monkeypatch):
+    """The key-bloom scan of a point lookup skips a run whose drop bitmap
+    retires every ok chunk its writer stamped, as the decode scan does:
+    none of the first append's files is handed to either scan, and the
+    rows are the live table's."""
+    out, first = _retire_first_append(spark, tmp_path)
+    want = sorted(
+        tuple(r) for r in engine.decode(engine.read_encoded(spark, out))
+        .filter(F.col("doc_id").isin([KEY_FMT % n for n in (5, 7, 9)]))
+        .collect())
+    scanned = _spy_scanned(monkeypatch)
+    got = engine.collect(spark, out, keys="5 7 9")
+    assert sorted(tuple(r) for r in got.collect()) == want
+    assert [r[0] for r in want] == [KEY_FMT % n for n in (5, 7, 9)]
     assert scanned
     assert not [f for f in scanned if f"/run={first}/" in f]
 

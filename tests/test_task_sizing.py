@@ -204,10 +204,13 @@ def test_metadata_jobs_per_call(spark, tmp_path):
     log-gated resume bitmap, compaction sets held on the driver, a
     compaction plan summed by the job that checkpoints its rows, and one
     encode+write job per run: the tasks write their files and manifest
-    parts, so no job reads them back)."""
+    parts, so no job reads them back). On a table of its own, a 50-row
+    upsert and a purge of 50 deleted keys start at most 13 and 11: their
+    plans too are summed by the job that checkpoints their rows, and
+    their counts come from the manifest and that checkpoint."""
     import pyarrow.parquet as pq
 
-    from cryo_spark import vacuum
+    from cryo_spark import delete_where, purge_deletes, upsert, vacuum
     from cryo_spark.fixtures import generate_sequences
 
     out = str(tmp_path / "out")
@@ -216,6 +219,21 @@ def test_metadata_jobs_per_call(spark, tmp_path):
         inputs.append(str(tmp_path / f"b{i}.parquet"))
         pq.write_table(generate_sequences(400, seed=70 + i, id_offset=i * 400),
                        inputs[-1])
+    rw = str(tmp_path / "rewrites")
+    for p in inputs:
+        freeze(spark, p, rw, target_tokens=20_000)
+    batch = str(tmp_path / "upsert.parquet")
+    pq.write_table(generate_sequences(50, seed=99, id_offset=1175), batch)
+    u, n = _jobs(spark, "meta_upsert", lambda: upsert(
+        spark, rw, batch, target_tokens=20_000))
+    assert (u["n_updated"], u["n_inserted"]) == (25, 25)
+    assert n <= 13, f"upsert ran {n} jobs"
+    assert delete_where(spark, rw, keys="100:150")["n_deleted"] == 50
+    p, n = _jobs(spark, "meta_purge", lambda: purge_deletes(
+        spark, rw, target_tokens=20_000))
+    assert p["n_purged_rows"] == 50 and p["n_new_chunks"] > 0
+    assert n <= 11, f"purge_deletes ran {n} jobs"
+    assert collect(spark, rw).count() == 1175
     freeze(spark, inputs[0], out, target_tokens=20_000)
     _assert_committed_layout(out)
     for i in (1, 2):

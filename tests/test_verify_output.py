@@ -153,3 +153,59 @@ def test_rollback_past_compaction_flags_lost_payload(spark, tmp_path):
     r = verify_output(spark, out)
     assert r["status"] == "corrupt", r
     assert r["n_missing_payload"] > 0, r
+
+
+def test_zero_survivor_purge_verifies_ok(spark, tmp_path):
+    """A purge whose rewrite keeps no row commits an empty run (no
+    encoded file, an empty manifest dir with its ``_SUCCESS``, a log
+    entry with ``n_new_chunks=0``): the missing-runs rule accepts it."""
+    import numpy as np
+    import pandas as pd
+
+    from cryo_spark import engine, snapshots
+
+    n = 300
+    pdf = pd.DataFrame({
+        "doc_id": [f"doc-{i:09d}" for i in range(n)],
+        "tokens": [np.arange(20, dtype=np.int32) for _ in range(n)],
+        "n_tok": np.full(n, 20, dtype=np.int32),
+        "source": [("solo" if i % 10 == 0 else "bulk") for i in range(n)],
+    })
+    src = str(tmp_path / "in.parquet")
+    spark.createDataFrame(pdf, engine.SEQUENCES_DDL).write.parquet(src)
+    out = str(tmp_path / "out")
+    freeze(spark, src, out, target_tokens=100_000)
+    assert delete_where(spark, out,
+                        filters=[("source", "=", "solo")])["n_deleted"] == 30
+    p = purge_deletes(spark, out, target_tokens=100_000)
+    assert p["n_new_chunks"] == 0 and p["n_purged_rows"] == 30
+    entry = snapshots.log(out)[-1]
+    assert entry["run"] == p["run"] and entry["n_new_chunks"] == 0
+    assert not os.path.exists(f"{out}/encoded/run={p['run']}")
+    assert os.listdir(f"{out}/manifest/run={p['run']}") == ["_SUCCESS"]
+    r = verify_output(spark, out)
+    assert r["status"] == "ok", r
+    assert r["missing_runs"] == []
+
+
+def test_lost_append_manifest_is_corrupt(spark, frozen):
+    """An append whose manifest parquet is gone while its dir and
+    ``_SUCCESS`` stay reads corrupt and names the run: only a logged
+    zero-chunk rewrite may pass the missing-runs rule on a bare dir."""
+    import pyarrow.parquet as pq
+
+    from cryo_spark.fixtures import generate_sequences
+
+    _, out = frozen
+    src = os.path.join(os.path.dirname(out), "more.parquet")
+    pq.write_table(generate_sequences(200, seed=24, id_offset=400), src)
+    run = freeze(spark, src, out, target_tokens=30_000)["run"]
+    assert run is not None
+    parts = glob.glob(f"{out}/manifest/run={run}/*.parquet")
+    assert parts
+    for f in parts:
+        os.remove(f)
+    assert os.path.exists(f"{out}/manifest/run={run}/_SUCCESS")
+    r = verify_output(spark, out)
+    assert r["status"] == "corrupt", r
+    assert r["missing_runs"] == [run]

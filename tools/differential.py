@@ -28,7 +28,12 @@ parquet-level equality of the outputs read back WITHOUT Spark
 - resume: after each case's freeze, the same input is re-frozen into
   the same output on both sides. Each side must encode nothing
   (``n_encoded == 0``) and ``decode_frozen`` must return as many rows
-  as before the re-freeze.
+  as before the re-freeze;
+- rewrites: the ``seq_rewrites`` case follows its freeze with every
+  command that rewrites committed chunks — ``compact``, ``upsert``,
+  then ``delete_where`` + ``purge_deletes`` — so the plans those
+  commands sum in their checkpoint jobs (``layout.PlanTap``) are held
+  to the same claim.
 
 The claim is exercised only if the two sides really partition
 differently, so every case prints each side's encode-exchange
@@ -42,7 +47,8 @@ Usage::
 
     python tools/differential.py [--quick]
 
-`--quick` runs the first 3 cases (pytest smoke); default runs all.
+`--quick` runs the first 3 cases (pytest smoke); default runs all
+(the rewrite case is last, so `--quick` skips it).
 Exit code 0 iff every case matches.
 """
 
@@ -62,7 +68,9 @@ import pyarrow.parquet as pq
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from cryo_spark import engine  # noqa: E402
-from cryo_spark.fixtures import write_embeddings, write_sequences  # noqa: E402
+from cryo_spark.fixtures import (  # noqa: E402
+    generate_sequences, write_embeddings, write_sequences,
+)
 from cryo_spark.session import get_spark  # noqa: E402
 from cryo_spark.tablespec import (  # noqa: E402
     DOCUMENTS, EMBEDDINGS, EVENTS, SEQUENCES,
@@ -150,6 +158,10 @@ def _inputs() -> dict:
         "events": ("events.parquet", 5_000, _write_events),
         "emb": ("embeddings.parquet", 1_500,
                 lambda p: write_embeddings(p, n=1_500, dim=32, seed=5)),
+        # upsert batch: 100 rows replace keys 3900..3999, 100 are new
+        "seq_upsert": ("seq_upsert.parquet", 200,
+                       lambda p: pq.write_table(generate_sequences(
+                           200, seed=9, id_offset=3_900), p)),
     }
     paths = {}
     for key, (fname, n, make) in makers.items():
@@ -196,18 +208,43 @@ def matrix(paths: dict) -> list[tuple[str, str, dict]]:
          dict(target_tokens=40_000, spec=EMBEDDINGS)),
         ("emb_n_chunks", paths["emb"],
          dict(n_chunks=5, spec=EMBEDDINGS)),
+        ("seq_rewrites", paths["seq"],
+         dict(target_tokens=2_000, spec=SEQUENCES)),
     ]
 
 
-def _reads(spark, out: str, spec) -> dict[str, pa.Table]:
-    """A keyed and a filtered ``collect`` of ``out`` and its changelog
-    and appends since snapshot 0, each sorted by key."""
+# cases whose freeze is followed by the rewriting commands (_rewrites)
+_REWRITE_CASES = {"seq_rewrites"}
+
+
+def _rewrites(spark, out: str, paths: dict, kw: dict) -> int:
+    """compact the small chunks, upsert the ``seq_upsert`` batch, then
+    delete a key range and purge it, each at 10x the freeze target;
+    returns the upsert's snapshot."""
+    spec, target = kw["spec"], 10 * kw["target_tokens"]
+    assert engine.compact(spark, out, target_tokens=target,
+                          spec=spec)["n_compacted"] > 1
+    u = engine.upsert(spark, out, paths["seq_upsert"], target_tokens=target,
+                      spec=spec)
+    assert (u["n_updated"], u["n_inserted"]) == (100, 100), u
+    assert engine.delete_where(spark, out, keys="1000:+500",
+                               spec=spec)["n_deleted"] == 500
+    assert engine.purge_deletes(spark, out, target_tokens=target,
+                                spec=spec)["n_purged_rows"] == 500
+    return u["snapshot"]
+
+
+def _reads(spark, out: str, spec, appended: int | None = None,
+           since: int = 0) -> dict[str, pa.Table]:
+    """A keyed and a filtered ``collect`` of ``out``, its appends in
+    (0, ``appended``] and its changelog since ``since`` (an incremental
+    read may not cross an upsert), each sorted by key."""
     reads = {
         "keys": engine.collect(spark, out, spec=spec, keys=_READ_KEYS),
         "filters": engine.collect(spark, out, spec=spec,
                                   filters=[_READ_FILTERS[spec.name]]),
-        "changes": engine.read_changes(spark, out, 0, spec=spec),
-        "appends": engine.read_appends(spark, out, 0, spec=spec),
+        "changes": engine.read_changes(spark, out, since, spec=spec),
+        "appends": engine.read_appends(spark, out, 0, appended, spec=spec),
     }
     return {name: df.toArrow().sort_by(spec.key)
             for name, df in reads.items()}
@@ -234,9 +271,9 @@ def _refreeze(spark, inp: str, out: str, kw: dict) -> list[str]:
 
 def run_side(side: str, cfg: dict, cases, paths
              ) -> dict[str, tuple[str, int, dict[str, pa.Table], list[str]]]:
-    """Freeze and re-freeze every case under one Spark config; returns
-    case -> (out dir, encode-exchange partition count, reads, resume
-    problems)."""
+    """Freeze and re-freeze every case under one Spark config (a rewrite
+    case runs its rewrites in between); returns case -> (out dir,
+    encode-exchange partition count, reads, resume problems)."""
     spark = get_spark(app=f"differential_{side}", **cfg)
     outs = {}
     try:
@@ -245,8 +282,11 @@ def run_side(side: str, cfg: dict, cases, paths
             shutil.rmtree(out, ignore_errors=True)
             s = engine.freeze(spark, inp, out, **kw)
             assert s["n_failed"] == 0, (name, side, s)
-            outs[name] = (out, engine._n_parts(spark, s["n_chunks"]),
-                          _reads(spark, out, kw["spec"]),
+            reads = (_reads(spark, out, kw["spec"], s["snapshot"],
+                            _rewrites(spark, out, paths, kw))
+                     if name in _REWRITE_CASES else
+                     _reads(spark, out, kw["spec"]))
+            outs[name] = (out, engine._n_parts(spark, s["n_chunks"]), reads,
                           _refreeze(spark, inp, out, kw))
     finally:
         spark.stop()
